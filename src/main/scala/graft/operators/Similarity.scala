@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.sources.Tables
@@ -1285,11 +1285,26 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/codebooks")
   }
 
-  /** Reload the KB-sized model half of a persisted index. The
-    * geometry (cell count, subspace count/width) comes entirely from
-    * the stored rows, so indexes built at any (k, pqM, pqK) load
-    * through the one path. For a MANIFEST-MANAGED index the codes
-    * manifest's `split=` metas then replay over the parquet
+  /** Loaded models, least recently used first; KB-sized entries. */
+  private val ModelCacheSize = 8
+  private val modelCache = new java.util.LinkedHashMap[
+      (String, String), IvfPqModel](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (String, String), IvfPqModel]): Boolean = size() > ModelCacheSize
+  }
+
+  /** The KB-sized model half of a persisted index, memoized per
+    * `(dir, fingerprint)`: [[graft.sources.Lake.fingerprint]] of
+    * `centroids/`, `codebooks/` and — when present — the
+    * `codes/_latest` and `tombs/_latest` pointers. A repeated serve
+    * against an unchanged index reuses the model with no parquet read;
+    * a rebuild (new model files), an append/split/compact commit or a
+    * tombstone commit (a pointer swap) changes the fingerprint, so the
+    * next call reloads. At most [[ModelCacheSize]] models are held
+    * (LRU). The geometry (cell count, subspace count/width) comes
+    * entirely from the stored rows, so indexes built at any (k, pqM,
+    * pqK) load through the one path. For a MANIFEST-MANAGED index the
+    * codes manifest's `split=` metas then replay over the parquet
     * centroids in commit order — each records explicit child
     * centroid values (set semantics, so replay over an
     * already-updated table is a no-op), which is what couples the
@@ -1297,6 +1312,18 @@ object Similarity {
     * split centroids exactly when it sees its re-encoded rows,
     * because both ride the same pointer swap (E33). */
   private[graft] def loadIvfPqModel(spark: SparkSession,
+      dir: String): IvfPqModel = {
+    val key = (dir, graft.sources.Lake.fingerprint(spark, Seq(
+      s"$dir/centroids", s"$dir/codebooks",
+      s"${codesDir(dir)}/_latest", s"${tombsDir(dir)}/_latest")))
+    modelCache.synchronized(Option(modelCache.get(key))).getOrElse {
+      val m = readIvfPqModel(spark, dir)
+      modelCache.synchronized(modelCache.put(key, m))
+      m
+    }
+  }
+
+  private[graft] def readIvfPqModel(spark: SparkSession,
       dir: String): IvfPqModel = {
     val cents = spark.read.parquet(s"$dir/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
@@ -1346,10 +1373,12 @@ object Similarity {
       queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
     import spark.implicits._
     val m = loadIvfPqModel(spark, dir)
-    val qprobe = ivfPqProbe(
+    // the probe rows (queries × nProbe) run ONCE: the collected copy
+    // feeds both the cell IN list and the broadcast side of the ADC join
+    val (probeRows, qprobe) = collectLocal(ivfPqProbe(
       queries.select($"q_id", $"qv".cast("array<double>").as("qv")),
-      m, nProbe)
-    val cells = qprobe.select($"cell").distinct().collect().map(_.getInt(0))
+      m, nProbe))
+    val cells = probeRows.map(_.getAs[Int]("cell")).distinct.sorted
     val coded0 = loadCodes(spark, dir, cells)
       .filter($"cell".isin(cells.map(c => c: java.lang.Integer).toIndexedSeq: _*))
     // E38: serve-time tombstone mask — deleted rows drop out of every
@@ -1360,6 +1389,14 @@ object Similarity {
       case None    => coded0
     }
     ivfPqScore(coded, qprobe, k)
+  }
+
+  /** Run a driver-sized frame once: its rows, plus the same rows as a
+    * local relation that later plans read without recomputing them. */
+  private def collectLocal(df: DataFrame): (Array[Row], DataFrame) = {
+    val rows = df.collect()
+    (rows, df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), df.schema))
   }
 
   private def tombsDir(dir: String) = s"$dir/tombs"
@@ -1617,14 +1654,23 @@ object Similarity {
     * collects to an IN filter that pushes into the vector scan, so
     * the exact stage is row-group lookups, never a corpus pass
     * (pinned by IvfPqIndexSpec). Results are bit-identical to
-    * [[annIvfPqRerank]] on the corpus the index was built from. */
+    * [[annIvfPqRerank]] on the corpus the index was built from.
+    *
+    * Single pass: the ADC shortlist runs ONCE, when this is called —
+    * its collected `(q_id, vec_id)` pairs feed both the vector IN
+    * filter and the re-rank join, so the returned plan reads the
+    * shortlist from a local relation and never rescans the code table.
+    * The model comes from the [[loadIvfPqModel]] cache, rebuilt only
+    * when the index's model files or commit pointers change; the
+    * tombstone mask is read on every call. */
   def queryIvfPqIndexRerank(spark: SparkSession, dir: String,
       queries: DataFrame, vecs: DataFrame, nProbe: Int = 2,
       shortlist: Int = 10): DataFrame = {
     import spark.implicits._
-    val short = servedShortlist(spark, dir, queries, nProbe, shortlist)
-      .select($"q_id", $"vec_id")
-    val ids = short.select($"vec_id").distinct().collect().map(_.getLong(0))
+    val (shortRows, short) = collectLocal(
+      servedShortlist(spark, dir, queries, nProbe, shortlist)
+        .select($"q_id", $"vec_id"))
+    val ids = shortRows.map(_.getLong(1)).distinct
     val cand = withNorm(vecs)
       .filter($"vec_id".isin(ids.map(i => i: java.lang.Long).toIndexedSeq: _*))
     val q = queries.select($"q_id",
@@ -1727,15 +1773,21 @@ object Similarity {
     f.delete()
   }
 
+  /** Temp index dir for `dir`'s embeddings: one per input version,
+    * keyed by [[graft.sources.Lake.fingerprint]] — two datasets that
+    * share a basename, or one rewritten in place, never share an index. */
+  private def indexDirFor(s: SparkSession, dir: String,
+      prefix: String): String =
+    sys.props("java.io.tmpdir") + s"/${prefix}_" +
+      graft.sources.Lake.fingerprint(s, Seq(Tables.path(dir, "embeddings")))
+
   /** Driver-contract adapter for the served path: builds the index in
-    * a versioned temp dir ONCE per dataset (subsequent calls are
-    * serve-only — exactly the deployment shape), then queries it with
-    * the same query set as `ann_ivfpq`. Oracle: identical SQL twin —
-    * the served result is bit-identical to the in-memory path. */
+    * a versioned temp dir ONCE per embeddings version (subsequent calls
+    * are serve-only — exactly the deployment shape), then queries it
+    * with the same query set as `ann_ivfpq`. Oracle: identical SQL
+    * twin — the served result is bit-identical to the in-memory path. */
   private def ensureIndex(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    val idxDir = sys.props("java.io.tmpdir") +
-      s"/graft_ivfpq_v1_${new java.io.File(dir).getName}"
+    val idxDir = indexDirFor(s, dir, "graft_ivfpq_v1")
     if (!new java.io.File(s"$idxDir/codes/_SUCCESS").exists())
       buildIvfPqIndex(Tables.embeddings(s, dir), idxDir)
     idxDir
@@ -1758,8 +1810,7 @@ object Similarity {
     * post-training, exactly the serve-mask semantics). */
   private def ensureDeleteIndex(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val idxDir = sys.props("java.io.tmpdir") +
-      s"/graft_ivfpq_del_v1_${new java.io.File(dir).getName}"
+    val idxDir = indexDirFor(s, dir, "graft_ivfpq_del_v1")
     if (!graft.sources.Lake.Manifest.isManaged(s, s"$idxDir/tombs")) {
       publishIvfPqIndex(Tables.embeddings(s, dir), idxDir)
       deleteFromIvfPqIndexPublished(s, idxDir,

@@ -12,9 +12,10 @@ object Lake {
     * keys. Mechanics: the delta's distinct partition values prune the
     * target read (partition pruning — reads the touched slice, never
     * the corpus), old versions of delta keys are anti-joined away,
-    * upserts union in, and `partitionOverwriteMode=dynamic` swaps in
-    * just the rewritten partition directories — untouched partitions'
-    * files are never read, rewritten, or moved (spec pins file
+    * upserts union in, and the writer option
+    * `partitionOverwriteMode=dynamic` (never the session conf) swaps
+    * in just the rewritten partition directories — untouched
+    * partitions' files are never read, rewritten, or moved (spec pins file
     * identity). At 100 TB with daily deltas touching k of N
     * partitions, the run costs O(k/N · corpus), not O(corpus).
     * Caveats of the format-less shape (why Delta/Iceberg exist):
@@ -40,15 +41,40 @@ object Lake {
     val kept = target.join(keys, Seq(keyCol), "left_anti")
     val upserts = delta.filter(col(opCol) =!= "d")
       .select(target.columns.map(col).toIndexedSeq: _*)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try kept.unionByName(upserts)
+    // a writer option, not the session conf: setting and restoring the
+    // session-wide key would race with every other write on the session
+    kept.unionByName(upserts)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(targetDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+  }
+
+  /** Version stamp of the files under `paths`: a hash of the recursive
+    * `FileSystem` listing — each file's qualified path, length and
+    * modification time (a missing path hashes as absent). Driver-side
+    * metadata work that grows with the file COUNT, never the bytes.
+    * This is the one place that decides whether state derived from
+    * the inputs (a served index, a loaded model) is still current: a
+    * rewrite in place, an append or a copy elsewhere all change it. */
+  def fingerprint(spark: SparkSession, paths: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val conf = spark.sparkContext.hadoopConfiguration
+    for (s <- paths) {
+      val path = new org.apache.hadoop.fs.Path(s)
+      val f = path.getFileSystem(conf)
+      val q = f.makeQualified(path)
+      if (!f.exists(q)) md.update(s"$q\tabsent\n".getBytes("UTF-8"))
+      else {
+        val it = f.listFiles(q, true)
+        val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (it.hasNext) {
+          val st = it.next()
+          lines += s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}"
+        }
+        lines.sorted.foreach(l => md.update(s"$l\n".getBytes("UTF-8")))
+      }
     }
+    md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
   /** Z-order layout write (H14) — multi-dimensional data clustering

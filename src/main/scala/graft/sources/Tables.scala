@@ -17,8 +17,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Where table `name` of the corpus under `dir` lives. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.read.parquet(path(dir, name))
     // events.ts has shipped as two parquet physical types across
     // testdata generations: TIMESTAMP(NANOS) (surfaces as Long nanos
     // under spark.sql.legacy.parquet.nanosAsLong=true — truncate to

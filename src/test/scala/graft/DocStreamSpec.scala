@@ -305,6 +305,47 @@ class DocStreamSpec extends AnyFunSuite {
     assert(DocStream.streamBm25Batch(dir, extra, 9L) == -1L)
   }
 
+  test("F46 text_bm25_serve builds one index per documents version; every call serves it") {
+    import spark.implicits._
+    import graft.operators.TextAnalysis
+    import graft.sources.{Lake, Tables}
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def indexDirs(): Set[String] = tmp.listFiles().map(_.getName)
+      .filter(_.startsWith("graft_bm25_v1_")).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq
+    val docs = Tables.documents(spark, GraftTestSession.sf)
+    // two datasets under the SAME basename; b holds one extra document
+    val base = java.nio.file.Files.createTempDirectory("graft_bm25_fp")
+    val a = base.resolve("a/corpus").toString
+    val b = base.resolve("b/corpus").toString
+    docs.write.parquet(Tables.path(a, "documents"))
+    val extraId = docs.agg(max($"doc_id")).as[Long].collect().head + 1L
+    docs.union(docs.limit(1)
+        .withColumn("doc_id", lit(extraId))
+        .withColumn("text", lit("spark window scan spark")))
+      .write.parquet(Tables.path(b, "documents"))
+    val serve = TextAnalysis.queries("text_bm25_serve")
+    val before = indexDirs()
+    val runsA = (1 to 3).map(_ => rows(serve(spark, a)))
+    val madeA = indexDirs() -- before
+    val fpA = Lake.fingerprint(spark, Seq(Tables.path(a, "documents")))
+    assert(madeA == Set(s"graft_bm25_v1_$fpA"),
+      s"three serves of one dataset made index dirs $madeA")
+    val wantA = rows(TextAnalysis.bm25(Tables.documents(spark, a)))
+    runsA.foreach(r => assert(r == wantA, s"served:\n$r\nbatch:\n$wantA"))
+    // the same basename with new content gets its own index
+    val servedB = rows(serve(spark, b))
+    val madeB = indexDirs() -- before -- madeA
+    assert(madeB.size == 1, s"second dataset made index dirs $madeB")
+    val wantB = rows(TextAnalysis.bm25(Tables.documents(spark, b)))
+    assert(servedB == wantB, s"served:\n$servedB\nbatch:\n$wantB")
+    assert(servedB.exists(_.startsWith(s"[$extraId,")),
+      s"the extra document is missing from the new index's ranking: $servedB")
+    (madeA ++ madeB).foreach(n =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp, n)))
+  }
+
   test("D23 chunk store: base+deltas == one-shot chunk set, refresh prices known bytes, replay exactly once") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._

@@ -160,6 +160,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("E11 served rerank == in-memory rerank; vector lookups push an IN filter") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val vecs = Tables.embeddings(spark, sf)
     val q = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
@@ -171,6 +172,17 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val plan = served.queryExecution.executedPlan.toString
     assert("PushedFilters: \\[[^\\]]*In\\(vec_id".r.findFirstIn(plan).isDefined,
       s"shortlist IN filter missing from vector scan:\n$plan")
+    // single pass: the ADC shortlist ran once, at the call; the
+    // returned plan reads it from a local relation and never recomputes
+    // the top-k over the code table
+    val opt = served.queryExecution.optimizedPlan
+    assert(opt.collect { case l: LocalRelation => l }.nonEmpty,
+      s"shortlist is not a local relation:\n$opt")
+    assert(opt.flatMap(_.expressions.flatMap(_.collect {
+      case t: graft.functions.TopKAgg => t })).isEmpty,
+      s"returned plan recomputes the ADC top-k:\n$opt")
+    assert(!plan.contains(s"$idxDir/codes"),
+      s"returned plan rescans the code table:\n$plan")
   }
 
   test("compact below the file bound is a no-op") {
@@ -293,6 +305,58 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(top1(0L) < 10L, s"query 0 top-1 off-cluster: $top1")
     assert(top1(1L) >= 20L, s"query 1 top-1 off-cluster: $top1")
+  }
+
+  test("model cache: an unchanged index reuses its model; a split, an append or a tombstone commit reloads it") {
+    import spark.implicits._
+    val M = graft.sources.Lake.Manifest
+    val d = java.nio.file.Files.createTempDirectory("graft_mcache").toString
+    val vecs = splitCorpus(spark)
+    Similarity.publishIvfPqIndex(vecs, d, k = 2, iters = 2,
+      pqM = 2, pqK = 4)
+    def vec(x: Double, y: Double) = Array(x, y, 0.0, 0, 0, 0, 0, 0)
+    val q = Seq((0L, vec(10.05, 0)), (1L, vec(0, 10.05)),
+      (2L, vec(-10.05, 0))).toDF("q_id", "qv")
+    // nProbe = 1: a stale model probes the wrong cell and scores
+    // residuals against the wrong centroid
+    def served() = collectAll(Similarity.queryIvfPqIndex(spark, d, q,
+      nProbe = 1))
+    // the serve core replayed over a FRESH (uncached) model read
+    def expected() = {
+      val m = Similarity.readIvfPqModel(spark, d)
+      val codes = M.readPublished(spark, s"$d/codes")
+        .select($"vec_id", $"cell", $"codes")
+      val live = if (!M.isManaged(spark, s"$d/tombs")) codes
+        else codes.join(M.readPublished(spark, s"$d/tombs"),
+          Seq("vec_id"), "left_anti")
+      collectAll(Similarity.ivfPqScore(live,
+        Similarity.ivfPqProbe(q, m, nProbe = 1)))
+    }
+    assert(served() == expected())
+    val m0 = Similarity.loadIvfPqModel(spark, d)
+    assert(Similarity.loadIvfPqModel(spark, d) eq m0,
+      "an unchanged index must serve from the cached model")
+    // E33 split: the model itself changes
+    val fat = Similarity.ivfCellSizesPublished(spark, d).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).maxBy(t => (t._2, t._1))._1
+    assert(Similarity.splitIvfCellPublished(spark, d, vecs, fat) >= 0)
+    val m1 = Similarity.loadIvfPqModel(spark, d)
+    assert(!(m1 eq m0) && m1.centroids.length == m0.centroids.length + 1)
+    assert(served() == expected(), "serve after a split")
+    // E9 append commit
+    Similarity.appendIvfPqIndexPublished(d,
+      Seq((100L, vec(10.3, 0.2)), (101L, vec(0.2, 10.3)))
+        .toDF("vec_id", "embedding"))
+    assert(!(Similarity.loadIvfPqModel(spark, d) eq m1))
+    assert(served() == expected(), "serve after an append")
+    // E38 tombstone commit
+    val m2 = Similarity.loadIvfPqModel(spark, d)
+    val victims = served().map(_._3).distinct.take(2)
+    Similarity.deleteFromIvfPqIndexPublished(spark, d, victims.toDF("vec_id"))
+    assert(!(Similarity.loadIvfPqModel(spark, d) eq m2))
+    val masked = served()
+    assert(masked == expected(), "serve after a tombstone commit")
+    assert(masked.forall(r => !victims.contains(r._3)))
   }
 
   test("E33 degenerate cells refuse; a rebalance pass splits every oversized cell atomically") {

@@ -411,7 +411,13 @@ class SourcesSpec extends AnyFunSuite {
       (10L, "v1_0_NEW", 1, "u"),
       (30L, null.asInstanceOf[String], 3, "d"),
       (99L, "v3_new", 3, "u")).toDF("id", "payload", "part", "op")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     graft.sources.Lake.mergeIntoPartitioned(spark, dir, "part", "id", delta)
+    // dynamic overwrite rides the writer option: the session-wide conf
+    // (shared with every other write on the session) is never touched
+    assert(spark.conf.getOption(modeKey) == modeBefore,
+      "merge changed the session's partitionOverwriteMode")
     val after = files()
     // untouched partitions (0, 2, 4): byte-identical files
     def untouched(m: Map[String, Long]) =
