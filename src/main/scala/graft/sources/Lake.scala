@@ -15,8 +15,8 @@ object Lake {
     * upserts union in, and the writer option
     * `partitionOverwriteMode=dynamic` (never the session conf) swaps
     * in just the rewritten partition directories — untouched
-    * partitions' files are never read, rewritten, or moved (spec pins file
-    * identity). At 100 TB with daily deltas touching k of N
+    * partitions' files are never read, rewritten, or moved (spec pins
+    * file identity). At 100 TB with daily deltas touching k of N
     * partitions, the run costs O(k/N · corpus), not O(corpus).
     * Caveats of the format-less shape (why Delta/Iceberg exist):
     * the swap is atomic per partition directory, not across the
