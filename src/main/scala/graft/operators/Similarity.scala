@@ -1254,23 +1254,36 @@ object Similarity {
     * split a real deployment runs (VERDICT r3 #1): training and corpus
     * encoding are a batch job executed ONCE, not billed to every
     * query. Writes under `dir`:
-    *   - `codes/` — (vec_id, codes) parquet PARTITIONED BY cell, so a
-    *     serving query's cell filter becomes partition PRUNING: only
-    *     probed cells' files are listed/read, ~nProbe/k of a
-    *     32×-compressed table at 100 TB;
     *   - `centroids/`, `codebooks/` — the k×dim + m×K model doubles
     *     (KB-sized; parquet round-trips doubles exactly, so serve
-    *     results are bit-identical to the in-memory path). */
+    *     results are bit-identical to the in-memory path);
+    *   - `codes/` — (vec_id, cell, codes), published LAST through
+    *     [[graft.sources.Lake.Manifest]] with its files under
+    *     `__p_cell=` dirs. Readers resolve files through an atomically
+    *     swapped pointer, so this build and every later append
+    *     (batch or streaming), split, compaction or delete is one
+    *     atomic commit — a crash at ANY point leaves the served index
+    *     on the previous version, never half-visible — and a serve
+    *     prunes the manifest file list to the probed cells, ~nProbe/k
+    *     of a 32×-compressed table at 100 TB.
+    * A build REPLACES the whole index: the `codes/`, `tombs/`,
+    * `centroids/` and `codebooks/` of an earlier index under `dir` are
+    * deleted first, so a rebuild drops the old tombstones and the old
+    * commit log (applied stream batches, E33 split records) — none of
+    * them describe the freshly trained model. */
   def buildIvfPqIndex(vecs: DataFrame, dir: String, k: Int = 16,
       iters: Int = 2, pqM: Int = PqM, pqK: Int = PqK): Unit = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val m = ivfPqTrain(vecs, k, iters, pqM, pqK)
     val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (t <- Seq("codes", "tombs", "centroids", "codebooks"))
+      fs.delete(new org.apache.hadoop.fs.Path(root, t), true)
     writeIvfPqModel(spark, dir, m)
-    // codes last: its _SUCCESS doubles as the whole-index marker
-    ivfPqEncode(e, m)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    graft.sources.Lake.Manifest.publishSnapshot(
+      ivfPqEncode(e, m), codesDir(dir), partitionBy = Seq("cell"))
   }
 
   private def writeIvfPqModel(spark: SparkSession, dir: String,
@@ -1303,13 +1316,12 @@ object Similarity {
     * next call reloads. At most [[ModelCacheSize]] models are held
     * (LRU). The geometry (cell count, subspace count/width) comes
     * entirely from the stored rows, so indexes built at any (k, pqM,
-    * pqK) load through the one path. For a MANIFEST-MANAGED index the
-    * codes manifest's `split=` metas then replay over the parquet
-    * centroids in commit order — each records explicit child
-    * centroid values (set semantics, so replay over an
-    * already-updated table is a no-op), which is what couples the
-    * model to the code table ATOMICALLY: a reader sees a cell's
-    * split centroids exactly when it sees its re-encoded rows,
+    * pqK) load through the one path. The codes manifest's `split=`
+    * metas then replay over the parquet centroids in commit order —
+    * each records explicit child centroid values (set semantics, so
+    * replay over an already-updated table is a no-op), which is what
+    * couples the model to the code table ATOMICALLY: a reader sees a
+    * cell's split centroids exactly when it sees its re-encoded rows,
     * because both ride the same pointer swap (E33). */
   private[graft] def loadIvfPqModel(spark: SparkSession,
       dir: String): IvfPqModel = {
@@ -1334,7 +1346,6 @@ object Similarity {
       bookRows.filter(_._1 == j).map(t => (t._2, t._3)).sortBy(_._1)
     }
     val base = IvfPqModel(cents, books)
-    if (!isPublishedIndex(spark, dir)) return base
     val splits = graft.sources.Lake.Manifest
       .publishedMetasOrdered(spark, codesDir(dir))
       .filter(_.startsWith("split="))
@@ -1351,24 +1362,22 @@ object Similarity {
 
   /** E8 SERVE: answer `queries(q_id, qv)` from a persisted index with
     * NO training stage and NO vector scan. The probed-cell set is
-    * query-batch sized (≤ queries × nProbe ints), so it collects to a
-    * literal IN filter that prunes the cell-partitioned code table at
-    * planning time — the scan reads only probed partitions (pinned by
-    * PlanPropertiesSpec). Results are bit-identical to [[annIvfPq]]
+    * query-batch sized (≤ queries × nProbe ints), so it is collected
+    * on the driver and prunes the code table's manifest file list —
+    * the scan reads only probed `__p_cell=` files (pinned by
+    * IvfPqIndexSpec). Results are bit-identical to [[annIvfPq]]
     * on the same corpus/params (spec-pinned). */
   def queryIvfPqIndex(spark: SparkSession, dir: String, queries: DataFrame,
       nProbe: Int = 2): DataFrame =
     servedShortlist(spark, dir, queries, nProbe, TopK)
 
-  /** Shared serve core: probe → pruned-partition code scan → ADC
-    * top-`k` (the E8 plan; `k` = TopK for plain serve, `shortlist`
-    * for the re-ranked path). Serves BOTH code-table layouts: the
-    * plain hive dir ([[buildIvfPqIndex]] — Catalyst partition
-    * pruning on `cell=`) and the manifest-managed one
-    * ([[publishIvfPqIndex]] — file-list pruning from the manifest,
-    * [[graft.sources.Lake.Manifest.readPublishedPruned]]); the exact
-    * `isin` filter applies either way, so pruning is never load-
-    * bearing for correctness. */
+  /** Shared serve core: probe → pruned code scan → ADC top-`k` (the
+    * E8 plan; `k` = TopK for plain serve, `shortlist` for the
+    * re-ranked path). The code read keeps only the manifest's files
+    * under probed `__p_cell=` dirs
+    * ([[graft.sources.Lake.Manifest.readPublishedPruned]]); the exact
+    * `isin` filter still applies, so pruning is never load-bearing
+    * for correctness. */
   private def servedShortlist(spark: SparkSession, dir: String,
       queries: DataFrame, nProbe: Int, k: Int): DataFrame = {
     import spark.implicits._
@@ -1379,7 +1388,8 @@ object Similarity {
       queries.select($"q_id", $"qv".cast("array<double>").as("qv")),
       m, nProbe))
     val cells = probeRows.map(_.getAs[Int]("cell")).distinct.sorted
-    val coded0 = loadCodes(spark, dir, cells)
+    val coded0 = graft.sources.Lake.Manifest.readPublishedPruned(spark,
+        codesDir(dir), "cell", cells.map(_.toString))
       .filter($"cell".isin(cells.map(c => c: java.lang.Integer).toIndexedSeq: _*))
     // E38: serve-time tombstone mask — deleted rows drop out of every
     // serve path (plain and re-ranked ride this core) the moment the
@@ -1458,47 +1468,42 @@ object Similarity {
     }
   }
 
-  private def codesDir(dir: String) = s"$dir/codes"
-
-  /** Is the code table under `dir` manifest-managed? */
-  private[graft] def isPublishedIndex(spark: SparkSession,
-      dir: String): Boolean =
-    graft.sources.Lake.Manifest.isManaged(spark, codesDir(dir))
-
-  /** Code-table read for either layout, pruned to `cells` where the
-    * layout supports it. */
-  private[graft] def loadCodes(spark: SparkSession, dir: String,
-      cells: Seq[Int]): DataFrame =
-    if (isPublishedIndex(spark, dir))
-      graft.sources.Lake.Manifest.readPublishedPruned(spark,
-        codesDir(dir), "cell", cells.map(_.toString))
-    else spark.read.parquet(codesDir(dir))
-
-  /** E8/C28 MANIFEST-MANAGED index build — identical model + codes to
-    * [[buildIvfPqIndex]] (training is deterministic), but the code
-    * table is published through [[graft.sources.Lake.Manifest]]:
-    * readers resolve files through an atomically-swapped pointer, so
-    * every later append (batch or streaming) is one atomic commit —
-    * a crash at ANY point leaves the served index on the previous
-    * version, never half-visible. This closes the append→marker
-    * crash window the marker-gated [[appendIvfPqIndex]] path
-    * acknowledges (SURVEY §2 C28). */
-  def publishIvfPqIndex(vecs: DataFrame, dir: String, k: Int = 16,
-      iters: Int = 2, pqM: Int = PqM, pqK: Int = PqK): Unit = {
-    val spark = vecs.sparkSession
+  /** File-count compaction: when appends have left more than
+    * `maxFiles` code files, one snapshot commit of the cell-clustered
+    * rewrite (readers see old-or-new atomically), then a vacuum bounds
+    * storage. Applied-batch metas survive — they ride the manifest,
+    * not the files. Model files are untouched; serve results are
+    * unchanged (spec-pinned). */
+  def compactIvfPqIndex(spark: SparkSession, dir: String,
+      maxFiles: Int = 64): Unit = {
     import spark.implicits._
-    val m = ivfPqTrain(vecs, k, iters, pqM, pqK)
-    val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    writeIvfPqModel(spark, dir, m)
-    graft.sources.Lake.Manifest.publishSnapshot(
-      ivfPqEncode(e, m), codesDir(dir), partitionBy = Seq("cell"))
+    val M = graft.sources.Lake.Manifest
+    val cd = codesDir(dir)
+    val current = M.readPublished(spark, cd)
+    if (current.inputFiles.length <= maxFiles) return
+    M.publishSnapshot(current.repartition($"cell")
+      .sortWithinPartitions($"vec_id"), cd, partitionBy = Seq("cell"))
+    M.vacuum(spark, cd, keepVersions = 1)
   }
 
-  /** E9/C28 atomic append into a published index: encode against the
-    * frozen model and publish ONE manifest commit that both adds the
-    * files and records `meta` (the stream batch id) — data visibility
-    * and replay bookkeeping can no longer diverge. */
-  def appendIvfPqIndexPublished(dir: String, newVecs: DataFrame,
+  private def codesDir(dir: String) = s"$dir/codes"
+
+  /** E9/C28 incremental index APPEND — the daily-ingest half of a
+    * served ANN deployment: encode `newVecs(vec_id, embedding)`
+    * against the PERSISTED model (no retraining, no read of existing
+    * code rows) and publish ONE manifest commit that both adds the
+    * files and records `meta` (e.g. the stream batch id) — data
+    * visibility and replay bookkeeping can never diverge. Run cost
+    * scales with the delta, not the corpus. Because encoding is a
+    * pure function of the frozen model, a serve after N appends is
+    * bit-identical to a frozen-model encode of the union (spec-pinned
+    * in IvfPqIndexSpec). New vectors land in the cells the frozen
+    * coarse quantizer assigns — drift past the trained distribution
+    * degrades recall, not correctness; rebuild or split cadence is
+    * the deployment's call. Pair with the `maxFiles`
+    * [[compactIvfPqIndex]]: each append adds one file-set per touched
+    * cell. Returns the published version. */
+  def appendIvfPqIndex(dir: String, newVecs: DataFrame,
       meta: String = ""): Long = {
     val spark = newVecs.sparkSession
     import spark.implicits._
@@ -1630,23 +1635,6 @@ object Similarity {
     done
   }
 
-  /** Compaction for the published layout: one snapshot commit of the
-    * cell-clustered rewrite (readers see old-or-new atomically; the
-    * rename dance of [[compactIvfPqIndex]] is unnecessary here), then
-    * a vacuum bounds storage. Applied-batch metas survive — they ride
-    * the manifest, not the files. */
-  def compactIvfPqIndexPublished(spark: SparkSession, dir: String,
-      maxFiles: Int = 64): Unit = {
-    import spark.implicits._
-    val M = graft.sources.Lake.Manifest
-    val cd = codesDir(dir)
-    val current = M.readPublished(spark, cd)
-    if (current.inputFiles.length <= maxFiles) return
-    M.publishSnapshot(current.repartition($"cell")
-      .sortWithinPartitions($"vec_id"), cd, partitionBy = Seq("cell"))
-    M.vacuum(spark, cd, keepVersions = 1)
-  }
-
   /** E11 SERVED two-stage retrieval — the full deployment read path:
     * E8's serve (no training, partition-pruned code scan) produces
     * the ADC shortlist, then E10's exact re-rank reads ONLY the
@@ -1686,112 +1674,18 @@ object Similarity {
       .orderBy($"q_id", $"rank")
   }
 
-  /** E9 incremental index APPEND — the daily-ingest half of a served
-    * ANN deployment: encode `newVecs(vec_id, embedding)` against the
-    * PERSISTED model (no retraining, no read of existing code rows)
-    * and append the codes into the existing cell partition dirs. Run
-    * cost scales with the delta, not the corpus. Because encoding is
-    * a pure function of the frozen model, a serve after N appends is
-    * bit-identical to a frozen-model encode of the union (spec-pinned
-    * in IvfPqIndexSpec). New vectors land in the cells the frozen
-    * coarse quantizer assigns — drift past the trained distribution
-    * degrades recall, not correctness; rebuild cadence is the
-    * deployment's call. Pair with [[compactIvfPqIndex]]: each append
-    * adds one file-set per touched cell (same growth mode as the A24
-    * hash state). */
-  def appendIvfPqIndex(dir: String, newVecs: DataFrame): Unit = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    val m = loadIvfPqModel(spark, dir)
-    val e = newVecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    ivfPqEncode(e, m)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-  }
-
-  /** Rewrite the code table into one file per cell partition when the
-    * append loop has accumulated more than `maxFiles` part-files.
-    * Swap is write-aside → rename (the read and the overwrite can't
-    * share a path). Either complete table survives a crash: the only
-    * window where `codes/` is absent is between the two renames, and
-    * entry-time recovery below rolls a half-finished swap back (or
-    * forward, if the new table fully landed), so the next call —
-    * compact or serve via the normal load path after one recover —
-    * never finds the index unservable. Both renames are local-FS
-    * `java.io.File` ops (like the marker-gated append path's markers);
-    * an object-store deployment swaps these for its atomic-rename or
-    * manifest primitive. Model files are untouched; serve results are
-    * unchanged (spec-pinned). */
-  def compactIvfPqIndex(spark: SparkSession, dir: String,
-      maxFiles: Int = 64): Unit = {
-    import spark.implicits._
-    recoverCompactSwap(dir)
-    val codes = new java.io.File(s"$dir/codes")
-    val parts = Option(codes.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("cell="))
-      .flatMap(d => Option(d.listFiles()).getOrElse(Array.empty))
-      .count(_.getName.endsWith(".parquet"))
-    if (parts <= maxFiles) return
-    val tmp = new java.io.File(s"$dir/codes_compact_tmp")
-    spark.read.parquet(s"$dir/codes")
-      .repartition($"cell").sortWithinPartitions($"vec_id")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(tmp.getPath)
-    val old = new java.io.File(s"$dir/codes_old")
-    if (old.exists()) deleteRecursively(old)
-    require(codes.renameTo(old), s"compact swap failed under $dir")
-    // if the second rename fails (not crashes), roll the first back so
-    // codes/ is never left missing by a non-crash failure path
-    if (!tmp.renameTo(codes)) {
-      old.renameTo(codes)
-      sys.error(s"compact swap failed under $dir (rolled back)")
-    }
-    deleteRecursively(old)
-  }
-
-  /** Entry-time recovery for a crash inside [[compactIvfPqIndex]]'s
-    * rename window: if `codes/` is missing, restore it from whichever
-    * complete table exists — the compacted one (roll forward: the
-    * crash hit between the two renames with the new table fully
-    * written and marked) else the old one (roll back). Idempotent and
-    * a no-op in the normal case. */
-  private[graft] def recoverCompactSwap(dir: String): Unit = {
-    val codes = new java.io.File(s"$dir/codes")
-    if (codes.exists()) return
-    val tmp = new java.io.File(s"$dir/codes_compact_tmp")
-    val old = new java.io.File(s"$dir/codes_old")
-    if (tmp.exists() && new java.io.File(tmp, "_SUCCESS").exists()) {
-      require(tmp.renameTo(codes), s"swap recovery failed under $dir")
-      if (old.exists()) deleteRecursively(old)
-    } else if (old.exists()) {
-      require(old.renameTo(codes), s"swap recovery failed under $dir")
-      if (tmp.exists()) deleteRecursively(tmp)
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
-  /** Temp index dir for `dir`'s embeddings: one per input version,
-    * keyed by [[graft.sources.Lake.fingerprint]] — two datasets that
-    * share a basename, or one rewritten in place, never share an index. */
-  private def indexDirFor(s: SparkSession, dir: String,
-      prefix: String): String =
-    sys.props("java.io.tmpdir") + s"/${prefix}_" +
-      graft.sources.Lake.fingerprint(s, Seq(Tables.path(dir, "embeddings")))
-
-  /** Driver-contract adapter for the served path: builds the index in
-    * a versioned temp dir ONCE per embeddings version (subsequent calls
-    * are serve-only — exactly the deployment shape), then queries it
-    * with the same query set as `ann_ivfpq`. Oracle: identical SQL
-    * twin — the served result is bit-identical to the in-memory path. */
-  private def ensureIndex(s: SparkSession, dir: String): String = {
-    val idxDir = indexDirFor(s, dir, "graft_ivfpq_v1")
-    if (!new java.io.File(s"$idxDir/codes/_SUCCESS").exists())
-      buildIvfPqIndex(Tables.embeddings(s, dir), idxDir)
-    idxDir
-  }
+  /** Driver-contract adapter for the served path: builds the index
+    * ONCE per embeddings version into
+    * `java.io.tmpdir/graft_ivfpq_v1_<fingerprint>`
+    * ([[graft.sources.Lake.publishOnce]]; `codes` publishes last), so
+    * subsequent calls are serve-only — exactly the deployment shape —
+    * then queries it with the same query set as `ann_ivfpq`. Oracle:
+    * identical SQL twin — the served result is bit-identical to the
+    * in-memory path. */
+  private def ensureIndex(s: SparkSession, dir: String): String =
+    graft.sources.Lake.publishOnce(s, "graft_ivfpq_v1",
+      Seq(Tables.path(dir, "embeddings")), "codes")(
+      buildIvfPqIndex(Tables.embeddings(s, dir), _))
 
   private def queriesOf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1810,14 +1704,13 @@ object Similarity {
     * post-training, exactly the serve-mask semantics). */
   private def ensureDeleteIndex(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val idxDir = indexDirFor(s, dir, "graft_ivfpq_del_v1")
-    if (!graft.sources.Lake.Manifest.isManaged(s, s"$idxDir/tombs")) {
-      publishIvfPqIndex(Tables.embeddings(s, dir), idxDir)
+    graft.sources.Lake.publishOnce(s, "graft_ivfpq_del_v1",
+        Seq(Tables.path(dir, "embeddings")), "tombs") { idxDir =>
+      buildIvfPqIndex(Tables.embeddings(s, dir), idxDir)
       deleteFromIvfPqIndexPublished(s, idxDir,
         Tables.embeddings(s, dir).filter($"vec_id" % 7 === 3)
           .select($"vec_id"))
     }
-    idxDir
   }
 
   private def deleteServeEntry(s: SparkSession, dir: String): DataFrame =

@@ -416,36 +416,12 @@ object TextAnalysis {
     * version, not per call: rewriting the documents in place, adding a
     * file or reading a copy at another path yields a new fingerprint
     * and so a new index; an unchanged corpus keeps its published one.
-    * A dir counts as complete once its `meta` table is manifest-
-    * managed (`meta` publishes last); an incomplete one is rebuilt.
-    * The build lands in a unique sibling dir that is renamed into
-    * place atomically, so readers never see a half-built index; when
-    * a concurrent session wins the rename, this copy is deleted and
-    * theirs serves. */
-  private[graft] def servedBm25Index(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import org.apache.commons.io.FileUtils.deleteQuietly
-    val fp = Lake.fingerprint(s, Seq(Tables.path(dir, "documents")))
-    val tmp = Paths.get(sys.props("java.io.tmpdir"))
-    val idx = tmp.resolve(s"graft_bm25_v1_$fp")
-    def complete = Lake.Manifest.isManaged(s, s"$idx/meta")
-    if (!complete) {
-      val build = tmp.resolve(
-        s"graft_bm25_build_${fp}_${java.util.UUID.randomUUID()}")
-      publishBm25Index(Tables.documents(s, dir), build.toString)
-      // exists-then-incomplete can only be a broken leftover: a rename
-      // lands a complete index at once (checking `complete` alone
-      // could delete an index a concurrent session just renamed in)
-      if (Files.exists(idx) && !complete) deleteQuietly(idx.toFile)
-      try Files.move(build, idx, StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileSystemException => () }
-      // a no-op after a won rename; after a lost one (a concurrent
-      // session published first) its index serves and this copy goes
-      deleteQuietly(build.toFile)
-      require(complete, s"BM25 index of $dir did not publish to $idx")
-    }
-    idx.toString
-  }
+    * [[Lake.publishOnce]] builds it in a sibling dir and renames it
+    * into place; it counts as complete once `meta`, published last,
+    * is manifest-managed. */
+  private[graft] def servedBm25Index(s: SparkSession, dir: String): String =
+    Lake.publishOnce(s, "graft_bm25_v1", Seq(Tables.path(dir, "documents")),
+      "meta")(publishBm25Index(Tables.documents(s, dir), _))
 
   /** F16 unigram language-model scoring — the CCNet/CC-Net-style
     * perplexity proxy for corpus quality filtering: train add-one-

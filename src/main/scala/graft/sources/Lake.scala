@@ -77,6 +77,43 @@ object Lake {
     md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
+  /** Publish-once home of state derived from `inputs` (a served
+    * index): `java.io.tmpdir/<prefix>_<fingerprint of inputs>`, built
+    * at most once per input version and reused by every later call.
+    * The dir counts as complete once its `last` table — the one
+    * `build` publishes last — is manifest-managed; an incomplete one
+    * is rebuilt. `build` writes into a unique `<prefix>_build_*`
+    * sibling that is renamed into place atomically, so readers never
+    * see a half-built dir and two sessions never write into one; when
+    * a concurrent session wins the rename, this copy is deleted and
+    * theirs serves. Returns the published dir. */
+  def publishOnce(spark: SparkSession, prefix: String, inputs: Seq[String],
+      last: String)(build: String => Unit): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.commons.io.FileUtils.deleteQuietly
+    val fp = fingerprint(spark, inputs)
+    val tmp = Paths.get(sys.props("java.io.tmpdir"))
+    val dir = tmp.resolve(s"${prefix}_$fp")
+    def complete = Manifest.isManaged(spark, s"$dir/$last")
+    if (!complete) {
+      val sibling = tmp.resolve(
+        s"${prefix}_build_${fp}_${java.util.UUID.randomUUID()}")
+      build(sibling.toString)
+      // exists-then-incomplete can only be a broken leftover: a rename
+      // lands a complete dir at once (checking `complete` alone could
+      // delete a dir a concurrent session just renamed in)
+      if (Files.exists(dir) && !complete) deleteQuietly(dir.toFile)
+      try Files.move(sibling, dir, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileSystemException => () }
+      // a no-op after a won rename; after a lost one (a concurrent
+      // session published first) its dir serves and this copy goes
+      deleteQuietly(sibling.toFile)
+      require(complete, s"$prefix state of ${inputs.mkString(", ")} " +
+        s"did not publish to $dir")
+    }
+    dir.toString
+  }
+
   /** Z-order layout write (H14) — multi-dimensional data clustering
     * for range-query pruning: each row's position on the Z-curve
     * interleaves the bits of its (normalized) values in `cols`, the

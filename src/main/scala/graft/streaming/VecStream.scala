@@ -13,27 +13,19 @@ import graft.operators.Similarity
   *
   * Replay semantics: `foreachBatch` re-delivers a batch after a crash,
   * and a blind re-append would duplicate code rows (top-k could then
-  * return a vector twice). On a MANIFEST-MANAGED index
-  * ([[graft.operators.Similarity.publishIvfPqIndex]]) each applied
-  * batch is ONE atomic manifest commit that both adds the code files
-  * and records `batch=<id>` as a carried commit-log meta — data
-  * visibility and replay bookkeeping cannot diverge, so a crash at
-  * ANY point leaves the served index on the previous version and the
-  * replayed batch re-applies cleanly (exactly-once by idempotent
-  * commit). Serving still prunes to probed cells: the manifest commit
-  * lays files out under `__p_cell=` dirs and
-  * [[graft.sources.Lake.Manifest.readPublishedPruned]] prunes the
-  * file LIST driver-side, the Delta/Iceberg
+  * return a vector twice). Each applied batch is ONE atomic manifest
+  * commit ([[graft.operators.Similarity.appendIvfPqIndex]]) that both
+  * adds the code files and records `batch=<id>` as a carried
+  * commit-log meta — data visibility and replay bookkeeping cannot
+  * diverge, so a crash at ANY point leaves the served index on the
+  * previous version and the replayed batch re-applies cleanly
+  * (exactly-once by idempotent commit). Serving still prunes to
+  * probed cells: the manifest commit lays files out under `__p_cell=`
+  * dirs and [[graft.sources.Lake.Manifest.readPublishedPruned]]
+  * prunes the file LIST driver-side, the Delta/Iceberg
   * partition-pruning-from-the-log shape.
   *
-  * A legacy plain-hive index ([[graft.operators.Similarity
-  * .buildIvfPqIndex]]) keeps the old marker gate: a marker under
-  * `_stream_batches/` written AFTER the append commits, which narrows
-  * at-least-once to the append→marker crash window. Migrate by
-  * building with `publishIvfPqIndex` — this object auto-detects the
-  * layout per batch.
-  *
-  * Compaction: pass `maxFiles` to run E9's crash-safe
+  * Compaction: pass `maxFiles` to run E9's atomic
   * `compactIvfPqIndex` after each applied batch — the file count stays
   * bounded across an unbounded stream (the A24 state-compaction
   * posture). At 100 TB/day the per-trigger cost is encode(delta) +
@@ -42,30 +34,16 @@ import graft.operators.Similarity
 object VecStream {
 
   /** Apply ONE micro-batch exactly once: returns true if the batch
-    * was applied, false if it was a replay skip. Manifest-managed
-    * index → one atomic commit carrying `batch=<id>` (no crash
-    * window); legacy hive layout → the marker gate. */
+    * was applied, false if it was a replay skip. The apply is one
+    * atomic commit carrying `batch=<id>` (no crash window). */
   def streamAppendBatch(dir: String, batch: DataFrame,
       batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    if (Similarity.isPublishedIndex(spark, dir)) {
-      val tag = s"batch=$batchId"
-      if (graft.sources.Lake.Manifest
-          .publishedMetas(spark, s"$dir/codes").contains(tag)) false
-      else {
-        Similarity.appendIvfPqIndexPublished(dir, batch, meta = tag)
-        true
-      }
-    } else {
-      val markers = new java.io.File(s"$dir/_stream_batches")
-      markers.mkdirs()
-      val marker = new java.io.File(markers, batchId.toString)
-      if (marker.exists()) false
-      else {
-        Similarity.appendIvfPqIndex(dir, batch)
-        marker.createNewFile()
-        true
-      }
+    val tag = s"batch=$batchId"
+    if (graft.sources.Lake.Manifest
+        .publishedMetas(batch.sparkSession, s"$dir/codes").contains(tag)) false
+    else {
+      Similarity.appendIvfPqIndex(dir, batch, meta = tag)
+      true
     }
   }
 
@@ -78,7 +56,7 @@ object VecStream {
     * idempotent). `vectors` supplies the TRUE vectors for the
     * re-encode at split time — the landed vector lake, read lazily
     * per tick; the index alone cannot re-encode (codes are residual
-    * to their cell centroid). Published layout only. */
+    * to their cell centroid). */
   def appendToIndexBalanced(vecs: DataFrame, dir: String,
       checkpoint: String, vectors: () => DataFrame, cap: Long,
       maxFiles: Int = 64): StreamingQuery =
@@ -94,26 +72,21 @@ object VecStream {
           Similarity.rebalanceIvfIndexPublished(spark, dir, vectors(),
             cap, maxPasses = 8)
           if (maxFiles > 0)
-            Similarity.compactIvfPqIndexPublished(spark, dir, maxFiles)
+            Similarity.compactIvfPqIndex(spark, dir, maxFiles)
         }
       }
       .start()
 
   /** Continuous index maintenance: encode-and-append every trigger,
-    * compacting when the cell dirs fragment past `maxFiles`. */
+    * compacting when the code files fragment past `maxFiles`. */
   def appendToIndex(vecs: DataFrame, dir: String, checkpoint: String,
       maxFiles: Int = 64): StreamingQuery =
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (streamAppendBatch(dir, batch, batchId) && maxFiles > 0) {
-          if (Similarity.isPublishedIndex(batch.sparkSession, dir))
-            Similarity.compactIvfPqIndexPublished(
-              batch.sparkSession, dir, maxFiles)
-          else
-            Similarity.compactIvfPqIndex(batch.sparkSession, dir, maxFiles)
-        }
+        if (streamAppendBatch(dir, batch, batchId) && maxFiles > 0)
+          Similarity.compactIvfPqIndex(batch.sparkSession, dir, maxFiles)
       }
       .start()
 }

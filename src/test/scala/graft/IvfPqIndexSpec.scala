@@ -7,13 +7,23 @@ import graft.sources.Tables
 
 /** E8 persisted IVF-PQ index (VERDICT r3 #1: split build from serve).
   * The build half is a batch job writing centroids + codebooks + a
-  * cell-partitioned code table; the serve half must (a) return results
-  * bit-identical to the in-memory `annIvfPq` path, and (b) plan as a
-  * partition-PRUNED scan of only the probed cells with no training
-  * stage and no vector scan. */
+  * manifest-published, cell-partitioned code table; the serve half
+  * must (a) return results bit-identical to the in-memory `annIvfPq`
+  * path, and (b) read only the probed cells' code files with no
+  * training stage and no vector scan. */
 class IvfPqIndexSpec extends AnyFunSuite {
   private lazy val spark = GraftTestSession.spark
   private val sf = GraftTestSession.sf
+  private val M = graft.sources.Lake.Manifest
+
+  /** The `__p_cell=` value of each code file in `files`. */
+  private def cellsOf(files: Seq[String]): Set[String] =
+    files.map(_.split("__p_cell=")(1).split("/")(0)).toSet
+
+  /** Current code files of the index under `d`, with their mtimes. */
+  private def codeFiles(d: String): Map[String, Long] =
+    M.readPublished(spark, s"$d/codes").inputFiles.map(f =>
+      f -> new java.io.File(new java.net.URI(f)).lastModified()).toMap
 
   private lazy val idxDir: String = {
     val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
@@ -43,9 +53,15 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .toDF("q_id", "qv")
     val df = Similarity.queryIvfPqIndex(spark, idxDir, q)
     val plan = df.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*cell#\\d+ (IN|INSET)".r
-      .findFirstIn(plan).isDefined,
-      s"cell partition filter missing:\n$plan")
+    // every file the scan reads sits under a probed `__p_cell=` dir
+    val probed = Similarity.ivfPqProbe(q,
+        Similarity.loadIvfPqModel(spark, idxDir), nProbe = 2)
+      .select($"cell").as[Int].collect().map(_.toString).toSet
+    val read = df.inputFiles.toSeq
+    assert(read.nonEmpty && read.forall(_.contains("__p_cell=")),
+      s"serve read files outside the cell partitions: $read")
+    assert(cellsOf(read).subsetOf(probed),
+      s"read cells ${cellsOf(read)} beyond the probed $probed")
     assert(!plan.contains("embeddings.parquet"), "serve path scans vectors")
     assert("Scan parquet".r.findAllIn(plan).size == 1,
       "serve path should read exactly one table: the cell-partitioned codes")
@@ -71,7 +87,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val expected = Similarity.ivfPqEncode(
       vecs.select($"vec_id", $"embedding".cast("array<double>").as("v")), m)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSet
-    val onDisk = spark.read.parquet(s"$apDir/codes")
+    val onDisk = M.readPublished(spark, s"$apDir/codes")
       .select($"vec_id", $"cell", $"codes")
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2))).toSet
     assert(onDisk == expected)
@@ -82,14 +98,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_ro").toString
     val vecs = Tables.embeddings(spark, sf)
     Similarity.buildIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
-    def listing(): Map[String, Long] =
-      Option(new java.io.File(s"$d/codes").listFiles()).get
-        .filter(_.getName.startsWith("cell="))
-        .flatMap(c => c.listFiles().filter(_.getName.endsWith(".parquet")))
-        .map(f => f.getPath -> f.lastModified()).toMap
-    val before = listing()
+    val before = codeFiles(d)
     Similarity.appendIvfPqIndex(d, vecs.filter($"vec_id" % 2 === 1))
-    val after = listing()
+    val after = codeFiles(d)
     assert(before.keySet.subsetOf(after.keySet), "append removed base files")
     before.foreach { case (p, ts) =>
       assert(after(p) == ts, s"append rewrote base file $p") }
@@ -110,11 +121,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val expected = collectAll(Similarity.ivfPqScore(coded, qprobe))
     assert(served == expected)
     // compaction: fewer files, byte-identical serve results
-    def nFiles(): Int =
-      Option(new java.io.File(s"$apDir/codes").listFiles()).get
-        .filter(_.getName.startsWith("cell="))
-        .flatMap(c => c.listFiles().filter(_.getName.endsWith(".parquet")))
-        .length
+    def nFiles(): Int = codeFiles(apDir).size
     val before = nFiles()
     Similarity.compactIvfPqIndex(spark, apDir, maxFiles = 1)
     val after = nFiles()
@@ -150,11 +157,11 @@ class IvfPqIndexSpec extends AnyFunSuite {
       Similarity.ivfPqProbe(queries, m, nProbe = 2)))
     assert(collectAll(Similarity.queryIvfPqIndex(spark, d, queries)) == expected)
     // a replayed batchId must be a no-op (the crash-recovery path)
-    val rows = spark.read.parquet(s"$d/codes").count()
+    val rows = M.readPublished(spark, s"$d/codes").count()
     val replay = vecs.filter($"vec_id" % 2 === 1).limit(3)
     assert(!graft.streaming.VecStream.streamAppendBatch(d, replay, 0L),
       "replayed batch 0 must be skipped")
-    assert(spark.read.parquet(s"$d/codes").count() == rows,
+    assert(M.readPublished(spark, s"$d/codes").count() == rows,
       "replay appended duplicate code rows")
   }
 
@@ -186,37 +193,11 @@ class IvfPqIndexSpec extends AnyFunSuite {
   }
 
   test("compact below the file bound is a no-op") {
-    val codes = new java.io.File(s"$idxDir/codes")
-    def stamp(): Map[String, Long] =
-      Option(codes.listFiles()).get.filter(_.getName.startsWith("cell="))
-        .flatMap(_.listFiles()).map(f => f.getPath -> f.lastModified()).toMap
-    val before = stamp()
+    val before = codeFiles(idxDir)
+    val v = M.latestVersion(spark, s"$idxDir/codes")
     Similarity.compactIvfPqIndex(spark, idxDir, maxFiles = 10000)
-    assert(stamp() == before)
-  }
-
-  test("a crash inside the compact rename window is recovered on next entry") {
-    import spark.implicits._
-    val q = Tables.embeddings(spark, sf).filter($"vec_id" < 5)
-      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
-    val expected = collectAll(Similarity.queryIvfPqIndex(spark, idxDir, q))
-    val codes = new java.io.File(s"$idxDir/codes")
-    val old = new java.io.File(s"$idxDir/codes_old")
-    // crash shape 1 (roll BACK): codes renamed away, compacted tmp not
-    // yet complete — only codes_old holds a complete table
-    require(codes.renameTo(old))
-    Similarity.recoverCompactSwap(idxDir)
-    assert(codes.exists() && !old.exists())
-    assert(collectAll(Similarity.queryIvfPqIndex(spark, idxDir, q)) == expected)
-    // crash shape 2 (roll FORWARD): a complete compacted tmp (_SUCCESS
-    // present) plus codes_old, codes missing — the tmp must win
-    val tmp = new java.io.File(s"$idxDir/codes_compact_tmp")
-    spark.read.parquet(codes.getPath)
-      .repartition($"cell").write.partitionBy("cell").parquet(tmp.getPath)
-    require(codes.renameTo(old))
-    Similarity.recoverCompactSwap(idxDir)
-    assert(codes.exists() && !old.exists() && !tmp.exists())
-    assert(collectAll(Similarity.queryIvfPqIndex(spark, idxDir, q)) == expected)
+    assert(codeFiles(idxDir) == before)
+    assert(M.latestVersion(spark, s"$idxDir/codes") == v)
   }
 
   // E33 cell split: a 3-cluster corpus trained at k=2 leaves one cell
@@ -234,10 +215,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("E33 split: one atomic commit re-homes only the hot cell, model rides the manifest, untouched cells byte-identical") {
     import spark.implicits._
-    val M = graft.sources.Lake.Manifest
     val d = java.nio.file.Files.createTempDirectory("graft_split").toString
     val vecs = splitCorpus(spark)
-    Similarity.publishIvfPqIndex(vecs, d, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     val sizes = Similarity.ivfCellSizesPublished(spark, d)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -309,10 +289,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("model cache: an unchanged index reuses its model; a split, an append or a tombstone commit reloads it") {
     import spark.implicits._
-    val M = graft.sources.Lake.Manifest
     val d = java.nio.file.Files.createTempDirectory("graft_mcache").toString
     val vecs = splitCorpus(spark)
-    Similarity.publishIvfPqIndex(vecs, d, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     def vec(x: Double, y: Double) = Array(x, y, 0.0, 0, 0, 0, 0, 0)
     val q = Seq((0L, vec(10.05, 0)), (1L, vec(0, 10.05)),
@@ -344,7 +323,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(!(m1 eq m0) && m1.centroids.length == m0.centroids.length + 1)
     assert(served() == expected(), "serve after a split")
     // E9 append commit
-    Similarity.appendIvfPqIndexPublished(d,
+    Similarity.appendIvfPqIndex(d,
       Seq((100L, vec(10.3, 0.2)), (101L, vec(0.2, 10.3)))
         .toDF("vec_id", "embedding"))
     assert(!(Similarity.loadIvfPqModel(spark, d) eq m1))
@@ -361,7 +340,6 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("E33 degenerate cells refuse; a rebalance pass splits every oversized cell atomically") {
     import spark.implicits._
-    val M = graft.sources.Lake.Manifest
     // all-identical corpus: the single cell cannot split
     val dDeg = java.nio.file.Files.createTempDirectory("graft_split_deg")
       .toString
@@ -371,7 +349,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val same = Seq(0L, 29L, 58L, 87L, 1L, 2L, 3L, 4L).map(i =>
       (i, Array(1.0, 2, 3, 4, 5, 6, 7, 8)))
       .toDF("vec_id", "embedding")
-    Similarity.publishIvfPqIndex(same, dDeg, k = 2, iters = 1,
+    Similarity.buildIvfPqIndex(same, dDeg, k = 2, iters = 1,
       pqM = 2, pqK = 4)
     val v0 = M.latestVersion(spark, s"$dDeg/codes")
     val cell0 = Similarity.ivfCellSizesPublished(spark, dDeg)
@@ -382,7 +360,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // rebalance: cap 12 forces exactly the fat cell to split
     val d = java.nio.file.Files.createTempDirectory("graft_rebal").toString
     val vecs = splitCorpus(spark)
-    Similarity.publishIvfPqIndex(vecs, d, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     val n = Similarity.rebalanceIvfIndexPublished(spark, d, vecs, cap = 12L)
     assert(n == 1, s"expected exactly one oversized cell, split $n")
@@ -396,7 +374,6 @@ class IvfPqIndexSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val M = graft.sources.Lake.Manifest
     def vec(x: Double, y: Double) =
       Array(x, y, 0.0, 0, 0, 0, 0, 0)
     // base: two balanced 20-vector blobs; the stream then dumps 30
@@ -409,7 +386,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .map(i => (i, vec(8.0 + 0.1 * (i - 100), 1.0)))
       .toDF("vec_id", "embedding")
     val d = java.nio.file.Files.createTempDirectory("graft_bal").toString
-    Similarity.publishIvfPqIndex(base, d, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(base, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     val lake = java.nio.file.Files.createTempDirectory("graft_bal_lake")
       .toString
@@ -443,26 +420,21 @@ class IvfPqIndexSpec extends AnyFunSuite {
 
   test("served path scans fewer code files than the index holds (pruning is real)") {
     import spark.implicits._
-    val codesDir = new java.io.File(s"$idxDir/codes")
-    val allCells = codesDir.listFiles().count(_.getName.startsWith("cell="))
+    val allCells = cellsOf(codeFiles(idxDir).keys.toSeq).size
     val q = Tables.embeddings(spark, sf).filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
     val served = Similarity.queryIvfPqIndex(spark, idxDir, q)
     // 5 queries × nProbe=2 probe ≤ 10 distinct cells of the 16 built
-    val probed = served.queryExecution.executedPlan.toString
-    val in = "IN \\(([^)]*)\\)".r.findFirstMatchIn(probed)
-    assert(allCells >= 10, s"expected ≥10 cell dirs, found $allCells")
-    in.foreach { m =>
-      val n = m.group(1).split(",").length
-      assert(n <= 10 && n < allCells, s"probed $n of $allCells cells")
-    }
+    val n = cellsOf(served.inputFiles.toSeq).size
+    assert(allCells >= 10, s"expected ≥10 cells, found $allCells")
+    assert(n > 0 && n <= 10 && n < allCells, s"read $n of $allCells cells")
   }
 
   test("E38 tombstoned delete: immediate serve mask, compaction preserves results") {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_del").toString
     val vecs = Tables.embeddings(spark, sf)
-    Similarity.publishIvfPqIndex(vecs, d)
+    Similarity.buildIvfPqIndex(vecs, d)
     val q = vecs.filter($"vec_id" < 5)
       .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
     val before = collectAll(Similarity.queryIvfPqIndex(spark, d, q))
@@ -478,7 +450,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // the mask equals a from-scratch serve over the reduced code set:
     // same frozen model, codes re-published without the victims
     val d2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_del2").toString
-    Similarity.publishIvfPqIndex(vecs, d2)
+    Similarity.buildIvfPqIndex(vecs, d2)
     Similarity.deleteFromIvfPqIndexPublished(spark, d2,
       victims.toDF("vec_id"))
     assert(collectAll(Similarity.queryIvfPqIndex(spark, d2, q)) == masked,
@@ -497,5 +469,70 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .readPublished(spark, s"$d/codes")
       .filter($"vec_id".isin(victims: _*)).count()
     assert(left == 0L, s"$left tombstoned rows survived compaction")
+  }
+
+  test("a rebuild replaces the whole index: no stale split, batch or tombstone survives") {
+    import spark.implicits._
+    val vecs = splitCorpus(spark)
+    def build(d: String) =
+      Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2, pqM = 2, pqK = 4)
+    val d = java.nio.file.Files.createTempDirectory("graft_rebuild").toString
+    val fresh = java.nio.file.Files.createTempDirectory("graft_rebuild_f")
+      .toString
+    build(d)
+    // leave every kind of commit-log state behind: an E33 split, an
+    // applied stream batch and a tombstone
+    val fat = Similarity.ivfCellSizesPublished(spark, d).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).maxBy(t => (t._2, t._1))._1
+    assert(Similarity.splitIvfCellPublished(spark, d, vecs, fat) >= 0)
+    assert(graft.streaming.VecStream.streamAppendBatch(d,
+      Seq((100L, Array(10.3, 0.2, 0, 0, 0, 0, 0, 0)))
+        .toDF("vec_id", "embedding"), 0L))
+    Similarity.deleteFromIvfPqIndexPublished(spark, d, Seq(0L).toDF("vec_id"))
+    build(d)
+    build(fresh)
+    val m = Similarity.loadIvfPqModel(spark, d)
+    assert(m.centroids.length ==
+      Similarity.loadIvfPqModel(spark, fresh).centroids.length,
+      s"rebuilt model has ${m.centroids.length} cells")
+    assert(M.publishedMetas(spark, s"$d/codes").isEmpty,
+      "the rebuild carried the old commit log")
+    assert(!M.isManaged(spark, s"$d/tombs"), "the rebuild kept old tombstones")
+    // nProbe = 1: a replayed stale split probes the wrong cell
+    val q = Seq((0L, Array(0.0, 10.05, 0, 0, 0, 0, 0, 0)),
+      (1L, Array(-10.05, 0.0, 0, 0, 0, 0, 0, 0)),
+      (2L, Array(10.05, 0.0, 0, 0, 0, 0, 0, 0))).toDF("q_id", "qv")
+    val got = collectAll(Similarity.queryIvfPqIndex(spark, d, q, nProbe = 1))
+    assert(got.nonEmpty && got.map(_._1).toSet == Set(0L, 1L, 2L), got)
+    assert(got == collectAll(Similarity.queryIvfPqIndex(spark, fresh, q,
+      nProbe = 1)), "rebuild serves differently from a fresh-dir build")
+    // the old stream's batch 0 no longer gates a new stream's batch 0
+    assert(graft.streaming.VecStream.streamAppendBatch(d,
+      vecs.filter($"vec_id" === 5L), 0L))
+  }
+
+  test("registry IVF-PQ entries publish one index dir per embeddings version and leave no build dir") {
+    import spark.implicits._
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    val base = java.nio.file.Files.createTempDirectory("graft_ivfpq_once")
+    val vecs = Tables.embeddings(spark, sf)
+    vecs.write.parquet(Tables.path(base.toString, "embeddings"))
+    val fp = graft.sources.Lake.fingerprint(spark,
+      Seq(Tables.path(base.toString, "embeddings")))
+    def made(): Set[String] = tmp.listFiles().map(_.getName)
+      .filter(n => n.startsWith("graft_ivfpq_") && n.contains(fp)).toSet
+    val serve = Similarity.queries("ann_ivfpq_index")
+    val runs = (1 to 2).map(_ => collectAll(serve(spark, base.toString)))
+    assert(made() == Set(s"graft_ivfpq_v1_$fp"),
+      s"two serves of one dataset left dirs ${made()}")
+    runs.foreach(r => assert(r == collectAll(Similarity.annIvfPq(vecs))))
+    // the delete-serve entry publishes its own index the same way
+    val del = collectAll(Similarity.queries("ann_delete_serve")(spark,
+      base.toString))
+    assert(del.nonEmpty && del.forall(_._3 % 7 != 3), del)
+    assert(made() == Set(s"graft_ivfpq_v1_$fp", s"graft_ivfpq_del_v1_$fp"),
+      s"dirs ${made()}")
+    made().foreach(n =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp, n)))
   }
 }

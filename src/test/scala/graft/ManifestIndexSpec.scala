@@ -8,10 +8,9 @@ import graft.sources.{Lake, Tables}
 /** C28 atomic streaming index maintenance (VERDICT r6 #1): the code
   * table lives under [[Lake.Manifest]], so each micro-batch append is
   * ONE manifest commit that both publishes the files and records the
-  * batch id as a carried commit-log meta. The acknowledged
-  * append→marker crash window of the legacy layout cannot exist here:
-  * a crash at any point before the pointer swap leaves readers on the
-  * previous version and the replayed batch re-applies cleanly.
+  * batch id as a carried commit-log meta. A crash at any point before
+  * the pointer swap leaves readers on the previous version and the
+  * replayed batch re-applies cleanly.
   *
   * Uniform embeddings corpus; assertions are bit-identical result
   * comparisons against the frozen-model twin (the IvfPqIndexSpec
@@ -44,20 +43,6 @@ class ManifestIndexSpec extends AnyFunSuite {
       Similarity.ivfPqProbe(queriesOf, m, nProbe = 2)))
   }
 
-  test("published build serves bit-identically to the plain-hive build") {
-    import spark.implicits._
-    val vecs = Tables.embeddings(spark, sf)
-    val hive = java.nio.file.Files.createTempDirectory("graft_mi_hive").toString
-    val pub = java.nio.file.Files.createTempDirectory("graft_mi_pub").toString
-    Similarity.buildIvfPqIndex(vecs, hive)
-    Similarity.publishIvfPqIndex(vecs, pub)
-    assert(Similarity.isPublishedIndex(spark, pub))
-    assert(!Similarity.isPublishedIndex(spark, hive))
-    val a = collectAll(Similarity.queryIvfPqIndex(spark, hive, queriesOf))
-    val b = collectAll(Similarity.queryIvfPqIndex(spark, pub, queriesOf))
-    assert(a == b && a.nonEmpty)
-  }
-
   test("streamed appends are atomic manifest commits; replay is a version-level no-op") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -65,7 +50,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_mi_st").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_mi_ck").toString
     val vecs = Tables.embeddings(spark, sf)
-    Similarity.publishIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
+    Similarity.buildIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
     val odd = vecs.filter($"vec_id" % 2 === 1)
       .select($"vec_id", $"embedding")
       .as[(Long, Array[Float])].collect()
@@ -100,7 +85,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_mi_cr").toString
     val vecs = Tables.embeddings(spark, sf)
-    Similarity.publishIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
+    Similarity.buildIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
     assert(graft.streaming.VecStream.streamAppendBatch(
       d, vecs.filter($"vec_id" % 4 === 1), 0L))
     val committed = collectAll(Similarity.queryIvfPqIndex(spark, d, queriesOf))
@@ -145,7 +130,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_mi_pr").toString
     val vecs = Tables.embeddings(spark, sf)
-    Similarity.publishIvfPqIndex(vecs, d)
+    Similarity.buildIvfPqIndex(vecs, d)
     val served = Similarity.queryIvfPqIndex(spark, d, queriesOf)
     assert(served.count() > 0)
     val all = Lake.Manifest.readPublished(spark, s"$d/codes").inputFiles
@@ -203,7 +188,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_mi_co").toString
     val vecs = Tables.embeddings(spark, sf)
-    Similarity.publishIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
+    Similarity.buildIvfPqIndex(vecs.filter($"vec_id" % 2 === 0), d)
     assert(graft.streaming.VecStream.streamAppendBatch(
       d, vecs.filter($"vec_id" % 4 === 1), 0L))
     assert(graft.streaming.VecStream.streamAppendBatch(
@@ -211,7 +196,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     val before = collectAll(Similarity.queryIvfPqIndex(spark, d, queriesOf))
     val nBefore = Lake.Manifest.readPublished(spark, s"$d/codes")
       .inputFiles.length
-    Similarity.compactIvfPqIndexPublished(spark, d, maxFiles = 1)
+    Similarity.compactIvfPqIndex(spark, d, maxFiles = 1)
     val nAfter = Lake.Manifest.readPublished(spark, s"$d/codes")
       .inputFiles.length
     assert(nAfter < nBefore, s"compact did not shrink ($nBefore -> $nAfter)")

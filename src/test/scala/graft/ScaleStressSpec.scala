@@ -1001,7 +1001,7 @@ class ScaleStressSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_split_scale")
       .toString
     val t0 = System.nanoTime()
-    Similarity.publishIvfPqIndex(vecs, d, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     val publishSecs = (System.nanoTime() - t0) / 1e9
     // k=2 over three blobs always merges two of them: the hot cell

@@ -188,7 +188,7 @@ class StreamingSoakSpec extends AnyFunSuite {
     // a delete commit between ticks
     val d1 = java.nio.file.Files.createTempDirectory("graft_soak_s").toString
     val ck = java.nio.file.Files.createTempDirectory("graft_soak_ck").toString
-    Similarity.publishIvfPqIndex(base, d1, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(base, d1, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     val in = MemoryStream[(Long, Array[Double])]
     deltas.zip(dels).foreach { case (delta, del) =>
@@ -215,14 +215,14 @@ class StreamingSoakSpec extends AnyFunSuite {
 
     // --- the BATCH-API replay: the identical op sequence, no stream
     val d2 = java.nio.file.Files.createTempDirectory("graft_soak_b").toString
-    Similarity.publishIvfPqIndex(base, d2, k = 2, iters = 2,
+    Similarity.buildIvfPqIndex(base, d2, k = 2, iters = 2,
       pqM = 2, pqK = 4)
     deltas.zip(dels).zipWithIndex.foreach { case ((delta, del), i) =>
-      Similarity.appendIvfPqIndexPublished(d2,
+      Similarity.appendIvfPqIndex(d2,
         delta.toDF("vec_id", "embedding"), meta = s"batch=$i")
       Similarity.rebalanceIvfIndexPublished(spark, d2, vectors(), cap,
         maxPasses = 8)
-      Similarity.compactIvfPqIndexPublished(spark, d2, 64)
+      Similarity.compactIvfPqIndex(spark, d2, 64)
       Similarity.deleteFromIvfPqIndexPublished(spark, d2,
         del.toDF("vec_id"))
     }

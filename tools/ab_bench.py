@@ -4,9 +4,9 @@
     python3 tools/ab_bench.py --workload analytics_mix
         [--parent REV] [--change REV] [--pairs 10]
 
-Checks the parent (default HEAD~1) and the change (default HEAD) out
-as two detached `git worktree`s in a fresh temporary directory (under
-$TMPDIR when set), then runs
+Exports the parent (default HEAD~1) and the change (default HEAD) with
+`git archive` into a fresh temporary directory (under $TMPDIR when
+set), then runs
 
     python3 perfbench/run.py --workload W --seed s --seconds S --trace 0
 
@@ -16,18 +16,27 @@ odd pairs the change first, so drift in machine load falls on both
 sides alike. Every run's JSON line is
 echoed as it finishes. At the end, for each end-to-end metric of
 BENCHMARK.json, it prints each side's median and quartiles, the pairs
-the change won (ties count for neither side) and whether the gain rule
-holds: the change wins at least 9/10 of the pairs and the medians are
-further apart than the parent's own quartile distance. The last line
-is the same summary as one JSON object.
+the change won (ties count for neither side), whether the gain rule
+holds (the change wins at least 9/10 of the pairs and the medians are
+further apart than the parent's own quartile distance) and the
+no-regression verdict against the metric's `bound`:
+
+    unresolved  the parent's (q3 - q1) / median is above the bound and
+                not every change run beats every parent run
+    regressed   the change's median is worse than the parent's by more
+                than bound x the parent's median
+    ok          otherwise
+
+The last line is the same summary as one JSON object.
 
 Runs are measured on the committed files only: nothing under
-perfbench/ and no BENCHMARK.json is written, and the worktrees are
-removed on exit. Exit code 0 when every run was correct, else 1.
+perfbench/ and no BENCHMARK.json is written, and the exported trees
+are removed on exit. Exit code 0 when every run was correct, else 1.
 """
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -65,8 +74,22 @@ def run_once(checkout, workload, seed, seconds):
     return metrics, p.returncode == 0 and res["correct"]
 
 
+def verdict(par, chg, higher, bound):
+    """No-regression verdict of the change's runs against the parent's."""
+    med = quantile(par, 0.5)
+    spread = (quantile(par, 0.75) - quantile(par, 0.25)) / abs(med)
+    dominates = (min(chg) > max(par)) if higher else (max(chg) < min(par))
+    if dominates:
+        return "ok"
+    if spread > bound:
+        return "unresolved"
+    worse = (med - quantile(chg, 0.5)) if higher else (quantile(chg, 0.5) - med)
+    return "regressed" if worse > bound * abs(med) else "ok"
+
+
 def summarize(spec, runs):
-    """Per-metric medians, quartiles and pairs won by the change."""
+    """Per-metric medians, quartiles, pairs won by the change and the
+    no-regression verdict."""
     out = {}
     for m in spec:
         name, higher = m["name"], m["better"] == "higher"
@@ -87,7 +110,9 @@ def summarize(spec, runs):
         out[name] = {"unit": m["unit"], "better": m["better"], **side,
                      "pairs": len(pairs), "won": won, "lost": lost,
                      "gain": (better and won * 10 >= 9 * len(pairs)
-                              and abs(diff) > iqr)}
+                              and abs(diff) > iqr),
+                     "bound": m["bound"],
+                     "verdict": verdict(par, chg, higher, m["bound"])}
     return out
 
 
@@ -106,7 +131,14 @@ def main():
             "change": git("rev-parse", a.change)}
     trees = {side: os.path.join(base, side) for side in revs}
     for side, rev in revs.items():
-        git("worktree", "add", "--detach", trees[side], rev)
+        os.makedirs(trees[side])
+        archive = subprocess.Popen(["git", "archive", rev], cwd=ROOT,
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", trees[side]],
+                       stdin=archive.stdout, check=True)
+        archive.stdout.close()
+        if archive.wait() != 0:
+            sys.exit(f"git archive {rev} failed")
     runs = []
     try:
         print(f"parent {revs['parent']}  change {revs['change']}  "
@@ -123,18 +155,17 @@ def main():
                       flush=True)
             runs.append(pair)
     finally:
-        for t in trees.values():
-            subprocess.run(["git", "worktree", "remove", "--force", t],
-                           cwd=ROOT)
+        shutil.rmtree(base, ignore_errors=True)
     summary = summarize(bench["end_to_end"], runs)
     print()
     print(f"{'metric':<16} {'side':<7} {'q1':>10} {'median':>10} {'q3':>10}"
-          f"  won/lost/pairs  gain")
+          f"  won/lost/pairs  gain  verdict (bound)")
     for name, s in summary.items():
         for side in ("parent", "change"):
             q = s[side]
-            tail = (f"  {s['won']}/{s['lost']}/{s['pairs']}"
-                    f"{'':<9}{'yes' if s['gain'] else 'no'}"
+            tail = (f"  {s['won']}/{s['lost']}/{s['pairs']:<9}"
+                    f"{'yes' if s['gain'] else 'no':<6}"
+                    f"{s['verdict']} ({s['bound']:g})"
                     if side == "change" else "")
             print(f"{name:<16} {side:<7} {q['q1']:>10.4g} {q['median']:>10.4g}"
                   f" {q['q3']:>10.4g}{tail}")
