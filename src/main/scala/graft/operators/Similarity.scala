@@ -1431,7 +1431,7 @@ object Similarity {
     * half-applied mask. Physical reclamation is [[compactIvfPqIndex]]
     * — the Delta/Iceberg delete-vector posture. Idempotent by
     * construction (an id tombstoned twice masks the same rows). */
-  def deleteFromIvfPqIndexPublished(spark: SparkSession, dir: String,
+  def deleteFromIvfPqIndex(spark: SparkSession, dir: String,
       ids: DataFrame, meta: String = ""): Long = {
     import spark.implicits._
     graft.sources.Lake.Manifest.publishAppend(
@@ -1540,7 +1540,7 @@ object Similarity {
     * @return the new child cell id, or -1 when the cell is too small
     *         or degenerate (all members identical) — nothing commits
     */
-  def splitIvfCellPublished(spark: SparkSession, dir: String,
+  def splitIvfCell(spark: SparkSession, dir: String,
       vecs: DataFrame, cell: Int): Int = {
     import spark.implicits._
     val M = graft.sources.Lake.Manifest
@@ -1599,7 +1599,7 @@ object Similarity {
   /** Per-cell row counts of a published index — the oversized-cell
     * report a split policy consumes (one manifest-listed scan of the
     * code table, counting only). */
-  def ivfCellSizesPublished(spark: SparkSession, dir: String): DataFrame = {
+  def ivfCellSizes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.sources.Lake.Manifest.readPublished(spark, codesDir(dir))
       .groupBy($"cell").agg(count(lit(1)).as("n_vectors"))
@@ -1615,7 +1615,7 @@ object Similarity {
     * maintenance-daemon contract; degenerate all-identical cells
     * refuse to split and stop the loop rather than spin it). Returns
     * the number of splits performed. */
-  def rebalanceIvfIndexPublished(spark: SparkSession, dir: String,
+  def rebalanceIvfIndex(spark: SparkSession, dir: String,
       vecs: DataFrame, cap: Long, maxPasses: Int = 1): Int = {
     import spark.implicits._
     var done = 0
@@ -1624,10 +1624,10 @@ object Similarity {
     while (progressed && pass < maxPasses) {
       progressed = false
       pass += 1
-      val fat = ivfCellSizesPublished(spark, dir)
+      val fat = ivfCellSizes(spark, dir)
         .filter($"n_vectors" > cap).select($"cell")
         .collect().map(_.getInt(0)).sorted
-      for (c <- fat) if (splitIvfCellPublished(spark, dir, vecs, c) >= 0) {
+      for (c <- fat) if (splitIvfCell(spark, dir, vecs, c) >= 0) {
         done += 1
         progressed = true
       }
@@ -1707,7 +1707,7 @@ object Similarity {
     graft.sources.Lake.publishOnce(s, "graft_ivfpq_del_v1",
         Seq(Tables.path(dir, "embeddings")), "tombs") { idxDir =>
       buildIvfPqIndex(Tables.embeddings(s, dir), idxDir)
-      deleteFromIvfPqIndexPublished(s, idxDir,
+      deleteFromIvfPqIndex(s, idxDir,
         Tables.embeddings(s, dir).filter($"vec_id" % 7 === 3)
           .select($"vec_id"))
     }

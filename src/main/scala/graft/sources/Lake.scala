@@ -160,11 +160,11 @@ object Lake {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
   }
 
-  /** H17 manifest-gated atomic publish — the minimal transactional
-    * primitive the hand-rolled paths above acknowledge they lack
-    * (C28/E9's append→marker window, H13's per-directory atomicity):
-    * data files land under `data/` but are INVISIBLE until a manifest
-    * names them, and readers resolve the current manifest through one
+  /** H17 manifest-gated atomic publish — the one way the engine
+    * commits its own state (indexes, stream state, the incremental
+    * pipeline's state and upsert log; H13's merge above is atomic per
+    * directory only): data files land under `data/` but are INVISIBLE
+    * until a manifest names them, and readers resolve the current manifest through one
     * atomically-swapped pointer file. A crash at ANY point before the
     * pointer swap leaves readers on the previous version; orphaned
     * part-files from dead writers are never read (spec plants one).
@@ -183,7 +183,8 @@ object Lake {
         spark.sparkContext.hadoopConfiguration)
     private def p(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    private def currentVersion(spark: SparkSession, dir: String): Long = {
+    /** The current published version of `dir`; 0 before the first. */
+    def latestVersion(spark: SparkSession, dir: String): Long = {
       val f = fs(spark)
       if (!f.exists(p(s"$dir/_latest"))) 0L
       else {
@@ -216,7 +217,7 @@ object Lake {
       * files and [[vacuum]] pruned the manifest that introduced it.
       * One short line per fact — negligible next to the file list. */
     def publishedMetas(spark: SparkSession, dir: String): Set[String] =
-      manifestLines(spark, dir, currentVersion(spark, dir))
+      manifestLines(spark, dir, latestVersion(spark, dir))
         .filter(_.startsWith("#meta ")).map(_.stripPrefix("#meta ")).toSet
 
     /** Meta lines in FIRST-COMMIT order. The Set view above answers
@@ -227,12 +228,12 @@ object Lake {
       * position in the current manifest IS commit order. */
     def publishedMetasOrdered(spark: SparkSession,
         dir: String): Seq[String] =
-      manifestLines(spark, dir, currentVersion(spark, dir))
+      manifestLines(spark, dir, latestVersion(spark, dir))
         .filter(_.startsWith("#meta ")).map(_.stripPrefix("#meta "))
 
     /** True once any version has been published under `dir`. */
     def isManaged(spark: SparkSession, dir: String): Boolean =
-      currentVersion(spark, dir) > 0L
+      latestVersion(spark, dir) > 0L
 
     private def writeFile(spark: SparkSession, path: String,
         content: String): Unit = {
@@ -264,7 +265,7 @@ object Lake {
         partitionBy: Seq[String] = Nil, meta: String = ""): Long = {
       val spark = df.sparkSession
       val f = fs(spark)
-      val cur = currentVersion(spark, dir)
+      val cur = latestVersion(spark, dir)
       val next = cur + 1
       val sub = f"data/v$next%08d"
       if (partitionBy.isEmpty) df.write.mode("overwrite").parquet(s"$dir/$sub")
@@ -310,7 +311,7 @@ object Lake {
     def publishAppend(df: DataFrame, dir: String,
         partitionBy: Seq[String] = Nil, meta: String = ""): Long = {
       val spark = df.sparkSession
-      commit(df, dir, manifestFiles(spark, dir, currentVersion(spark, dir)),
+      commit(df, dir, manifestFiles(spark, dir, latestVersion(spark, dir)),
         partitionBy, meta)
     }
 
@@ -341,7 +342,7 @@ object Lake {
         partCol: String, dropValues: Seq[String],
         meta: String = ""): Long = {
       val spark = df.sparkSession
-      val all = manifestFiles(spark, dir, currentVersion(spark, dir))
+      val all = manifestFiles(spark, dir, latestVersion(spark, dir))
       val prefix = s"__p_$partCol="
       val unattributed = all.filterNot(
         _.split("/").exists(_.startsWith(prefix)))
@@ -370,7 +371,7 @@ object Lake {
       * files are opened, the rest never touched. */
     def readPublishedPruned(spark: SparkSession, dir: String,
         partCol: String, values: Seq[String]): DataFrame = {
-      val all = manifestFiles(spark, dir, currentVersion(spark, dir))
+      val all = manifestFiles(spark, dir, latestVersion(spark, dir))
       // compare in the UNESCAPED value domain: Spark percent-escapes
       // special characters (':', '=', '%', '#', ...) in partition
       // directory names and writes nulls as __HIVE_DEFAULT_PARTITION__;
@@ -436,7 +437,7 @@ object Lake {
     /** Current published view; empty-but-typed is the caller's
       * concern — version 0 (nothing published) throws. */
     def readPublished(spark: SparkSession, dir: String): DataFrame =
-      readPublishedVersion(spark, dir, currentVersion(spark, dir))
+      readPublishedVersion(spark, dir, latestVersion(spark, dir))
 
     /** H24 SCHEMA EVOLUTION read: the current version with the UNION
       * schema across every listed file (Parquet footer merge), so a
@@ -449,7 +450,7 @@ object Lake {
       * catalogs — and the C50 schema-drift AUDIT decides what the
       * evolved read then absorbs. */
     def readPublishedEvolved(spark: SparkSession, dir: String): DataFrame = {
-      val files = manifestFiles(spark, dir, currentVersion(spark, dir))
+      val files = manifestFiles(spark, dir, latestVersion(spark, dir))
       spark.read.option("mergeSchema", "true").parquet(files: _*)
     }
 
@@ -460,9 +461,6 @@ object Lake {
       val files = manifestFiles(spark, dir, version)
       spark.read.parquet(files: _*)
     }
-
-    def latestVersion(spark: SparkSession, dir: String): Long =
-      currentVersion(spark, dir)
 
     /** Retention pass: drop manifests older than the newest
       * `keepVersions` and DELETE every data file no surviving manifest
@@ -477,7 +475,7 @@ object Lake {
     def vacuum(spark: SparkSession, dir: String,
         keepVersions: Int = 1): Unit = {
       val f = fs(spark)
-      val cur = currentVersion(spark, dir)
+      val cur = latestVersion(spark, dir)
       if (cur == 0L) return
       val keepFrom = math.max(1L, cur - keepVersions + 1)
       val all = f.listStatus(p(s"$dir/_manifests")).toSeq
@@ -570,7 +568,7 @@ object Lake {
       * without stats is kept unconditionally. */
     def pruneFiles(spark: SparkSession, dir: String, lo: Long,
         hi: Long): (Seq[String], Int) = {
-      val all = manifestFiles(spark, dir, currentVersion(spark, dir))
+      val all = manifestFiles(spark, dir, latestVersion(spark, dir))
       val stats = fileStats(spark, dir)
       val kept = all.filter { abs =>
         stats.get(abs.stripPrefix(s"$dir/")) match {

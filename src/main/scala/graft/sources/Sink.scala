@@ -116,15 +116,21 @@ object Sink {
   /** Small-file compaction: rewrite a parquet dataset into ~targetMB
     * files. The operational fix for streaming sinks and over-
     * partitioned writes — a million tiny files turn a 100 TB scan
-    * into a listing/open() storm long before any byte is read. The
-    * partition count derives from the source's on-disk size, so the
-    * same call is right at 1 GB and at 100 TB. */
+    * into a listing/open() storm long before any byte is read. */
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
-      outPath: String, targetMB: Int = 512): Unit = {
-    val df = spark.read.parquet(inPath)
+      outPath: String, targetMB: Int = 512): Unit =
+    compacted(spark.read.parquet(inPath), targetMB)
+      .write.mode(SaveMode.Overwrite).parquet(outPath)
+
+  /** `df` repartitioned into ~targetMB pieces — the sizing rule of
+    * [[compact]], shared by every compaction that writes elsewhere
+    * (a manifest snapshot). The partition count derives from the
+    * input's on-disk size, so the same call is right at 1 GB and at
+    * 100 TB. */
+  def compacted(df: DataFrame, targetMB: Int = 512): DataFrame = {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val parts = ((bytes / (targetMB.toLong * 1024 * 1024)) + 1)
       .min(BigInt(1 << 20)).toInt
-    df.repartition(parts).write.mode(SaveMode.Overwrite).parquet(outPath)
+    df.repartition(parts)
   }
 }

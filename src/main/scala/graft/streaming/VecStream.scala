@@ -69,7 +69,7 @@ object VecStream {
           // fixpoint within the tick (bounded at 8 passes ≈ 256×
           // skew): one batch can push a cell far past cap, and the
           // 2-means halving is rarely even
-          Similarity.rebalanceIvfIndexPublished(spark, dir, vectors(),
+          Similarity.rebalanceIvfIndex(spark, dir, vectors(),
             cap, maxPasses = 8)
           if (maxFiles > 0)
             Similarity.compactIvfPqIndex(spark, dir, maxFiles)

@@ -219,7 +219,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val vecs = splitCorpus(spark)
     Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
-    val sizes = Similarity.ivfCellSizesPublished(spark, d)
+    val sizes = Similarity.ivfCellSizes(spark, d)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val fat = sizes.maxBy(t => (t._2, t._1))._1
     val cold = sizes.keySet - fat
@@ -233,7 +233,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
       .select($"vec_id").as[Long].collect().toSet
     assert(memberIds.size == 20, s"fat cell should hold 2 clusters: $sizes")
 
-    val newId = Similarity.splitIvfCellPublished(spark, d, vecs, fat)
+    val newId = Similarity.splitIvfCell(spark, d, vecs, fat)
     assert(newId == m0.maxCell + 1, s"child id $newId")
     // exactly ONE commit covers codes + model
     assert(M.latestVersion(spark, s"$d/codes") == vBefore + 1)
@@ -263,7 +263,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
         r.getSeq[Int](2).toSeq)).toSet
     assert(got == want, "split rows must equal the frozen-model re-encode")
     // both children non-empty (the two merged clusters separate)
-    val childSizes = Similarity.ivfCellSizesPublished(spark, d)
+    val childSizes = Similarity.ivfCellSizes(spark, d)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(childSizes.getOrElse(fat, 0L) > 0L &&
       childSizes.getOrElse(newId, 0L) > 0L, s"children: $childSizes")
@@ -316,9 +316,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     assert(Similarity.loadIvfPqModel(spark, d) eq m0,
       "an unchanged index must serve from the cached model")
     // E33 split: the model itself changes
-    val fat = Similarity.ivfCellSizesPublished(spark, d).collect()
+    val fat = Similarity.ivfCellSizes(spark, d).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).maxBy(t => (t._2, t._1))._1
-    assert(Similarity.splitIvfCellPublished(spark, d, vecs, fat) >= 0)
+    assert(Similarity.splitIvfCell(spark, d, vecs, fat) >= 0)
     val m1 = Similarity.loadIvfPqModel(spark, d)
     assert(!(m1 eq m0) && m1.centroids.length == m0.centroids.length + 1)
     assert(served() == expected(), "serve after a split")
@@ -331,7 +331,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // E38 tombstone commit
     val m2 = Similarity.loadIvfPqModel(spark, d)
     val victims = served().map(_._3).distinct.take(2)
-    Similarity.deleteFromIvfPqIndexPublished(spark, d, victims.toDF("vec_id"))
+    Similarity.deleteFromIvfPqIndex(spark, d, victims.toDF("vec_id"))
     assert(!(Similarity.loadIvfPqModel(spark, d) eq m2))
     val masked = served()
     assert(masked == expected(), "serve after a tombstone commit")
@@ -352,9 +352,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     Similarity.buildIvfPqIndex(same, dDeg, k = 2, iters = 1,
       pqM = 2, pqK = 4)
     val v0 = M.latestVersion(spark, s"$dDeg/codes")
-    val cell0 = Similarity.ivfCellSizesPublished(spark, dDeg)
+    val cell0 = Similarity.ivfCellSizes(spark, dDeg)
       .collect().head.getInt(0)
-    assert(Similarity.splitIvfCellPublished(spark, dDeg, same, cell0) == -1)
+    assert(Similarity.splitIvfCell(spark, dDeg, same, cell0) == -1)
     assert(M.latestVersion(spark, s"$dDeg/codes") == v0,
       "degenerate split must commit nothing")
     // rebalance: cap 12 forces exactly the fat cell to split
@@ -362,9 +362,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     val vecs = splitCorpus(spark)
     Similarity.buildIvfPqIndex(vecs, d, k = 2, iters = 2,
       pqM = 2, pqK = 4)
-    val n = Similarity.rebalanceIvfIndexPublished(spark, d, vecs, cap = 12L)
+    val n = Similarity.rebalanceIvfIndex(spark, d, vecs, cap = 12L)
     assert(n == 1, s"expected exactly one oversized cell, split $n")
-    val after = Similarity.ivfCellSizesPublished(spark, d)
+    val after = Similarity.ivfCellSizes(spark, d)
       .collect().map(r => r.getLong(1))
     assert(after.forall(_ <= 12L), s"sizes after rebalance: ${after.toSeq}")
     assert(after.sum == 30L)
@@ -399,7 +399,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
       () => spark.read.parquet(lake), cap = 30L)
     q.awaitTermination()
     // no cell exceeds the cap and every vector survives exactly once
-    val sizes = Similarity.ivfCellSizesPublished(spark, d)
+    val sizes = Similarity.ivfCellSizes(spark, d)
       .collect().map(r => r.getLong(1))
     assert(sizes.forall(_ <= 30L), s"post-stream sizes: ${sizes.toSeq}")
     assert(sizes.sum == 70L)
@@ -441,7 +441,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // delete every id the pre-delete top lists actually served, plus
     // one id that never existed (idempotent no-op territory)
     val victims = before.map(_._3).distinct.take(4)
-    Similarity.deleteFromIvfPqIndexPublished(spark, d,
+    Similarity.deleteFromIvfPqIndex(spark, d,
       (victims :+ 999999999L).toDF("vec_id"))
     val masked = collectAll(Similarity.queryIvfPqIndex(spark, d, q))
     assert(masked.nonEmpty)
@@ -451,7 +451,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // same frozen model, codes re-published without the victims
     val d2 = java.nio.file.Files.createTempDirectory("graft_ivfpq_del2").toString
     Similarity.buildIvfPqIndex(vecs, d2)
-    Similarity.deleteFromIvfPqIndexPublished(spark, d2,
+    Similarity.deleteFromIvfPqIndex(spark, d2,
       victims.toDF("vec_id"))
     assert(collectAll(Similarity.queryIvfPqIndex(spark, d2, q)) == masked,
       "extra no-op tombstone changed results")
@@ -482,13 +482,13 @@ class IvfPqIndexSpec extends AnyFunSuite {
     build(d)
     // leave every kind of commit-log state behind: an E33 split, an
     // applied stream batch and a tombstone
-    val fat = Similarity.ivfCellSizesPublished(spark, d).collect()
+    val fat = Similarity.ivfCellSizes(spark, d).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).maxBy(t => (t._2, t._1))._1
-    assert(Similarity.splitIvfCellPublished(spark, d, vecs, fat) >= 0)
+    assert(Similarity.splitIvfCell(spark, d, vecs, fat) >= 0)
     assert(graft.streaming.VecStream.streamAppendBatch(d,
       Seq((100L, Array(10.3, 0.2, 0, 0, 0, 0, 0, 0)))
         .toDF("vec_id", "embedding"), 0L))
-    Similarity.deleteFromIvfPqIndexPublished(spark, d, Seq(0L).toDF("vec_id"))
+    Similarity.deleteFromIvfPqIndex(spark, d, Seq(0L).toDF("vec_id"))
     build(d)
     build(fresh)
     val m = Similarity.loadIvfPqModel(spark, d)

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Tables
+import graft.sources.Lake.Manifest
 
 /** End-to-end pipeline: dedup → quality → split → partitioned write. */
 class PipelineSpec extends AnyFunSuite {
@@ -126,9 +127,10 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("n_chars", length($"text"))
   }
 
-  test("incrementalTraining: base + deltas == full trainingCorpus recompute") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
+  /** The base + two deltas of the incrementalTraining equality spec:
+    * d1 dethrones emitted keepers and merges two clusters (a
+    * non-empty remap log); d2 re-sends doc 5's text under id 120. */
+  private def deltaCorpora = {
     val a = blk("a", 20); val b = blk("b", 20); val c = blk("c", 20)
     val x = blk("x", 50); val d = blk("d", 30)
     val base = mkDocs(Seq(
@@ -144,7 +146,17 @@ class PipelineSpec extends AnyFunSuite {
     val d2 = mkDocs(Seq(
       120L -> (a ++ b),              // exact copy of 5's text: member only
       121L -> (d ++ blk("g", 15))))  // dethrones never-emitted keeper 7
+    (base, d1, d2)
+  }
 
+  private def corpusRows(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.select($"doc_id", $"text", $"n_chars".cast("long"), $"split")
+      .as[(Long, String, Long, String)].collect().toSet
+  }
+
+  test("incrementalTraining: base + deltas == full trainingCorpus recompute") {
+    val (base, d1, d2) = deltaCorpora
     val incOut = java.nio.file.Files.createTempDirectory("graft_itr").toString
     val state = s"$incOut/state"
     val r0 = Pipeline.incrementalTraining(spark, base, state, incOut)
@@ -156,16 +168,81 @@ class PipelineSpec extends AnyFunSuite {
     assert(r2.appended == 1 && r2.tombstoned == 0,
       s"121 appended, 7 was never emitted: $r2")
 
-    val fullOut = java.nio.file.Files.createTempDirectory("graft_ftr").toString
-    val all = base.unionByName(d1).unionByName(d2)
-    Pipeline.trainingCorpus(spark, all, fullOut)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", $"text", $"n_chars".cast("long"), $"split")
-        .as[(Long, String, Long, String)].collect().toSet
-    val inc = rows(Pipeline.trainingSnapshot(spark, incOut))
-    val full = rows(spark.read.parquet(s"$fullOut/corpus"))
+    val inc = corpusRows(Pipeline.trainingSnapshot(spark, incOut))
+    val full = fullTrainingRows(base, d1, d2)
     assert(inc == full, s"inc=${inc.map(_._1)} full=${full.map(_._1)}")
     assert(inc.map(_._1) == Set(100L, 101L, 110L, 121L))
+  }
+
+  /** trainingCorpus over base ∪ d1 ∪ d2 — what every incremental run
+    * over the three, interrupted or not, must equal. */
+  private def fullTrainingRows(base: org.apache.spark.sql.DataFrame,
+      d1: org.apache.spark.sql.DataFrame,
+      d2: org.apache.spark.sql.DataFrame) = {
+    val fullOut = java.nio.file.Files.createTempDirectory("graft_cfull").toString
+    Pipeline.trainingCorpus(spark, base.unionByName(d1).unionByName(d2),
+      fullOut)
+    corpusRows(spark.read.parquet(s"$fullOut/corpus"))
+  }
+
+  // ---- crash injection: every compaction is commit-then-delete ----
+
+  test("a crash inside compactRemaps or compactTrainingCorpus loses nothing") {
+    val (base, d1, d2) = deltaCorpora
+    val incOut = java.nio.file.Files.createTempDirectory("graft_crt").toString
+    val state = s"$incOut/state"
+    Pipeline.incrementalTraining(spark, base, state, incOut)
+    Pipeline.incrementalTraining(spark, d1, state, incOut)
+    // the fold dies at its first delete of pre-existing state; the
+    // retried fold and every later run must see all of it
+    CrashingLocalFs.crashIn(spark, incOut)(
+      Pipeline.compactRemaps(spark, state, maxRemapRows = 0L))
+    Pipeline.compactRemaps(spark, state, maxRemapRows = 0L)
+    CrashingLocalFs.crashIn(spark, incOut)(
+      Pipeline.compactTrainingCorpus(spark, incOut))
+    val r2 = Pipeline.incrementalTraining(spark, d2, state, incOut)
+    assert(r2.appended == 1 && r2.tombstoned == 0, s"$r2")
+    Pipeline.compactTrainingCorpus(spark, incOut)
+    val inc = corpusRows(Pipeline.trainingSnapshot(spark, incOut))
+    val full = fullTrainingRows(base, d1, d2)
+    assert(inc == full, s"inc=${inc.map(_._1)} full=${full.map(_._1)}")
+    assert(inc.map(_._1) == Set(100L, 101L, 110L, 121L))
+  }
+
+  test("compactRemaps ignores a members__compact left by a crashed fold") {
+    val (base, d1, d2) = deltaCorpora
+    val incOut = java.nio.file.Files.createTempDirectory("graft_crl").toString
+    val state = s"$incOut/state"
+    Pipeline.incrementalTraining(spark, base, state, incOut)
+    Pipeline.incrementalTraining(spark, d1, state, incOut)
+    val before = corpusRows(Pipeline.trainingSnapshot(spark, incOut))
+    spark.range(1).write.parquet(s"$state/members__compact")
+    Pipeline.compactRemaps(spark, state, maxRemapRows = 0L)
+    assert(Manifest.readPublished(spark, s"$state/remaps").count() == 0)
+    assert(corpusRows(Pipeline.trainingSnapshot(spark, incOut)) == before)
+    Pipeline.incrementalTraining(spark, d2, state, incOut)
+    assert(corpusRows(Pipeline.trainingSnapshot(spark, incOut)) ==
+      fullTrainingRows(base, d1, d2))
+  }
+
+  test("a crash inside incrementalCorpus's state compaction loses nothing") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val (base, d1, d2) = deltaCorpora
+    val out = java.nio.file.Files.createTempDirectory("graft_crc").toString
+    val state = s"$out/state"
+    Pipeline.incrementalCorpus(spark, base, state, out)
+    CrashingLocalFs.crashIn(spark, out)(
+      Pipeline.incrementalCorpus(spark, d1, state, out, maxStateFiles = 0))
+    // the next delta run: doc 120 re-sends doc 5's text
+    val r2 = Pipeline.incrementalCorpus(spark, d2, state, out)
+    assert(r2.dropped_seen == 1 && r2.appended == 1, s"$r2")
+    val fullOut = java.nio.file.Files.createTempDirectory("graft_crcf").toString
+    Pipeline.cleanCorpus(spark, base.unionByName(d1).unionByName(d2), fullOut)
+    def snap(dir: String) = spark.read.parquet(s"$dir/corpus")
+      .select($"doc_id", $"split", md5($"text").as("fp"))
+      .as[(Long, String, String)].collect().toSet
+    assert(snap(out) == snap(fullOut))
   }
 
   test("compactRemaps bounds the remap log across many merging runs") {
@@ -188,7 +265,7 @@ class PipelineSpec extends AnyFunSuite {
       // zero bound forces the fold every run (production default only
       // folds past 100k log rows); the log must be empty afterwards
       Pipeline.compactRemaps(spark, state, maxRemapRows = 0L)
-      assert(spark.read.parquet(s"$state/remaps").count() == 0,
+      assert(Manifest.readPublished(spark, s"$state/remaps").count() == 0,
         s"run $i: remap log not truncated")
     }
     // base + 5 deltas ACROSS 5 folds still equals one full recompute
@@ -219,38 +296,34 @@ class PipelineSpec extends AnyFunSuite {
     val state = java.nio.file.Files.createTempDirectory("graft_rms").toString
     val nChains = 2000L
     val hops = 60
-    spark.range(nChains)
+    Manifest.publishSnapshot(spark.range(nChains)
       .select($"id".as("c"), explode(expr(s"sequence(1, $hops)")).as("p"))
-      .selectExpr("c*1000 + p as from_cid", "c*1000 + p - 1 as to_cid")
-      .write.parquet(s"$state/remaps")
+      .selectExpr("c*1000 + p as from_cid", "c*1000 + p - 1 as to_cid"),
+      s"$state/remaps")
     // members point at arbitrary chain DEPTHS; keepers at others
-    spark.range(nChains)
+    Manifest.publishSnapshot(spark.range(nChains)
       .selectExpr("5000000 + id as doc_id",
-        s"id*1000 + ${hops} as cid0", "1L as run")
-      .write.parquet(s"$state/members")
-    spark.range(nChains)
+        s"id*1000 + ${hops} as cid0", "1L as run"), s"$state/members")
+    Manifest.publishSnapshot(spark.range(nChains)
       .selectExpr("id*1000 + 37 as cid", "6000000 + id as keeper_doc_id",
-        "500000L as score_ppm", "false as emitted", "1L as run")
-      .write.parquet(s"$state/keepers")
+        "500000L as score_ppm", "false as emitted", "1L as run"),
+      s"$state/keepers")
+    def st(sub: String) = Manifest.readPublished(spark, s"$state/$sub")
     // unit check of the resolver itself: every key lands on its
     // chain's terminal
-    val closure = Pipeline.resolveRemapClosure(
-      spark.read.parquet(s"$state/remaps"))
+    val closure = Pipeline.resolveRemapClosure(st("remaps"))
     assert(closure.count() == nChains * hops)
     assert(closure.filter($"__eff" =!= ($"__from" - $"__from" % 1000))
       .count() == 0, "some chain did not resolve to its terminal")
     // the production entry point at its default 100k bound
     Pipeline.compactRemaps(spark, state)
-    assert(spark.read.parquet(s"$state/remaps").count() == 0,
-      "log not truncated after fold")
-    assert(spark.read.parquet(s"$state/members")
-      .filter($"cid0" % 1000 =!= 0).count() == 0,
+    assert(st("remaps").count() == 0, "log not truncated after fold")
+    assert(st("members").filter($"cid0" % 1000 =!= 0).count() == 0,
       "members carry unresolved cids")
-    assert(spark.read.parquet(s"$state/keepers")
-      .filter($"cid" % 1000 =!= 0).count() == 0,
+    assert(st("keepers").filter($"cid" % 1000 =!= 0).count() == 0,
       "keepers carry unresolved cids")
-    assert(spark.read.parquet(s"$state/members").count() == nChains &&
-      spark.read.parquet(s"$state/keepers").count() == nChains)
+    assert(st("members").count() == nChains &&
+      st("keepers").count() == nChains)
   }
 
   test("resilienceReport replays the reference notebook end-to-end from xlsx") {
@@ -326,9 +399,13 @@ class PipelineSpec extends AnyFunSuite {
       docs.filter($"doc_id" % 5 === k))
     slices.foreach(s =>
       Pipeline.incrementalCorpus(spark, s, state, out, maxStateFiles = 3))
-    val files = new java.io.File(state).listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(files <= 3, s"state not compacted: $files part-files")
+    val files = Manifest.readPublished(spark, state).inputFiles.length
+    assert(files <= 3, s"state not compacted: $files files published")
+    // the vacuum deleted every superseded file
+    val onDisk = scala.util.Using.resource(
+      java.nio.file.Files.walk(java.nio.file.Paths.get(state, "data")))(
+      _.filter(_.toString.endsWith(".parquet")).count())
+    assert(onDisk <= 3, s"state not vacuumed: $onDisk parquet files")
     // state still correct after in-place compaction: a re-send of an
     // already-ingested doc's content is dropped
     val resend = docs.filter($"doc_id" === 1)

@@ -484,8 +484,9 @@ class ScaleStressSpec extends AnyFunSuite {
 
     // CDC-style compaction: corpus becomes the snapshot, tombstones reset
     Pipeline.compactTrainingCorpus(spark, out)
-    assert(!new java.io.File(s"$out/tombstones").exists)
-    assert(rows(spark.read.parquet(s"$out/corpus")) == inc)
+    val M = graft.sources.Lake.Manifest
+    assert(M.readPublished(spark, s"$out/tombstones").isEmpty)
+    assert(rows(M.readPublished(spark, s"$out/corpus")) == inc)
     assert(rows(Pipeline.trainingSnapshot(spark, out)) == inc)
   }
 
@@ -1009,7 +1010,7 @@ class ScaleStressSpec extends AnyFunSuite {
     // local optimum — derive it, don't assume it)
     val blobOf = when($"vec_id" < 30000L, "A")
       .when($"vec_id" < 60000L, "B").otherwise("C")
-    val sizes = Similarity.ivfCellSizesPublished(spark, d)
+    val sizes = Similarity.ivfCellSizes(spark, d)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val hot = sizes.maxBy(t => (t._2, t._1))._1
     val hotBlobs = M.readPublished(spark, s"$d/codes")
@@ -1020,7 +1021,7 @@ class ScaleStressSpec extends AnyFunSuite {
     val coldFiles = M.readPublishedPruned(spark, s"$d/codes", "cell",
       coldCells).inputFiles.toSet
     val t1 = System.nanoTime()
-    val newId = Similarity.splitIvfCellPublished(spark, d, vecs, hot)
+    val newId = Similarity.splitIvfCell(spark, d, vecs, hot)
     val splitSecs = (System.nanoTime() - t1) / 1e9
     info(f"publish(200k) $publishSecs%.1f s; split of the hot cell " +
       f"$splitSecs%.1f s")

@@ -196,7 +196,7 @@ class StreamingSoakSpec extends AnyFunSuite {
       graft.streaming.VecStream.appendToIndexBalanced(
         in.toDF().toDF("vec_id", "embedding"), d1, ck, vectors, cap)
         .awaitTermination()
-      Similarity.deleteFromIvfPqIndexPublished(spark, d1,
+      Similarity.deleteFromIvfPqIndex(spark, d1,
         del.toDF("vec_id"))
     }
     // replay idempotence mid-soak: round 1's data re-delivered under
@@ -220,10 +220,10 @@ class StreamingSoakSpec extends AnyFunSuite {
     deltas.zip(dels).zipWithIndex.foreach { case ((delta, del), i) =>
       Similarity.appendIvfPqIndex(d2,
         delta.toDF("vec_id", "embedding"), meta = s"batch=$i")
-      Similarity.rebalanceIvfIndexPublished(spark, d2, vectors(), cap,
+      Similarity.rebalanceIvfIndex(spark, d2, vectors(), cap,
         maxPasses = 8)
       Similarity.compactIvfPqIndex(spark, d2, 64)
-      Similarity.deleteFromIvfPqIndexPublished(spark, d2,
+      Similarity.deleteFromIvfPqIndex(spark, d2,
         del.toDF("vec_id"))
     }
 
@@ -255,7 +255,7 @@ class StreamingSoakSpec extends AnyFunSuite {
       .select($"vec_id").as[Long].collect().toSeq
     assert(served.forall(!deleted.contains(_)), "tombstoned id served")
     // per-cell sizes honor the cap and nothing was lost or duplicated
-    val sizes = Similarity.ivfCellSizesPublished(spark, d1)
+    val sizes = Similarity.ivfCellSizes(spark, d1)
       .collect().map(_.getLong(1))
     assert(sizes.forall(_ <= cap), s"cap violated: ${sizes.toSeq}")
     val ids = M.readPublished(spark, s"$d1/codes")
