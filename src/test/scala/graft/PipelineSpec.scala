@@ -26,6 +26,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(Pipeline.cleanCorpus(spark, docs, out2) == r)
   }
 
+  /** (doc_id, split, md5 of text) of the plain `dir/corpus` that
+    * cleanCorpus and incrementalCorpus write. */
+  private def cleanCorpusRows(dir: String) = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.md5
+    spark.read.parquet(s"$dir/corpus")
+      .select($"doc_id", $"split", md5($"text").as("fp"))
+      .as[(Long, String, String)].collect().toSet
+  }
+
   test("incrementalCorpus: base + deltas equals one full recompute") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -59,16 +69,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(r0.appended + r1.appended + r2.appended == rf.kept)
 
     // identical corpus: same (doc_id, split, text-fingerprint) rows
-    def snap(dir: String) = spark.read.parquet(s"$dir/corpus")
-      .select($"doc_id", $"split", md5($"text").as("fp"))
-      .as[(Long, String, String)].collect().toSet
-    assert(snap(incOut) == snap(fullOut),
+    assert(cleanCorpusRows(incOut) == cleanCorpusRows(fullOut),
       "incremental corpus diverged from full recompute")
 
     // a second run of an already-seen delta is a no-op on the corpus
     val r3 = Pipeline.incrementalCorpus(spark, d2, state, incOut)
     assert(r3.appended == 0 && r3.dropped_seen == d2.count())
-    assert(snap(incOut) == snap(fullOut))
+    assert(cleanCorpusRows(incOut) == cleanCorpusRows(fullOut))
   }
 
   test("trainingCorpus: clusters, gates, scrubs and splits end to end") {
@@ -226,8 +233,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a crash inside incrementalCorpus's state compaction loses nothing") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     val (base, d1, d2) = deltaCorpora
     val out = java.nio.file.Files.createTempDirectory("graft_crc").toString
     val state = s"$out/state"
@@ -239,10 +244,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(r2.dropped_seen == 1 && r2.appended == 1, s"$r2")
     val fullOut = java.nio.file.Files.createTempDirectory("graft_crcf").toString
     Pipeline.cleanCorpus(spark, base.unionByName(d1).unionByName(d2), fullOut)
-    def snap(dir: String) = spark.read.parquet(s"$dir/corpus")
-      .select($"doc_id", $"split", md5($"text").as("fp"))
-      .as[(Long, String, String)].collect().toSet
-    assert(snap(out) == snap(fullOut))
+    assert(cleanCorpusRows(out) == cleanCorpusRows(fullOut))
   }
 
   test("compactRemaps bounds the remap log across many merging runs") {
