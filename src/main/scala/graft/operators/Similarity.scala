@@ -1197,11 +1197,20 @@ object Similarity {
       .select($"q_id", $"cell", $"qrq", $"tbls")
   }
 
-  /** Hot path: cell equi-join (only probed cells' code rows move),
-    * ADC = qrq + Σⱼ table lookup, folded left in subspace order,
-    * bounded-heap top-k per query. */
+  /** [[ivfPqTopK]] in `(q_id, rank)` order — the output contract of
+    * [[annIvfPq]] and of the specs' frozen-model twins. */
   private[graft] def ivfPqScore(coded: DataFrame, qprobe: DataFrame,
       k: Int = TopK): DataFrame = {
+    import coded.sparkSession.implicits._
+    ivfPqTopK(coded, qprobe, k).orderBy($"q_id", $"rank")
+  }
+
+  /** Hot path: cell equi-join (only probed cells' code rows move),
+    * ADC = qrq + Σⱼ table lookup, folded left in subspace order,
+    * bounded-heap top-k per query. Unordered: a caller that collects
+    * or re-ranks the rows would throw a global sort away. */
+  private def ivfPqTopK(coded: DataFrame, qprobe: DataFrame,
+      k: Int): DataFrame = {
     import coded.sparkSession.implicits._
     val adcCol = $"qrq" + graft.functions.AdcSum.adc($"tbls", $"codes")
     val scored = coded.join(broadcast(qprobe), Seq("cell"))
@@ -1213,7 +1222,6 @@ object Similarity {
       .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
       .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
         $"t.id".as("vec_id"), round(-$"t.score", 6).as("adc"))
-      .orderBy($"q_id", $"rank")
   }
 
   /** E10 two-stage retrieval (the standard serving composition —
@@ -1235,7 +1243,7 @@ object Similarity {
     val qprobe = ivfPqProbe(
       e.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"v".as("qv")), m, nProbe)
-    val short = ivfPqScore(coded, qprobe, shortlist)
+    val short = ivfPqTopK(coded, qprobe, shortlist)
       .select($"q_id", $"vec_id")
     val en = withNorm(vecs)
     val q = en.filter($"vec_id" < NumQueries)
@@ -1298,23 +1306,17 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/codebooks")
   }
 
-  /** Loaded models, least recently used first; KB-sized entries. */
-  private val ModelCacheSize = 8
-  private val modelCache = new java.util.LinkedHashMap[
-      (String, String), IvfPqModel](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String), IvfPqModel]): Boolean = size() > ModelCacheSize
-  }
-
-  /** The KB-sized model half of a persisted index, memoized per
-    * `(dir, fingerprint)`: [[graft.sources.Lake.fingerprint]] of
-    * `centroids/`, `codebooks/` and — when present — the
-    * `codes/_latest` and `tombs/_latest` pointers. A repeated serve
-    * against an unchanged index reuses the model with no parquet read;
-    * a rebuild (new model files), an append/split/compact commit or a
-    * tombstone commit (a pointer swap) changes the fingerprint, so the
-    * next call reloads. At most [[ModelCacheSize]] models are held
-    * (LRU). The geometry (cell count, subspace count/width) comes
+  /** The KB-sized model half of a persisted index, memoized in
+    * [[graft.sources.Lake.derived]] (the engine's one memo of derived
+    * state by input version) per `(dir, fingerprint)`:
+    * [[graft.sources.Lake.fingerprint]] of `centroids/`, `codebooks/`
+    * and — when present — the `codes/_latest` and `tombs/_latest`
+    * pointers. A repeated serve against an unchanged index reuses the
+    * model with no parquet read; a rebuild (new model files), an
+    * append/split/compact commit or a tombstone commit (a pointer
+    * swap) changes the fingerprint, so the next call reloads. The
+    * memo is bounded (LRU) and shared with input-table schemas. The
+    * geometry (cell count, subspace count/width) comes
     * entirely from the stored rows, so indexes built at any (k, pqM,
     * pqK) load through the one path. The codes manifest's `split=`
     * metas then replay over the parquet centroids in commit order —
@@ -1325,21 +1327,18 @@ object Similarity {
     * because both ride the same pointer swap (E33). */
   private[graft] def loadIvfPqModel(spark: SparkSession,
       dir: String): IvfPqModel = {
-    val key = (dir, graft.sources.Lake.fingerprint(spark, Seq(
+    val fp = graft.sources.Lake.fingerprint(spark, Seq(
       s"$dir/centroids", s"$dir/codebooks",
-      s"${codesDir(dir)}/_latest", s"${tombsDir(dir)}/_latest")))
-    modelCache.synchronized(Option(modelCache.get(key))).getOrElse {
-      val m = readIvfPqModel(spark, dir)
-      modelCache.synchronized(modelCache.put(key, m))
-      m
-    }
+      s"${codesDir(dir)}/_latest", s"${tombsDir(dir)}/_latest"))
+    graft.sources.Lake.derived("ivfpq-model", s"$dir\t$fp")(
+      readIvfPqModel(spark, dir))
   }
 
   private[graft] def readIvfPqModel(spark: SparkSession,
       dir: String): IvfPqModel = {
-    val cents = spark.read.parquet(s"$dir/centroids").collect()
+    val cents = Tables.open(spark, Seq(s"$dir/centroids")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-    val bookRows = spark.read.parquet(s"$dir/codebooks").collect()
+    val bookRows = Tables.open(spark, Seq(s"$dir/codebooks")).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val nSub = bookRows.map(_._1).max + 1
     val books = Array.tabulate(nSub) { j =>
@@ -1370,6 +1369,7 @@ object Similarity {
   def queryIvfPqIndex(spark: SparkSession, dir: String, queries: DataFrame,
       nProbe: Int = 2): DataFrame =
     servedShortlist(spark, dir, queries, nProbe, TopK)
+      .orderBy(col("q_id"), col("rank"))
 
   /** Shared serve core: probe → pruned code scan → ADC top-`k` (the
     * E8 plan; `k` = TopK for plain serve, `shortlist` for the
@@ -1398,7 +1398,7 @@ object Similarity {
       case Some(t) => coded0.join(t, Seq("vec_id"), "left_anti")
       case None    => coded0
     }
-    ivfPqScore(coded, qprobe, k)
+    ivfPqTopK(coded, qprobe, k)
   }
 
   /** Run a driver-sized frame once: its rows, plus the same rows as a

@@ -35,6 +35,8 @@ object Lake {
     val touched = delta.select(col(partCol)).distinct()
       .collect().map(_.get(0)) // driver state: touched-partition VALUES
     if (touched.isEmpty) return
+    // bare read: the previous merge just rewrote the target, so a
+    // schema keyed by its version would miss every time and add a listing
     val target = spark.read.parquet(targetDir)
       .filter(col(partCol).isin(touched.toIndexedSeq: _*))
     val keys = delta.select(col(keyCol)).distinct()
@@ -54,16 +56,17 @@ object Lake {
     * modification time (a missing path hashes as absent). Driver-side
     * metadata work that grows with the file COUNT, never the bytes.
     * This is the one place that decides whether state derived from
-    * the inputs (a served index, a loaded model) is still current: a
-    * rewrite in place, an append or a copy elsewhere all change it. */
+    * the inputs is still current — the schemas [[Tables.open]]
+    * memoizes, a loaded IVF-PQ model (both in [[derived]]) and a
+    * served index ([[publishOnce]]): a rewrite in place, an append or
+    * a copy elsewhere all change it. */
   def fingerprint(spark: SparkSession, paths: Seq[String]): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
     val conf = spark.sparkContext.hadoopConfiguration
-    for (s <- paths) {
+    digest(paths.flatMap { s =>
       val path = new org.apache.hadoop.fs.Path(s)
       val f = path.getFileSystem(conf)
       val q = f.makeQualified(path)
-      if (!f.exists(q)) md.update(s"$q\tabsent\n".getBytes("UTF-8"))
+      if (!f.exists(q)) Seq(s"$q\tabsent")
       else {
         val it = f.listFiles(q, true)
         val lines = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -71,10 +74,45 @@ object Lake {
           val st = it.next()
           lines += s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}"
         }
-        lines.sorted.foreach(l => md.update(s"$l\n".getBytes("UTF-8")))
+        lines.sorted
       }
-    }
+    })
+  }
+
+  /** Short stable hash of `lines`, in order. */
+  private[sources] def digest(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update(s"$l\n".getBytes("UTF-8")))
     md.digest().take(8).map(b => f"$b%02x").mkString
+  }
+
+  /** Derived state by input version — the one in-memory memo of the
+    * engine: values computed from some inputs (an input table's
+    * schema, a served index's model), keyed by `kind` and a `version`
+    * string that changes whenever the inputs do (a [[fingerprint]],
+    * or the write-once file list of a manifest version). A repeated
+    * request against unchanged inputs reuses the value; a changed
+    * input misses and recomputes. Bounded (the least recently used of
+    * [[DerivedSize]] entries goes first) and synchronized; `compute`
+    * runs outside the lock, so a slow one never blocks other readers,
+    * and two racing misses both compute and the later one is kept. */
+  def derived[T <: AnyRef](kind: String, version: String)(compute: => T): T = {
+    val key = (kind, version)
+    derivedCache.synchronized(Option(derivedCache.get(key))) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        val v = compute
+        derivedCache.synchronized(derivedCache.put(key, v))
+        v
+    }
+  }
+
+  /** Entries [[derived]] holds: schemas and KB-sized models. */
+  private val DerivedSize = 64
+  private val derivedCache = new java.util.LinkedHashMap[
+      (String, String), AnyRef](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        (String, String), AnyRef]): Boolean = size() > DerivedSize
   }
 
   /** Publish-once home of state derived from `inputs` (a served
@@ -183,14 +221,36 @@ object Lake {
         spark.sparkContext.hadoopConfiguration)
     private def p(s: String) = new org.apache.hadoop.fs.Path(s)
 
-    /** The current published version of `dir`; 0 before the first. */
+    private def manifestPath(dir: String, version: Long) =
+      p(f"$dir/_manifests/v$version%08d.manifest")
+
+    /** The current published version of `dir`; 0 before the first.
+      *
+      * The pointer swap (`FileContext.rename(OVERWRITE)` in `commit`)
+      * deletes `_latest` before it renames `_latest.tmp` over it, so a
+      * reader landing in between — or a crash there — finds no
+      * `_latest`. The pointer then lives in `_latest.tmp`, accepted
+      * when it parses to a version above 1 whose manifest exists.
+      * Version 1 is never taken from it: the first commit has no
+      * `_latest` to delete, so without one it has not swapped yet and
+      * a retry must redo it. If `_latest.tmp` is gone by the time it
+      * is read, the rename has just landed: `_latest` is read once
+      * more. */
     def latestVersion(spark: SparkSession, dir: String): Long = {
       val f = fs(spark)
-      if (!f.exists(p(s"$dir/_latest"))) 0L
-      else {
-        val in = f.open(p(s"$dir/_latest"))
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
+      def read(name: String): Option[String] =
+        try {
+          val in = f.open(p(s"$dir/$name"))
+          try Some(scala.io.Source.fromInputStream(in).mkString.trim)
+          finally in.close()
+        } catch { case _: java.io.FileNotFoundException => None }
+      read("_latest").map(_.toLong).getOrElse {
+        read("_latest.tmp") match {
+          case Some(t) => t.toLongOption
+            .filter(v => v > 1L && f.exists(manifestPath(dir, v)))
+            .getOrElse(0L)
+          case None => read("_latest").fold(0L)(_.toLong)
+        }
       }
     }
 
@@ -198,7 +258,7 @@ object Lake {
         version: Long): Seq[String] = {
       if (version == 0L) return Seq.empty
       val f = fs(spark)
-      val in = f.open(p(f"$dir/_manifests/v$version%08d.manifest"))
+      val in = f.open(manifestPath(dir, version))
       try scala.io.Source.fromInputStream(in).getLines()
         .filter(_.nonEmpty).toList
       finally in.close()
@@ -291,7 +351,7 @@ object Lake {
         .filter(_.startsWith("#meta ")) ++
         (if (meta.nonEmpty) Seq(s"#meta $meta") else Nil)).distinct
       val rels = metas ++ carry.map(_.stripPrefix(s"$dir/")) ++ fresh.sorted
-      writeFile(spark, f"$dir/_manifests/v$next%08d.manifest",
+      writeFile(spark, manifestPath(dir, next).toString,
         rels.mkString("\n"))
       // pointer swap LAST and atomically: readers see old-or-new only.
       // FileContext.rename(OVERWRITE) is the atomic-replace API —
@@ -397,8 +457,8 @@ object Lake {
             wanted.contains(twice)
         }
       }
-      if (kept.isEmpty) spark.read.parquet(all: _*).limit(0)
-      else spark.read.parquet(kept: _*)
+      if (kept.isEmpty) openFiles(spark, all).limit(0)
+      else openFiles(spark, kept)
     }
 
     /** Inverse of Spark's partition-path escaping (Hive convention:
@@ -451,6 +511,7 @@ object Lake {
       * evolved read then absorbs. */
     def readPublishedEvolved(spark: SparkSession, dir: String): DataFrame = {
       val files = manifestFiles(spark, dir, latestVersion(spark, dir))
+      // bare read: the merged footer schema is this reader's whole point
       spark.read.option("mergeSchema", "true").parquet(files: _*)
     }
 
@@ -458,9 +519,15 @@ object Lake {
     def readPublishedVersion(spark: SparkSession, dir: String,
         version: Long): DataFrame = {
       require(version > 0, s"no published version under $dir")
-      val files = manifestFiles(spark, dir, version)
-      spark.read.parquet(files: _*)
+      openFiles(spark, manifestFiles(spark, dir, version))
     }
+
+    /** Open manifest-listed data files through [[Tables.open]]'s schema
+      * memo. Data files are write-once under unique names, so the
+      * ordered list is their version — no listing, no FS call. */
+    private def openFiles(spark: SparkSession,
+        files: Seq[String]): DataFrame =
+      Tables.openVersion(spark, files, digest(files))
 
     /** Retention pass: drop manifests older than the newest
       * `keepVersions` and DELETE every data file no surviving manifest
@@ -483,7 +550,7 @@ object Lake {
         .filter(_.endsWith(".manifest"))
         .map(n => n.stripPrefix("v").stripSuffix(".manifest").toLong)
       all.filter(_ < keepFrom).foreach { v =>
-        f.delete(p(f"$dir/_manifests/v$v%08d.manifest"), false) }
+        f.delete(manifestPath(dir, v), false) }
       val live = (keepFrom to cur)
         .flatMap(v => manifestFiles(spark, dir, v))
         .map(_.stripPrefix(s"$dir/")).toSet
@@ -523,6 +590,8 @@ object Lake {
       val v = publishAppend(
         df.repartitionByRange(buckets, df.col(statsCol)), dir)
       val sub = f"data/v$v%08d"
+      // bare read: these files were written a moment ago, so a schema
+      // keyed by their version would miss every time
       val stats = spark.read.parquet(s"$dir/$sub")
         .groupBy(input_file_name().as("f"))
         .agg(min(col(statsCol).cast("long")).as("mn"),
@@ -594,7 +663,7 @@ object Lake {
       require(kept.nonEmpty,
         s"no file under $dir intersects [$lo, $hi] — read the " +
           "published view and filter if an empty frame is acceptable")
-      spark.read.parquet(kept: _*)
+      openFiles(spark, kept)
         .filter(col(statsCol).cast("long").between(lo, hi))
     }
   }
@@ -613,5 +682,6 @@ object Lake {
     * columns (parquet readers treat a missing column as all-null and
     * row-group stats prune accordingly). */
   def parquetEvolved(spark: SparkSession, paths: String*): DataFrame =
+    // bare read: the merged footer schema is this reader's whole point
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 }

@@ -104,6 +104,8 @@ object Sink {
       .withColumn("ord", xxhash64(col("doc_id"), lit(seed)))
     sharded.write.mode(SaveMode.Overwrite)
       .partitionBy("shard_id").parquet(path)
+    // bare read: the shards were written just above, so a schema keyed
+    // by their version would miss every time and add a listing
     spark.read.parquet(path)
       // partition-column inference narrows shard_id to int; pin long
       .groupBy(col("shard_id").cast("long").as("shard_id"))
@@ -119,6 +121,8 @@ object Sink {
     * into a listing/open() storm long before any byte is read. */
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
       outPath: String, targetMB: Int = 512): Unit =
+    // bare read: compaction reads each input version once, so a schema
+    // keyed by it would miss every time and add a listing
     compacted(spark.read.parquet(inPath), targetMB)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
 

@@ -192,6 +192,31 @@ class IvfPqIndexSpec extends AnyFunSuite {
       s"returned plan rescans the code table:\n$plan")
   }
 
+  test("served rerank runs no global sort: the collected shortlist skips the range exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val vecs = Tables.embeddings(spark, sf)
+    val q = vecs.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
+    Similarity.loadIvfPqModel(spark, idxDir)
+    var served: org.apache.spark.sql.DataFrame = null
+    val plans = EngineEvents.plansRun(spark) {
+      served = Similarity.queryIvfPqIndexRerank(spark, idxDir, q, vecs)
+    }
+    // the call itself runs the probe and the shortlist
+    assert(plans.size >= 2, s"expected the probe and shortlist runs, got ${plans.size}")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    for (qe <- plans) {
+      val ranges = helper.collectWithSubqueries(qe.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.isEmpty, s"a served rerank step sorts globally:\n${qe.executedPlan}")
+    }
+    assert(collectAll(served) == collectAll(Similarity.annIvfPqRerank(vecs)))
+  }
+
   test("compact below the file bound is a no-op") {
     val before = codeFiles(idxDir)
     val v = M.latestVersion(spark, s"$idxDir/codes")

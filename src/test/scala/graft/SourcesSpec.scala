@@ -645,6 +645,112 @@ class SourcesSpec extends AnyFunSuite {
     assert(v4 == 4L && ids(Manifest.readPublished(spark, dir)) == Set(7L, 8L))
   }
 
+  test("H17b a missing _latest (pointer swap in flight or crashed) reads through _latest.tmp") {
+    import spark.implicits._
+    import graft.sources.Lake.Manifest
+    val dir = Files.createTempDirectory("graft_manifest_swap").toString
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).toSet
+    Manifest.publishAppend(Seq(1L, 2L).toDF("id"), dir)
+    assert(Manifest.publishAppend(Seq(3L).toDF("id"), dir) == 2L)
+    // the window FileContext.rename(OVERWRITE) opens: `_latest` deleted,
+    // `_latest.tmp` not yet renamed over it (FileContext builds its own
+    // local FS, so a crashing FileSystem cannot stop it there)
+    Files.move(java.nio.file.Paths.get(s"$dir/_latest"),
+      java.nio.file.Paths.get(s"$dir/_latest.tmp"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(Manifest.latestVersion(spark, dir) == 2L)
+    assert(ids(Manifest.readPublished(spark, dir)) == Set(1L, 2L, 3L))
+    assert(Manifest.publishAppend(Seq(4L).toDF("id"), dir) == 3L)
+    assert(ids(Manifest.readPublished(spark, dir)) == Set(1L, 2L, 3L, 4L))
+    assert(ids(Manifest.readPublishedVersion(spark, dir, 2L)) == Set(1L, 2L, 3L))
+    // a pointer whose manifest never landed, or a first commit that has
+    // not swapped yet, is not a version
+    val fresh = Files.createTempDirectory("graft_manifest_first").toString
+    Files.writeString(java.nio.file.Paths.get(s"$fresh/_latest.tmp"), "1")
+    assert(Manifest.latestVersion(spark, fresh) == 0L)
+    Files.writeString(java.nio.file.Paths.get(s"$fresh/_latest.tmp"), "7")
+    assert(Manifest.latestVersion(spark, fresh) == 0L)
+  }
+
+  test("Tables.open: schema == a bare read for every table and every manifest reader; repeat opens infer nothing") {
+    import spark.implicits._
+    import graft.sources.Lake.Manifest
+    def bare(files: Seq[String]) = spark.read.parquet(files: _*).schema
+    val sf = GraftTestSession.sf
+    for (n <- Tables.names) {
+      val p = Tables.path(sf, n)
+      assert(Tables.open(spark, Seq(p)).schema == spark.read.parquet(p).schema, n)
+    }
+    // the memo hit: a repeat open of an unchanged table runs no job,
+    // where a bare read runs its 1-task inference job
+    val li = Tables.path(sf, "lineitem")
+    Tables.open(spark, Seq(li))
+    assert(EngineEvents.jobsRun(spark)(Tables.open(spark, Seq(li)).schema) == 0)
+    assert(EngineEvents.jobsRun(spark)(spark.read.parquet(li).schema) >= 1)
+    val rows = (1L to 40L).map(i => (i, s"s$i", (i % 4).toInt, i * 0.5))
+    for (partitioned <- Seq(false, true)) {
+      val dir = Files.createTempDirectory("graft_open_manifest").toString
+      val by = if (partitioned) Seq("p") else Nil
+      // few files: above spark.sql.sources.parallelPartitionDiscovery
+      // .threshold (32) paths, listing them is a job of its own
+      for (part <- Seq(rows.take(20), rows.drop(20)))
+        Manifest.publishAppend(part.toDF("id", "s", "p", "x").coalesce(1), dir, by)
+      val all = Manifest.readPublished(spark, dir)
+      val v1 = Manifest.readPublishedVersion(spark, dir, 1L)
+      val kept = Manifest.readPublishedPruned(spark, dir, "p", Seq("1", "2"))
+      // no file under a wanted value: the typed-empty limit(0) branch
+      val none = Manifest.readPublishedPruned(spark, dir, "p", Seq("9"))
+      for ((df, files) <- Seq(all -> all.inputFiles, v1 -> v1.inputFiles,
+          kept -> kept.inputFiles, none -> all.inputFiles))
+        assert(df.schema == bare(files.toIndexedSeq), s"partitioned=$partitioned")
+      assert(all.count() == 40L && v1.count() == 20L)
+      assert(none.count() == (if (partitioned) 0L else 40L))
+      assert(EngineEvents.jobsRun(spark)(
+        Manifest.readPublished(spark, dir).schema) == 0)
+    }
+  }
+
+  test("Tables.open: a table rewritten in place is opened at its new version") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_open_rewrite").toString
+    val p = Tables.path(d, "nation")
+    spark.read.parquet(Tables.path(GraftTestSession.sf, "nation")).write.parquet(p)
+    val before = Tables.open(spark, Seq(p))
+    val cols = before.columns.toSeq
+    val old = before.collect()
+    assert(Tables.nation(spark, d).count() == old.length)
+    // same path, new rows and a new column
+    Seq((900, "ATLANTIS", 9, "x"))
+      .toDF(cols :+ "extra": _*)
+      .write.mode("overwrite").parquet(p)
+    val after = Tables.open(spark, Seq(p))
+    assert(after.columns.toSeq == cols :+ "extra")
+    assert(after.collect().map(_.getAs[String]("extra")).toSeq == Seq("x"))
+    val req = Tables.nation(spark, d).filter($"extra" === "x")
+      .select(cols.head).collect().map(_.getInt(0))
+    assert(req.toSeq == Seq(900))
+  }
+
+  test("Tables.open: the inference confs are part of the schema key") {
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    // events.ts is TIMESTAMP(MICROS, isAdjustedToUTC=false) with no Spark
+    // schema in the footer, so the conf alone decides its type
+    val p = Tables.path(GraftTestSession.sf, "events")
+    val prior = spark.conf.getOption(key)
+    try {
+      for (v <- Seq("true", "false", "true")) {
+        spark.conf.set(key, v)
+        val want = spark.read.parquet(p).schema("ts").dataType
+        assert(want == (if (v == "true") TimestampNTZType else TimestampType))
+        assert(Tables.open(spark, Seq(p)).schema("ts").dataType == want, s"$key=$v")
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("H20 binaryFile ingest: real files to asset rows, glob pruning, content-stable ids") {
     import graft.operators.Multimodal
     // two REAL images written as files plus a sidecar the glob excludes

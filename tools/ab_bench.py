@@ -58,11 +58,31 @@ def quantile(xs, q):
     return s[lo] + (s[hi] - s[lo]) * (pos - lo)
 
 
-def run_once(checkout, workload, seed, seconds):
+def export(revs):
+    """`git archive` each side's revision into a fresh temporary
+    directory (under $TMPDIR when set); returns (base, {side: tree}).
+    The caller removes `base`."""
+    base = tempfile.mkdtemp(prefix="ab_bench_")
+    trees = {side: os.path.join(base, side) for side in revs}
+    for side, rev in revs.items():
+        os.makedirs(trees[side])
+        archive = subprocess.Popen(["git", "archive", rev], cwd=ROOT,
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", trees[side]],
+                       stdin=archive.stdout, check=True)
+        archive.stdout.close()
+        if archive.wait() != 0:
+            shutil.rmtree(base, ignore_errors=True)
+            sys.exit(f"git archive {rev} failed")
+    return base, trees
+
+
+def run_once(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; returns (metrics or None, correct)."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds),
+         "--trace", str(trace)],
         cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
         stdin=subprocess.DEVNULL, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
@@ -126,19 +146,9 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     seconds = bench["run_seconds"]
-    base = tempfile.mkdtemp(prefix="ab_bench_")
     revs = {"parent": git("rev-parse", a.parent),
             "change": git("rev-parse", a.change)}
-    trees = {side: os.path.join(base, side) for side in revs}
-    for side, rev in revs.items():
-        os.makedirs(trees[side])
-        archive = subprocess.Popen(["git", "archive", rev], cwd=ROOT,
-                                   stdout=subprocess.PIPE)
-        subprocess.run(["tar", "-x", "-C", trees[side]],
-                       stdin=archive.stdout, check=True)
-        archive.stdout.close()
-        if archive.wait() != 0:
-            sys.exit(f"git archive {rev} failed")
+    base, trees = export(revs)
     runs = []
     try:
         print(f"parent {revs['parent']}  change {revs['change']}  "
