@@ -96,7 +96,7 @@ object Lake {
     * [[DerivedSize]] entries goes first) and synchronized; `compute`
     * runs outside the lock, so a slow one never blocks other readers,
     * and two racing misses both compute and the later one is kept. */
-  def derived[T <: AnyRef](kind: String, version: String)(compute: => T): T = {
+  private[graft] def derived[T <: AnyRef](kind: String, version: String)(compute: => T): T = {
     val key = (kind, version)
     derivedCache.synchronized(Option(derivedCache.get(key))) match {
       case Some(v) => v.asInstanceOf[T]
