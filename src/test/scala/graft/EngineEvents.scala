@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -27,19 +26,19 @@ object EngineEvents {
     }
   }
 
-  /** Spark jobs started while `block` ran. */
-  def jobsRun(spark: SparkSession)(block: => Unit): Int = {
+  /** The descriptions ("" when unset) of the Spark jobs started while
+    * `block` ran. */
+  def jobsRun(spark: SparkSession)(block: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[String]
     val marks = new ConcurrentLinkedQueue[String]
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p =>
-            Option(p.getProperty("spark.job.description")))
-          .filter(_.startsWith("graft-events-")) match {
-          case Some(m) => marks.add(m)
-          case None => jobs.incrementAndGet()
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val d = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        if (d.startsWith("graft-events-")) marks.add(d) else jobs.add(d)
+      }
     }
     def drain(): Unit = {
       val m = marker()
@@ -50,10 +49,10 @@ object EngineEvents {
     sc.addSparkListener(l)
     try {
       drain()
-      jobs.set(0)
+      jobs.clear()
       block
       drain()
-      jobs.get
+      jobs.asScala.toSeq
     } finally sc.removeSparkListener(l)
   }
 
