@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression,
+  TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -82,12 +83,117 @@ case class DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Codegen'd nearest-codeword distances: `out[c] = bias[c] − 2.0 ·
+  * (v · book[c])` for every codeword `c` of `book` — the squared
+  * euclidean distance less the per-row constant `v·v`, the one
+  * comparator of Lloyd's assignment, PQ/RQ encode, IVF probing and
+  * the ADC tables.
+  *
+  * The codebook arrives as ONE array literal and the bias as an
+  * `array<double>` column (a literal, or a per-row pick from a
+  * literal table), so the model is data: Spark hands array literals
+  * to generated code as reference objects, and two models of the
+  * same geometry compile to the same code. Each dot product is
+  * [[DotProduct]]'s sequential left fold, so every distance is
+  * bit-identical to `lit(bias) − lit(2.0) * dot(v, typedlit(c))`.
+  * A bias whose length differs from the codebook's throws. */
+case class CodeDists(v: Expression, book: Expression, bias: Expression)
+    extends TernaryExpression {
+
+  override def first: Expression = v
+  override def second: Expression = book
+  override def third: Expression = bias
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (v.dataType, book.dataType, bias.dataType) match {
+      case (ArrayType(DoubleType | FloatType, _),
+          ArrayType(ArrayType(DoubleType, _), _), ArrayType(DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
+        s"code_dists needs (array<double|float>, array<array<double>>, " +
+          s"array<double>), got ${a.catalogString} / ${b.catalogString} / " +
+          s"${c.catalogString}")
+    }
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  private def vIsFloat: Boolean =
+    v.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val words = b.asInstanceOf[ArrayData]
+    val bs = c.asInstanceOf[ArrayData]
+    val k = words.numElements()
+    if (bs.numElements() != k) throw new IllegalArgumentException(
+      s"code_dists: ${bs.numElements()} biases for $k codewords")
+    val out = new Array[Double](k)
+    var w = 0
+    while (w < k) {
+      val y = words.getArray(w)
+      val n = math.min(x.numElements(), y.numElements())
+      var s = 0.0
+      var i = 0
+      while (i < n) {
+        s += (if (vIsFloat) x.getFloat(i).toDouble else x.getDouble(i)) *
+          y.getDouble(i)
+        i += 1
+      }
+      out(w) = bs.getDouble(w) - 2.0 * s
+      w += 1
+    }
+    ArrayData.toArrayData(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val vGet = if (vIsFloat) "getFloat" else "getDouble"
+    nullSafeCodeGen(ctx, ev, (x, words, bs) => {
+      val k = ctx.freshName("k")
+      val out = ctx.freshName("out")
+      val w = ctx.freshName("w")
+      val y = ctx.freshName("y")
+      val n = ctx.freshName("n")
+      val i = ctx.freshName("i")
+      val s = ctx.freshName("s")
+      s"""
+         |int $k = $words.numElements();
+         |if ($bs.numElements() != $k) {
+         |  throw new IllegalArgumentException("code_dists: " +
+         |    $bs.numElements() + " biases for " + $k + " codewords");
+         |}
+         |double[] $out = new double[$k];
+         |for (int $w = 0; $w < $k; $w++) {
+         |  ArrayData $y = $words.getArray($w);
+         |  int $n = java.lang.Math.min($x.numElements(), $y.numElements());
+         |  double $s = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $s += ((double) $x.$vGet($i)) * $y.getDouble($i);
+         |  }
+         |  $out[$w] = $bs.getDouble($w) - 2.0 * $s;
+         |}
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |  .fromPrimitiveArray($out);
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(v = newFirst, book = newSecond, bias = newThird)
+}
+
 object VectorFunctions {
   /** Dot product of two dense vectors (array<double> or array<float>),
     * accumulated in double inside whole-stage codegen. */
   def dot(a: Column, b: Column): Column =
     GraftSqlBridge.column(DotProduct(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** `bias[c] − 2·(v·book[c])` per codeword of `book` (one
+    * `array<array<double>>` literal); `bias` is `array<double>`. */
+  def codeDists(v: Column, book: Column, bias: Column): Column =
+    GraftSqlBridge.column(CodeDists(GraftSqlBridge.expression(v),
+      GraftSqlBridge.expression(book), GraftSqlBridge.expression(bias)))
 
   /** Euclidean norm via the same codegen'd loop. */
   def norm(a: Column): Column =

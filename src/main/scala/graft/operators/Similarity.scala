@@ -141,7 +141,7 @@ object Similarity {
     val e = vecs
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("n", VectorFunctions.norm($"v"))
-      .withColumn("cell", assignCol(centroids))
+      .withColumn("cell", assignColOn(centroids, $"v"))
       .localCheckpoint()
     val scored = e.as("a").join(e.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -570,7 +570,8 @@ object Similarity {
     // assign: nearest centroid by cosine, as a codegen'd projection
     val assigned = e.withColumn("cell", nearestCellByCosine($"v", $"n", cents))
     // probe: nProbe nearest cells per query, same literal scoring —
-    // array_sort asc on (cos, -c_id), reversed = cos desc, c_id asc
+    // array_sort asc on (cos, -c_id), reversed = cos desc, c_id asc.
+    // Not the CodeDists kernel: cosine divides by the per-row norm.
     val cellScores = array(cents.map { case (id, c) =>
       val cn = math.sqrt(c.map(x => x * x).sum)
       struct((VectorFunctions.dot($"qv", typedlit(c)) / ($"qn" * lit(cn)))
@@ -681,7 +682,8 @@ object Similarity {
 
   /** Cosine-argmax cell id over literal centroids: `greatest` on
     * (cos, -c_id) structs picks the best cell, ties to the lowest id —
-    * the same rule as the previous max_by aggregation. */
+    * the same rule as the previous max_by aggregation. Not the
+    * CodeDists kernel: cosine divides by the per-row norm. */
   private def nearestCellByCosine(v: Column, n: Column,
       cents: Array[(Long, Array[Double])]): Column = {
     val scored = cents.map { case (id, c) =>
@@ -703,7 +705,7 @@ object Similarity {
     val e = vecs
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
     val centroids = kmeansCentroids(vecs, k, iters)
-    e.withColumn("cell", assignCol(centroids))
+    e.withColumn("cell", assignColOn(centroids, $"v"))
       .select($"vec_id", $"cell".cast("long").as("cell"))
       .orderBy($"vec_id")
   }
@@ -731,14 +733,12 @@ object Similarity {
     // POSITION in the surviving sorted array, not by raw cell id
     val sorted = centroids.sortBy(_._1)
     val vv = VectorFunctions.dot($"v", $"v")
-    val dists = array(sorted.map { case (_, c) =>
-      val cc = c.foldLeft(0d)((a, x) => a + x * x)
-      vv + (lit(cc) - lit(2.0) * VectorFunctions.dot($"v", typedlit(c)))
-    }: _*)
+    val dists = transform(bookDists($"v", sorted, typedlit(sorted.map {
+      case (_, c) => c.foldLeft(0d)((a, x) => a + x * x) })), d => vv + d)
     val posExpr = sorted.zipWithIndex
       .map { case ((id, _), p) => s"WHEN cell = $id THEN $p" }
       .mkString("CASE ", " ", " END")
-    val sil = e.withColumn("cell", assignCol(centroids))
+    val sil = e.withColumn("cell", assignColOn(centroids, $"v"))
       .withColumn("d2s", dists)
       .withColumn("pos", expr(posExpr))
       .withColumn("a2", expr("element_at(d2s, cast(pos + 1 as int))"))
@@ -775,7 +775,7 @@ object Similarity {
       .collect().zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
     for (_ <- 0 until iters) {
-      val assignExpr = assignCol(centroids)
+      val assignExpr = assignColOn(centroids, $"v")
       val means = e.withColumn("cell", assignExpr)
         .select($"cell", posexplode($"v").as(Seq("i", "x")))
         .groupBy($"cell", $"i").agg(sum($"x").as("sx"), count(lit(1)).as("n"))
@@ -795,11 +795,12 @@ object Similarity {
     * replace E3's sampled seeds, so cells track the real density of the
     * corpus (tighter cells → fewer probes for the same recall — the
     * standard IVF training step in Jégou et al.'s product-quantization
-    * line of work). Assignment and probing both use the squared-
-    * euclidean argmin as one codegen'd literal projection (zero join,
-    * zero shuffle); final scoring is exact cosine over the probed
-    * cells through the bounded-heap TopKAgg. nProbe is the recall/cost
-    * knob — measured curve in SURVEY §5.
+    * line of work). Assignment and probing both rank cells by the
+    * squared-euclidean distances of one codegen'd CodeDists call over
+    * the centroid literal (zero join, zero shuffle); final scoring is
+    * exact cosine over the probed cells through the bounded-heap
+    * TopKAgg. nProbe is the recall/cost knob — measured curve in
+    * SURVEY §5.
     *
     * Cosine-query guidance (measured, IvfRecallSpec): on roughly
     * equal-norm embeddings the near-origin centroids make euclidean
@@ -813,17 +814,13 @@ object Similarity {
     val centroids = kmeansCentroids(vecs, k, iters)
     val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .withColumn("n", VectorFunctions.norm($"v"))
-    val assigned = e.withColumn("cell", assignCol(centroids))
+    val assigned = e.withColumn("cell", assignColOn(centroids, $"v"))
     // nProbe nearest cells per query under the SAME metric as
-    // assignment: array_sort asc on (c·c − 2 q·c, cell id)
-    val cellDists = array(centroids.map { case (id, c) =>
-      struct((lit(c.map(x => x * x).sum) -
-        lit(2.0) * VectorFunctions.dot($"qv", typedlit(c))).as("d"),
-        lit(id).as("id"))
-    }.toIndexedSeq: _*)
+    // assignment: ascending (c·c − 2 q·c, cell id)
+    val cellDists = bookDists($"qv", centroids, sqNorms(centroids))
     val q = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"n".as("qn"))
-      .withColumn("pc", explode(slice(array_sort(cellDists), 1, nProbe)))
+      .withColumn("pc", explode(nearestIds(cellDists, centroids, nProbe)))
       .select($"q_id", $"qv", $"qn", $"pc.id".as("cell"))
     topKPerQuery(
       assigned.join(broadcast(q), Seq("cell"))
@@ -864,20 +861,17 @@ object Similarity {
   }
 
   /** PQ encode: every vector becomes `m` small codes (8 bytes for a
-    * 64-dim float vector — a 32× compression). Each code is a
-    * squared-euclidean argmin over codebook literals on the subspace
-    * slice — one codegen'd projection, zero join, zero shuffle. */
+    * 64-dim float vector — a 32× compression). Each code is the
+    * squared-euclidean argmin of one CodeDists call over the subspace
+    * codebook on the subspace slice — one codegen'd projection, zero
+    * join, zero shuffle. */
   def pqEncode(vecs: DataFrame,
       books: Array[Array[(Int, Array[Double])]]): DataFrame = {
     import vecs.sparkSession.implicits._
     val sub = books.head.head._2.length  // geometry rides the books
     val codeCols = books.indices.map { j =>
-      val scored = books(j).map { case (cid, c) =>
-        struct((lit(c.map(x => x * x).sum) - lit(2.0) *
-          VectorFunctions.dot(slice($"v", j * sub + 1, sub), typedlit(c)))
-          .as("d"), lit(cid).as("id"))
-      }
-      least(scored.toIndexedSeq: _*).getField("id")
+      nearestId(bookDists(slice($"v", j * sub + 1, sub), books(j),
+        sqNorms(books(j))), books(j))
     }
     vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .select($"vec_id", array(codeCols: _*).as("codes"))
@@ -900,10 +894,7 @@ object Similarity {
     val codes = pqEncode(vecs, books)
     val sub = books.head.head._2.length
     val tblCols = books.indices.map { j =>
-      array(books(j).map { case (_, c) =>
-        lit(c.map(x => x * x).sum) - lit(2.0) *
-          VectorFunctions.dot(slice($"qv", j * sub + 1, sub), typedlit(c))
-      }.toIndexedSeq: _*)
+      bookDists(slice($"qv", j * sub + 1, sub), books(j), sqNorms(books(j)))
     }
     val q = vecs
       .select($"vec_id", $"embedding".cast("array<double>").as("qv"))
@@ -977,8 +968,9 @@ object Similarity {
     * E3/E6 seed rows; stage 2: a SECOND sample stride's residuals
     * against stage 1 — computed on the driver, K·dim doubles), the
     * 100 TB posture being exactly the PQ one: codebooks are tiny
-    * driver state, encode is one codegen'd literal-argmin projection
-    * (zero join, zero shuffle), queries never read the vector corpus.
+    * driver state, encode is one codegen'd projection of two CodeDists
+    * argmins (zero join, zero shuffle), queries never read the vector
+    * corpus.
     *
     * Bit-exactness: every cross term is precomputed on the driver in
     * the SAME index-order fold DuckDB's list_dot_product uses, and
@@ -1010,26 +1002,22 @@ object Similarity {
     val cd2 = c1.map(c => c2.map(d => 2.0 * dotD(c, d)).toSeq).toSeq
     val wcd = c1.indices.map(i =>
       c2.indices.map(j => (cc(i) + cd2(i)(j)) + dd(j)).toSeq).toSeq
-    // encode: two literal argmins (tie → lowest code id)
-    val s1 = c1.zipWithIndex.map { case (c, cid) =>
-      struct((lit(cc(cid)) - lit(2.0) * VectorFunctions.dot($"v", typedlit(c.toSeq)))
-        .as("d"), lit(cid).as("id"))
-    }
+    // encode: two nearest-code picks (tie → lowest code id); stage 2
+    // adds the per-row cross term after the kernel
+    val book1 = c1.zipWithIndex.map(_.swap)
+    val book2 = c2.zipWithIndex.map(_.swap)
     val coded1 = e.select($"vec_id", $"v",
-      least(s1.toIndexedSeq: _*).getField("id").as("code1"))
-    val s2 = c2.zipWithIndex.map { case (d, did) =>
-      struct(((lit(dd(did)) - lit(2.0) * VectorFunctions.dot($"v", typedlit(d.toSeq)))
-        + element_at(element_at(typedlit(cd2), $"code1" + 1), did + 1))
-        .as("d"), lit(did).as("id"))
-    }
+      nearestId(bookDists($"v", book1, typedlit(cc)), book1).as("code1"))
+    val d2 = zip_with(bookDists($"v", book2, typedlit(dd)),
+      element_at(typedlit(cd2), $"code1" + 1), (a, b) => a + b)
     val codes = coded1.select($"vec_id", $"code1",
-      least(s2.toIndexedSeq: _*).getField("id").as("code2"))
+      nearestId(d2, book2).as("code2"))
     // ADC: per-query code tables (K mults each), then every corpus
-    // row is three array lookups + adds — codes only, no vectors
-    val t1 = array(c1.map(c =>
-      lit(-2.0) * VectorFunctions.dot($"qv", typedlit(c.toSeq))).toIndexedSeq: _*)
-    val t2 = array(c2.map(d =>
-      lit(-2.0) * VectorFunctions.dot($"qv", typedlit(d.toSeq))).toIndexedSeq: _*)
+    // row is three array lookups + adds — codes only, no vectors.
+    // A −0.0 bias makes the kernel's −0.0 − 2·q·c equal −2.0·(q·c)
+    // bit for bit, the signs of zero included.
+    val t1 = bookDists($"qv", book1, typedlit(Array.fill(c1.length)(-0.0)))
+    val t2 = bookDists($"qv", book2, typedlit(Array.fill(c2.length)(-0.0)))
     val q = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"))
       .withColumn("qq", VectorFunctions.dot($"qv", $"qv"))
@@ -1066,10 +1054,11 @@ object Similarity {
     * would take an interpreted zip_with per row; instead the
     * cell-dependent part 2·cent_sub·c is precomputed per
     * (subspace, code, cell) on the driver (k·m·K doubles — tiny) and
-    * the per-row work is one literal lookup + one codegen'd dot:
-    * d = (c·c + 2·cent_sub·c) − 2·v_sub·c. The query side builds its
-    * per-(query, probed-cell) ADC tables over the true residual
-    * q − cent (zip_with is fine there: NumQueries·nProbe rows).
+    * the per-row work is one bias-row lookup + one codegen'd CodeDists
+    * call per subspace: d = (c·c + 2·cent_sub·c) − 2·v_sub·c. The
+    * query side builds its per-(query, probed-cell) ADC tables over
+    * the true residual q − cent (zip_with is fine there:
+    * NumQueries·nProbe rows).
     * Both engines fold the ADC sum in subspace order and the export
     * rounds to 6 decimals, absorbing the last-ulp skew of the
     * learned-centroid means (partial sums accumulate in
@@ -1142,57 +1131,51 @@ object Similarity {
     IvfPqModel(centroids, books)
   }
 
-  /** IVF-PQ encode over `e(vec_id, v)`: per subspace, argmin over the
-    * codebook of (c·c + 2·cent_sub·c) − 2·v_sub·c — the corr literal
-    * per cell keeps the residual argmin codegen'd (no per-row vector
-    * subtraction). Output: (vec_id, cell, codes). */
+  /** IVF-PQ encode over `e(vec_id, v)`: per subspace, the CodeDists
+    * argmin over the codebook of (c·c + 2·cent_sub·c) − 2·v_sub·c — the
+    * bracket is the row's bias, picked by cell from one driver-built
+    * (cell × code) table, which keeps the residual argmin codegen'd (no
+    * per-row vector subtraction). Output: (vec_id, cell, codes). */
   private[graft] def ivfPqEncode(e: DataFrame, m: IvfPqModel): DataFrame = {
     import e.sparkSession.implicits._
-    val assigned = e.withColumn("cell", assignCol(m.centroids))
+    val assigned = e.withColumn("cell", assignColOn(m.centroids, $"v"))
     val sub = m.subDim
     val codeCols = (0 until m.nSub).map { j =>
-      val scored = m.books(j).map { case (cid, cb) =>
-        val cbSq = dotD(cb, cb)
-        val corr = Array.tabulate(m.maxCell + 1) { cell =>
+      val book = m.books(j)
+      // corr(cell)(c): the per-cell bias row, picked per row by cell
+      val corr = Array.tabulate(m.maxCell + 1) { cell =>
+        book.map { case (_, cb) =>
           if (m.centByCell(cell) == null) 0.0
-          else cbSq + 2.0 * dotD(
+          else dotD(cb, cb) + 2.0 * dotD(
             m.centByCell(cell).slice(j * sub, (j + 1) * sub), cb)
         }
-        struct((element_at(typedlit(corr), $"cell" + 1) -
-          lit(2.0) * VectorFunctions.dot(
-            slice($"v", j * sub + 1, sub), typedlit(cb))).as("d"),
-          lit(cid).as("id"))
       }
-      least(scored.toIndexedSeq: _*).getField("id")
+      nearestId(bookDists(slice($"v", j * sub + 1, sub), book,
+        element_at(typedlit(corr), $"cell" + 1)), book)
     }
     assigned.select($"vec_id", $"cell", array(codeCols: _*).as("codes"))
   }
 
   /** Query-side probe prep over `queries(q_id, qv)`: nProbe nearest
-    * cells under the assignment metric, true-residual ADC tables per
-    * (query, probed cell) — NumQueries·nProbe rows, so the interpreted
-    * zip_with is off the hot path. */
+    * cells under the assignment metric (one CodeDists call over the
+    * centroids), true-residual ADC tables per (query, probed cell), one
+    * CodeDists call per subspace — NumQueries·nProbe rows, so the
+    * interpreted zip_with is off the hot path. */
   private[graft] def ivfPqProbe(queries: DataFrame, m: IvfPqModel,
       nProbe: Int): DataFrame = {
     import queries.sparkSession.implicits._
-    val cellDists = array(m.centroids.map { case (id, c) =>
-      struct((lit(c.map(x => x * x).sum) -
-        lit(2.0) * VectorFunctions.dot($"qv", typedlit(c))).as("d"),
-        lit(id).as("id"))
-    }.toIndexedSeq: _*)
+    val cellDists = bookDists($"qv", m.centroids, sqNorms(m.centroids))
     val centLit = typedlit(m.centByCell.map(c =>
       if (c == null) Array.fill(m.centroids.head._2.length)(0.0) else c))
     queries
-      .withColumn("pc", explode(slice(array_sort(cellDists), 1, nProbe)))
+      .withColumn("pc", explode(nearestIds(cellDists, m.centroids, nProbe)))
       .select($"q_id", $"qv", $"pc.id".as("cell"))
       .withColumn("qr", zip_with($"qv",
         element_at(centLit, $"cell" + 1), (a, b) => a - b))
       .withColumn("qrq", VectorFunctions.dot($"qr", $"qr"))
       .withColumn("tbls", array((0 until m.nSub).map { j =>
-        array(m.books(j).map { case (_, cb) =>
-          lit(dotD(cb, cb)) - lit(2.0) * VectorFunctions.dot(
-            slice($"qr", j * m.subDim + 1, m.subDim), typedlit(cb))
-        }.toIndexedSeq: _*)
+        bookDists(slice($"qr", j * m.subDim + 1, m.subDim), m.books(j),
+          typedlit(m.books(j).map { case (_, cb) => dotD(cb, cb) }))
       }: _*))
       .select($"q_id", $"cell", $"qrq", $"tbls")
   }
@@ -1554,6 +1537,8 @@ object Similarity {
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
       .join(members, "vec_id").localCheckpoint()
     if (cellVecs.count() < 2L) return -1
+    // a true squared distance, not the kernel's expanded c·c − 2 v·c:
+    // expanding it would round differently and move split sides
     def d2To(c: Array[Double]): Column =
       aggregate(zip_with($"v", typedlit(c.toSeq),
           (a, b) => (a - b) * (a - b)),
@@ -1723,26 +1708,42 @@ object Similarity {
     queryIvfPqIndexRerank(s, ensureIndex(s, dir), queriesOf(s, dir),
       Tables.embeddings(s, dir))
 
-  /** Nearest-centroid expression: squared-euclidean argmin over the
-    * broadcast centroid literals, all inside codegen via DotProduct. */
-  private[graft] def assignCol(centroids: Array[(Int, Array[Double])]): Column =
-    assignColOn(centroids, col("v"))
-
+  /** Nearest-centroid id of `v`: the argmin of c·c − 2 v·c over the
+    * centroids (|v−c|² less the per-row constant v·v). */
   private[graft] def assignColOn(centroids: Array[(Int, Array[Double])],
-      v: Column): Column = {
-    val scored = centroids.map { case (id, c) =>
-      val cl = typedlit(c)
-      // |v-c|² = v·v - 2 v·c + c·c; v·v is constant per row → argmin
-      // over (c·c - 2 v·c)
-      val d = lit(c.map(x => x * x).sum) -
-        lit(2.0) * VectorFunctions.dot(v, cl)
-      struct(d.as("d"), lit(id).as("id"))
-    }
-    // Lloyd's can collapse to one populated cell (e.g. rank-1 data);
-    // `least` requires ≥ 2 args
-    if (scored.length == 1) scored.head.getField("id")
-    else least(scored.toIndexedSeq: _*).getField("id")
+      v: Column): Column =
+    nearestId(bookDists(v, centroids, sqNorms(centroids)), centroids)
+
+  /** `bias[c] − 2·v·c` for every codeword of `book`, in book order: one
+    * [[graft.functions.CodeDists]] call over the whole codebook as one
+    * literal, so the model enters the plan as data and a new model
+    * compiles to the same code. Ids must ascend — the nearest-code
+    * picks below break ties by position. */
+  private[graft] def bookDists(v: Column, book: Array[(Int, Array[Double])],
+      bias: Column): Column = {
+    require(book.indices.drop(1).forall(i => book(i - 1)._1 < book(i)._1),
+      "codebook ids must ascend")
+    VectorFunctions.codeDists(v, typedlit(book.map(_._2)), bias)
   }
+
+  /** The `Σ c²` bias of each codeword, as a literal. */
+  private def sqNorms(book: Array[(Int, Array[Double])]): Column =
+    typedlit(book.map { case (_, c) => c.map(x => x * x).sum })
+
+  /** Id of the smallest of the [[bookDists]] distances `d`: Spark's
+    * double ordering (NaN ranks greatest, −0.0 equals 0.0), ties to
+    * the lower id — the rule of a `least` over (d, id) structs. */
+  private[graft] def nearestId(d: Column,
+      book: Array[(Int, Array[Double])]): Column =
+    element_at(typedlit(book.map(_._1)),
+      array_position(d, array_min(d)).cast("int"))
+
+  /** The `n` nearest codewords as `struct<d, id>` entries in (d, id)
+    * order — the same ordering as [[nearestId]]. */
+  private[graft] def nearestIds(d: Column, book: Array[(Int, Array[Double])],
+      n: Int): Column =
+    slice(array_sort(arrays_zip(d.as("d"), typedlit(book.map(_._1)).as("id"))),
+      1, n)
 
   /** E12 SQ8 scalar quantization — the memory lever BEFORE any index:
     * each vector stores as `array<tinyint>` codes + ONE float scale
@@ -2554,13 +2555,13 @@ object Similarity {
 
   /** DuckDB twin of the 3-iteration Lloyd's loop, unrolled: assign =
     * squared-euclidean argmin (c·c − 2 v·c, tie → lowest cell) exactly
-    * like `assignCol`; new centroids = per-cell element-wise sum/count.
+    * like `assignColOn`; new centroids = per-cell element-wise sum/count.
     * Centroid doubles can differ from Spark's in the last ulp (partial
     * sums accumulate in engine-specific order), which only matters if
     * a vector is equidistant to two cells at that precision —
     * hash-verified stable at sf0.001/0.01/0.1. */
   /** One unrolled Lloyd's round: a$i = euclidean-argmin assignment
-    * against centroids c$i (tie → lowest cell, same as `assignCol`);
+    * against centroids c$i (tie → lowest cell, same as `assignColOn`);
     * c${i+1} = per-cell element-wise means. Shared by the kmeans and
     * IVF-kmeans oracles; expects `ev(vec_id, v, …)` and `c$i` CTEs. */
   private def kmeansIterSql(i: Int): String =

@@ -560,4 +560,20 @@ class IvfPqIndexSpec extends AnyFunSuite {
     made().foreach(n =>
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp, n)))
   }
+
+  test("pqK = 1: one-codeword books build, encode every code to 0 and serve top-k") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_ivfpq_k1").toString
+    val vecs = Tables.embeddings(spark, sf)
+    Similarity.buildIvfPqIndex(vecs, d, pqK = 1)
+    val codes = M.readPublished(spark, s"$d/codes").select($"codes")
+      .as[Seq[Int]].collect()
+    assert(codes.length == vecs.count() && codes.forall(_.forall(_ == 0)),
+      "a one-codeword book must code every subspace as 0")
+    val q = vecs.filter($"vec_id" < 5)
+      .select($"vec_id".as("q_id"), $"embedding".cast("array<double>").as("qv"))
+    val got = collectAll(Similarity.queryIvfPqIndex(spark, d, q))
+    val perQuery = got.groupBy(_._1).map { case (k, v) => k -> v.size }
+    assert(perQuery == (0L until 5L).map(_ -> 3).toMap, perQuery) // TopK = 3
+  }
 }

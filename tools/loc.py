@@ -9,8 +9,15 @@ its code lines (non-blank, non-comment) at both revisions, then the
 totals. A comment line is a `//` line or a line of a `/* ... */` block
 that starts a line; code after a closing `*/` still counts as comment.
 A file missing at one revision counts 0 there.
+
+Then, per changed file, the entry points present at only one of the two
+revisions: member `def`/`val`/`var`/`object`/`class`/`trait` names
+(qualified by their enclosing templates) that are not `private` (in any
+form), not `override`, and not inside a private template. Definitions
+local to a method or block body do not count.
 """
 import argparse
+import re
 import subprocess
 import sys
 
@@ -43,6 +50,86 @@ def count(text):
     return len(lines), code
 
 
+def strip(text):
+    """`text` with comments and string/char literals blanked to spaces
+    (newlines kept), so braces and keywords inside them are ignored."""
+    out, i, n = [], 0, len(text)
+    blank = lambda t: "".join(c if c == "\n" else " " for c in t)
+    while i < n:
+        c = text[i]
+        if text.startswith("//", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+        elif text.startswith("/*", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                if text.startswith("/*", j):
+                    depth, j = depth + 1, j + 2
+                elif text.startswith("*/", j):
+                    depth, j = depth - 1, j + 2
+                else:
+                    j += 1
+        elif text.startswith('"""', i):
+            j = text.find('"""', i + 3)
+            j = n if j < 0 else j + 3
+            while j < n and text[j] == '"':
+                j += 1
+        elif c == '"':
+            j = i + 1
+            while j < n and text[j] not in '"\n':
+                j += 2 if text[j] == "\\" else 1
+            j = min(j + 1, n)
+        elif c == "'" and re.match(r"'(\\.|[^\\'\n])'", text[i:i + 4]):
+            j = text.index("'", i + 2 if text[i + 1] != "\\" else i + 3) + 1
+        else:
+            out.append(c)
+            i += 1
+            continue
+        out.append(blank(text[i:j]))
+        i = j
+    return "".join(out)
+
+
+TOKEN = re.compile(r"[{}]|\b(def|val|var|object|class|trait)\s+"
+                   r"([A-Za-z_][\w$]*|`[^`]+`)")
+
+
+def entry_points(text):
+    """Qualified public member names defined in one file's text."""
+    if text is None:
+        return set()
+    code = strip(text)
+    names = set()
+    # scope stack: (kind, qualified name, hidden); top level is a template
+    stack = [("template", "", False)]
+    pending = None  # (kind, name, hidden) the next `{` opens
+    for m in TOKEN.finditer(code):
+        kind, qual, hidden = stack[-1]
+        if m.group(0) == "{":
+            if kind == "template" and pending and pending[0] == "template":
+                stack.append(pending)
+            else:
+                stack.append(("local", qual, hidden))
+            pending = None
+            continue
+        if m.group(0) == "}":
+            if len(stack) > 1:
+                stack.pop()
+            pending = None
+            continue
+        keyword, name = m.group(1), m.group(2)
+        start = max(code.rfind(c, 0, m.start()) for c in "\n;{}") + 1
+        mods = code[start:m.start()]
+        private = re.search(r"\bprivate\b", mods) is not None
+        full = f"{qual}.{name}" if qual else name
+        if kind == "template" and not hidden and not private \
+                and not re.search(r"\boverride\b", mods):
+            names.add(full)
+        pending = ("template", full, hidden or private) \
+            if keyword in ("object", "class", "trait") else None
+    return names
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", default="HEAD^")
@@ -65,6 +152,20 @@ def main():
             tot[i] += v
         print(f"{f:<{width}}  {pt} ({pc}) -> {ct} ({cc})")
     print(f"{'total':<{width}}  {tot[0]} ({tot[1]}) -> {tot[2]} ({tot[3]})")
+    print(f"\nentry points only at {a.parent} (-) or only at {a.change} (+):")
+    changed = False
+    for f in files:
+        before = entry_points(show(a.parent, f))
+        after = entry_points(show(a.change, f))
+        diff = [("-", e) for e in before - after] + \
+            [("+", e) for e in after - before]
+        if diff:
+            changed = True
+            print(f"  {f}")
+            for sign, e in sorted(diff, key=lambda d: (d[1], d[0])):
+                print(f"    {sign} {e}")
+    if not changed:
+        print("  none")
     return 0
 
 
