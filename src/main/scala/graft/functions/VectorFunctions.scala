@@ -106,19 +106,16 @@ case class CodeDists(v: Expression, book: Expression, bias: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (v.dataType, book.dataType, bias.dataType) match {
-      case (ArrayType(DoubleType | FloatType, _),
-          ArrayType(ArrayType(DoubleType, _), _), ArrayType(DoubleType, _)) =>
+      case (ArrayType(DoubleType, _), ArrayType(ArrayType(DoubleType, _), _),
+          ArrayType(DoubleType, _)) =>
         TypeCheckResult.TypeCheckSuccess
       case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"code_dists needs (array<double|float>, array<array<double>>, " +
+        s"code_dists needs (array<double>, array<array<double>>, " +
           s"array<double>), got ${a.catalogString} / ${b.catalogString} / " +
           s"${c.catalogString}")
     }
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  private def vIsFloat: Boolean =
-    v.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -135,8 +132,7 @@ case class CodeDists(v: Expression, book: Expression, bias: Expression)
       var s = 0.0
       var i = 0
       while (i < n) {
-        s += (if (vIsFloat) x.getFloat(i).toDouble else x.getDouble(i)) *
-          y.getDouble(i)
+        s += x.getDouble(i) * y.getDouble(i)
         i += 1
       }
       out(w) = bs.getDouble(w) - 2.0 * s
@@ -146,7 +142,6 @@ case class CodeDists(v: Expression, book: Expression, bias: Expression)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vGet = if (vIsFloat) "getFloat" else "getDouble"
     nullSafeCodeGen(ctx, ev, (x, words, bs) => {
       val k = ctx.freshName("k")
       val out = ctx.freshName("out")
@@ -167,7 +162,7 @@ case class CodeDists(v: Expression, book: Expression, bias: Expression)
          |  int $n = java.lang.Math.min($x.numElements(), $y.numElements());
          |  double $s = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
-         |    $s += ((double) $x.$vGet($i)) * $y.getDouble($i);
+         |    $s += $x.getDouble($i) * $y.getDouble($i);
          |  }
          |  $out[$w] = $bs.getDouble($w) - 2.0 * $s;
          |}
