@@ -100,20 +100,17 @@ def entry_points(text):
         return set()
     code = strip(text)
     names = set()
-    # scope stack: (kind, qualified name, hidden); top level is a template
-    stack = [("template", "", False)]
-    pending = None  # (kind, name, hidden) the next `{` opens
+    # scopes: (is a template body, qualified name, hidden); the file's
+    # top level is a template
+    stack = [(True, "", False)]
+    pending = None  # (name, hidden) of the class/object/trait just named
     for m in TOKEN.finditer(code):
-        kind, qual, hidden = stack[-1]
-        if m.group(0) == "{":
-            if kind == "template" and pending and pending[0] == "template":
-                stack.append(pending)
-            else:
-                stack.append(("local", qual, hidden))
-            pending = None
-            continue
-        if m.group(0) == "}":
-            if len(stack) > 1:
+        template, qual, hidden = stack[-1]
+        if m.group(0) in "{}":
+            if m.group(0) == "{":
+                stack.append((True, *pending) if template and pending
+                             else (False, qual, hidden))
+            elif len(stack) > 1:
                 stack.pop()
             pending = None
             continue
@@ -122,10 +119,10 @@ def entry_points(text):
         mods = code[start:m.start()]
         private = re.search(r"\bprivate\b", mods) is not None
         full = f"{qual}.{name}" if qual else name
-        if kind == "template" and not hidden and not private \
+        if template and not hidden and not private \
                 and not re.search(r"\boverride\b", mods):
             names.add(full)
-        pending = ("template", full, hidden or private) \
+        pending = (full, hidden or private) \
             if keyword in ("object", "class", "trait") else None
     return names
 
