@@ -18,6 +18,22 @@ object Lake {
     * partitions' files are never read, rewritten, or moved (spec pins
     * file identity). At 100 TB with daily deltas touching k of N
     * partitions, the run costs O(k/N · corpus), not O(corpus).
+    * Write shape:
+    *  - the anti-join's key set is the delta's key column as it is,
+    *    with no distinct (a left-anti join ignores duplicate keys), so
+    *    a cached driver-sized delta is broadcast from its own size and
+    *    no shuffle runs for the keys;
+    *  - the rows are rebalanced on the partition column before the
+    *    write (a `REBALANCE` hint): under AQE a small touched partition
+    *    is written by one task as one file, and a large one is split
+    *    by the advisory partition size, never funnelled through one
+    *    task;
+    *  - a touched partition whose merged rows are all deleted is
+    *    removed. Dynamic overwrite only replaces the partitions the
+    *    write sends rows to, so the touched partitions' files are
+    *    listed on the driver before the write; any partition whose
+    *    old files survive it came out empty, and its directory is
+    *    deleted.
     * Caveats of the format-less shape (why Delta/Iceberg exist):
     * the swap is atomic per partition directory, not across the
     * table, and concurrent writers need external fencing.
@@ -31,24 +47,36 @@ object Lake {
   def mergeIntoPartitioned(spark: SparkSession, targetDir: String,
       partCol: String, keyCol: String, delta: DataFrame,
       opCol: String = "op"): Unit = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString
     import org.apache.spark.sql.functions.col
-    val touched = delta.select(col(partCol)).distinct()
-      .collect().map(_.get(0)) // driver state: touched-partition VALUES
+    // driver state: each touched partition's value, and its directory
+    // name (the string cast is the one the partitioned writer applies)
+    val touched = delta.select(col(partCol), col(partCol).cast("string"))
+      .distinct().collect().map(r => (r.get(0), r.getString(1)))
     if (touched.isEmpty) return
+    val root = new org.apache.hadoop.fs.Path(targetDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val oldFiles = touched.map { case (_, s) =>
+      val dir = new org.apache.hadoop.fs.Path(root, getPartitionPathString(partCol, s))
+      dir -> (if (fs.exists(dir)) fs.listStatus(dir).filter(_.isFile).map(_.getPath)
+              else Array.empty[org.apache.hadoop.fs.Path])
+    }
     // bare read: the previous merge just rewrote the target, so a
     // schema keyed by its version would miss every time and add a listing
     val target = spark.read.parquet(targetDir)
-      .filter(col(partCol).isin(touched.toIndexedSeq: _*))
-    val keys = delta.select(col(keyCol)).distinct()
-    val kept = target.join(keys, Seq(keyCol), "left_anti")
+      .filter(col(partCol).isin(touched.map(_._1).toIndexedSeq: _*))
+    val kept = target.join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
     val upserts = delta.filter(col(opCol) =!= "d")
       .select(target.columns.map(col).toIndexedSeq: _*)
     // a writer option, not the session conf: setting and restoring the
     // session-wide key would race with every other write on the session
-    kept.unionByName(upserts)
+    kept.unionByName(upserts).hint("rebalance", col(partCol))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(targetDir)
+    // a rewritten partition lost its old files (new files get new
+    // names); one that kept them received no rows: every row was deleted
+    for ((dir, files) <- oldFiles if files.exists(fs.exists)) fs.delete(dir, true)
   }
 
   /** Version stamp of the files under `paths`: a hash of the recursive

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -36,14 +36,35 @@ object CdcStream {
   private def tsUs(t: java.sql.Timestamp): Long =
     t.getTime * 1000 + t.getNanos / 1000 % 1000
 
+  /** The change feed keyed by `user_id`, for the stateful ops below.
+    * The input is first coalesced to at most `spark.sql.shuffle.partitions`
+    * partitions: the keyed exchange's reducer count, and the state-store
+    * partition count of a new checkpoint. A source can deliver one
+    * partition per append (as one poll of a partitioned log does), so
+    * without it the map stage before the exchange runs one task per
+    * append, and a slow micro-batch makes the next one slower. A
+    * coalesce is narrow: no shuffle is added, the state layout and the
+    * checkpoint stay as they were, and an input with fewer partitions
+    * is left as it is. Only for ops whose per-key result does not
+    * depend on arrival order (each sorts its group by (ts, event_id)
+    * or takes a max). */
+  private def byUser(changes: Dataset[Change]): KeyValueGroupedDataset[Long, Change] = {
+    import changes.sparkSession.implicits._
+    val reducers = changes.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    changes.coalesce(reducers).groupByKey(_.user_id)
+  }
+
   /** C6 streaming latest-state store: newest change per key wins;
     * tombstones mark the key deleted but stay in state so late
     * out-of-order updates older than the tombstone don't resurrect
     * the row. Emits the updated state per key per micro-batch
-    * (use OutputMode.Update). */
+    * (use OutputMode.Update). The feed is coalesced to at most
+    * `spark.sql.shuffle.partitions` partitions before its keyed
+    * exchange (see [[byUser]]), so a micro-batch that collected many
+    * appends still runs at most that many map tasks. */
   def latestState(changes: Dataset[Change]): Dataset[UserState] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Change], state: GroupState[UserState]) =>
           val incoming = it.map(c => UserState(uid, c.op, c.value, c.ts,
@@ -73,7 +94,7 @@ object CdcStream {
     * C6; forgotten keys cost zero. */
   def forgetStream(changes: Dataset[Change]): Dataset[UserState] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState[UserState, UserState](
         OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Change], state: GroupState[UserState]) =>
@@ -419,7 +440,7 @@ object CdcStream {
     * ignored, matching the batch twin's event-time ordering. */
   def scd2Stream(changes: Dataset[Change]): Dataset[Scd2Row] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState[Scd2Row, Scd2Row](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Change], state: GroupState[Scd2Row]) =>
@@ -599,7 +620,7 @@ object CdcStream {
   def cusumStream(changes: Dataset[Change],
       targetCents: Long): Dataset[Drift] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState(OutputMode.Update(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change],
@@ -632,7 +653,7 @@ object CdcStream {
     * contract (same as [[latestState]]/[[cusumStream]]). */
   def compactChangelogStream(changes: Dataset[Change]): Dataset[Change] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (_: Long, it: Iterator[Change], state: GroupState[Long]) =>
@@ -667,7 +688,7 @@ object CdcStream {
   def anomalyStream(changes: Dataset[Change], window: Int = 7,
       z: Int = 3): Dataset[AnomalyAlert] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change], state: GroupState[Seq[Long]]) =>
@@ -719,7 +740,7 @@ object CdcStream {
   def medianStream(changes: Dataset[Change],
       window: Int = 7): Dataset[MedianPoint] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change], state: GroupState[Seq[Long]]) =>
@@ -806,7 +827,7 @@ object CdcStream {
     * (the C31 envelope offset order, as [[latestState]]). */
   def mvDeltaStream(changes: Dataset[Change]): Dataset[MvKeyDelta] = {
     import changes.sparkSession.implicits._
-    changes.groupByKey(_.user_id)
+    byUser(changes)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change],

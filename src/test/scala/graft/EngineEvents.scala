@@ -1,10 +1,11 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -28,17 +29,33 @@ object EngineEvents {
 
   /** The descriptions ("" when unset) of the Spark jobs started while
     * `block` ran. */
-  def jobsRun(spark: SparkSession)(block: => Unit): Seq[String] = {
+  def jobsRun(spark: SparkSession)(block: => Unit): Seq[String] =
+    listen(spark)(block)._1
+
+  /** The stages submitted while `block` ran (a stage that reads its
+    * job's input has no `parentIds`). */
+  def stagesRun(spark: SparkSession)(block: => Unit): Seq[StageInfo] =
+    listen(spark)(block)._2
+
+  private def listen(spark: SparkSession)(
+      block: => Unit): (Seq[String], Seq[StageInfo]) = {
     val sc = spark.sparkContext
     val jobs = new ConcurrentLinkedQueue[String]
+    val stages = new ConcurrentLinkedQueue[StageInfo]
     val marks = new ConcurrentLinkedQueue[String]
+    val markStages = ConcurrentHashMap.newKeySet[Int]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val d = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse("")
-        if (d.startsWith("graft-events-")) marks.add(d) else jobs.add(d)
+        if (d.startsWith("graft-events-")) {
+          e.stageIds.foreach(markStages.add)
+          marks.add(d)
+        } else jobs.add(d)
       }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add(e.stageInfo)
     }
     def drain(): Unit = {
       val m = marker()
@@ -50,9 +67,11 @@ object EngineEvents {
     try {
       drain()
       jobs.clear()
+      stages.clear()
       block
       drain()
-      jobs.asScala.toSeq
+      (jobs.asScala.toSeq,
+        stages.asScala.toSeq.filterNot(s => markStages.contains(s.stageId)))
     } finally sc.removeSparkListener(l)
   }
 

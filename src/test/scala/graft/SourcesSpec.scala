@@ -435,6 +435,74 @@ class SourcesSpec extends AnyFunSuite {
     assert(got(11L) == "v1_1" && got(32L) == "v3_2")
   }
 
+  test("H13: a merge that deletes every row of a touched partition removes them") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_cow_empty").toString + "/t"
+    Seq((1L, "a", 0), (2L, "b", 1), (3L, "c", 1)).toDF("id", "payload", "part")
+      .write.partitionBy("part").parquet(dir)
+    // delta: delete 1 (the only row of part 0), update 2 (part 1)
+    val delta = Seq(
+      (1L, null.asInstanceOf[String], 0, "d"),
+      (2L, "b2", 1, "u")).toDF("id", "payload", "part", "op")
+    graft.sources.Lake.mergeIntoPartitioned(spark, dir, "part", "id", delta)
+    val got = spark.read.parquet(dir).orderBy($"id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+    assert(got == Seq((2L, "b2", 1), (3L, "c", 1)))
+  }
+
+  /** The parquet files of each `part=` directory under `dir`. */
+  private def filesByPart(dir: String): Map[String, Seq[String]] =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).map { d =>
+      d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq.sorted
+    }.toMap
+
+  test("H13: a merge writes each touched partition as one file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_cow_files").toString + "/t"
+    val rows = for (p <- 0 until 4; i <- 0 until 40)
+      yield (p.toLong * 100 + i, s"v${p}_$i", p)
+    rows.toDF("id", "payload", "part").repartition(4)
+      .write.partitionBy("part").parquet(dir)
+    val before = filesByPart(dir)
+    assert(before.values.forall(_.size > 1), s"seed layout: $before")
+    val delta = Seq(
+      (1L, "v0_1_NEW", 0, "u"),
+      (202L, null.asInstanceOf[String], 2, "d"),
+      (299L, "v2_new", 2, "u")).toDF("id", "payload", "part", "op")
+    graft.sources.Lake.mergeIntoPartitioned(spark, dir, "part", "id", delta)
+    val after = filesByPart(dir)
+    assert(after("part=0").size == 1 && after("part=2").size == 1,
+      s"touched partitions: ${after("part=0")} ${after("part=2")}")
+    assert(after("part=1") == before("part=1") && after("part=3") == before("part=3"))
+    val got = spark.read.parquet(dir).select($"id", $"payload").as[(Long, String)]
+      .collect().toMap
+    assert(got.size == 160 && got(1L) == "v0_1_NEW" && got(299L) == "v2_new" &&
+      !got.contains(202L) && got(203L) == "v2_3")
+  }
+
+  test("H13: a delta with duplicated keys merges like the deduplicated delta") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_cow_dup").toString
+    val rows = for (p <- 0 until 3; i <- 0 until 4)
+      yield (p.toLong * 10 + i, s"v${p}_$i", p)
+    val delta = Seq(
+      (0L, "v0_0_NEW", 0, "u"),
+      (11L, null.asInstanceOf[String], 1, "d"),
+      (12L, null.asInstanceOf[String], 1, "d")).toDF("id", "payload", "part", "op")
+    // the same delete keys again: a key set of duplicates
+    val dup = delta.unionByName(delta.filter($"op" === "d"))
+      .unionByName(delta.filter($"op" === "d"))
+    def merged(name: String, d: org.apache.spark.sql.DataFrame) = {
+      val dir = s"$base/$name"
+      rows.toDF("id", "payload", "part").write.partitionBy("part").parquet(dir)
+      graft.sources.Lake.mergeIntoPartitioned(spark, dir, "part", "id", d)
+      spark.read.parquet(dir).as[(Long, String, Int)].collect().toSeq.sorted
+    }
+    val once = merged("once", delta)
+    assert(once.size == 10 && once.contains((0L, "v0_0_NEW", 0)))
+    assert(merged("dup", dup) == once)
+  }
+
   test("H14: z-order layout prunes row groups on BOTH box dimensions") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_z").toString

@@ -192,6 +192,51 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("C6 a micro-batch of many appends runs at most shuffle.partitions input tasks") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val reducers = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // 24 appends (one input partition each) over 6 keys: inserts,
+    // updates, tombstones on the odd keys, then updates on the odd
+    // keys that are older than their tombstone
+    val appends = (0 until 24).map { a =>
+      val uid = (a % 6 + 1).toLong
+      val op = if (a < 6) "I" else if (a >= 12 && a < 18 && uid % 2 == 1) "D" else "U"
+      val minute = if (a >= 18 && uid % 2 == 1) a - 17 else a
+      Change(uid, (a + 1).toLong, ts(minute), op, a.toDouble)
+    }
+    assert(appends.size > reducers)
+    val in = MemoryStream[Change]
+    appends.foreach(c => in.addData(c)) // before start: one micro-batch
+    val w = CdcStream.latestState(in.toDS())
+      .writeStream.outputMode(OutputMode.Update())
+      .format("memory").queryName("cdc_state_coalesced")
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    try {
+      val stages = EngineEvents.stagesRun(spark) {
+        q = w.start()
+        q.processAllAvailable()
+      }
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+      val input = stages.filter(_.parentIds.isEmpty) // the ones reading the source
+      assert(input.nonEmpty, s"no input stage ran: ${stages.map(_.name)}")
+      assert(input.forall(_.numTasks <= reducers),
+        s"input stage tasks ${input.map(_.numTasks)} > $reducers")
+      // the C6 rules: newest (ts, event_id) wins, a tombstone stays
+      val want = appends.groupBy(_.user_id).map { case (uid, cs) =>
+        val c = cs.maxBy(c => (c.ts.getTime, c.event_id))
+        uid -> (c.op, c.value, c.event_id, c.op == "D")
+      }
+      val got = spark.table("cdc_state_coalesced").as[UserState].collect()
+        .groupBy(_.user_id).map { case (uid, v) =>
+          val s = v.maxBy(_.last_event_id)
+          uid -> (s.last_op, s.last_value, s.last_event_id, s.deleted)
+        }
+      assert(got == want)
+      assert(want.values.exists(_._4) && want.values.exists(!_._4))
+    } finally if (q != null) q.stop()
+  }
+
   test("C43 forget stream erases state (unlike D), confirms scrubbed, allows later re-create") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
