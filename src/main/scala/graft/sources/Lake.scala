@@ -58,8 +58,7 @@ object Lake {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val oldFiles = touched.map { case (_, s) =>
       val dir = new org.apache.hadoop.fs.Path(root, getPartitionPathString(partCol, s))
-      dir -> (if (fs.exists(dir)) fs.listStatus(dir).filter(_.isFile).map(_.getPath)
-              else Array.empty[org.apache.hadoop.fs.Path])
+      dir -> (if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).toSeq else Nil)
     }
     // bare read: the previous merge just rewrote the target, so a
     // schema keyed by its version would miss every time and add a listing
