@@ -36,18 +36,16 @@ object CdcStream {
   private def tsUs(t: java.sql.Timestamp): Long =
     t.getTime * 1000 + t.getNanos / 1000 % 1000
 
-  /** The change feed keyed by `user_id`, for the stateful ops below.
-    * The input is first coalesced to at most `spark.sql.shuffle.partitions`
-    * partitions: the keyed exchange's reducer count, and the state-store
-    * partition count of a new checkpoint. A source can deliver one
-    * partition per append (as one poll of a partitioned log does), so
-    * without it the map stage before the exchange runs one task per
-    * append, and a slow micro-batch makes the next one slower. A
-    * coalesce is narrow: no shuffle is added, the state layout and the
-    * checkpoint stay as they were, and an input with fewer partitions
-    * is left as it is. Only for ops whose per-key result does not
-    * depend on arrival order (each sorts its group by (ts, event_id)
-    * or takes a max). */
+  /** The change feed keyed by `user_id`, coalesced first to at most
+    * `spark.sql.shuffle.partitions` partitions: the keyed exchange's
+    * reducer count, and the state-store partition count of a new
+    * checkpoint. A source may deliver one partition per append (as one
+    * poll of a partitioned log does), and the map stage would run one
+    * task per append. The coalesce is narrow: it adds no shuffle, keeps
+    * the state layout and the checkpoint, and leaves an input with
+    * fewer partitions as it is. Only for ops whose per-key result does
+    * not depend on arrival order (each sorts its group by (ts,
+    * event_id) or takes a max). */
   private def byUser(changes: Dataset[Change]): KeyValueGroupedDataset[Long, Change] = {
     import changes.sparkSession.implicits._
     val reducers = changes.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
