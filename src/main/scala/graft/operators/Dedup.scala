@@ -1000,17 +1000,9 @@ object Dedup {
 
   /** Append a delta batch: only UNSEEN chunk hashes commit. */
   def appendChunkDocs(spark: SparkSession, dir: String,
-      docs: DataFrame, meta: String = ""): Long = {
-    import spark.implicits._
-    if (!graft.sources.Lake.Manifest.isManaged(spark, dir))
-      return graft.sources.Lake.Manifest.publishSnapshot(
-        chunkRows(docs), dir, partitionBy = Seq("hb"), meta = meta)
-    val fresh = chunkRows(docs).join(
-      graft.sources.Lake.Manifest.readPublished(spark, dir)
-        .select($"h"), Seq("h"), "left_anti")
-    graft.sources.Lake.Manifest.publishAppend(fresh, dir,
+      docs: DataFrame, meta: String = ""): Long =
+    graft.sources.Lake.Manifest.publishUnseen(chunkRows(docs), dir, "h",
       partitionBy = Seq("hb"), meta = meta)
-  }
 
   /** D24 CONTRASTIVE TRAINING PAIRS mined from the D8 near-dup
     * clusters (the SimCSE/contrastive-pretraining data shape: a

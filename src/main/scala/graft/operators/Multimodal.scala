@@ -468,18 +468,9 @@ object Multimodal {
     * semantic-idempotence contract), and a tagged batch always
     * commits (possibly meta-only) so the replay gate is reliable. */
   def appendAssetCatalog(spark: SparkSession, dir: String,
-      assets: DataFrame, meta: String = ""): Long = {
-    import spark.implicits._
-    if (!graft.sources.Lake.Manifest.isManaged(spark, dir))
-      return graft.sources.Lake.Manifest.publishSnapshot(
-        catalogRows(assets), dir, partitionBy = Seq("format"),
-        meta = meta)
-    val fresh = catalogRows(assets)
-      .join(readAssetCatalog(spark, dir).select($"doc_id"),
-        Seq("doc_id"), "left_anti")
-    graft.sources.Lake.Manifest.publishAppend(fresh, dir,
-      partitionBy = Seq("format"), meta = meta)
-  }
+      assets: DataFrame, meta: String = ""): Long =
+    graft.sources.Lake.Manifest.publishUnseen(catalogRows(assets), dir,
+      "doc_id", partitionBy = Seq("format"), meta = meta)
 
   /** Current catalog view. */
   def readAssetCatalog(spark: SparkSession, dir: String): DataFrame =
@@ -641,19 +632,9 @@ object Multimodal {
     * tagged batch always commits (possibly meta-only) so the replay
     * gate stays reliable. */
   def appendShardCatalog(spark: SparkSession, dir: String,
-      shards: DataFrame, meta: String = ""): Long = {
-    import spark.implicits._
-    if (!graft.sources.Lake.Manifest.isManaged(spark, dir))
-      return graft.sources.Lake.Manifest.publishSnapshot(
-        shardMemberRows(shards), dir, partitionBy = Seq("kb"),
-        meta = meta)
-    val fresh = shardMemberRows(shards)
-      .join(graft.sources.Lake.Manifest.readPublished(spark, dir)
-          .select($"doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-    graft.sources.Lake.Manifest.publishAppend(fresh, dir,
-      partitionBy = Seq("kb"), meta = meta)
-  }
+      shards: DataFrame, meta: String = ""): Long =
+    graft.sources.Lake.Manifest.publishUnseen(shardMemberRows(shards), dir,
+      "doc_id", partitionBy = Seq("kb"), meta = meta)
 
   /** A sample's ranged-read plan: bucket-pruned manifest read, exact
     * filter on the key (pruning is an optimization, never the

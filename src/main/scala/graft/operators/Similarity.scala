@@ -1329,7 +1329,7 @@ object Similarity {
     }
     val base = IvfPqModel(cents, books)
     val splits = graft.sources.Lake.Manifest
-      .publishedMetasOrdered(spark, codesDir(dir))
+      .publishedMetas(spark, codesDir(dir))
       .filter(_.startsWith("split="))
     if (splits.isEmpty) return base
     val byId = scala.collection.mutable.LinkedHashMap(

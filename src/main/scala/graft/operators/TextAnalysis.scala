@@ -340,7 +340,7 @@ object TextAnalysis {
       meta: String = ""): Long = {
     import spark.implicits._
     def gated(table: String): Boolean = meta.nonEmpty &&
-      Lake.Manifest.publishedMetas(spark, s"$dir/$table").contains(meta)
+      Lake.Manifest.carriesMeta(spark, Seq(s"$dir/$table"), meta)
     val docsTbl = Lake.Manifest.readPublished(spark, s"$dir/docs")
     val existing = (if (meta.nonEmpty) docsTbl.filter($"src" =!= meta)
       else docsTbl).select($"doc_id")

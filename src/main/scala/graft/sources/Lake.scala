@@ -297,26 +297,39 @@ object Lake {
         .filterNot(_.startsWith("#")).map(rel => s"$dir/$rel")
 
     /** Commit-log FACTS (`#meta ` lines) recorded by past publishes —
-      * applied stream-batch ids and the like. Unlike file lists they
-      * are carried forward into every successor manifest (append AND
-      * snapshot), so one read of the CURRENT manifest answers "was
-      * this batch ever applied?" even after compaction rewrote the
-      * files and [[vacuum]] pruned the manifest that introduced it.
-      * One short line per fact — negligible next to the file list. */
-    def publishedMetas(spark: SparkSession, dir: String): Set[String] =
-      manifestLines(spark, dir, latestVersion(spark, dir))
-        .filter(_.startsWith("#meta ")).map(_.stripPrefix("#meta ")).toSet
-
-    /** Meta lines in FIRST-COMMIT order. The Set view above answers
-      * membership; state-carrying metas (e.g. the E33 cell-split
-      * records, which redefine centroids and must replay in commit
-      * order) need the sequence. `commit` appends fresh metas after
-      * the carried ones and `distinct` keeps first occurrences, so
-      * position in the current manifest IS commit order. */
-    def publishedMetasOrdered(spark: SparkSession,
-        dir: String): Seq[String] =
+      * applied stream-batch ids and the like — in FIRST-COMMIT order.
+      * Unlike file lists they are carried forward into every successor
+      * manifest (append AND snapshot), so one read of the CURRENT
+      * manifest answers "was this batch ever applied?" even after
+      * compaction rewrote the files and [[vacuum]] pruned the manifest
+      * that introduced it. `commit` appends fresh metas after the
+      * carried ones and `distinct` keeps first occurrences, so position
+      * IS commit order — which state-carrying metas (the E33 cell-split
+      * records, replayed in order) rely on. Empty before the first
+      * publish. One short line per fact. */
+    def publishedMetas(spark: SparkSession, dir: String): Seq[String] =
       manifestLines(spark, dir, latestVersion(spark, dir))
         .filter(_.startsWith("#meta ")).map(_.stripPrefix("#meta "))
+
+    /** True when every table in `dirs` carries the meta `tag`. */
+    private[graft] def carriesMeta(spark: SparkSession, dirs: Seq[String],
+        tag: String): Boolean =
+      dirs.forall(publishedMetas(spark, _).contains(tag))
+
+    /** The exactly-once rule of every table maintained from a stream
+      * (the idempotent sink keyed by batch id of *Structured
+      * Streaming*, SIGMOD 2018): micro-batch `batchId` is tagged
+      * `batch=<id>`, and `apply(tag)` must commit that tag as a meta to
+      * each of `dirs`. A re-delivered batch whose tag has landed in
+      * EVERY table returns None without running; a crash between two
+      * tables' commits leaves the tag in some only, and the replay
+      * runs `apply` again (which skips the tables already carrying it,
+      * see [[carriesMeta]]). */
+    private[graft] def applyBatchOnce[T](spark: SparkSession,
+        dirs: Seq[String], batchId: Long)(apply: String => T): Option[T] = {
+      val tag = s"batch=$batchId"
+      if (carriesMeta(spark, dirs, tag)) None else Some(apply(tag))
+    }
 
     /** True once any version has been published under `dir`. */
     def isManaged(spark: SparkSession, dir: String): Boolean =
@@ -400,6 +413,21 @@ object Lake {
       val spark = df.sparkSession
       commit(df, dir, manifestFiles(spark, dir, latestVersion(spark, dir)),
         partitionBy, meta)
+    }
+
+    /** Append the rows of `df` whose `key` is not yet published in
+      * `dir` — the catalog shape of a maintained table, where a
+      * re-delivered key anti-joins to nothing. Before the first commit
+      * every row publishes (an append onto version 0 carries no files,
+      * so it IS the first snapshot). The left-anti join needs no
+      * `distinct` on the published keys: duplicates never multiply its
+      * output. Always commits, possibly with no rows, so `meta` lands. */
+    private[graft] def publishUnseen(df: DataFrame, dir: String, key: String,
+        partitionBy: Seq[String] = Nil, meta: String = ""): Long = {
+      val spark = df.sparkSession
+      val fresh = if (!isManaged(spark, dir)) df
+        else df.join(readPublished(spark, dir).select(key), Seq(key), "left_anti")
+      publishAppend(fresh, dir, partitionBy, meta)
     }
 
     /** Snapshot-publish: new version = df's files only (logical
@@ -536,11 +564,9 @@ object Lake {
       * in where drift is expected — landed CDC feeds, long-lived
       * catalogs — and the C50 schema-drift AUDIT decides what the
       * evolved read then absorbs. */
-    def readPublishedEvolved(spark: SparkSession, dir: String): DataFrame = {
-      val files = manifestFiles(spark, dir, latestVersion(spark, dir))
-      // bare read: the merged footer schema is this reader's whole point
-      spark.read.option("mergeSchema", "true").parquet(files: _*)
-    }
+    def readPublishedEvolved(spark: SparkSession, dir: String): DataFrame =
+      parquetEvolved(spark,
+        manifestFiles(spark, dir, latestVersion(spark, dir)): _*)
 
     /** Time travel: any still-retained version. */
     def readPublishedVersion(spark: SparkSession, dir: String,

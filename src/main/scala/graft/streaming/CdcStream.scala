@@ -36,6 +36,11 @@ object CdcStream {
   private def tsUs(t: java.sql.Timestamp): Long =
     t.getTime * 1000 + t.getNanos / 1000 % 1000
 
+  /** One key's changes of a micro-batch in (ts, event_id) order, `ts`
+    * to the microsecond — the batch twins' window order. */
+  private def inEventOrder(changes: Iterator[Change]): Array[Change] =
+    changes.toArray.sortBy(c => (tsUs(c.ts), c.event_id))
+
   /** The change feed keyed by `user_id`, coalesced first to at most
     * `spark.sql.shuffle.partitions` partitions: the keyed exchange's
     * reducer count, and the state-store partition count of a new
@@ -97,7 +102,7 @@ object CdcStream {
         OutputMode.Update(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Change], state: GroupState[UserState]) =>
           val out = scala.collection.mutable.ArrayBuffer[UserState]()
-          for (c <- it.toSeq.sortBy(c => (tsUs(c.ts), c.event_id))) {
+          for (c <- inEventOrder(it)) {
             if (c.op == "F") {
               state.remove()
               out += UserState(uid, "F", 0.0, c.ts, c.event_id,
@@ -442,11 +447,10 @@ object CdcStream {
       .flatMapGroupsWithState[Scd2Row, Scd2Row](
         OutputMode.Append(), GroupStateTimeout.NoTimeout) {
         (uid: Long, it: Iterator[Change], state: GroupState[Scd2Row]) =>
-          val ordered = it.toSeq.sortBy(c => (c.ts.getTime, c.event_id))
           var open = state.getOption
           val closed = Seq.newBuilder[Scd2Row]
-          for (c <- ordered) {
-            val ts = c.ts.getTime * 1000 + (c.ts.getNanos / 1000) % 1000
+          for (c <- inEventOrder(it)) {
+            val ts = tsUs(c.ts)
             open match {
               case Some(o) if ts >= o.valid_from_us =>
                 closed += o.copy(valid_to_us = Some(ts), is_current = false)
@@ -625,7 +629,7 @@ object CdcStream {
             state: GroupState[(Long, Long, Long, Long, Long, Long)]) =>
           var (p, minP, maxP, up, down, n) =
             state.getOption.getOrElse((0L, 0L, 0L, 0L, 0L, 0L))
-          it.toArray.sortBy(c => (c.ts.getTime, c.event_id)).foreach { c =>
+          inEventOrder(it).foreach { c =>
             p += math.round(c.value * 100) - targetCents
             if (p < minP) minP = p
             if (p > maxP) maxP = p
@@ -656,11 +660,10 @@ object CdcStream {
         GroupStateTimeout.NoTimeout()) {
         (_: Long, it: Iterator[Change], state: GroupState[Long]) =>
           var last = state.getOption.getOrElse(Long.MinValue)
-          val out = it.toArray.sortBy(c => (c.ts.getTime, c.event_id))
-            .flatMap { c =>
-              val cents = math.round(c.value * 100)
-              if (cents != last) { last = cents; Some(c) } else None
-            }
+          val out = inEventOrder(it).flatMap { c =>
+            val cents = math.round(c.value * 100)
+            if (cents != last) { last = cents; Some(c) } else None
+          }
           state.update(last)
           out.iterator
       }
@@ -691,28 +694,26 @@ object CdcStream {
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change], state: GroupState[Seq[Long]]) =>
           var q = state.getOption.getOrElse(Seq.empty[Long]).toVector
-          val out = it.toArray
-            .sortBy(c => (tsUs(c.ts), c.event_id))
-            .flatMap { ch =>
-              val vc = math.round(ch.value * 100)
-              val res =
-                if (q.length == window) {
-                  val n = window.toLong
-                  val sx = q.sum
-                  val sxx = q.map(x => x * x).sum
-                  val dev = n * vc - sx
-                  val varn = n * sxx - sx * sx
-                  if (dev * dev > z.toLong * z * varn)
-                    Some(AnomalyAlert(uid, ch.event_id, tsUs(ch.ts), vc,
-                      sx.toDouble / (n.toDouble * 100.0),
-                      if (varn > 0)
-                        Some(dev.toDouble / math.sqrt(varn.toDouble))
-                      else None))
-                  else None
-                } else None
-              q = (q :+ vc).takeRight(window)
-              res
-            }
+          val out = inEventOrder(it).flatMap { ch =>
+            val vc = math.round(ch.value * 100)
+            val res =
+              if (q.length == window) {
+                val n = window.toLong
+                val sx = q.sum
+                val sxx = q.map(x => x * x).sum
+                val dev = n * vc - sx
+                val varn = n * sxx - sx * sx
+                if (dev * dev > z.toLong * z * varn)
+                  Some(AnomalyAlert(uid, ch.event_id, tsUs(ch.ts), vc,
+                    sx.toDouble / (n.toDouble * 100.0),
+                    if (varn > 0)
+                      Some(dev.toDouble / math.sqrt(varn.toDouble))
+                    else None))
+                else None
+              } else None
+            q = (q :+ vc).takeRight(window)
+            res
+          }
           state.update(q)
           out.iterator
       }
@@ -743,18 +744,16 @@ object CdcStream {
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, it: Iterator[Change], state: GroupState[Seq[Long]]) =>
           var q = state.getOption.getOrElse(Seq.empty[Long]).toVector
-          val out = it.toArray
-            .sortBy(c => (tsUs(c.ts), c.event_id))
-            .flatMap { ch =>
-              val vc = math.round(ch.value * 100)
-              val res =
-                if (q.length == window)
-                  Some(MedianPoint(uid, ch.event_id, tsUs(ch.ts), vc,
-                    q.sorted.apply((window - 1) / 2)))
-                else None
-              q = (q :+ vc).takeRight(window)
-              res
-            }
+          val out = inEventOrder(it).flatMap { ch =>
+            val vc = math.round(ch.value * 100)
+            val res =
+              if (q.length == window)
+                Some(MedianPoint(uid, ch.event_id, tsUs(ch.ts), vc,
+                  q.sorted.apply((window - 1) / 2)))
+              else None
+            q = (q :+ vc).takeRight(window)
+            res
+          }
           state.update(q)
           out.iterator
       }

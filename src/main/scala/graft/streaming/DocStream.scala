@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import graft.operators.Dedup
 import graft.sources.Jsonl
+import graft.sources.Lake.Manifest.applyBatchOnce
 
 /** Streaming ingestion for LLM training corpora (SURVEY.md §2.C/D
   * bridge): the continuous-ingest twin of the batch D-track, so the
@@ -178,19 +179,17 @@ object DocStream {
   }
 
   /** Apply ONE document micro-batch to the F46 BM25 index exactly
-    * once: docs added, or -1 for a full-replay skip. Partial
-    * crash-window replays complete via the per-table tag gates and
-    * the src-tagged anti-join inside appendBm25Docs. */
+    * once, by the one batch gate
+    * ([[graft.sources.Lake.Manifest.applyBatchOnce]]) on `postings`,
+    * `docs` and `meta`: docs added, or -1 for a full-replay skip.
+    * Partial crash-window replays complete via the per-table tag
+    * tests and the src-tagged anti-join inside appendBm25Docs. */
   def streamBm25Batch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    val applied = Seq("postings", "docs", "meta").forall(t =>
-      graft.sources.Lake.Manifest.publishedMetas(spark, s"$dir/$t")
-        .contains(tag))
-    if (applied) -1L
-    else graft.operators.TextAnalysis
-      .appendBm25Docs(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq("postings", "docs", "meta").map(t => s"$dir/$t"),
+      batchId)(graft.operators.TextAnalysis.appendBm25Docs(spark, dir, batch, _))
+      .getOrElse(-1L)
   }
 
   /** Continuous BM25 index maintenance over a document feed: the
@@ -199,42 +198,30 @@ object DocStream {
     * retokenized (the VecStream/E9 continuous-maintenance shape,
     * applied to text retrieval). */
   def maintainBm25(docs: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        streamBm25Batch(dir, batch, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    VecStream.maintain(docs, checkpoint)(
+      (batch, batchId) => streamBm25Batch(dir, batch, batchId) >= 0)
 
   /** One asset-feed micro-batch into the G26 catalog: exactly-once
-    * by the batch-tag gate (an already-applied tag skips) plus
-    * semantic idempotence (re-delivered doc_ids anti-join to
-    * nothing). Returns -1 when skipped. */
+    * by the batch gate on the catalog dir plus semantic idempotence
+    * (re-delivered doc_ids anti-join to nothing). Returns -1 when
+    * skipped. */
   def streamAssetBatch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    if (graft.sources.Lake.Manifest.isManaged(spark, dir) &&
-        graft.sources.Lake.Manifest.publishedMetas(spark, dir)
-          .contains(tag)) -1L
-    else graft.operators.Multimodal
-      .appendAssetCatalog(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(dir), batchId)(
+      graft.operators.Multimodal.appendAssetCatalog(spark, dir, batch, _))
+      .getOrElse(-1L)
   }
 
-  /** One chunk-store micro-batch: exactly-once by the batch-tag gate
-    * plus semantic idempotence (known chunk hashes anti-join to
-    * nothing). Returns -1 when skipped. */
+  /** One chunk-store micro-batch: exactly-once by the batch gate on
+    * the store dir plus semantic idempotence (known chunk hashes
+    * anti-join to nothing). Returns -1 when skipped. */
   def streamChunkBatch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    if (graft.sources.Lake.Manifest.isManaged(spark, dir) &&
-        graft.sources.Lake.Manifest.publishedMetas(spark, dir)
-          .contains(tag)) -1L
-    else graft.operators.Dedup
-      .appendChunkDocs(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(dir), batchId)(
+      Dedup.appendChunkDocs(spark, dir, batch, _)).getOrElse(-1L)
   }
 
   /** C×D: continuous CHUNK-STORE maintenance over a document feed —
@@ -242,27 +229,19 @@ object DocStream {
     * content addresses, so the store prices every refresh ("how many
     * chunks are actually new") without ever re-chunking history. */
   def maintainChunkStore(docs: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        streamChunkBatch(dir, batch, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    VecStream.maintain(docs, checkpoint)(
+      (batch, batchId) => streamChunkBatch(dir, batch, batchId) >= 0)
 
-  /** One shard-catalog micro-batch: exactly-once by the batch-tag
-    * gate plus semantic idempotence (known shard ids anti-join to
-    * nothing). Returns -1 when skipped. */
+  /** One shard-catalog micro-batch: exactly-once by the batch gate on
+    * the catalog dir plus semantic idempotence (known shard ids
+    * anti-join to nothing). Returns -1 when skipped. */
   def streamShardBatch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    if (graft.sources.Lake.Manifest.isManaged(spark, dir) &&
-        graft.sources.Lake.Manifest.publishedMetas(spark, dir)
-          .contains(tag)) -1L
-    else graft.operators.Multimodal
-      .appendShardCatalog(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(dir), batchId)(
+      graft.operators.Multimodal.appendShardCatalog(spark, dir, batch, _))
+      .getOrElse(-1L)
   }
 
   /** C×G (G35): continuous SHARD-CATALOG maintenance over a shard
@@ -271,14 +250,9 @@ object DocStream {
     * trails the drop zone by one trigger; a sample fetch then reads
     * byte ranges off the index without ever re-opening archives. */
   def maintainShardCatalog(shards: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    shards.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        streamShardBatch(dir, batch, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    VecStream.maintain(shards, checkpoint)(
+      (batch, batchId) => streamShardBatch(dir, batch, batchId) >= 0)
 
   /** C×G: continuous ASSET-CATALOG maintenance over a binary feed —
     * each landed asset is header-sniffed ONCE, in its micro-batch,
@@ -287,12 +261,7 @@ object DocStream {
     * payload bytes (the F46/E9 continuous-maintenance shape, applied
     * to multimodal routing). */
   def maintainAssetCatalog(assets: DataFrame, dir: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    assets.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        streamAssetBatch(dir, batch, batchId); ()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    VecStream.maintain(assets, checkpoint)(
+      (batch, batchId) => streamAssetBatch(dir, batch, batchId) >= 0)
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Graph
 
 /** I15 × C-track: CONTINUOUS component maintenance — the edge-delta
@@ -10,127 +10,74 @@ import graft.operators.Graph
   * trails the edge stream by one trigger without ever recomputing
   * the graph (the VecStream/E9 continuous-maintenance shape).
   *
-  * Replay semantics: `foreachBatch` re-delivers a batch after a
-  * crash. The delta-apply is SEMANTICALLY idempotent — a replayed
-  * batch finds its endpoints already merged (the component graph has
-  * no cross-component edges left, so the merge mapping is empty) and
-  * its new nodes already in the label table (the anti-join emits
-  * nothing) — so even a crash BETWEEN the two manifest commits
-  * (remaps then labels) re-applies cleanly: the replay skips the
-  * committed half and completes the other. The `batch=<id>` meta
-  * carried on each commit short-circuits full replays without
-  * recompute and leaves an audit trail in the commit log
+  * Replay semantics: each batch is applied exactly once by the one
+  * batch gate, [[graft.sources.Lake.Manifest.applyBatchOnce]]; the
+  * edge batch gates on `remaps` AND `labels`, the PageRank and
+  * triangle batches on `edges`. The delta-applies are also
+  * SEMANTICALLY idempotent — a replayed edge batch finds its
+  * endpoints already merged and its new nodes already labeled, so a
+  * crash BETWEEN the two component commits re-applies cleanly
   * (GraphSpec pins the double-apply and the half-applied replay).
   *
-  * Compaction: pass `compactEvery > 0` to fold the remap log into
-  * the label table every N applied batches — read cost stays one
+  * Compaction: pass `compactEvery > 0` to fold the patch log into
+  * the state table every N applied batches — read cost stays one
   * broadcast join across an unbounded stream (the A24
   * state-compaction posture).
   */
 object GraphStream {
-
-  /** A tagged batch commits to BOTH tables (empty side = meta-only
-    * commit — appendComponentDelta guarantees it), so tag-in-both is
-    * exactly "fully applied": a crash between the two commits leaves
-    * the tag in one table only and the replay correctly re-runs,
-    * while merge-only / newnode-only / no-op batches still gate. */
-  private def applied(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tag: String): Boolean =
-    graft.sources.Lake.Manifest.publishedMetas(spark, s"$dir/remaps")
-      .contains(tag) &&
-      graft.sources.Lake.Manifest.publishedMetas(spark, s"$dir/labels")
-        .contains(tag)
+  import graft.sources.Lake.Manifest.applyBatchOnce
 
   /** Apply ONE edge micro-batch exactly once: (merges, newNodes), or
-    * (-1, -1) for a full-replay skip. */
+    * (-1, -1) for a full-replay skip. Both tables get the tag (an
+    * empty side commits meta-only), so a crash between the two
+    * commits replays. */
   def streamEdgeBatch(dir: String, batch: DataFrame,
       batchId: Long): (Long, Long) = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    if (applied(spark, dir, tag)) (-1L, -1L)
-    else Graph.appendComponentDelta(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(s"$dir/remaps", s"$dir/labels"), batchId)(
+      Graph.appendComponentDelta(spark, dir, batch, _)).getOrElse((-1L, -1L))
   }
 
   /** Apply ONE edge micro-batch to the I16 PageRank state exactly
-    * once: patched-row count, or -1 for a full-replay skip. The
-    * delta-apply is semantically idempotent too (re-delivered edges
-    * anti-join to nothing and commit nothing), so the meta gate is a
-    * recompute short-circuit, not the correctness mechanism. */
+    * once: patched-row count, or -1 for a full-replay skip. */
   def streamPageRankBatch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    val metas = graft.sources.Lake.Manifest
-      .publishedMetas(spark, s"$dir/edges")
-    if (metas.contains(tag)) -1L
-    else Graph.appendPageRankDelta(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(s"$dir/edges"), batchId)(
+      Graph.appendPageRankDelta(spark, dir, batch, _)).getOrElse(-1L)
   }
 
   /** Apply ONE edge micro-batch to the I17 triangle-count state
-    * exactly once: patched-row count, or -1 for a full-replay skip.
-    * Same semantic idempotency as PageRank (re-delivered edges
-    * anti-join to nothing and commit nothing). */
+    * exactly once: patched-row count, or -1 for a full-replay skip. */
   def streamTriangleBatch(dir: String, batch: DataFrame,
       batchId: Long): Long = {
     val spark = batch.sparkSession
-    val tag = s"batch=$batchId"
-    val metas = graft.sources.Lake.Manifest
-      .publishedMetas(spark, s"$dir/edges")
-    if (metas.contains(tag)) -1L
-    else Graph.appendTriangleDelta(spark, dir, batch, meta = tag)
+    applyBatchOnce(spark, Seq(s"$dir/edges"), batchId)(
+      Graph.appendTriangleDelta(spark, dir, batch, _)).getOrElse(-1L)
   }
 
   /** Continuous triangle-count maintenance over an edge stream (the
     * local clustering signal): each batch patches only the nodes in
-    * delta-closed triangles (I17). `compactEvery > 0` folds the
-    * patch log every N applied batches. */
+    * delta-closed triangles (I17). */
   def maintainTriangles(edges: DataFrame, dir: String,
-      checkpoint: String, compactEvery: Int = 0): StreamingQuery = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    edges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = streamTriangleBatch(dir, batch, batchId)
-        if (n >= 0 && compactEvery > 0 &&
-            counter.incrementAndGet() % compactEvery == 0)
-          Graph.compactTriangles(batch.sparkSession, dir)
-      }
-      .start()
-  }
+      checkpoint: String, compactEvery: Int = 0): StreamingQuery =
+    VecStream.maintain(edges, checkpoint, compactEvery,
+      Graph.compactTriangles(_, dir))(
+      (batch, batchId) => streamTriangleBatch(dir, batch, batchId) >= 0)
 
   /** Continuous quality-prior maintenance over an edge stream: the
     * published PageRank trails the feed by one trigger, each batch
-    * patching only its affected cone (I16). `compactEvery > 0` folds
-    * the patch log every N applied batches. */
+    * patching only its affected cone (I16). */
   def maintainPageRank(edges: DataFrame, dir: String,
-      checkpoint: String, compactEvery: Int = 0): StreamingQuery = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    edges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = streamPageRankBatch(dir, batch, batchId)
-        if (n >= 0 && compactEvery > 0 &&
-            counter.incrementAndGet() % compactEvery == 0)
-          Graph.compactPageRank(batch.sparkSession, dir)
-      }
-      .start()
-  }
+      checkpoint: String, compactEvery: Int = 0): StreamingQuery =
+    VecStream.maintain(edges, checkpoint, compactEvery,
+      Graph.compactPageRank(_, dir))(
+      (batch, batchId) => streamPageRankBatch(dir, batch, batchId) >= 0)
 
   /** Continuous labeling maintenance over an edge stream. */
   def maintainComponents(edges: DataFrame, dir: String,
-      checkpoint: String, compactEvery: Int = 0): StreamingQuery = {
-    val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-    edges.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (m, _) = streamEdgeBatch(dir, batch, batchId)
-        if (m >= 0 && compactEvery > 0 &&
-            counter.incrementAndGet() % compactEvery == 0)
-          Graph.compactComponents(batch.sparkSession, dir)
-      }
-      .start()
-  }
+      checkpoint: String, compactEvery: Int = 0): StreamingQuery =
+    VecStream.maintain(edges, checkpoint, compactEvery,
+      Graph.compactComponents(_, dir))(
+      (batch, batchId) => streamEdgeBatch(dir, batch, batchId)._1 >= 0)
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Similarity
 
@@ -13,13 +13,12 @@ import graft.operators.Similarity
   *
   * Replay semantics: `foreachBatch` re-delivers a batch after a crash,
   * and a blind re-append would duplicate code rows (top-k could then
-  * return a vector twice). Each applied batch is ONE atomic manifest
-  * commit ([[graft.operators.Similarity.appendIvfPqIndex]]) that both
-  * adds the code files and records `batch=<id>` as a carried
-  * commit-log meta — data visibility and replay bookkeeping cannot
-  * diverge, so a crash at ANY point leaves the served index on the
-  * previous version and the replayed batch re-applies cleanly
-  * (exactly-once by idempotent commit). Serving still prunes to
+  * return a vector twice). Each batch passes the one batch gate,
+  * [[graft.sources.Lake.Manifest.applyBatchOnce]] on `codes`, and is
+  * ONE atomic manifest commit
+  * ([[graft.operators.Similarity.appendIvfPqIndex]]) that both adds
+  * the code files and records its `batch=<id>` tag — data visibility
+  * and replay bookkeeping cannot diverge. Serving still prunes to
   * probed cells: the manifest commit lays files out under `__p_cell=`
   * dirs and [[graft.sources.Lake.Manifest.readPublishedPruned]]
   * prunes the file LIST driver-side, the Delta/Iceberg
@@ -34,17 +33,32 @@ import graft.operators.Similarity
 object VecStream {
 
   /** Apply ONE micro-batch exactly once: returns true if the batch
-    * was applied, false if it was a replay skip. The apply is one
-    * atomic commit carrying `batch=<id>` (no crash window). */
+    * was applied, false if it was a replay skip. */
   def streamAppendBatch(dir: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val tag = s"batch=$batchId"
-    if (graft.sources.Lake.Manifest
-        .publishedMetas(batch.sparkSession, s"$dir/codes").contains(tag)) false
-    else {
-      Similarity.appendIvfPqIndex(dir, batch, meta = tag)
-      true
-    }
+      batchId: Long): Boolean =
+    graft.sources.Lake.Manifest.applyBatchOnce(batch.sparkSession,
+      Seq(s"$dir/codes"), batchId)(
+      Similarity.appendIvfPqIndex(dir, batch, _)).isDefined
+
+  /** The one loop of every table maintained from a stream: `apply`
+    * each micro-batch of `feed` under `checkpoint`, draining what is
+    * available (`Trigger.AvailableNow`). `apply` answers whether it
+    * applied the batch (false: a replay the batch gate skipped);
+    * `compact` runs after every `compactEvery`-th applied batch, and
+    * never when `compactEvery <= 0`. */
+  private[streaming] def maintain(feed: DataFrame, checkpoint: String,
+      compactEvery: Int = 0, compact: SparkSession => Unit = _ => ())(
+      apply: (DataFrame, Long) => Boolean): StreamingQuery = {
+    val applied = new java.util.concurrent.atomic.AtomicLong(0L)
+    feed.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (apply(batch, batchId) && compactEvery > 0 &&
+            applied.incrementAndGet() % compactEvery == 0)
+          compact(batch.sparkSession)
+      }
+      .start()
   }
 
   /** Continuous maintenance with CELL BALANCE (E33 composed into the
@@ -60,33 +74,19 @@ object VecStream {
   def appendToIndexBalanced(vecs: DataFrame, dir: String,
       checkpoint: String, vectors: () => DataFrame, cap: Long,
       maxFiles: Int = 64): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (streamAppendBatch(dir, batch, batchId)) {
-          val spark = batch.sparkSession
-          // fixpoint within the tick (bounded at 8 passes ≈ 256×
-          // skew): one batch can push a cell far past cap, and the
-          // 2-means halving is rarely even
-          Similarity.rebalanceIvfIndex(spark, dir, vectors(),
-            cap, maxPasses = 8)
-          if (maxFiles > 0)
-            Similarity.compactIvfPqIndex(spark, dir, maxFiles)
-        }
-      }
-      .start()
+    maintain(vecs, checkpoint, 1, { spark =>
+      // fixpoint within the tick (bounded at 8 passes ≈ 256× skew):
+      // one batch can push a cell far past cap, and the 2-means
+      // halving is rarely even
+      Similarity.rebalanceIvfIndex(spark, dir, vectors(), cap, maxPasses = 8)
+      if (maxFiles > 0) Similarity.compactIvfPqIndex(spark, dir, maxFiles)
+    })(streamAppendBatch(dir, _, _))
 
   /** Continuous index maintenance: encode-and-append every trigger,
     * compacting when the code files fragment past `maxFiles`. */
   def appendToIndex(vecs: DataFrame, dir: String, checkpoint: String,
       maxFiles: Int = 64): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (streamAppendBatch(dir, batch, batchId) && maxFiles > 0)
-          Similarity.compactIvfPqIndex(batch.sparkSession, dir, maxFiles)
-      }
-      .start()
+    maintain(vecs, checkpoint, if (maxFiles > 0) 1 else 0,
+      Similarity.compactIvfPqIndex(_, dir, maxFiles))(
+      streamAppendBatch(dir, _, _))
 }

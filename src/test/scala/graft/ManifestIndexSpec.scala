@@ -210,6 +210,31 @@ class ManifestIndexSpec extends AnyFunSuite {
       d, vecs.filter($"vec_id" % 4 === 1), 0L))
   }
 
+  test("batch gate: a batch runs unless its tag is in every table; unseen-key append") {
+    import spark.implicits._
+    val M = Lake.Manifest
+    val d = java.nio.file.Files.createTempDirectory("graft_gate").toString
+    val (a, b) = (s"$d/a", s"$d/b")
+    def once(batchId: Long) = M.applyBatchOnce(spark, Seq(a, b), batchId)(identity)
+    assert(once(0L) == Some("batch=0"), "never-published tables must run")
+    M.publishAppend(Seq(1L).toDF("k"), a, meta = "batch=0")
+    M.publishAppend(Seq(1L).toDF("k"), b, meta = "batch=7")
+    assert(once(0L) == Some("batch=0"), "a tag in one table only must run")
+    M.publishAppend(Seq(2L).toDF("k"), b, meta = "batch=0")
+    assert(once(0L).isEmpty, "a tag in every table must skip")
+    assert(M.publishedMetas(spark, b) == Seq("batch=7", "batch=0"))
+    // unseen-key append: the first batch lands whole, later ones only
+    // the rows of keys not yet published
+    val c = s"$d/c"
+    def rows = M.readPublished(spark, c).as[(Long, String)].collect().sorted.toSeq
+    M.publishUnseen(Seq((1L, "x"), (2L, "y")).toDF("k", "v"), c, "k", meta = "batch=0")
+    assert(rows == Seq((1L, "x"), (2L, "y")))
+    M.publishUnseen(Seq((2L, "y2"), (3L, "z"), (3L, "z2")).toDF("k", "v"), c, "k",
+      meta = "batch=1")
+    assert(rows == Seq((1L, "x"), (2L, "y"), (3L, "z"), (3L, "z2")))
+    assert(M.publishedMetas(spark, c) == Seq("batch=0", "batch=1"))
+  }
+
   test("replace-partition: one swap drops and adds, off-target rows append, unattributable tables refuse") {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_repl").toString

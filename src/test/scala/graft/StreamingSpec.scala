@@ -600,6 +600,54 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** `us` microseconds past 2024-01-01 10:00:00, all in one millisecond
+    * while `us` < 1000. */
+  private def atUs(us: Int) = { val t = ts(0); t.setNanos(us * 1000); t }
+
+  test("C11 streaming SCD2 orders one millisecond's changes by microsecond like the batch twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    // the later microsecond carries the lower event_id
+    val pair = Seq(Change(1L, 2L, atUs(100), "U", 1.0), Change(1L, 1L, atUs(500), "U", 2.0))
+    val in = MemoryStream[Change]
+    val q = CdcStream.scd2Stream(in.toDS())
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("scd2_same_ms").start()
+    try {
+      in.addData(pair: _*); q.processAllAvailable()
+      val got = spark.table("scd2_same_ms").as[CdcStream.Scd2Row].collect()
+        .map(r => (r.user_id, r.event_id, r.valid_from_us, r.valid_to_us)).toSeq
+      val batch = graft.operators.Cdc.scd2(pair.toDF())
+        .filter($"valid_to_us".isNotNull)
+        .select($"user_id", $"event_id", $"valid_from_us", $"valid_to_us")
+        .as[(Long, Long, Long, Option[Long])].collect().toSeq
+      assert(got == batch, s"stream $got vs batch $batch")
+      assert(batch.map(_._2) == Seq(2L))
+    } finally q.stop()
+  }
+
+  test("C35 streaming changelog compaction orders one millisecond's changes by microsecond like the batch twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val first = Change(1L, 1L, atUs(0), "U", 1.00)
+    // µs 100 moves to 2.00; µs 500, with the lower event_id, back to 1.00
+    val pair = Seq(Change(1L, 3L, atUs(100), "U", 2.00), Change(1L, 2L, atUs(500), "U", 1.00))
+    val in = MemoryStream[Change]
+    val q = CdcStream.compactChangelogStream(in.toDS())
+      .writeStream.outputMode(OutputMode.Append())
+      .format("memory").queryName("compact_same_ms").start()
+    try {
+      in.addData(first); q.processAllAvailable()
+      in.addData(pair: _*); q.processAllAvailable()
+      val got = spark.table("compact_same_ms").as[Change]
+        .collect().map(_.event_id).sorted.toSeq
+      val batch = graft.operators.Cdc.compactChangelog((first +: pair).toDF())
+        .collect().map(_.getLong(1)).sorted.toSeq
+      assert(got == batch, s"stream $got vs batch $batch")
+      assert(batch == Seq(1L, 2L, 3L))
+    } finally q.stop()
+  }
+
   test("C6/C4 twin parity: streaming latest-state equals batch window on events table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
