@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Graph
+import graft.sources.Lake.Manifest.applyBatchOnce
 
 /** I15 × C-track: CONTINUOUS component maintenance — the edge-delta
   * CDC feed drives [[graft.operators.Graph.appendComponentDelta]]
@@ -25,7 +26,6 @@ import graft.operators.Graph
   * state-compaction posture).
   */
 object GraphStream {
-  import graft.sources.Lake.Manifest.applyBatchOnce
 
   /** Apply ONE edge micro-batch exactly once: (merges, newNodes), or
     * (-1, -1) for a full-replay skip. Both tables get the tag (an

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.Similarity
+import graft.sources.Lake.Manifest.applyBatchOnce
 
 /** C28 streaming ANN index maintenance — the continuous-ingest twin
   * of E9: embedding vectors land as a stream (crawler output, CDC
@@ -36,8 +37,7 @@ object VecStream {
     * was applied, false if it was a replay skip. */
   def streamAppendBatch(dir: String, batch: DataFrame,
       batchId: Long): Boolean =
-    graft.sources.Lake.Manifest.applyBatchOnce(batch.sparkSession,
-      Seq(s"$dir/codes"), batchId)(
+    applyBatchOnce(batch.sparkSession, Seq(s"$dir/codes"), batchId)(
       Similarity.appendIvfPqIndex(dir, batch, _)).isDefined
 
   /** The one loop of every table maintained from a stream: `apply`
