@@ -25,6 +25,13 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
       // reader rejects; read as Long nanos and normalize in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Hadoop's local file system starts a chmod, readlink or ls
+      // process for calls every checkpoint and lake commit makes;
+      // sources.LocalFs answers them in the JVM. Both APIs need it:
+      // streaming checkpoints write through FileContext.
+      .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.LocalFs.Context].getName)
 
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val s = builder(master, shufflePartitions).getOrCreate()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -9,8 +9,10 @@ import scala.jdk.CollectionConverters._
   * armed completes and then throws [[CrashingLocalFs.InjectedCrash]],
   * so whatever the caller meant to do next never happens. Paths made
   * after arming — Spark's `_temporary` dirs and other scratch — never
-  * trip it. Installed only inside [[CrashingLocalFs.crashIn]]. */
-class CrashingLocalFs extends LocalFileSystem {
+  * trip it. Installed only inside [[CrashingLocalFs.crashIn]]. Built
+  * on the engine's own `file:` file system, so a crash spec runs the
+  * code the engine runs. */
+class CrashingLocalFs extends graft.sources.LocalFs {
   override def delete(f: Path, recursive: Boolean): Boolean = {
     val done = super.delete(f, recursive)
     CrashingLocalFs.afterDelete(f)
@@ -38,9 +40,11 @@ object CrashingLocalFs {
     * `fs.file.impl`, uncached so every lookup gets an instance) and
     * armed over everything under `root`. Returns the crash `body`
     * died of; fails when `body` finished without one. Both settings
-    * are removed and the trap disarmed on the way out. */
+    * are put back as they were and the trap disarmed on the way out. */
   def crashIn(spark: SparkSession, root: String)(body: => Unit): InjectedCrash = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val before = keys.map(k => k -> Option(conf.get(k)))
     armed = scala.util.Using.resource(
       java.nio.file.Files.walk(java.nio.file.Paths.get(root)))(
       _.iterator().asScala.map(_.toString.stripSuffix("/")).toSet)
@@ -55,8 +59,10 @@ object CrashingLocalFs {
           .collectFirst { case c: InjectedCrash => c }
           .getOrElse(throw e)
     } finally {
-      conf.unset("fs.file.impl")
-      conf.unset("fs.file.impl.disable.cache")
+      before.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
       armed = Set.empty
     }
   }
