@@ -18,9 +18,10 @@ import scala.jdk.CollectionConverters._
   * starting a process. Without Hadoop's native library the stock
   * `RawLocalFileSystem` runs `chmod` for every `setPermission`,
   * `readlink` for every `getFileLinkStatus` and `ls -ld` the first time
-  * a status's permission, owner or group is read. A streaming
-  * micro-batch makes about 120 such calls (state-store deltas, offset
-  * and commit logs, the lake's commits), each a fork and exec.
+  * a status's permission, owner or group is read. A micro-batch of a
+  * stateful stream into the lake makes a hundred or more such calls
+  * (state-store deltas, offset and commit logs, the lake's commit),
+  * each a fork and exec.
   *
   * [[graft.GraftSession.builder]] installs it for both Hadoop APIs:
   * this class as `fs.file.impl` (`FileSystem`), [[LocalFs.Context]] as
@@ -30,15 +31,15 @@ import scala.jdk.CollectionConverters._
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
+  // mode bits: octal 0777, 01000 and 07000 (Scala has no octal literals)
+  private val Rwx = 0x1ff
+  private val Sticky = 0x200
+  private val Special = 0xe00
 
-  /** `RawLocalFileSystem` with its four forking calls answered from
-    * `java.nio.file`, with the values the commands would have given. */
-  class Raw extends RawLocalFileSystem {
+  /** `RawLocalFileSystem` with the four calls that start a process
+    * answered from `java.nio.file`, with the values the commands give. */
+  private[graft] class Raw extends RawLocalFileSystem {
     private var blockSize = 0L
-    // mode bits (octal 0777, 01000, 07000); Scala has no octal literals
-    private val Rwx = 0x1ff
-    private val Sticky = 0x200
-    private val Special = 0xe00
 
     override def initialize(uri: URI, conf: Configuration): Unit = {
       super.initialize(uri, conf)
@@ -83,16 +84,18 @@ object LocalFs {
       if (Files.isSymbolicLink(Paths.get(f.toString))) super.getFileLinkStatus(f)
       else getFileStatus(f)
 
-    /** `chmod` with a four-digit octal mode sets the rwx bits and
-      * clears the sticky bit; on a directory it keeps setuid and
-      * setgid. A mode or a target with any of those bits goes to the
-      * stock call. */
+    /** The stock call runs `chmod` with a four-digit octal mode, which
+      * keeps a directory's setuid and setgid bits; setting the POSIX
+      * permissions clears them. So a mode with the sticky bit, or a
+      * target with a setuid, setgid or sticky bit, goes to the stock
+      * call. */
     override def setPermission(p: Path, permission: FsPermission): Unit = {
       val path = pathToFile(p).toPath
       val mode = permission.toShort.toInt
       if (mode > Rwx ||
           (Files.getAttribute(path, "unix:mode").asInstanceOf[Int] & Special) != 0)
         super.setPermission(p, permission)
+      // values() runs from OWNER_READ (0400) to OTHERS_EXECUTE (01)
       else Files.setPosixFilePermissions(path, PosixFilePermission.values()
         .filter(q => (mode & (0x100 >> q.ordinal)) != 0).toSet.asJava)
     }
