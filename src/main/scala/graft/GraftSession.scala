@@ -25,10 +25,10 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
       // reader rejects; read as Long nanos and normalize in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Hadoop's local file system starts a chmod, readlink or ls
-      // process for calls every checkpoint and lake commit makes;
-      // sources.LocalFs answers them in the JVM. Both APIs need it:
-      // streaming checkpoints write through FileContext.
+      // without its native library, Hadoop's local file system starts a
+      // chmod, readlink or ls process for calls that every checkpoint
+      // and lake commit make; sources.LocalFs answers them in the JVM.
+      // FileContext has its own key: streaming checkpoints write through it.
       .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[sources.LocalFs.Context].getName)

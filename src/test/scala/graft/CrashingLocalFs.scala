@@ -43,8 +43,8 @@ object CrashingLocalFs {
     * are put back as they were and the trap disarmed on the way out. */
   def crashIn(spark: SparkSession, root: String)(body: => Unit): InjectedCrash = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
-    val before = keys.map(k => k -> Option(conf.get(k)))
+    val before = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
     armed = scala.util.Using.resource(
       java.nio.file.Files.walk(java.nio.file.Paths.get(root)))(
       _.iterator().asScala.map(_.toString.stripSuffix("/")).toSet)
