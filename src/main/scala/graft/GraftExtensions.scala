@@ -13,7 +13,7 @@ import graft.functions.{DotProduct, MinHashAgg}
   *  - scalar/agg expressions: `dot_product(a, b)`, `minhash_sig(s, n)`
   *  - `graft_q('<query key>', '<table dir>')` — the WHOLE operator
   *    registry as one table-valued function: every key in
-  *    [[SparkEntry.queries]] (302 operators) becomes
+  *    [[SparkEntry.queries]] becomes
   *    `SELECT * FROM graft_q('q_topk', '/data/sf1')`, composable with
   *    arbitrary SQL on top (joins, filters, CTEs).
   *  - `graft_topk(dir)` — ergonomic alias for the flagship ranked

@@ -278,6 +278,16 @@ object Dedup {
       .orderBy($"doc_a", $"doc_b")
   }
 
+  /** Per document pair (doc_a < doc_b) sharing a shingle of `sh`, the
+    * count of shared shingles as `name`: D2's inverted-index join. */
+  private def sharedShingles(sh: DataFrame, name: String): DataFrame = {
+    import sh.sparkSession.implicits._
+    val a = sh.select($"doc_id".as("doc_a"), $"shingle")
+    val b = sh.select($"doc_id".as("doc_b"), $"shingle")
+    a.join(b, "shingle").filter($"doc_a" < $"doc_b")
+      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as(name))
+  }
+
   /** D25 JACCARD HISTOGRAM over the D2 candidate pairs — the
     * threshold-SENSITIVITY curve a dedup rollout decides on ("at 0.5
     * we merge 400 pairs; dropping to 0.4 adds 2,100 — is the corpus
@@ -291,10 +301,7 @@ object Dedup {
     import docs.sparkSession.implicits._
     val sh = shingles(docs)
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val a = sh.select($"doc_id".as("doc_a"), $"shingle")
-    val b = sh.select($"doc_id".as("doc_b"), $"shingle")
-    a.join(b, "shingle").filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("i"))
+    sharedShingles(sh, "i")
       .join(sizes.select($"doc_id".as("doc_a"), $"sz".as("sa")),
         "doc_a")
       .join(sizes.select($"doc_id".as("doc_b"), $"sz".as("sb")),
@@ -321,10 +328,7 @@ object Dedup {
     import docs.sparkSession.implicits._
     val sh = shingles(docs)
     val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
-    val a = sh.select($"doc_id".as("doc_a"), $"shingle")
-    val b = sh.select($"doc_id".as("doc_b"), $"shingle")
-    a.join(b, "shingle").filter($"doc_a" < $"doc_b")
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("inter"))
+    sharedShingles(sh, "inter")
       .join(sizes.select($"doc_id".as("doc_a"), $"sz".as("sz_a")), "doc_a")
       .join(sizes.select($"doc_id".as("doc_b"), $"sz".as("sz_b")), "doc_b")
       .withColumn("containment",
@@ -332,6 +336,33 @@ object Dedup {
       .filter($"containment" >= t)
       .select($"doc_a", $"doc_b", $"inter", $"containment")
       .orderBy($"doc_a", $"doc_b")
+  }
+
+  /** Per document, the `numPerm`-lane MinHash signature `sig` of its
+    * shingles in `sh`. */
+  private def minhashSigs(sh: DataFrame, numPerm: Int): DataFrame = {
+    import sh.sparkSession.implicits._
+    sh.groupBy($"doc_id")
+      .agg(graft.functions.MinHashAgg.minhashSig($"shingle", numPerm).as("sig"))
+  }
+
+  /** D3's banded LSH candidates: the distinct document pairs
+    * (doc_a < doc_b) whose signatures agree on all `rows` lanes of
+    * at least one of `bands` bands. */
+  private def bandCandidates(sigs: DataFrame, bands: Int,
+      rows: Int): DataFrame = {
+    import sigs.sparkSession.implicits._
+    val bandCols = (0 until bands).map { b =>
+      val cols = (0 until rows).map(r => element_at($"sig", b * rows + r + 1))
+      struct(lit(b).as("band"), xxhash64(cols: _*).as("bucket"))
+    }
+    val buckets = sigs.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
+      .select($"doc_id", $"bb.band", $"bb.bucket")
+      .distinct()
+    buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
+      .filter($"x.doc_id" < $"y.doc_id")
+      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
+      .distinct()
   }
 
   /** D3 MinHash + LSH banding: 32 permutations, 8 bands × 4 rows;
@@ -355,20 +386,8 @@ object Dedup {
     // signatures: one TypedImperativeAggregate holding all numPerm
     // mins in a single primitive buffer (graft.functions.MinHashAgg).
     val sh0 = rawShingles(docs).distinct().localCheckpoint()
-    val sigs = sh0
-      .groupBy($"doc_id")
-      .agg(graft.functions.MinHashAgg.minhashSig($"shingle", numPerm).as("sig"))
-    val bandCols = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => element_at($"sig", b * rows + r + 1))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("bucket"))
-    }
-    val buckets = sigs.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-      .select($"doc_id", $"bb.band", $"bb.bucket")
-      .distinct()
-    val cand = buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
-      .filter($"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct()
+    val sigs = minhashSigs(sh0, numPerm)
+    val cand = bandCandidates(sigs, bands, rows)
     jaccardPairs(dfCapped(sh0), JaccardT, Some(cand))
       .orderBy($"doc_a", $"doc_b")
   }
@@ -392,21 +411,8 @@ object Dedup {
     val bands = 8
     val rows = numPerm / bands
     val sh0 = rawShingles(docs).distinct().localCheckpoint()
-    val sigs = sh0
-      .groupBy($"doc_id")
-      .agg(graft.functions.MinHashAgg.minhashSig($"shingle", numPerm).as("sig"))
-      .localCheckpoint()
-    val bandCols = (0 until bands).map { b =>
-      val cols = (0 until rows).map(r => element_at($"sig", b * rows + r + 1))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("bucket"))
-    }
-    val buckets = sigs.select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-      .select($"doc_id", $"bb.band", $"bb.bucket")
-      .distinct()
-    val cand = buckets.as("x").join(buckets.as("y"), Seq("band", "bucket"))
-      .filter($"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct()
+    val sigs = minhashSigs(sh0, numPerm).localCheckpoint()
+    val cand = bandCandidates(sigs, bands, rows)
     val truth = jaccardPairs(dfCapped(sh0), 0.0, Some(cand))
     val est = cand
       .join(sigs.select($"doc_id".as("doc_a"), $"sig".as("siga")), "doc_a")
@@ -497,11 +503,19 @@ object Dedup {
       .filter($"x.vec_id" < $"y.vec_id")
       .select($"x.vec_id".as("vec_a"), $"y.vec_id".as("vec_b"))
       .distinct()
-    cand
+    cosinePairs(cand
       .join(e.select($"vec_id".as("vec_a"), $"v".as("va"), $"n".as("na")), "vec_a")
-      .join(e.select($"vec_id".as("vec_b"), $"v".as("vb"), $"n".as("nb")), "vec_b")
-      // zero-norm guard: 0/0 = NaN sorts ABOVE every double in both
-      // Spark and DuckDB, so an unguarded `cos >= T` admits NaN pairs
+      .join(e.select($"vec_id".as("vec_b"), $"v".as("vb"), $"n".as("nb")), "vec_b"))
+  }
+
+  /** The embedding near-dup pairs of `pairs` (vec_a, va, na, vec_b,
+    * vb, nb): round-6 cosine at or above [[EmbCosT]]. Zero-norm guard:
+    * 0/0 = NaN sorts ABOVE every double in both Spark and DuckDB, so
+    * an unguarded `cos >= T` admits NaN pairs. */
+  private def cosinePairs(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    import graft.functions.VectorFunctions
+    pairs
       .filter($"na" > 0 && $"nb" > 0)
       .withColumn("cos",
         round(VectorFunctions.dot($"va", $"vb") / ($"na" * $"nb"), 6))
@@ -521,13 +535,7 @@ object Dedup {
       .withColumn("n", VectorFunctions.norm($"v"))
     val a = e.select($"vec_id".as("vec_a"), $"v".as("va"), $"n".as("na"))
     val b = e.select($"vec_id".as("vec_b"), $"v".as("vb"), $"n".as("nb"))
-    a.join(b, $"vec_a" < $"vec_b")
-      .filter($"na" > 0 && $"nb" > 0)
-      .withColumn("cos",
-        round(VectorFunctions.dot($"va", $"vb") / ($"na" * $"nb"), 6))
-      .filter($"cos" >= EmbCosT)
-      .select($"vec_a", $"vec_b", $"cos")
-      .orderBy($"vec_a", $"vec_b")
+    cosinePairs(a.join(b, $"vec_a" < $"vec_b"))
   }
 
   /** D12 semantic dedup (SemDeDup, Abbas et al. 2023): cluster-blocked
@@ -678,6 +686,32 @@ object Dedup {
 
   private val ContamT = 0.5
 
+  /** Each training document's distinct shingles `sh` and their count
+    * `n_shingles`: the decontamination prelude of D9 and its Bloom
+    * fast path. */
+  private def trainShingles(train: DataFrame): DataFrame = {
+    import train.sparkSession.implicits._
+    distinctShingleArr(train)
+      .withColumn("n_shingles", size($"sh").cast("long"))
+  }
+
+  /** The decontamination report over [[trainShingles]] `t` and the
+    * per-document matched-shingle counts `hits` (doc_id, n_matched):
+    * the matched fraction and the flag at [[ContamT]]. */
+  private def contamination(t: DataFrame, hits: DataFrame): DataFrame = {
+    import t.sparkSession.implicits._
+    t.select($"doc_id", $"n_shingles")
+      .join(hits, Seq("doc_id"), "left")
+      .select($"doc_id", $"n_shingles",
+        coalesce($"n_matched", lit(0L)).as("n_matched"))
+      .withColumn("contam_frac",
+        when($"n_shingles" === 0, lit(0.0))
+          .otherwise($"n_matched".cast("double") / $"n_shingles".cast("double")))
+      .withColumn("is_contaminated",
+        ($"contam_frac" >= ContamT).cast("long"))
+      .orderBy($"doc_id")
+  }
+
   /** D9 benchmark decontamination (the GPT-3-appendix / PaLM-style
     * n-gram collision scrub): score every training document by its
     * word-shingle overlap with an evaluation set, so contaminated
@@ -698,21 +732,11 @@ object Dedup {
   def decontaminate(train: DataFrame, evalSet: DataFrame): DataFrame = {
     import train.sparkSession.implicits._
     val evalSh = rawShingles(evalSet).select($"shingle").distinct()
-    val t = distinctShingleArr(train)
-      .withColumn("n_shingles", size($"sh").cast("long"))
+    val t = trainShingles(train)
     val hits = t.select($"doc_id", explode($"sh").as("shingle"))
       .join(broadcast(evalSh), Seq("shingle"))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_matched"))
-    t.select($"doc_id", $"n_shingles")
-      .join(hits, Seq("doc_id"), "left")
-      .select($"doc_id", $"n_shingles",
-        coalesce($"n_matched", lit(0L)).as("n_matched"))
-      .withColumn("contam_frac",
-        when($"n_shingles" === 0, lit(0.0))
-          .otherwise($"n_matched".cast("double") / $"n_shingles".cast("double")))
-      .withColumn("is_contaminated",
-        ($"contam_frac" >= ContamT).cast("long"))
-      .orderBy($"doc_id")
+    contamination(t, hits)
   }
 
   private val TfCosT = 0.5
@@ -796,22 +820,12 @@ object Dedup {
     val words = new Array[Long](BloomM / 64)
     positions.foreach(p => words(p.toInt / 64) |= (1L << (p.toInt % 64)))
     val bits = typedlit(words)
-    val t = distinctShingleArr(train)
-      .withColumn("n_shingles", size($"sh").cast("long"))
+    val t = trainShingles(train)
     val hits = t.select($"doc_id", explode($"sh").as("shingle"))
       .filter(mightContain($"shingle", bits))
       .join(broadcast(evalSh), Seq("shingle"))
       .groupBy($"doc_id").agg(count(lit(1)).as("n_matched"))
-    t.select($"doc_id", $"n_shingles")
-      .join(hits, Seq("doc_id"), "left")
-      .select($"doc_id", $"n_shingles",
-        coalesce($"n_matched", lit(0L)).as("n_matched"))
-      .withColumn("contam_frac",
-        when($"n_shingles" === 0, lit(0.0))
-          .otherwise($"n_matched".cast("double") / $"n_shingles".cast("double")))
-      .withColumn("is_contaminated",
-        ($"contam_frac" >= ContamT).cast("long"))
-      .orderBy($"doc_id")
+    contamination(t, hits)
   }
 
   /** D10 corpus-level LINE dedup (the C4/RefinedWeb boilerplate

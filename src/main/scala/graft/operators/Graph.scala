@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -824,18 +824,78 @@ object Graph {
     out
   }
 
+  /** The supplier→customer trade graph: one (src, dst) edge per line
+    * item, from `s<suppkey>` to `c<custkey>` of its order (duplicates
+    * kept; the prefixes keep the two key spaces disjoint). */
+  private def tradeEdges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.lineitem(s, dir)
+      .select($"l_orderkey", $"l_suppkey")
+      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
+        $"l_orderkey" === $"o_orderkey")
+      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
+        concat(lit("c"), $"o_custkey".cast("string")).as("dst"))
+  }
+
+  /** The supplier↔part supply graph: distinct (src, dst) edges from
+    * `s<suppkey>` to `p<partkey>`. */
+  private def supplyEdges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.lineitem(s, dir)
+      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
+        concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
+      .distinct()
+  }
+
+  /** Line items that cross a border: each with its price in whole
+    * `cents`, its supplier's nation `sn` and its customer's nation
+    * `cn`, where the two differ; the rows the nation trade flows
+    * aggregate. */
+  private def crossBorderLines(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.lineitem(s, dir)
+      .select($"l_orderkey", $"l_suppkey",
+        round($"l_extendedprice" * 100).cast("long").as("cents"))
+      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
+        $"l_orderkey" === $"o_orderkey")
+      .join(Tables.supplier(s, dir)
+        .select($"s_suppkey", $"s_nationkey".as("sn")),
+        $"l_suppkey" === $"s_suppkey")
+      .join(Tables.customer(s, dir)
+        .select($"c_custkey", $"c_nationkey".as("cn")),
+        $"o_custkey" === $"c_custkey")
+      .filter($"sn" =!= $"cn")
+  }
+
+  /** The co-order part graph's raw pairs: line items `x` and `y` of
+    * one order with x's part key below y's (columns qualified by
+    * `x`/`y`). */
+  private def coOrderPairs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
+    li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+  }
+
+  /** The REPEATED co-order part graph: part pairs (as columns `a`,
+    * `b`, both long) that at least two orders share. */
+  private def repeatedCoOrder(s: SparkSession, dir: String, a: String,
+      b: String): DataFrame =
+    coOrderPairs(s, dir)
+      .groupBy(col("x.l_partkey").cast("long").as(a),
+        col("y.l_partkey").cast("long").as(b))
+      .agg(count(lit(1)).as("w"))
+      .filter(col("w") >= 2)
+      .select(col(a), col(b))
+
   /** q_ppr: 5 personalized-PageRank iterations over the
     * supplier→customer trade graph, seeded at every 20th supplier
     * (the BFS seed convention) — the proximity-to-trusted-sellers
     * prior over the customer space. */
   def pprTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("c"), $"o_custkey".cast("string")).as("dst"))
+    val edges = tradeEdges(s, dir)
     val seeds = Tables.supplier(s, dir)
       .filter($"s_suppkey" % 20 === 1)
       .select(concat(lit("s"), $"s_suppkey".cast("string")).as("node"))
@@ -843,6 +903,72 @@ object Graph {
       .select($"node", $"r".as("ppr_fp"),
         round($"r".cast("double") / 1e12, 6).as("ppr"))
       .orderBy($"node")
+  }
+
+  /** Each undirected edge of `edges` (src, dst) once, as (a, b) with
+    * a < b; self-loops dropped. */
+  private def canonical(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    edges
+      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+      .filter($"a" =!= $"b").distinct()
+  }
+
+  /** (node, d): the degree of every endpoint of a canonical edge set. */
+  private def degrees(canon: DataFrame): DataFrame = {
+    import canon.sparkSession.implicits._
+    canon.select($"a".as("node"))
+      .union(canon.select($"b".as("node")))
+      .groupBy($"node").agg(count(lit(1)).as("d"))
+  }
+
+  /** The degree-oriented edge set of [[triangleCounts]]: each
+    * canonical edge directed from its (degree, id)-smaller endpoint
+    * `u` to `v`, with `dv` = deg(v); `deg` is [[degrees]] of `canon`. */
+  private def oriented(canon: DataFrame, deg: DataFrame): DataFrame = {
+    import canon.sparkSession.implicits._
+    val withDeg = canon
+      .join(deg.select($"node".as("a"), $"d".as("da")), "a")
+      .join(deg.select($"node".as("b"), $"d".as("db")), "b")
+    withDeg.select(
+      when(struct($"da", $"a") < struct($"db", $"b"), $"a").otherwise($"b")
+        .as("u"),
+      when(struct($"da", $"a") < struct($"db", $"b"), $"b").otherwise($"a")
+        .as("v"),
+      when(struct($"da", $"a") < struct($"db", $"b"), $"db").otherwise($"da")
+        .as("dv"))
+  }
+
+  /** The wedges (u, x, dx, y, dy) of an [[oriented]] edge set: pairs
+    * of out-neighbors of u in (degree, id) order, so each triangle is
+    * generated exactly once. */
+  private def wedgesOf(fwd: DataFrame): DataFrame = {
+    import fwd.sparkSession.implicits._
+    fwd.select($"u", $"v".as("x"), $"dv".as("dx"))
+      .join(fwd.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
+      .filter(struct($"dx", $"x") < struct($"dy", $"y"))
+  }
+
+  /** The closed wedges of [[oriented]] `fwd` over the canonical edge
+    * set `canon`: the triangles (u, x, y), each once. A Bloom
+    * pre-filter (guide §3.2) runs before the closing semi-join: the
+    * wedge frame measured 41M rows shuffled at sf0.1 with only 0.5 %
+    * surviving as closed triangles; probes drop definitely-open
+    * wedges BEFORE the exchange (measured 41M -> 2.7M rows written).
+    * No false negatives, and the semi-join still decides — result
+    * identical, just a ~15x smaller shuffle. Counts `canon` and
+    * builds the filter from it, two eager passes. */
+  private def closedWedges(canon: DataFrame, fwd: DataFrame): DataFrame = {
+    import canon.sparkSession.implicits._
+    val wedges = wedgesOf(fwd)
+    val nPairs = math.max(canon.count(), 1L)
+    val bf = canon.stat.bloomFilter(xxhash64($"a", $"b"), nPairs, 0.02)
+    val bfB = canon.sparkSession.sparkContext.broadcast(bf)
+    val mightBeEdge = udf((h: Long) => bfB.value.mightContainLong(h))
+    wedges
+      .filter(mightBeEdge(xxhash64(least($"x", $"y"), greatest($"x", $"y"))))
+      .join(fwd.select($"u".as("x"), $"v".as("y")),
+        Seq("x", "y"), "left_semi")
   }
 
   /** Per-node triangle counts by DEGREE-ORIENTED wedge enumeration
@@ -862,26 +988,10 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct()
-    val deg = canon.select($"a".as("node"))
-      .union(canon.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
-    val withDeg = canon
-      .join(deg.select($"node".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"node".as("b"), $"d".as("db")), "b")
-    val fwd = withDeg.select(
-      when(struct($"da", $"a") < struct($"db", $"b"), $"a").otherwise($"b")
-        .as("u"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"b").otherwise($"a")
-        .as("v"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"db").otherwise($"da")
-        .as("dv")).persist()
-    val wedges = fwd.select($"u", $"v".as("x"), $"dv".as("dx"))
-      .join(fwd.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
-      .filter(struct($"dx", $"x") < struct($"dy", $"y"))
-    val tri = wedges.join(fwd.select($"u".as("x"), $"v".as("y")),
+    val canon = canonical(edges)
+    val deg = degrees(canon)
+    val fwd = oriented(canon, deg).persist()
+    val tri = wedgesOf(fwd).join(fwd.select($"u".as("x"), $"v".as("y")),
       Seq("x", "y"), "left_semi")
     val perNode = tri.select($"u".as("node"))
       .union(tri.select($"x".as("node")))
@@ -928,39 +1038,9 @@ object Graph {
     // canon is checkpoint-backed: the Bloom build below needs one
     // materialized pass anyway, and the main plan's four canon legs
     // then scan the cached RDD instead of relying on exchange reuse
-    val canon = truncate(edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct())
-    val deg = canon.select($"a".as("node"))
-      .union(canon.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
-    val withDeg = canon
-      .join(deg.select($"node".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"node".as("b"), $"d".as("db")), "b")
-    val fwd = withDeg.select(
-      when(struct($"da", $"a") < struct($"db", $"b"), $"a").otherwise($"b")
-        .as("u"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"b").otherwise($"a")
-        .as("v"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"db").otherwise($"da")
-        .as("dv"))
-    val wedges = fwd.select($"u", $"v".as("x"), $"dv".as("dx"))
-      .join(fwd.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
-      .filter(struct($"dx", $"x") < struct($"dy", $"y"))
-    // Bloom pre-filter (guide §3.2) before the closing semi-join: the
-    // wedge frame measured 41M rows shuffled at sf0.1 with only 0.5 %
-    // surviving as closed triangles; probes drop definitely-open
-    // wedges BEFORE the exchange (measured 41M -> 2.7M rows written).
-    // No false negatives, and the semi-join still decides — result
-    // identical, just a ~15x smaller shuffle.
-    val nPairs = math.max(canon.count(), 1L)
-    val bf = canon.stat.bloomFilter(xxhash64($"a", $"b"), nPairs, 0.02)
-    val bfB = edges.sparkSession.sparkContext.broadcast(bf)
-    val mightBeEdge = udf((h: Long) => bfB.value.mightContainLong(h))
-    val tri = wedges
-      .filter(mightBeEdge(xxhash64(least($"x", $"y"), greatest($"x", $"y"))))
-      .join(fwd.select($"u".as("x"), $"v".as("y")),
-        Seq("x", "y"), "left_semi")
+    val canon = truncate(canonical(edges))
+    val deg = degrees(canon)
+    val tri = closedWedges(canon, oriented(canon, deg))
     val perNode = tri
       .select(explode(array($"u", $"x", $"y")).as("node"))
       .groupBy($"node").agg(count(lit(1)).as("triangles"))
@@ -978,10 +1058,7 @@ object Graph {
     * of the I5 co-order part graph. */
   def localClusteringCoOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val edges = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
+    val edges = coOrderPairs(s, dir)
       .select(col("x.l_partkey").cast("long").as("src"),
         col("y.l_partkey").cast("long").as("dst"))
     localClusteringOn(edges)
@@ -1003,10 +1080,7 @@ object Graph {
     * recursion; the top-k rides (katz_fp DESC, node). */
   def katzCoOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
+    val canon = coOrderPairs(s, dir)
       .select(col("x.l_partkey").cast("long").as("a"),
         col("y.l_partkey").cast("long").as("b"))
       .distinct().transform(truncate) // lazy: consumed 2x, computed once
@@ -1105,10 +1179,7 @@ object Graph {
     * s1/s21/s41, radius 3. */
   def betweennessSupplyChain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sp = Tables.lineitem(s, dir)
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
-      .distinct()
+    val sp = supplyEdges(s, dir)
     val seeds = Tables.supplier(s, dir)
       .filter($"s_suppkey" % 20 === 1 && $"s_suppkey" <= 41)
       .select(concat(lit("s"), $"s_suppkey".cast("string")).as("seed"))
@@ -1137,10 +1208,7 @@ object Graph {
     * graph and seeds), 4 rounds. */
   def pathCountsSupplyChain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sp = Tables.lineitem(s, dir)
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
-      .distinct()
+    val sp = supplyEdges(s, dir)
     val seeds = Tables.supplier(s, dir)
       .filter($"s_suppkey" % 20 === 1)
       .select(concat(lit("s"), $"s_suppkey".cast("string")).as("node"))
@@ -1342,12 +1410,7 @@ object Graph {
     * disjoint). */
   def pageRankTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("c"), $"o_custkey".cast("string")).as("dst"))
+    val edges = tradeEdges(s, dir)
     pageRank(edges, 5)
       .select($"node", $"r".as("rank_fp"),
         round($"r".cast("double") / 1e12, 6).as("rank"))
@@ -1396,18 +1459,7 @@ object Graph {
     * between these economies, and in which blocs?" */
   def sccTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val flows = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey",
-        round($"l_extendedprice" * 100).cast("long").as("cents"))
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(Tables.supplier(s, dir)
-        .select($"s_suppkey", $"s_nationkey".as("sn")),
-        $"l_suppkey" === $"s_suppkey")
-      .join(Tables.customer(s, dir)
-        .select($"c_custkey", $"c_nationkey".as("cn")),
-        $"o_custkey" === $"c_custkey")
-      .filter($"sn" =!= $"cn")
+    val flows = crossBorderLines(s, dir)
       .groupBy($"sn".as("src"), $"cn".as("dst"))
       .agg(sum($"cents").as("cents"))
       .localCheckpoint() // consumed by the threshold AND the filter
@@ -1456,18 +1508,7 @@ object Graph {
   def eccentricityTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val flows = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey",
-        round($"l_extendedprice" * 100).cast("long").as("cents"))
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(Tables.supplier(s, dir)
-        .select($"s_suppkey", $"s_nationkey".as("sn")),
-        $"l_suppkey" === $"s_suppkey")
-      .join(Tables.customer(s, dir)
-        .select($"c_custkey", $"c_nationkey".as("cn")),
-        $"o_custkey" === $"c_custkey")
-      .filter($"sn" =!= $"cn")
+    val flows = crossBorderLines(s, dir)
       .groupBy($"sn".as("src"), $"cn".as("dst"))
       .agg(sum($"cents").as("cents"))
       .localCheckpoint()
@@ -1499,18 +1540,7 @@ object Graph {
     * Runs the I13 [[boruvkaMst]] engine (spec'd against Kruskal). */
   def mstTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pair = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey",
-        round($"l_extendedprice" * 100).cast("long").as("cents"))
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(Tables.supplier(s, dir)
-        .select($"s_suppkey", $"s_nationkey".as("sn")),
-        $"l_suppkey" === $"s_suppkey")
-      .join(Tables.customer(s, dir)
-        .select($"c_custkey", $"c_nationkey".as("cn")),
-        $"o_custkey" === $"c_custkey")
-      .filter($"sn" =!= $"cn")
+    val pair = crossBorderLines(s, dir)
       .groupBy(least($"sn", $"cn").as("a"),
         greatest($"sn", $"cn").as("b"))
       .agg(sum($"cents").as("cents"))
@@ -1532,12 +1562,7 @@ object Graph {
     * the hub side (they point), customers the authority side. */
   def hitsTrade(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val edges = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("c"), $"o_custkey".cast("string")).as("dst"))
+    val edges = tradeEdges(s, dir)
     hits(edges, 5)
       .select($"node", $"hub_fp", $"auth_fp",
         round($"hub_fp".cast("double") / 1e6, 6).as("hub"),
@@ -1549,10 +1574,7 @@ object Graph {
     * (parts are adjacent when some order contains both). */
   def trianglesCoOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val edges = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
+    val edges = coOrderPairs(s, dir)
       .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
     triangleCounts(edges)
       .select($"node".cast("long").as("part"), $"triangles")
@@ -1568,10 +1590,7 @@ object Graph {
     * corpus — round 4 adds nothing). */
   def bfsSupplyChain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sp = Tables.lineitem(s, dir)
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
-      .distinct()
+    val sp = supplyEdges(s, dir)
     val seeds = Tables.supplier(s, dir)
       .filter($"s_suppkey" % 20 === 1)
       .select(concat(lit("s"), $"s_suppkey".cast("string")).as("node"))
@@ -1588,10 +1607,7 @@ object Graph {
     * the "bundle strength" a recommender or sampling prior consumes. */
   def kcoreCoOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
+    val canon = coOrderPairs(s, dir)
       .groupBy(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
       .agg(count(lit(1)).as("w"))
       .filter($"w" >= 2)
@@ -1637,17 +1653,37 @@ object Graph {
   /** q_link_predict: top-100 predicted part pairs over the same
     * ≥2-support co-order graph q_kcore peels. */
   def linkPredictCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("a"),
-        col("y.l_partkey").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"a", $"b")
+    val canon = repeatedCoOrder(s, dir, "a", "b")
     linkPrediction(canon, 100)
+  }
+
+  /** The wedge-weighted link predictors (I27, I28) over canonical
+    * (a, b) `edges`: every non-edge pair (x, y) with a common
+    * neighbor c of degree ≥ 2, its common-neighbor count `cn` and
+    * the sum `fp` of the centers' integer `weight` (a column over the
+    * center degree `d`), top-`topK` by (fp desc, x, y), exported as
+    * `out` = fp / 10⁹ at round 6. */
+  private def wedgeWeightTopK(edges: DataFrame, weight: Column, fp: String,
+      out: String, topK: Int): DataFrame = {
+    import edges.sparkSession.implicits._
+    val canon = edges.select($"a", $"b").localCheckpoint()
+    val sym = canon.select($"a".as("u"), $"b".as("v"))
+      .union(canon.select($"b".as("u"), $"a".as("v")))
+    val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("d"))
+    val wdeg = deg.filter($"d" >= 2)
+      .withColumn("w", weight)
+    val wedges = sym.select($"u".as("c"), $"v".as("x"))
+      .join(sym.select($"u".as("c"), $"v".as("y")), Seq("c"))
+      .filter($"x" < $"y")
+      .join(wdeg.select($"node".as("c"), $"w"), "c")
+    val scored = wedges.groupBy($"x", $"y")
+      .agg(count(lit(1)).as("cn"), sum($"w").as(fp))
+    scored.join(canon.select($"a".as("x"), $"b".as("y")),
+        Seq("x", "y"), "left_anti")
+      .orderBy(col(fp).desc, $"x", $"y")
+      .limit(topK)
+      .select($"x", $"y", $"cn",
+        round(col(fp).cast("double") / 1e9, 6).as(out))
   }
 
   /** I27 ADAMIC-ADAR link prediction (Adamic-Adar 2003 — the
@@ -1670,40 +1706,15 @@ object Graph {
     * anyway) or the E37-style cell prune before this operator. */
   def adamicAdar(edges: DataFrame, topK: Int = 100): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = edges.select($"a", $"b").localCheckpoint()
-    val sym = canon.select($"a".as("u"), $"b".as("v"))
-      .union(canon.select($"b".as("u"), $"a".as("v")))
-    val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("d"))
-    val wdeg = deg.filter($"d" >= 2)
-      .withColumn("w",
-        round(lit(1e9) / log($"d".cast("double"))).cast("long"))
-    val wedges = sym.select($"u".as("c"), $"v".as("x"))
-      .join(sym.select($"u".as("c"), $"v".as("y")), Seq("c"))
-      .filter($"x" < $"y")
-      .join(wdeg.select($"node".as("c"), $"w"), "c")
-    val aa = wedges.groupBy($"x", $"y")
-      .agg(count(lit(1)).as("cn"), sum($"w").as("aa_fp"))
-    aa.join(canon.select($"a".as("x"), $"b".as("y")),
-        Seq("x", "y"), "left_anti")
-      .orderBy($"aa_fp".desc, $"x", $"y")
-      .limit(topK)
-      .select($"x", $"y", $"cn",
-        round($"aa_fp".cast("double") / 1e9, 6).as("adamic_adar"))
+    wedgeWeightTopK(edges,
+      round(lit(1e9) / log($"d".cast("double"))).cast("long"),
+      "aa_fp", "adamic_adar", topK)
   }
 
   /** q_adamic_adar: top-100 AA-predicted part pairs over the I5
     * graph. */
   def adamicAdarCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("a"),
-        col("y.l_partkey").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"a", $"b")
+    val canon = repeatedCoOrder(s, dir, "a", "b")
     adamicAdar(canon, 100)
   }
 
@@ -1763,12 +1774,7 @@ object Graph {
     * definition. One extra node-keyed join over I2's cost. */
   def clusteringCoeff(edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct()
-    val deg = canon.select($"a".as("node"))
-      .union(canon.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
+    val deg = degrees(canonical(edges))
     triangleCounts(edges).join(deg, "node")
       .select($"node", $"d", $"triangles",
         when($"d" >= 2,
@@ -1781,15 +1787,7 @@ object Graph {
     * is near-complete, where clustering is trivially ~1). */
   def ccCoOrder(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("src"),
-        col("y.l_partkey").cast("long").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"src", $"dst")
+    val canon = repeatedCoOrder(s, dir, "src", "dst")
     clusteringCoeff(canon)
       .select($"node".cast("long").as("part"), $"d", $"triangles",
         $"cc_ppm")
@@ -1819,10 +1817,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int,
       topK: Int = 10): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = truncate(edges
-      .select(least($"src", $"dst").as("a"),
-        greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct())
+    val canon = truncate(canonical(edges))
     val sym = truncate(
       canon.union(canon.select($"b".as("a"), $"a".as("b"))))
     var labels = sym.select($"a".as("v")).distinct()
@@ -1890,10 +1885,7 @@ object Graph {
   def louvainMoves(edges: DataFrame, sweeps: Int,
       topK: Int = 10): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = truncate(edges
-      .select(least($"src", $"dst").as("a"),
-        greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct())
+    val canon = truncate(canonical(edges))
     val sym = truncate(
       canon.union(canon.select($"b".as("a"), $"a".as("b"))))
     val deg = truncate(
@@ -1932,32 +1924,14 @@ object Graph {
     * the ≥2-support co-order part graph (the q_communities graph —
     * same input, gain-driven moves instead of plurality votes). */
   def louvainCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("src"),
-        col("y.l_partkey").cast("long").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"src", $"dst")
+    val canon = repeatedCoOrder(s, dir, "src", "dst")
     louvainMoves(canon, 2)
   }
 
   /** q_communities: 3 LPA sweeps + modularity over the ≥2-support
     * co-order part graph (the q_kcore/I5/I6/I7 graph). */
   def communitiesCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("src"),
-        col("y.l_partkey").cast("long").as("dst"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"src", $"dst")
+    val canon = repeatedCoOrder(s, dir, "src", "dst")
     labelPropagation(canon, 3)
   }
 
@@ -1972,12 +1946,7 @@ object Graph {
     * bounded fold. */
   def powerlawFit(edges: DataFrame, dMin: Long = 2L): DataFrame = {
     import edges.sparkSession.implicits._
-    val canon = edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct()
-    val deg = canon.select($"a".as("node"))
-      .union(canon.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
+    val deg = degrees(canonical(edges))
     val tail = deg.filter($"d" >= dMin)
     val all = deg.agg(count(lit(1)).as("n_nodes"), max($"d").as("d_max"))
     val t = tail.agg(count(lit(1)).as("n_tail"),
@@ -1996,11 +1965,7 @@ object Graph {
     * hub-heavy q_triangles graph — the ≥2-support floor would
     * truncate exactly the tail being measured). */
   def powerlawCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val edges = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
+    val edges = coOrderPairs(s, dir)
       .select(col("x.l_partkey").cast("long").as("src"),
         col("y.l_partkey").cast("long").as("dst"))
     powerlawFit(edges)
@@ -2009,16 +1974,7 @@ object Graph {
   /** q_assortativity: degree mixing of the ≥2-support co-order part
     * graph (the q_kcore/q_link_predict graph). */
   def assortativityCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("a"),
-        col("y.l_partkey").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"a", $"b")
+    val canon = repeatedCoOrder(s, dir, "a", "b")
     assortativity(canon)
   }
 
@@ -2087,33 +2043,11 @@ object Graph {
     * callers coalesce. */
   private def edgeSupport(canon: DataFrame): DataFrame = {
     import canon.sparkSession.implicits._
-    val deg = canon.select($"a".as("node"))
-      .union(canon.select($"b".as("node")))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
-    val withDeg = canon
-      .join(deg.select($"node".as("a"), $"d".as("da")), "a")
-      .join(deg.select($"node".as("b"), $"d".as("db")), "b")
-    val fwd = withDeg.select(
-      when(struct($"da", $"a") < struct($"db", $"b"), $"a").otherwise($"b")
-        .as("u"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"b").otherwise($"a")
-        .as("v"),
-      when(struct($"da", $"a") < struct($"db", $"b"), $"db").otherwise($"da")
-        .as("dv")).transform(truncate) // lazy: consumed 3x, computed once
-    val wedges = fwd.select($"u", $"v".as("x"), $"dv".as("dx"))
-      .join(fwd.select($"u", $"v".as("y"), $"dv".as("dy")), Seq("u"))
-      .filter(struct($"dx", $"x") < struct($"dy", $"y"))
-    // Bloom pre-filter before the closing semi-join (guide §3.2; see
-    // localClusteringOn) — canon is checkpoint-backed in every caller,
-    // so the count + bloom passes read the cached RDD
-    val nEdges = math.max(canon.count(), 1L)
-    val bf = canon.stat.bloomFilter(xxhash64($"a", $"b"), nEdges, 0.02)
-    val bfB = canon.sparkSession.sparkContext.broadcast(bf)
-    val mightBeEdge = udf((h: Long) => bfB.value.mightContainLong(h))
-    val tri = wedges
-      .filter(mightBeEdge(xxhash64(least($"x", $"y"), greatest($"x", $"y"))))
-      .join(fwd.select($"u".as("x"), $"v".as("y")),
-        Seq("x", "y"), "left_semi")
+    // canon is checkpoint-backed in every caller, so the count + bloom
+    // passes of closedWedges read the cached RDD
+    val fwd = oriented(canon, degrees(canon))
+      .transform(truncate) // lazy: consumed 3x, computed once
+    val tri = closedWedges(canon, fwd)
     tri.select(explode(array(
         struct(least($"u", $"x").as("a"), greatest($"u", $"x").as("b")),
         struct(least($"u", $"y").as("a"), greatest($"u", $"y").as("b")),
@@ -2138,9 +2072,7 @@ object Graph {
     * plans stay constant-size. ALL integer — no float anywhere. */
   def ktruss(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     import edges.sparkSession.implicits._
-    var canon = truncate(edges
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .filter($"a" =!= $"b").distinct())
+    var canon = truncate(canonical(edges))
     for (_ <- 1 to rounds) {
       val sup = edgeSupport(canon)
       canon = truncate(sup.filter($"sup" >= k - 2).select($"a", $"b"))
@@ -2298,10 +2230,7 @@ object Graph {
     * (a supply-chain criticality ranking). */
   def harmonicSupplyChain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sp = Tables.lineitem(s, dir)
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("p"), $"l_partkey".cast("string")).as("dst"))
-      .distinct()
+    val sp = supplyEdges(s, dir)
     val seeds = Tables.supplier(s, dir)
       .filter($"s_suppkey" % 40 === 2)
       .select(concat(lit("s"), $"s_suppkey".cast("string")).as("node"))
@@ -2350,14 +2279,7 @@ object Graph {
     * the same-side pairs a null model would exclude — stated: this
     * grades hub-hub CONNECTIVITY concentration, not a z-score). */
   def richClubTrade(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val edges = Tables.lineitem(s, dir)
-      .select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(s, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .select(concat(lit("s"), $"l_suppkey".cast("string")).as("src"),
-        concat(lit("c"), $"o_custkey".cast("string")).as("dst"))
-      .distinct()
+    val edges = tradeEdges(s, dir).distinct()
     richClub(edges, Seq(1L, 2L, 4L, 8L, 16L, 32L, 64L))
   }
 
@@ -2375,40 +2297,14 @@ object Graph {
     * scale contract as I27 (hub cap / E37 prune past bounded
     * degree). */
   def resourceAllocation(edges: DataFrame, topK: Int = 100): DataFrame = {
-    import edges.sparkSession.implicits._
-    val canon = edges.select($"a", $"b").localCheckpoint()
-    val sym = canon.select($"a".as("u"), $"b".as("v"))
-      .union(canon.select($"b".as("u"), $"a".as("v")))
-    val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("d"))
-    val wdeg = deg.filter($"d" >= 2)
-      .withColumn("w", expr("1000000000 div d"))
-    val wedges = sym.select($"u".as("c"), $"v".as("x"))
-      .join(sym.select($"u".as("c"), $"v".as("y")), Seq("c"))
-      .filter($"x" < $"y")
-      .join(wdeg.select($"node".as("c"), $"w"), "c")
-    val ra = wedges.groupBy($"x", $"y")
-      .agg(count(lit(1)).as("cn"), sum($"w").as("ra_fp"))
-    ra.join(canon.select($"a".as("x"), $"b".as("y")),
-        Seq("x", "y"), "left_anti")
-      .orderBy($"ra_fp".desc, $"x", $"y")
-      .limit(topK)
-      .select($"x", $"y", $"cn",
-        round($"ra_fp".cast("double") / 1e9, 6).as("resource_alloc"))
+    wedgeWeightTopK(edges, expr("1000000000 div d"), "ra_fp",
+      "resource_alloc", topK)
   }
 
   /** q_resource_alloc: top-100 RA-predicted part pairs over the I27
     * graph. */
   def resourceAllocCoOrder(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val li = Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey")
-    val canon = li.as("x").join(li.as("y"),
-        col("x.l_orderkey") === col("y.l_orderkey") &&
-          col("x.l_partkey") < col("y.l_partkey"))
-      .groupBy(col("x.l_partkey").cast("long").as("a"),
-        col("y.l_partkey").cast("long").as("b"))
-      .agg(count(lit(1)).as("w"))
-      .filter($"w" >= 2)
-      .select($"a", $"b")
+    val canon = repeatedCoOrder(s, dir, "a", "b")
     resourceAllocation(canon, 100)
   }
 

@@ -23,6 +23,16 @@ case class AssetHash(doc_id: Long, phash: Long)
   */
 object Multimodal {
 
+  /** A synthetic asset table: one `payload` per document of `dir`,
+    * `bytes(doc_id)`, next to its `doc_id`. */
+  private def synthPayloads(s: SparkSession, dir: String)(
+      bytes: Long => Array[Byte]): DataFrame = {
+    import s.implicits._
+    Tables.documents(s, dir).select($"doc_id")
+      .as[Long].map(id => (id, bytes(id)))
+      .toDF("doc_id", "payload")
+  }
+
   // javax.imageio defaults to a DISK-backed stream cache: every
   // ImageIO.read/write spills the stream through a temp FILE, so a
   // 32-way parallel decode stage turns into filesystem contention
@@ -350,9 +360,7 @@ object Multimodal {
     * ladders that ignore this misalign A/V sync. */
   private def mp4EditsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4MultiTrackBytes(id)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
     payloads
       .select($"doc_id", explode(
         graft.functions.Mp4Demux.mp4EditsFor($"payload", "vide")).as("e"))
@@ -499,9 +507,8 @@ object Multimodal {
     * scale. Nearest-tie rule: (|drift|, a_idx) min — total order. */
   private def avSyncEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4MultiTrackBytes(id)))
-      .toDF("doc_id", "payload").localCheckpoint()
+    val payloads = synthPayloads(s, dir)(id =>
+      mp4MultiTrackBytes(id)).localCheckpoint()
     def msOf(handler: String, idxName: String, msName: String) = {
       val ts = payloads.select($"doc_id",
           explode(graft.functions.Mp4Demux.mp4Tracks($"payload"))
@@ -576,8 +583,7 @@ object Multimodal {
     * agree with the closed form. */
   private def webpDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, webpBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => webpBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.WebpDims.dimsCol($"payload").as("d"))
@@ -858,11 +864,8 @@ object Multimodal {
     * full container contract. */
   private def bmpStatsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id,
-        bmpBytes(id, (2 + id % 4).toInt, (2 + id % 3).toInt)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      bmpBytes(id, (2 + id % 4).toInt, (2 + id % 3).toInt))
     imagePixels(payloads)
       .groupBy($"doc_id")
       .agg((max($"x") + 1).as("width"), (max($"y") + 1).as("height"),
@@ -916,11 +919,8 @@ object Multimodal {
     * decode end to end. */
   private def pngStatsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id,
-        pngBytes(id, (3 + id % 5).toInt, (2 + id % 4).toInt)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      pngBytes(id, (3 + id % 5).toInt, (2 + id % 4).toInt))
     imagePixels(payloads)
       .groupBy($"doc_id")
       .agg((max($"x") + 1).as("width"), (max($"y") + 1).as("height"),
@@ -978,9 +978,7 @@ object Multimodal {
     * extraction agree with the closed form. */
   private def pngChunksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, pngChunkBytes(id)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => pngChunkBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.PngChunks.chunksCol($"payload").as("c"))
@@ -1038,11 +1036,8 @@ object Multimodal {
     * to the bit. */
   private def gifStatsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id,
-        gifBytes(id, (2 + id % 6).toInt, (5 + id % 4).toInt)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      gifBytes(id, (2 + id % 6).toInt, (5 + id % 4).toInt))
     imagePixels(payloads)
       .groupBy($"doc_id")
       .agg((max($"x") + 1).as("width"), (max($"y") + 1).as("height"),
@@ -1132,11 +1127,8 @@ object Multimodal {
     * thing a video pipeline's frame sampler must get right. */
   private def gifFramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, animGifBytes(id, (3 + id % 4).toInt,
-        (5 + id % 3).toInt, (2 + id % 3).toInt)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      animGifBytes(id, (3 + id % 4).toInt, (5 + id % 3).toInt, (2 + id % 3).toInt))
     gifFramePixels(payloads)
       .groupBy($"doc_id", $"frame")
       .agg(count(lit(1)).as("n_px"), sum($"gray").as("sum_gray"),
@@ -1159,10 +1151,7 @@ object Multimodal {
     * where Spark wraps, so the signed-overflow bit never exists. */
   private def phashRealEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, bmpBytes(id, 8, 8)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => bmpBytes(id, 8, 8))
     val px = imagePixels(payloads)
       .withColumn("gray", expr("(r + g + b) div 3"))
     val tot = px.groupBy($"doc_id").agg(sum($"gray").as("sg"))
@@ -1462,8 +1451,7 @@ object Multimodal {
     * every sample's absolute (offset, size, dts, pts, sync). */
   private def mp4FragmentsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4FragBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4FragBytes(id))
     payloads
       .select($"doc_id", explode(graft.functions.Mp4Frag
         .mp4FragSamples($"payload")).as("sm"))
@@ -1572,8 +1560,7 @@ object Multimodal {
     * the oracle replays the closed-form header. */
   private def opusHeadEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, opusBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => opusBytes(id))
     val p0 = payloads
       .select($"doc_id", $"payload", explode(graft.functions.OggWalk
         .oggPages($"payload")).as("pg"))
@@ -1633,8 +1620,7 @@ object Multimodal {
     * new expression), gated on reserved==0 && type==1. */
   private def icoDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, icoBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => icoBytes(id))
     val h = upper(hex($"payload"))
     def leAt(byteOff: Column, nBytes: Int): Column =
       (0 until nBytes).map(i =>
@@ -1759,8 +1745,7 @@ object Multimodal {
     * offset against the encoder's closed form. */
   private def pdfXrefEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, pdfBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => pdfBytes(id))
     payloads
       .select($"doc_id", explode(graft.functions.PdfXref
         .pdfXref($"payload")).as("x"))
@@ -1776,8 +1761,7 @@ object Multimodal {
     * offsets; the oracle replays the closed-form page layout. */
   private def oggPagesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, oggBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => oggBytes(id))
     payloads
       .select($"doc_id", explode(graft.functions.OggWalk
         .oggPages($"payload")).as("pg"))
@@ -1849,8 +1833,7 @@ object Multimodal {
     * the oracle replays the closed-form fields. */
   private def mkvTracksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mkvBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mkvBytes(id))
     payloads
       .select($"doc_id", explode(graft.functions.EbmlWalk
         .mkvTracks($"payload")).as("t"))
@@ -1969,9 +1952,7 @@ object Multimodal {
     * demuxed back; the oracle replays the closed-form fields. */
   private def mp4TracksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4MultiTrackBytes(id)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
     mp4TrackDirectory(payloads).orderBy($"doc_id", $"track_idx")
   }
 
@@ -1982,9 +1963,7 @@ object Multimodal {
     * offset = 2³³ + id·10⁵ + (i div 2)·65536 + (i mod 2)·u2. */
   private def mp4AudioPlanEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4MultiTrackBytes(id)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
     payloads
       .select($"doc_id", explode(graft.functions.Mp4Demux
         .mp4SamplesFor($"payload", "soun")).as("sm"))
@@ -2026,8 +2005,7 @@ object Multimodal {
     * closed-form. */
   private def mp4TimingEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
     mp4TimingTable(payloads).orderBy($"doc_id", $"sample_idx")
   }
 
@@ -2039,8 +2017,7 @@ object Multimodal {
     * (chunk, offset, size). */
   private def mp4SamplesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
     mp4SampleTable(payloads).orderBy($"doc_id", $"sample_idx")
   }
 
@@ -2054,8 +2031,7 @@ object Multimodal {
     * decode one keyframe, never touch the frames between. */
   private def mp4KeyframePlanEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp4Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
     val z = payloads.select($"doc_id", explode(arrays_zip(
       graft.functions.Mp4Demux.mp4Timing($"payload"),
       graft.functions.Mp4Demux.mp4Samples($"payload"))).as("z"))
@@ -2190,8 +2166,7 @@ object Multimodal {
     * all agree with the closed-form layout. */
   private def aacFramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, aacBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => aacBytes(id))
     payloads
       .select($"doc_id",
         explode(graft.functions.AacAdts.aacFrames($"payload")).as("f"))
@@ -2211,8 +2186,7 @@ object Multimodal {
     * closed-form layout. */
   private def mp3FramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp3Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
     mp3FrameTable(payloads).orderBy($"doc_id", $"frame_idx")
   }
 
@@ -2224,8 +2198,7 @@ object Multimodal {
     * case with crafted bytes). */
   private def id3TagsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp3Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
     payloads
       .select($"doc_id",
         explode(graft.functions.MpegAudio.id3FramesCol($"payload"))
@@ -2243,8 +2216,7 @@ object Multimodal {
     * Layer III frame; integer floor-div on both sides). */
   private def mp3SummaryEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, mp3Bytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
     mp3FrameTable(payloads)
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_frames"),
@@ -2304,8 +2276,7 @@ object Multimodal {
     * the exact integer duration all agree with the closed form. */
   private def flacInfoEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, flacBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => flacBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.FlacInfo.flacInfo($"payload").as("fi"))
@@ -2369,8 +2340,7 @@ object Multimodal {
 
   private def tarMemberTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, tarBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => tarBytes(id))
     payloads
       .select($"doc_id",
         explode(graft.functions.TarWalk.tarMembers($"payload")).as("m"))
@@ -2460,8 +2430,7 @@ object Multimodal {
     * closed-form layout. */
   private def zipDirEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, zipBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => zipBytes(id))
     payloads
       .select($"doc_id",
         explode(graft.functions.ZipWalk.zipDir($"payload")).as("m"))
@@ -2472,15 +2441,13 @@ object Multimodal {
       .orderBy($"doc_id", $"entry_idx")
   }
 
-  /** Minimal spec-shaped H.264 SPS NAL (G34) — the ENCODER side of
-    * the Exp-Golomb parse: a Baseline-profile SPS whose every field
-    * is closed-form in doc_id, written by a real bit-writer with
-    * ue(v) encoding, rbsp trailing bits, and the emulation-prevention
-    * escape applied (a zero-heavy field pattern does produce 00 00
-    * runs). poc_type ALTERNATES 0/2 by id so both in-scope branches
-    * parse. */
-  private[graft] def spsBytes(docId: Long): Array[Byte] = {
-    val bits = new scala.collection.mutable.ArrayBuffer[Int]
+  /** The bit writer of the SPS encoders ([[spsBytes]],
+    * [[h265SpsBytes]]): `u(v, n)` appends the low n bits of v, `ue(v)`
+    * the Exp-Golomb code of v, and `nal(header)` pads the RBSP to a
+    * byte and returns the header bytes followed by the RBSP with
+    * emulation prevention applied. */
+  private final class SpsWriter {
+    private val bits = new scala.collection.mutable.ArrayBuffer[Int]
     def u(v: Long, n: Int): Unit = {
       var i = n - 1
       while (i >= 0) { bits += ((v >> i) & 1L).toInt; i -= 1 }
@@ -2491,6 +2458,32 @@ object Multimodal {
       while (i < z) { bits += 0; i += 1 }
       u(v + 1, z + 1)
     }
+    def nal(header: Int*): Array[Byte] = {
+      while (bits.length % 8 != 0) bits += 0
+      val rb = bits.grouped(8)
+        .map(g => g.foldLeft(0)((a, b) => (a << 1) | b).toByte).toArray
+      val out = new java.io.ByteArrayOutputStream()
+      header.foreach(h => out.write(h))
+      var zeros = 0
+      rb.foreach { b =>
+        if (zeros >= 2 && (b & 0xff) <= 3) { out.write(3); zeros = 0 }
+        out.write(b)
+        zeros = if (b == 0) zeros + 1 else 0
+      }
+      out.toByteArray
+    }
+  }
+
+  /** Minimal spec-shaped H.264 SPS NAL (G34) — the ENCODER side of
+    * the Exp-Golomb parse: a Baseline-profile SPS whose every field
+    * is closed-form in doc_id, written by a real bit-writer with
+    * ue(v) encoding, rbsp trailing bits, and the emulation-prevention
+    * escape applied (a zero-heavy field pattern does produce 00 00
+    * runs). poc_type ALTERNATES 0/2 by id so both in-scope branches
+    * parse. */
+  private[graft] def spsBytes(docId: Long): Array[Byte] = {
+    val w = new SpsWriter
+    import w.{u, ue}
     u(66, 8); u(0, 8); u(30 + (docId % 3) * 10, 8)
     ue(docId % 4)            // seq_parameter_set_id
     ue(docId % 5)            // log2_max_frame_num_minus4
@@ -2504,18 +2497,7 @@ object Multimodal {
     u(1, 1); u(1, 1)         // frame_mbs_only, direct_8x8_inference
     u(0, 1); u(0, 1)         // frame_cropping, vui_present
     u(1, 1)                  // rbsp_stop_one_bit
-    while (bits.length % 8 != 0) bits += 0
-    val rb = bits.grouped(8)
-      .map(g => g.foldLeft(0)((a, b) => (a << 1) | b).toByte).toArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0x67) // nal_ref_idc = 3, nal_unit_type = 7
-    var zeros = 0
-    rb.foreach { b =>
-      if (zeros >= 2 && (b & 0xff) <= 3) { out.write(3); zeros = 0 }
-      out.write(b)
-      zeros = if (b == 0) zeros + 1 else 0
-    }
-    out.toByteArray
+    w.nal(0x67) // nal_ref_idc = 3, nal_unit_type = 7
   }
 
   /** G34 graded entry (`mm_h264_sps`): the synthesized SPS NALs
@@ -2525,8 +2507,7 @@ object Multimodal {
     * agree with the closed form. */
   private def h264SpsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, spsBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => spsBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.H264Sps.spsCol($"payload").as("sp"))
@@ -2551,17 +2532,8 @@ object Multimodal {
     * conformance window present every 3rd id. All values closed-form
     * in doc_id so the DuckDB twin replays them with no parsing. */
   private[graft] def h265SpsBytes(docId: Long): Array[Byte] = {
-    val bits = new scala.collection.mutable.ArrayBuffer[Int]
-    def u(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) { bits += ((v >> i) & 1L).toInt; i -= 1 }
-    }
-    def ue(v: Long): Unit = {
-      val z = 63 - java.lang.Long.numberOfLeadingZeros(v + 1)
-      var i = 0
-      while (i < z) { bits += 0; i += 1 }
-      u(v + 1, z + 1)
-    }
+    val w = new SpsWriter
+    import w.{u, ue}
     val profile = 1 + docId % 2         // Main / Main 10
     val tier = (docId / 2) % 2
     val level = 90 + (docId % 4) * 30   // 3.0 / 4.0 / 5.0 / 6.0
@@ -2590,19 +2562,9 @@ object Multimodal {
     ue(bdM8); ue(bdM8)                  // bit_depth_luma/chroma_minus8
     ue(docId % 3)                       // log2_max_pic_order_cnt_lsb_minus4
     u(1, 1)                             // rbsp_stop_one_bit
-    while (bits.length % 8 != 0) bits += 0
-    val rb = bits.grouped(8)
-      .map(g => g.foldLeft(0)((a, b) => (a << 1) | b).toByte).toArray
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(33 << 1) // forbidden 0, SPS_NUT 33, layer id 0 (hi bit)
-    out.write(0x01)    // layer id 0 (lo 5 bits), temporal_id_plus1 1
-    var zeros = 0
-    rb.foreach { b =>
-      if (zeros >= 2 && (b & 0xff) <= 3) { out.write(3); zeros = 0 }
-      out.write(b)
-      zeros = if (b == 0) zeros + 1 else 0
-    }
-    out.toByteArray
+    // forbidden 0, SPS_NUT 33, layer id 0 (hi bit); layer id 0 (lo 5
+    // bits), temporal_id_plus1 1
+    w.nal(33 << 1, 0x01)
   }
 
   /** G44 graded entry (`mm_h265_sps`): the synthesized HEVC SPS NALs
@@ -2613,8 +2575,7 @@ object Multimodal {
     * form. */
   private def h265SpsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, h265SpsBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => h265SpsBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.H265Sps.spsCol($"payload").as("sp"))
@@ -2674,8 +2635,7 @@ object Multimodal {
     * form. */
   private def jpegSofEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, jpegSofBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => jpegSofBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.JpegSof.sofCol($"payload").as("sp"))
@@ -2747,8 +2707,7 @@ object Multimodal {
     * closed form. */
   private def heifDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, heifBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => heifBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.HeifDims.dimsCol($"payload").as("d"))
@@ -2872,8 +2831,7 @@ object Multimodal {
     * form. */
   private def exifMetaEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long].map(id => (id, exifBytes(id))).toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id => exifBytes(id))
     payloads
       .select($"doc_id",
         graft.functions.TiffIfd.exifMetaCol($"payload").as("ex"))
@@ -3014,11 +2972,8 @@ object Multimodal {
     * byte parsing), so a hash match proves encoder, walker, and
     * aggregation agree to the bit. */
   private def wavStatsEntry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, wavBytes(lcgSamples(id, (32 + id % 33).toInt))))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      wavBytes(lcgSamples(id, (32 + id % 33).toInt)))
     wavPcmStats(payloads)
   }
 
@@ -3209,11 +3164,8 @@ object Multimodal {
     * 64 + id%65 samples (4-9 frames) segmented by the integer energy
     * gate; the oracle replays the LCG, the gate and the islands. */
   private def wavVadEntry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, wavBytes(lcgSamples(id, (64 + id % 65).toInt))))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      wavBytes(lcgSamples(id, (64 + id % 65).toInt)))
     wavVad(payloads)
   }
 
@@ -3222,11 +3174,8 @@ object Multimodal {
     * frames; the oracle regenerates the frames from the LCG
     * recurrence alone. */
   private def wavFeaturesEntry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, wavBytes(lcgSamples(id, (32 + id % 33).toInt))))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      wavBytes(lcgSamples(id, (32 + id % 33).toInt)))
     wavFeatures(payloads)
   }
 
@@ -3272,11 +3221,8 @@ object Multimodal {
     * through the chunk walker; the oracle regenerates the samples
     * from the LCG recurrence alone. */
   private def wavClippingEntry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, wavBytes(lcgSamples(id, (32 + id % 33).toInt))))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      wavBytes(lcgSamples(id, (32 + id % 33).toInt)))
     wavClipping(payloads)
   }
 
@@ -3316,11 +3262,8 @@ object Multimodal {
     * decoded and decimated; the oracle regenerates the pairs from
     * the LCG recurrence alone. */
   private def wavResampleEntry(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id, wavBytes(lcgSamples(id, (32 + id % 33).toInt))))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      wavBytes(lcgSamples(id, (32 + id % 33).toInt)))
     wavResample(payloads)
   }
 
@@ -3337,11 +3280,8 @@ object Multimodal {
     * fold agree to the bit. */
   private def gifEntropyEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = Tables.documents(s, dir).select($"doc_id")
-      .as[Long]
-      .map(id => (id,
-        gifBytes(id, (2 + id % 6).toInt, (5 + id % 4).toInt)))
-      .toDF("doc_id", "payload")
+    val payloads = synthPayloads(s, dir)(id =>
+      gifBytes(id, (2 + id % 6).toInt, (5 + id % 4).toInt))
     imagePixels(payloads)
       .groupBy($"doc_id", $"r").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id")

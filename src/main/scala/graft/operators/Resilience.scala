@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
@@ -485,9 +485,7 @@ object Resilience {
   def crossCorr(s: SparkSession, dir: String, xType: String = "click",
       yType: String = "view", maxLag: Int = 3): DataFrame = {
     import s.implicits._
-    val d = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val d = perTypeDaily(Tables.events(s, dir), "cnt")
     val x = d.filter($"event_type" === xType)
       .select($"day", $"cnt".as("x"))
       .select($"x", explode(sequence(lit(0), lit(maxLag))).as("lag"),
@@ -514,10 +512,7 @@ object Resilience {
     * exact BIGINTs, so every derived double is bit-deterministic).
     * One shuffle on (event_type, day). */
   private def dailyCounts(s: SparkSession, dir: String): Series = {
-    import s.implicits._
-    val df = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    val df = perTypeDaily(Tables.events(s, dir), "cnt")
     Series(df, "event_type", "day", "cnt")
   }
 
@@ -607,9 +602,7 @@ object Resilience {
   def sesFit(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val alphas = (1 to 9).map(_ / 10.0)
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val lists = pts.groupBy($"event_type")
       .agg(sort_array(collect_list(struct($"day", $"y"))).as("ps"))
       .withColumn("ys", expr("transform(ps, p -> cast(p.y as double))"))
@@ -1158,9 +1151,7 @@ object Resilience {
     * kind — ξ is the catch-all screen before the specific tests. */
   def xicor(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val byType = Window.partitionBy($"event_type")
     val tieRank = byType.orderBy($"y")
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1395,16 +1386,49 @@ object Resilience {
     * histogram aggregate + one window over it, one ordered fold. */
   def kaplanMeier(events: DataFrame, censorHours: Int = 6): DataFrame = {
     import events.sparkSession.implicits._
+    // running S(t): recompute the prefix product per row via the
+    // same ordered fold restricted to u ≤ t — the event-time frame
+    // is tiny (distinct lifetimes), so the quadratic fold is frame-
+    // bounded, not corpus-bounded
+    riskEvents(events, censorHours)
+      .withColumn("s_km", round(
+        aggregate(expr("filter(evs, e -> e.td <= t_hours)"),
+          lit(1.0), (acc, x) => acc *
+            (lit(1.0) - x("de").cast("double") / x("nr").cast("double"))),
+        6))
+      .select($"t_hours", $"n_risk", $"d_events", $"s_km")
+      .orderBy($"t_hours")
+  }
+
+  /** B33's lifetime construction, shared by B33, B54 and B58: per
+    * user, `who` (the user id or a column derived from it), the
+    * lifetime in whole hours `t_hours` and `churned` (last event more
+    * than `censorHours` before the dataset's end). The unpartitioned
+    * window spans this per-user aggregate, one row per user. */
+  private def lifetimes(events: DataFrame, censorHours: Int,
+      who: Column): DataFrame = {
+    import events.sparkSession.implicits._
     val wAll = Window.partitionBy()
-    val users = events
+    events
       .groupBy($"user_id")
       .agg(min(unix_micros($"ts")).as("first_us"),
         max(unix_micros($"ts")).as("last_us"))
       .withColumn("max_us", max($"last_us").over(wAll))
-      .select($"user_id",
+      .select(who,
         expr("(last_us - first_us) div 3600000000").as("t_hours"),
         (($"max_us" - $"last_us") >
           lit(censorHours.toLong) * 3600000000L).as("churned"))
+  }
+
+  /** The Kaplan-Meier / Nelson-Aalen risk sets: per distinct event
+    * time `t_hours`, the at-risk count `n_risk` and the churns
+    * `d_events`, each row next to `evs`, every event time's
+    * (td, nr, de) in time order. The unpartitioned suffix window
+    * runs over the lifetime histogram, one row per distinct lifetime
+    * in hours (bounded by the observation window). */
+  private def riskEvents(events: DataFrame, censorHours: Int): DataFrame = {
+    import events.sparkSession.implicits._
+    val users = lifetimes(events, censorHours, $"user_id")
     val hist = users.groupBy($"t_hours")
       .agg(count(lit(1)).as("n_at"),
         sum(when($"churned", 1L).otherwise(0L)).as("d_events"))
@@ -1413,23 +1437,22 @@ object Resilience {
     val risk = hist
       .withColumn("n_risk", sum($"n_at").over(wSuffix))
       .filter($"d_events" > 0)
-    // running S(t): recompute the prefix product per row via the
-    // same ordered fold restricted to u ≤ t — the event-time frame
-    // is tiny (distinct lifetimes), so the quadratic fold is frame-
-    // bounded, not corpus-bounded
     val all = risk.select($"t_hours", $"n_risk", $"d_events")
-    val folded = all.crossJoin(
+    all.crossJoin(
         all.select(struct($"t_hours".as("td"), $"n_risk".as("nr"),
           $"d_events".as("de")).as("ev"))
           .groupBy().agg(sort_array(collect_list($"ev")).as("evs")))
-      .withColumn("s_km", round(
-        aggregate(expr("filter(evs, e -> e.td <= t_hours)"),
-          lit(1.0), (acc, x) => acc *
-            (lit(1.0) - x("de").cast("double") / x("nr").cast("double"))),
-        6))
-      .select($"t_hours", $"n_risk", $"d_events", $"s_km")
-      .orderBy($"t_hours")
-    folded
+  }
+
+  /** Per event type and calendar day, the count of events (as `y`, or
+    * as `name`): the per-type daily series that the trend, ACF and
+    * forecast operators run over (the aggregate `dailyCountsSql`
+    * replays). */
+  private def perTypeDaily(events: DataFrame, name: String = "y"): DataFrame = {
+    import events.sparkSession.implicits._
+    events
+      .groupBy($"event_type", to_date($"ts").as("day"))
+      .agg(count(lit(1)).as(name))
   }
 
   /** B34 Mann-Kendall trend test per event type (the nonparametric
@@ -1445,9 +1468,23 @@ object Resilience {
     * corpus-bounded — the B28 shape. */
   def mannKendall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
+    mkStats(s, dir)
+      .select($"event_type", $"n".as("n_days"), $"s_stat",
+        when($"s_stat" > 0,
+          round(($"s_stat" - 1).cast("double") / sqrt($"var_s"), 6))
+          .when($"s_stat" < 0,
+            round(($"s_stat" + 1).cast("double") / sqrt($"var_s"), 6))
+          .otherwise(lit(0.0)).as("z_score"))
+      .orderBy($"event_type")
+  }
+
+  /** The Mann-Kendall core of B34, B55 and B88: per event type, over
+    * the daily-count series, `s_stat` = S (exact integer), `n` = the
+    * series length, `tsum` = the tie correction and
+    * `var_s` = Var(S) = (n(n−1)(2n+5) − T)/18. */
+  private def mkStats(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val pts = perTypeDaily(Tables.events(s, dir), "cnt")
     val pairs = pts.as("a").join(pts.as("b"),
         col("a.event_type") === col("b.event_type") &&
           col("a.day") < col("b.day"))
@@ -1462,13 +1499,29 @@ object Resilience {
     val varNum = ($"n" * ($"n" - 1) * (lit(2) * $"n" + 5) - $"tsum")
     pairs.join(ties, "event_type")
       .withColumn("var_s", varNum.cast("double") / lit(18.0))
-      .select($"event_type", $"n".as("n_days"), $"s_stat",
+  }
+
+  /** [[mkStats]] plus the unrounded continuity-corrected z (`z_unr`)
+    * and its two-sided p (`p_two`) by the Abramowitz-Stegun 26.2.17
+    * normal tail: the p battery of B55 and B88. */
+  private def mkPValues(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val az = abs($"z_unr")
+    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
+    val phi = exp(az * az * -0.5) * lit(0.3989422804014327)
+    val tail = phi * (lit(0.319381530) * t +
+      lit(-0.356563782) * t * t +
+      lit(1.781477937) * t * t * t +
+      lit(-1.821255978) * t * t * t * t +
+      lit(1.330274429) * t * t * t * t * t)
+    mkStats(s, dir)
+      .withColumn("z_unr",
         when($"s_stat" > 0,
-          round(($"s_stat" - 1).cast("double") / sqrt($"var_s"), 6))
+          ($"s_stat" - 1).cast("double") / sqrt($"var_s"))
           .when($"s_stat" < 0,
-            round(($"s_stat" + 1).cast("double") / sqrt($"var_s"), 6))
-          .otherwise(lit(0.0)).as("z_score"))
-      .orderBy($"event_type")
+            ($"s_stat" + 1).cast("double") / sqrt($"var_s"))
+          .otherwise(lit(0.0)))
+      .withColumn("p_two", least(lit(1.0), lit(2.0) * tail))
   }
 
   /** B86 HODGES-LEHMANN location estimator per event type (the
@@ -1487,9 +1540,7 @@ object Resilience {
     * corpus-sized), one ordered rank window. */
   def hodgesLehmann(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(Tables.events(s, dir))
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val idx = pts
       .withColumn("i", row_number().over(w).cast("long"))
@@ -1525,9 +1576,7 @@ object Resilience {
     * τ frame is a 3-element explode, not a re-scan). */
   def pinball(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(Tables.events(s, dir))
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val scored = pts
       .withColumn("f", lag($"y", 7).over(w))
@@ -1560,9 +1609,7 @@ object Resilience {
     * beyond yesterday's value. */
   def mase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(Tables.events(s, dir))
     val w = Window.partitionBy($"event_type").orderBy($"day")
     pts
       .withColumn("f7", lag($"y", 7).over(w))
@@ -1589,9 +1636,7 @@ object Resilience {
     * |TS|, and the FIRST flag day. Frame-bounded day grid. */
   def trackingSignal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(Tables.events(s, dir))
     val wOrd = Window.partitionBy($"event_type").orderBy($"day")
     val wCum = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val scored = pts
@@ -1617,6 +1662,30 @@ object Resilience {
       .orderBy($"event_type")
   }
 
+  /** The B35 ACF frame, shared by B35 and B45: each per-type daily
+    * count `y` with its series' length `n` and sum `s`, and its leads
+    * `y1`..`y<maxLag>` in day order. */
+  private def acfLeads(events: DataFrame, maxLag: Int): DataFrame = {
+    import events.sparkSession.implicits._
+    val pts = perTypeDaily(events)
+    val st = pts.groupBy($"event_type")
+      .agg(count(lit(1)).as("n"), sum($"y").as("s"))
+    val w = Window.partitionBy($"event_type").orderBy($"day")
+    var led = pts.join(st, "event_type")
+    for (k <- 1 to maxLag) led = led.withColumn(s"y$k", lead($"y", k).over(w))
+    led
+  }
+
+  /** The exact B35 ACF sums over [[acfLeads]], with d = n·y − S:
+    * `den` = Σ d² and `num<k>` = Σ d·(n·y<k> − S) for k ≤ maxLag. */
+  private def acfSums(events: DataFrame, maxLag: Int): Seq[Column] = {
+    import events.sparkSession.implicits._
+    val d = $"n" * $"y" - $"s"
+    sum(d * d).as("den") +:
+      (1 to maxLag).map(k =>
+        sum(d * ($"n" * col(s"y$k") - $"s")).as(s"num$k"))
+  }
+
   /** B35 autocorrelation function + Ljung-Box portmanteau statistic
     * per event type — the "is this series white noise?" gate that
     * decides whether the B17/B18 forecast ladder has anything to
@@ -1633,20 +1702,8 @@ object Resilience {
   def acfLjungBox(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val maxLag = 7
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
-    val st = pts.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), sum($"y").as("s"))
-    val w = Window.partitionBy($"event_type").orderBy($"day")
-    var led = pts.join(st, "event_type")
-    for (k <- 1 to maxLag) led = led.withColumn(s"y$k", lead($"y", k).over(w))
-    val d = $"n" * $"y" - $"s"
-    val aggCols = sum(d * d).as("den") +:
-      ((1 to maxLag).map(k =>
-        sum(d * ($"n" * col(s"y$k") - $"s")).as(s"num$k")) :+
-        max($"n").as("nd"))
-    val agg = led.groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = acfSums(events, maxLag) :+ max($"n").as("nd")
+    val agg = acfLeads(events, maxLag).groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
     val acfCols = (1 to maxLag).map(k =>
       round(col(s"num$k").cast("double") / $"den", 6).as(s"acf_$k"))
     val qTerms = (1 to maxLag).map { k =>
@@ -1680,9 +1737,7 @@ object Resilience {
   def hurst(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val sizes = Seq(5, 10, 15)
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val idx = pts.withColumn("i", row_number().over(w).cast("long"))
     val ex = idx.withColumn("m",
@@ -1732,6 +1787,18 @@ object Resilience {
       .orderBy($"event_type")
   }
 
+  /** Per calendar day with a click or a view, the click count `x` and
+    * the view count `y`: the daily grid of B47 and B53's cointegration
+    * test. */
+  private def clickViewDaily(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    events
+      .filter($"event_type".isin("click", "view"))
+      .groupBy(to_date($"ts").as("day"))
+      .agg(sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"),
+        sum(when($"event_type" === "view", 1L).otherwise(0L)).as("y"))
+  }
+
   /** B47 lag-1 GRANGER causality between the click and view daily
     * series (statsmodels `grangercausalitytests` twin, maxlag=1 — the
     * causal upgrade of B29's cross-correlation: correlation at lag 1
@@ -1750,11 +1817,7 @@ object Resilience {
     * tail. Degenerate determinants null explicitly. */
   def granger(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .filter($"event_type".isin("click", "view"))
-      .groupBy(to_date($"ts").as("day"))
-      .agg(sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"),
-        sum(when($"event_type" === "view", 1L).otherwise(0L)).as("y"))
+    val pts = clickViewDaily(events)
     val w = Window.orderBy($"day")
     val lagged = pts
       .withColumn("xl", lag($"x", 1).over(w))
@@ -1825,9 +1888,7 @@ object Resilience {
     * One events scan → daily grid → one aggregate per type. */
   def adf(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val lagged = pts
       .withColumn("xl", lag($"y", 1).over(w))
@@ -1883,9 +1944,7 @@ object Resilience {
   def kpss(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val l = 4
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val st = pts.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"))
     val w = Window.partitionBy($"event_type").orderBy($"day")
@@ -1933,9 +1992,7 @@ object Resilience {
     * denominator centered sums. Day-count-bounded frames. */
   def breuschPagan(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val rows = pts.withColumn("t", row_number().over(w).cast("long"))
     val m = rows.groupBy($"event_type").agg(
@@ -1989,9 +2046,7 @@ object Resilience {
   def bartlett(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val g = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val g = perTypeDaily(events)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum(dec($"y")).as("s"),
         sum(dec($"y") * $"y").as("ss"))
@@ -2081,9 +2136,7 @@ object Resilience {
     * day-count bounded. */
   def backtest(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val rows = pts
       .withColumn("t", row_number().over(w))
@@ -2134,9 +2187,7 @@ object Resilience {
     * 6-row fold per group — frame-bounded everywhere. */
   def permutationEntropy(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val tri = pts
       .withColumn("y1", lead($"y", 1).over(w))
@@ -2185,19 +2236,8 @@ object Resilience {
   def pacf(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val maxLag = 7
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
-    val st = pts.groupBy($"event_type")
-      .agg(count(lit(1)).as("n"), sum($"y").as("s"))
-    val w = Window.partitionBy($"event_type").orderBy($"day")
-    var led = pts.join(st, "event_type")
-    for (k <- 1 to maxLag) led = led.withColumn(s"y$k", lead($"y", k).over(w))
-    val d = $"n" * $"y" - $"s"
-    val aggCols = sum(d * d).as("den") +:
-      (1 to maxLag).map(k =>
-        sum(d * ($"n" * col(s"y$k") - $"s")).as(s"num$k"))
-    val agg = led.groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
+    val aggCols = acfSums(events, maxLag)
+    val agg = acfLeads(events, maxLag).groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
     val rArr = array((1 to maxLag).map(k =>
       col(s"num$k").cast("double") / $"den"): _*)
     // Durbin-Levinson as a functional fold: acc = (φ row, pacf list)
@@ -2244,9 +2284,7 @@ object Resilience {
     * the daily aggregate only. */
   def sax(events: DataFrame, segLen: Int = 5): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val idx = pts.withColumn("i", row_number().over(w).cast("long"))
     val st = pts.groupBy($"event_type")
@@ -2295,9 +2333,7 @@ object Resilience {
     * — recursing on the two halves yields full binary segmentation. */
   def changePoint(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val cum = pts
       .withColumn("i", row_number().over(w))
@@ -2544,9 +2580,7 @@ object Resilience {
     * accumulation order, so parity is exact. */
   def isotonic(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val idx = pts
       .withColumn("i", row_number().over(w).cast("long"))
@@ -2592,11 +2626,7 @@ object Resilience {
     * explicitly. One events scan → daily grid → one aggregate. */
   def cointegration(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .filter($"event_type".isin("click", "view"))
-      .groupBy(to_date($"ts").as("day"))
-      .agg(sum(when($"event_type" === "click", 1L).otherwise(0L)).as("x"),
-        sum(when($"event_type" === "view", 1L).otherwise(0L)).as("y"))
+    val pts = clickViewDaily(events)
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val m = pts.agg(count(lit(1)).as("n"),
       sum(dec($"x")).as("sx"), sum(dec($"y")).as("sy"),
@@ -2664,16 +2694,7 @@ object Resilience {
     * degenerate frames (v = 0) null the statistic explicitly. */
   def logRank(events: DataFrame, censorHours: Int = 6): DataFrame = {
     import events.sparkSession.implicits._
-    val wAll = Window.partitionBy()
-    val users = events
-      .groupBy($"user_id")
-      .agg(min(unix_micros($"ts")).as("first_us"),
-        max(unix_micros($"ts")).as("last_us"))
-      .withColumn("max_us", max($"last_us").over(wAll))
-      .select(($"user_id" % 2).as("grp"),
-        expr("(last_us - first_us) div 3600000000").as("t_hours"),
-        (($"max_us" - $"last_us") >
-          lit(censorHours.toLong) * 3600000000L).as("churned"))
+    val users = lifetimes(events, censorHours, ($"user_id" % 2).as("grp"))
     val hist = users.groupBy($"t_hours")
       .agg(count(lit(1)).as("n_at"),
         sum(when($"grp" === 1, 1L).otherwise(0L)).as("n1_at"),
@@ -2730,40 +2751,9 @@ object Resilience {
     * engines, ties broken by event_type. */
   def fdrBh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val az = abs($"z_unr")
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-    val phi = exp(az * az * -0.5) * lit(0.3989422804014327)
-    val tail = phi * (lit(0.319381530) * t +
-      lit(-0.356563782) * t * t +
-      lit(1.781477937) * t * t * t +
-      lit(-1.821255978) * t * t * t * t +
-      lit(1.330274429) * t * t * t * t * t)
     // recompute the UNROUNDED z (B34 exports round-6): same exact
     // integer core, one pinned scalar tail
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val pairs = pts.as("a").join(pts.as("b"),
-        col("a.event_type") === col("b.event_type") &&
-          col("a.day") < col("b.day"))
-      .select(col("a.event_type").as("event_type"),
-        signum(col("b.cnt") - col("a.cnt")).cast("long").as("sgn"))
-      .groupBy($"event_type").agg(sum($"sgn").as("s_stat"))
-    val ties = pts.groupBy($"event_type", $"cnt")
-      .agg(count(lit(1)).as("t"))
-      .groupBy($"event_type")
-      .agg(sum($"t").as("n"),
-        sum($"t" * ($"t" - 1) * (lit(2) * $"t" + 5)).as("tsum"))
-    val varNum = ($"n" * ($"n" - 1) * (lit(2) * $"n" + 5) - $"tsum")
-    val zed = pairs.join(ties, "event_type")
-      .withColumn("var_s", varNum.cast("double") / lit(18.0))
-      .withColumn("z_unr",
-        when($"s_stat" > 0,
-          ($"s_stat" - 1).cast("double") / sqrt($"var_s"))
-          .when($"s_stat" < 0,
-            ($"s_stat" + 1).cast("double") / sqrt($"var_s"))
-          .otherwise(lit(0.0)))
-      .withColumn("p_two", least(lit(1.0), lit(2.0) * tail))
+    val zed = mkPValues(s, dir)
     val mTests = Window.partitionBy()
     val wRank = Window.orderBy($"p_two", $"event_type")
     val wSuffix = Window.orderBy($"rk")
@@ -2792,38 +2782,7 @@ object Resilience {
     * dependence-robustness directly: c(5) ≈ 2.28× looser. */
   def fdrBy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val az = abs($"z_unr")
-    val t = lit(1.0) / (lit(1.0) + lit(0.2316419) * az)
-    val phi = exp(az * az * -0.5) * lit(0.3989422804014327)
-    val tail = phi * (lit(0.319381530) * t +
-      lit(-0.356563782) * t * t +
-      lit(1.781477937) * t * t * t +
-      lit(-1.821255978) * t * t * t * t +
-      lit(1.330274429) * t * t * t * t * t)
-    val pts = Tables.events(s, dir)
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("cnt"))
-    val pairs = pts.as("a").join(pts.as("b"),
-        col("a.event_type") === col("b.event_type") &&
-          col("a.day") < col("b.day"))
-      .select(col("a.event_type").as("event_type"),
-        signum(col("b.cnt") - col("a.cnt")).cast("long").as("sgn"))
-      .groupBy($"event_type").agg(sum($"sgn").as("s_stat"))
-    val ties = pts.groupBy($"event_type", $"cnt")
-      .agg(count(lit(1)).as("t"))
-      .groupBy($"event_type")
-      .agg(sum($"t").as("n"),
-        sum($"t" * ($"t" - 1) * (lit(2) * $"t" + 5)).as("tsum"))
-    val varNum = ($"n" * ($"n" - 1) * (lit(2) * $"n" + 5) - $"tsum")
-    val zed = pairs.join(ties, "event_type")
-      .withColumn("var_s", varNum.cast("double") / lit(18.0))
-      .withColumn("z_unr",
-        when($"s_stat" > 0,
-          ($"s_stat" - 1).cast("double") / sqrt($"var_s"))
-          .when($"s_stat" < 0,
-            ($"s_stat" + 1).cast("double") / sqrt($"var_s"))
-          .otherwise(lit(0.0)))
-      .withColumn("p_two", least(lit(1.0), lit(2.0) * tail))
+    val zed = mkPValues(s, dir)
     val mTests = Window.partitionBy()
     val wRank = Window.orderBy($"p_two", $"event_type")
     val wSuffix = Window.orderBy($"rk")
@@ -2956,29 +2915,7 @@ object Resilience {
     * division of exact integers. Round-6 export. */
   def nelsonAalen(events: DataFrame, censorHours: Int = 6): DataFrame = {
     import events.sparkSession.implicits._
-    val wAll = Window.partitionBy()
-    val users = events
-      .groupBy($"user_id")
-      .agg(min(unix_micros($"ts")).as("first_us"),
-        max(unix_micros($"ts")).as("last_us"))
-      .withColumn("max_us", max($"last_us").over(wAll))
-      .select($"user_id",
-        expr("(last_us - first_us) div 3600000000").as("t_hours"),
-        (($"max_us" - $"last_us") >
-          lit(censorHours.toLong) * 3600000000L).as("churned"))
-    val hist = users.groupBy($"t_hours")
-      .agg(count(lit(1)).as("n_at"),
-        sum(when($"churned", 1L).otherwise(0L)).as("d_events"))
-    val wSuffix = Window.orderBy($"t_hours")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val risk = hist
-      .withColumn("n_risk", sum($"n_at").over(wSuffix))
-      .filter($"d_events" > 0)
-    val all = risk.select($"t_hours", $"n_risk", $"d_events")
-    all.crossJoin(
-        all.select(struct($"t_hours".as("td"), $"n_risk".as("nr"),
-          $"d_events".as("de")).as("ev"))
-          .groupBy().agg(sort_array(collect_list($"ev")).as("evs")))
+    riskEvents(events, censorHours)
       .withColumn("h_na", round(
         aggregate(expr("filter(evs, e -> e.td <= t_hours)"),
           lit(0.0), (acc, x) => acc +
@@ -3000,9 +2937,7 @@ object Resilience {
     * the daily frame, one aggregate. */
   def turningPoints(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val t = pts
       .withColumn("p", lag($"y", 1).over(w))
@@ -3020,12 +2955,16 @@ object Resilience {
       .orderBy($"event_type")
   }
 
-  /** Shared typed daily-count frame for the round-7 additions (the
-    * same aggregate `dailyCountsSql` replays). */
-  private def dailyTyped(events: DataFrame): DataFrame = {
+  /** The `xType` and `yType` daily counts paired by day (`day`, `x`,
+    * `yv`): the two-series frame of B65, B79, B80 and B84. */
+  private def pairedDays(events: DataFrame, xType: String,
+      yType: String): DataFrame = {
     import events.sparkSession.implicits._
-    events.groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val d = perTypeDaily(events)
+    d.filter($"event_type" === xType)
+      .select($"day", $"y".as("x"))
+      .join(d.filter($"event_type" === yType)
+        .select($"day", $"y".as("yv")), "day")
   }
 
   /** B60 CHOW structural-break F-test per event type (Chow 1960 —
@@ -3046,7 +2985,7 @@ object Resilience {
   def chowBreak(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("t", row_number().over(w).cast("long"))
       .withColumn("n", count(lit(1)).over(
         Window.partitionBy($"event_type")))
@@ -3094,7 +3033,7 @@ object Resilience {
   def halflife(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("py", lag($"y", 1).over(w))
       .withColumn("pd", lag($"day", 1).over(w))
       .filter(datediff($"day", $"pd") === 1)
@@ -3130,7 +3069,7 @@ object Resilience {
   def croston(events: DataFrame, alpha: Double = 0.1): DataFrame = {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("gap",
         datediff($"day", lag($"day", 1).over(w)).cast("double"))
     val a = alpha
@@ -3174,7 +3113,7 @@ object Resilience {
       beta: Double = 0.8): DataFrame = {
     import events.sparkSession.implicits._
     val a = alpha; val b = beta
-    val daily = dailyTyped(events)
+    val daily = perTypeDaily(events)
     val agg = daily.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"),
         sum($"y" * $"y").as("q"),
@@ -3218,7 +3157,7 @@ object Resilience {
   def controlChart(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("py", lag($"y", 1).over(w))
       .withColumn("mr", abs($"y" - $"py"))
     val stats = pts.groupBy($"event_type")
@@ -3267,7 +3206,7 @@ object Resilience {
     * the decision anywhere (the B22/B31 posture). */
   def dispersion(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    dailyTyped(events)
+    perTypeDaily(events)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_days"), sum($"y").as("s"),
         sum($"y" * $"y").as("q"))
@@ -3291,7 +3230,7 @@ object Resilience {
     * rounded at export. <3 blocks or zero variance null. */
   def gumbelFit(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val blocks = dailyTyped(events)
+    val blocks = perTypeDaily(events)
       .groupBy($"event_type", date_format($"day", "yyyy-MM").as("blk"))
       .agg(max($"y").as("x"))
     blocks.groupBy($"event_type")
@@ -3326,13 +3265,9 @@ object Resilience {
   def kendallTau(events: DataFrame, xType: String = "click",
       yType: String = "view"): DataFrame = {
     import events.sparkSession.implicits._
-    val d = dailyTyped(events)
     // day-grid-sized and consumed by BOTH sides of the pair join:
     // checkpointed so the corpus is scanned twice total, not 8×
-    val xy = d.filter($"event_type" === xType)
-      .select($"day", $"y".as("x"))
-      .join(d.filter($"event_type" === yType)
-        .select($"day", $"y".as("yv")), "day")
+    val xy = pairedDays(events, xType, yType)
       .localCheckpoint()
     // the day grid is frame-bounded (days², never event rows), so the
     // inequality self-join broadcasts one side — a declared
@@ -3386,11 +3321,7 @@ object Resilience {
       yType: String = "view"): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
-    val d = dailyTyped(events)
-    val xy = d.filter($"event_type" === xType)
-      .select($"day", $"y".as("x"))
-      .join(d.filter($"event_type" === yType)
-        .select($"day", $"y".as("yv")), "day")
+    val xy = pairedDays(events, xType, yType)
     // day-grid-sized frame: the single-partition rank windows are
     // bounded by the calendar, not the corpus
     val ranked = xy.select($"day",
@@ -3434,11 +3365,7 @@ object Resilience {
       yType: String = "view"): DataFrame = {
     import events.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
-    val d = dailyTyped(events)
-    val xy = d.filter($"event_type" === xType)
-      .select($"day", $"y".as("x"))
-      .join(d.filter($"event_type" === yType)
-        .select($"day", $"y".as("yv")), "day")
+    val xy = pairedDays(events, xType, yType)
       .select($"day", ($"x" - $"yv").as("d"))
       .filter($"d" =!= 0L)
     val ranked = xy.select($"d",
@@ -3467,7 +3394,7 @@ object Resilience {
     * both map-side combinable. */
   def grubbsTest(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val d = dailyTyped(events)
+    val d = perTypeDaily(events)
     val st = d.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"),
         sum($"y".cast("decimal(38,0)") * $"y").as("q"))
@@ -3504,7 +3431,7 @@ object Resilience {
     * aggregate, one per-type reduce. */
   def seasonalMannKendall(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val d = dailyTyped(events)
+    val d = perTypeDaily(events)
       .select($"event_type", $"day", month($"day").as("mo"), $"y")
       .localCheckpoint() // pairs, counts and ties all read it
     val pairs = d.as("a").join(d.as("b"),
@@ -3555,11 +3482,7 @@ object Resilience {
       yType: String = "view", nPerms: Int = 200): DataFrame = {
     import events.sparkSession.implicits._
     val spark = events.sparkSession
-    val d = dailyTyped(events)
-    val xy = d.filter($"event_type" === xType)
-      .select($"day", $"y".as("x"))
-      .join(d.filter($"event_type" === yType)
-        .select($"day", $"y".as("yv")), "day")
+    val xy = pairedDays(events, xType, yType)
       .select(($"x" - $"yv").as("diff"),
         // a stable integer day index for the LCG bit
         datediff($"day", lit("1990-01-01").cast("date"))
@@ -3599,7 +3522,7 @@ object Resilience {
     * with the global χ²/df alongside. */
   def moodMedianTest(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
     val freq = pts.groupBy($"y").agg(count(lit(1)).as("t"))
     val wc = Window.orderBy($"y")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3648,7 +3571,7 @@ object Resilience {
   def ansariBradley(events: DataFrame, xType: String = "click",
       yType: String = "view"): DataFrame = {
     import events.sparkSession.implicits._
-    val d = dailyTyped(events)
+    val d = perTypeDaily(events)
       .filter($"event_type".isin(xType, yType))
       .select($"event_type", $"day", $"y")
     val ranked = d.select($"event_type",
@@ -3705,7 +3628,7 @@ object Resilience {
     * final division. */
   def kruskalWallis(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
     // value-domain frame: one row per distinct daily count
     val freq = pts.groupBy($"y").agg(count(lit(1)).as("t"))
     val wv = Window.orderBy($"y")
@@ -3756,7 +3679,7 @@ object Resilience {
     * χ²_F = 3·ΣRⱼ2²/(nk(k+1)) − 3n(k+1). */
   def friedman(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
     val kRow = pts.agg(countDistinct($"event_type").as("k"))
     val dayCnt = pts.groupBy($"day").agg(count(lit(1)).as("c"))
     val full = pts.join(broadcast(dayCnt), "day")
@@ -3803,7 +3726,7 @@ object Resilience {
     * tail. Zero-variance series excluded. */
   def jarqueBera(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
     val st = pts.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"))
     val pw = pts.join(broadcast(st), "event_type")
@@ -3863,7 +3786,7 @@ object Resilience {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val wAll = Window.partitionBy($"event_type")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("d1", $"y" - lag($"y", 1).over(w))
       .withColumn("d2", $"y" - lag($"y", 2).over(w))
       .withColumn("d4", $"y" - lag($"y", 4).over(w))
@@ -3930,7 +3853,7 @@ object Resilience {
     import events.sparkSession.implicits._
     val wR = Window.partitionBy($"event_type").orderBy($"y", $"day")
     val wAll = Window.partitionBy($"event_type")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("rn", row_number().over(wR))
       .withColumn("m", count(lit(1)).over(wAll))
     val med = pts
@@ -3990,7 +3913,7 @@ object Resilience {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val wAll = Window.partitionBy($"event_type")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("n", count(lit(1)).over(wAll))
       .withColumn("s", sum($"y").over(wAll))
       .withColumn("z", (($"n" * $"y" - $"s").cast("decimal(38,0)") *
@@ -4028,7 +3951,7 @@ object Resilience {
     * B34 exp-parity precedent); argmax ties take the earliest day. */
   def pettitt(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
     val freq = pts.groupBy($"event_type", $"y")
       .agg(count(lit(1)).as("t"))
     val wv = Window.partitionBy($"event_type").orderBy($"y")
@@ -4081,7 +4004,7 @@ object Resilience {
     import events.sparkSession.implicits._
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val wAll = Window.partitionBy($"event_type")
-    val pts = dailyTyped(events)
+    val pts = perTypeDaily(events)
       .withColumn("t", row_number().over(w).cast("long"))
     val st = pts.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"t").as("stt"),
@@ -4120,9 +4043,7 @@ object Resilience {
     * frame-bounded daily list; round-4 export. */
   def thetaForecast(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val lists = pts.groupBy($"event_type")
       .agg(sort_array(collect_list(struct($"day", $"y"))).as("ps"),
         count(lit(1)).as("n"), sum($"y").as("sy"))
@@ -4168,9 +4089,7 @@ object Resilience {
     * p·z. One coupled fold per type (the B49 shape). */
   def tsbForecast(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val spans = pts.groupBy($"event_type")
       .agg(min($"day").as("d0"), max($"day").as("d1"),
         sum(when($"y" > 0, 1L).otherwise(0L)).as("n_demand"))
@@ -4205,9 +4124,7 @@ object Resilience {
   def adiCv2(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     pts.groupBy($"event_type")
       .agg((datediff(max($"day"), min($"day")) + 1).cast("long")
           .as("n_periods"),
@@ -4241,9 +4158,7 @@ object Resilience {
   def dieboldMariano(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val scored = pts
       .withColumn("l1", lag($"y", 1).over(w))
@@ -4283,9 +4198,7 @@ object Resilience {
     import events.sparkSession.implicits._
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val sizes = Seq(5L, 10L, 15L)
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val st = pts.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"))
@@ -4350,9 +4263,7 @@ object Resilience {
     * (i < j pairs only). */
   def sampleEntropy(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val sym = pts
       .withColumn("prev", lag($"y", 1).over(w))
@@ -4395,9 +4306,7 @@ object Resilience {
   def spcRules(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-    val pts = events
-      .groupBy($"event_type", to_date($"ts").as("day"))
-      .agg(count(lit(1)).as("y"))
+    val pts = perTypeDaily(events)
     val st = pts.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), sum($"y").as("s"),
         sum(dec($"y") * $"y").as("sq"))

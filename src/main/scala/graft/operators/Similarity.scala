@@ -48,13 +48,7 @@ object Similarity {
     // bounded-heap top-k aggregate: O(k) state per query, map-side
     // combinable — no per-group sort of the full candidate set (the
     // row_number window would shuffle AND sort every scored row)
-    scored.groupBy($"q_id")
-      .agg(graft.functions.TopKAgg.topK(
-        struct($"cos".as("score"), $"vec_id".as("id")), TopK).as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.id".as("vec_id"), $"t.score".as("cos"))
-      .orderBy($"q_id", $"rank")
+    topKPerQuery(scored)
   }
 
   // chosen against the synthetic corpus's cosine spread (max query-
@@ -110,13 +104,7 @@ object Similarity {
       $"n".as("nn"))
     val scored = e.join(broadcast(other), $"vec_id" =!= $"nbr_id")
       .withColumn("cos", round(cosine($"v", $"nv", $"n", $"nn"), 6))
-    scored.groupBy($"vec_id")
-      .agg(graft.functions.TopKAgg.topK(
-        struct($"cos".as("score"), $"nbr_id".as("id")), k).as("top"))
-      .select($"vec_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"vec_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.id".as("nbr_id"), $"t.score".as("cos"))
-      .orderBy($"vec_id", $"rank")
+    topKNeighbors(scored, k)
   }
 
   /** E37 CELL-PRUNED k-NN graph — E35's declared 100 TB path made a
@@ -150,13 +138,7 @@ object Similarity {
         col("b.vec_id").as("nbr_id"),
         round(cosine(col("a.v"), col("b.v"), col("a.n"), col("b.n")),
           6).as("cos"))
-    scored.groupBy($"vec_id")
-      .agg(graft.functions.TopKAgg.topK(
-        struct($"cos".as("score"), $"nbr_id".as("id")), k).as("top"))
-      .select($"vec_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"vec_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.id".as("nbr_id"), $"t.score".as("cos"))
-      .orderBy($"vec_id", $"rank")
+    topKNeighbors(scored, k)
   }
 
   /** E36 NN-DESCENT k-NN graph construction (Dong, Moses & Li,
@@ -329,6 +311,51 @@ object Similarity {
         $"tb.bucket".as("bucket")).toIndexedSeq: _*)
   }
 
+  /** Per-vector top-k neighbors of `scored` (vec_id, nbr_id, cos)
+    * through the bounded-heap TopKAgg: (cos desc, nbr_id asc). */
+  private def topKNeighbors(scored: DataFrame, k: Int): DataFrame = {
+    import scored.sparkSession.implicits._
+    scored.groupBy($"vec_id")
+      .agg(graft.functions.TopKAgg.topK(
+        struct($"cos".as("score"), $"nbr_id".as("id")), k).as("top"))
+      .select($"vec_id", posexplode($"top").as(Seq("pos", "t")))
+      .select($"vec_id", ($"pos" + 1).cast("long").as("rank"),
+        $"t.id".as("nbr_id"), $"t.score".as("cos"))
+      .orderBy($"vec_id", $"rank")
+  }
+
+  /** Per-query top-k of `scored` (q_id, vec_id, adc) by ADC distance
+    * ascending, vec_id asc, through the bounded-heap TopKAgg. */
+  private def adcTopK(scored: DataFrame): DataFrame = {
+    import scored.sparkSession.implicits._
+    scored.groupBy($"q_id")
+      .agg(graft.functions.TopKAgg.topK(
+        struct((-$"adc").as("score"), $"vec_id".as("id")), TopK).as("top"))
+      .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
+      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
+        $"t.id".as("vec_id"), (-$"t.score").as("adc"))
+      .orderBy($"q_id", $"rank")
+  }
+
+  /** The exact-cosine re-rank tail of the shortlist cascades (E10,
+    * the served E10 and the E26/E29 code cascades): `short`'s
+    * (q_id, vec_id) candidates joined to their vectors in `vecs`
+    * (vec_id, v, n) and to the queries `q` (q_id, qv, qn), scored by
+    * round-6 cosine and cut to the top `TopK` by (cos desc, vec_id).
+    * The window is partitioned by query. */
+  private def exactRerank(short: DataFrame, vecs: DataFrame,
+      q: DataFrame): DataFrame = {
+    import short.sparkSession.implicits._
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
+    short.join(vecs, Seq("vec_id")).join(broadcast(q), Seq("q_id"))
+      .withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter($"rank" <= TopK)
+      .select($"q_id", $"rank", $"vec_id", $"cos")
+      .orderBy($"q_id", $"rank")
+  }
+
   /** Final per-query top-k through the bounded-heap TopKAgg (same
     * ranking as a `row_number` window — score desc, id asc — but O(k)
     * state, map-side combinable, and no one-task-per-query straggler
@@ -370,6 +397,20 @@ object Similarity {
         .withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6)))
   }
 
+  /** The LSH candidate tail of E2 and E40: corpus rows of `bucketed`
+    * sharing a (t, bucket) with a probe of `probes` (q_id, qv, qn, t,
+    * bucket), self-matches excluded, each (query, vector) once, then
+    * the per-query exact-cosine top-k. */
+  private def lshTopK(bucketed: DataFrame, probes: DataFrame): DataFrame = {
+    import bucketed.sparkSession.implicits._
+    val cand = bucketed.join(broadcast(probes), Seq("t", "bucket"))
+      .filter($"vec_id" =!= $"q_id")
+      .select($"q_id", $"qv", $"qn", $"vec_id", $"v", $"n")
+      .distinct()
+    topKPerQuery(
+      cand.withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6)))
+  }
+
   /** E2 LSH-bucketed approximate top-k: 8 hash tables × 4 hyperplane
     * bits; a query only scores vectors sharing a bucket in some table.
     * At scale the bucket equi-join replaces the corpus scan. */
@@ -379,12 +420,7 @@ object Similarity {
     val bucketed = lshBuckets(e, tables = 8, bits = 4)
     val q = bucketed.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"n".as("qn"), $"t", $"bucket")
-    val cand = bucketed.join(broadcast(q), Seq("t", "bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"qv", $"qn", $"vec_id", $"v", $"n")
-      .distinct()
-    topKPerQuery(
-      cand.withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6)))
+    lshTopK(bucketed, q)
   }
 
   /** E40 MULTI-PROBE LSH (Lv et al., VLDB 2007 — the table-count
@@ -409,17 +445,29 @@ object Similarity {
         $"bucket".as("qbucket"))
       .withColumn("bucket", $"qbucket".bitwiseXOR($"flip"))
       .select($"q_id", $"qv", $"qn", $"t", $"bucket")
-    val cand = bucketed.join(broadcast(probes), Seq("t", "bucket"))
-      .filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"qv", $"qn", $"vec_id", $"v", $"n")
-      .distinct()
-    topKPerQuery(
-      cand.withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6)))
+    lshTopK(bucketed, probes)
   }
 
   // plane-family id for the Hamming codes — disjoint from E2's
   // (table, bit) space so the two sign-bit families never collide
   private val HammingT = 100
+
+  /** E19's 64 sign bits: bit j is set when `v` lies on the positive
+    * side of plane (HammingT, j). */
+  private def hammingBits: Seq[Column] = (0 until 64).map { j =>
+    when(VectorFunctions.dot(col("v"), plane(HammingT, j)) > 0, lit(1L << j))
+      .otherwise(lit(0L))
+  }
+
+  /** Each vector of `e` with its `bits` OR-packed into one BIGINT
+    * `code`. 8 bytes/row: checkpointed so the packing runs ONCE — the
+    * corpus scan, the query filter, and both join sides would each
+    * re-derive it otherwise (the hybrid_rrf HOF-collapse lesson). */
+  private def packCodes(e: DataFrame, bits: Seq[Column]): DataFrame = {
+    import e.sparkSession.implicits._
+    e.select($"vec_id", bits.reduce(_.bitwiseOR(_)).as("code"))
+      .localCheckpoint()
+  }
 
   /** E19 binary Hamming search (the "binary embedding" tier a serving
     * stack runs as its cheapest filter): every vector compresses to
@@ -435,15 +483,7 @@ object Similarity {
   def annHamming(vecs: DataFrame): DataFrame = {
     import vecs.sparkSession.implicits._
     val e = withNorm(vecs)
-    val bitExprs = (0 until 64).map { j =>
-      when(VectorFunctions.dot($"v", plane(HammingT, j)) > 0, lit(1L << j))
-        .otherwise(lit(0L))
-    }
-    // 8 bytes/row: checkpoint so the 64-projection packing runs ONCE —
-    // the corpus scan, the query filter, and both join sides would
-    // each re-derive it otherwise (the hybrid_rrf HOF-collapse lesson)
-    val codes = e.select($"vec_id", bitExprs.reduce(_.bitwiseOR(_)).as("code"))
-      .localCheckpoint()
+    val codes = packCodes(e, hammingBits)
     val q = codes.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"code".as("qcode"))
     val scored = codes.join(broadcast(q), $"vec_id" =!= $"q_id")
@@ -529,6 +569,18 @@ object Similarity {
       .orderBy($"q_id")
   }
 
+  /** The E3 seed centroids: up to `nCentroids` vectors of `e` picked
+    * by a fixed vec_id hash, in vec_id order, collected to the driver. */
+  private def pickCentroids(e: DataFrame,
+      nCentroids: Int): Array[(Long, Array[Double])] = {
+    import e.sparkSession.implicits._
+    e.filter(pmod($"vec_id" * 7, lit(101)) < nCentroids)
+      .orderBy($"vec_id").limit(nCentroids)
+      .select($"vec_id", $"v".cast("array<double>"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+  }
+
   /** E3 IVF-style ANN: coarse quantizer = 16 deterministic seed
     * centroids; every vector is assigned to its nearest centroid (one
     * broadcast pass, min-by aggregation — no window); queries probe
@@ -561,12 +613,7 @@ object Similarity {
       nCentroids: Int = 16): DataFrame = {
     import vecs.sparkSession.implicits._
     val e = withNorm(vecs)
-    val cents: Array[(Long, Array[Double])] =
-      e.filter(pmod($"vec_id" * 7, lit(101)) < nCentroids)
-        .orderBy($"vec_id").limit(nCentroids)
-        .select($"vec_id", $"v".cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cents = pickCentroids(e, nCentroids)
     // assign: nearest centroid by cosine, as a codegen'd projection
     val assigned = e.withColumn("cell", nearestCellByCosine($"v", $"n", cents))
     // probe: nProbe nearest cells per query, same literal scoring —
@@ -906,13 +953,7 @@ object Similarity {
     val adcCol = $"qq" + graft.functions.AdcSum.adc($"tbls", $"codes")
     val scored = codes.join(broadcast(q), $"vec_id" =!= $"q_id")
       .withColumn("adc", adcCol)
-    scored.groupBy($"q_id")
-      .agg(graft.functions.TopKAgg.topK(
-        struct((-$"adc").as("score"), $"vec_id".as("id")), TopK).as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.id".as("vec_id"), (-$"t.score").as("adc"))
-      .orderBy($"q_id", $"rank")
+    adcTopK(scored)
   }
 
   /** E34 RANDOM-ROTATION PQ (the cheap cousin of OPQ — Ge et al.
@@ -1027,13 +1068,22 @@ object Similarity {
       element_at(element_at(typedlit(wcd), $"code1" + 1), $"code2" + 1)
     val scored = codes.join(broadcast(q), $"vec_id" =!= $"q_id")
       .withColumn("adc", adc)
-    scored.groupBy($"q_id")
-      .agg(graft.functions.TopKAgg.topK(
-        struct((-$"adc").as("score"), $"vec_id".as("id")), TopK).as("top"))
-      .select($"q_id", posexplode($"top").as(Seq("pos", "t")))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"t.id".as("vec_id"), (-$"t.score").as("adc"))
-      .orderBy($"q_id", $"rank")
+    adcTopK(scored)
+  }
+
+  /** The in-memory IVF-PQ front of E7 and E10: a model trained on
+    * `vecs`, the corpus encoded with it, and the first `NumQueries`
+    * vectors probed into their `nProbe` nearest cells. */
+  private def ivfPqCodedProbes(vecs: DataFrame, k: Int, iters: Int,
+      nProbe: Int): (DataFrame, DataFrame) = {
+    import vecs.sparkSession.implicits._
+    val m = ivfPqTrain(vecs, k, iters)
+    val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
+    val coded = ivfPqEncode(e, m)
+    val qprobe = ivfPqProbe(
+      e.filter($"vec_id" < NumQueries)
+        .select($"vec_id".as("q_id"), $"v".as("qv")), m, nProbe)
+    (coded, qprobe)
   }
 
   /** E7 IVF-PQ (Jégou et al. 2011 §IV, IVFADC): the E-track capstone
@@ -1065,13 +1115,7 @@ object Similarity {
     * engine-specific order). */
   def annIvfPq(vecs: DataFrame, k: Int = 16, iters: Int = 2,
       nProbe: Int = 2): DataFrame = {
-    import vecs.sparkSession.implicits._
-    val m = ivfPqTrain(vecs, k, iters)
-    val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val coded = ivfPqEncode(e, m)
-    val qprobe = ivfPqProbe(
-      e.filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("q_id"), $"v".as("qv")), m, nProbe)
+    val (coded, qprobe) = ivfPqCodedProbes(vecs, k, iters, nProbe)
     ivfPqScore(coded, qprobe)
   }
 
@@ -1220,25 +1264,13 @@ object Similarity {
   def annIvfPqRerank(vecs: DataFrame, k: Int = 16, iters: Int = 2,
       nProbe: Int = 2, shortlist: Int = 10): DataFrame = {
     import vecs.sparkSession.implicits._
-    val m = ivfPqTrain(vecs, k, iters)
-    val e = vecs.select($"vec_id", $"embedding".cast("array<double>").as("v"))
-    val coded = ivfPqEncode(e, m)
-    val qprobe = ivfPqProbe(
-      e.filter($"vec_id" < NumQueries)
-        .select($"vec_id".as("q_id"), $"v".as("qv")), m, nProbe)
+    val (coded, qprobe) = ivfPqCodedProbes(vecs, k, iters, nProbe)
     val short = ivfPqTopK(coded, qprobe, shortlist)
       .select($"q_id", $"vec_id")
     val en = withNorm(vecs)
     val q = en.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"n".as("qn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-    short.join(en, Seq("vec_id")).join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= TopK)
-      .select($"q_id", $"rank", $"vec_id", $"cos")
-      .orderBy($"q_id", $"rank")
+    exactRerank(short, en, q)
   }
 
   /** E8 persisted IVF-PQ index — the BUILD half of the build/serve
@@ -1649,14 +1681,7 @@ object Similarity {
     val q = queries.select($"q_id",
         $"qv".cast("array<double>").as("qv"))
       .withColumn("qn", VectorFunctions.norm($"qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-    short.join(cand, Seq("vec_id")).join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= TopK)
-      .select($"q_id", $"rank", $"vec_id", $"cos")
-      .orderBy($"q_id", $"rank")
+    exactRerank(short, cand, q)
   }
 
   /** Driver-contract adapter for the served path: builds the index
@@ -1988,14 +2013,8 @@ object Similarity {
     * shortlist rank is exact-integer (ham, vec_id); the re-rank is
     * the E10 contract (round-6 cosines, id tie). */
   def hammingRerank(vecs: DataFrame, shortlist: Int = 10): DataFrame = {
-    import vecs.sparkSession.implicits._
     val e = withNorm(vecs)
-    val bitExprs = (0 until 64).map { j =>
-      when(VectorFunctions.dot($"v", plane(HammingT, j)) > 0, lit(1L << j))
-        .otherwise(lit(0L))
-    }
-    val codes = e.select($"vec_id", bitExprs.reduce(_.bitwiseOR(_)).as("code"))
-      .localCheckpoint()
+    val codes = packCodes(e, hammingBits)
     codeCascade(e, codes, shortlist)
   }
 
@@ -2019,14 +2038,7 @@ object Similarity {
       .select($"q_id", $"t.id".as("vec_id"))
     val q = e.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("q_id"), $"v".as("qv"), $"n".as("qn"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-    short.join(e, Seq("vec_id")).join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", round(cosine($"qv", $"v", $"qn", $"n"), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= TopK)
-      .select($"q_id", $"rank", $"vec_id", $"cos")
-      .orderBy($"q_id", $"rank")
+    exactRerank(short, e, q)
   }
 
   /** E29 BINARY-QUANTIZATION search — ONE sign bit per ORIGINAL
@@ -2051,8 +2063,7 @@ object Similarity {
       when(element_at($"v", j + 1) > lit(0.0f), lit(1L << j))
         .otherwise(lit(0L))
     }
-    val codes = e.select($"vec_id", bitExprs.reduce(_.bitwiseOR(_)).as("code"))
-      .localCheckpoint()
+    val codes = packCodes(e, bitExprs)
     codeCascade(e, codes, shortlist)
   }
 
@@ -2107,12 +2118,7 @@ object Similarity {
     import vecs.sparkSession.implicits._
     val nCentroids = 16
     val e = withNorm(vecs)
-    val cents: Array[(Long, Array[Double])] =
-      e.filter(pmod($"vec_id" * 7, lit(101)) < nCentroids)
-        .orderBy($"vec_id").limit(nCentroids)
-        .select($"vec_id", $"v".cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    val cents = pickCentroids(e, nCentroids)
     val q = expr("transform(cast(v as array<double>), " +
       "x -> cast(round(x * 1000000) as bigint))")
     val sums = e

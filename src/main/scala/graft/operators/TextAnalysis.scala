@@ -218,6 +218,27 @@ object TextAnalysis {
   private[graft] val Bm25B = 0.75
   private[graft] val Bm25Query = Seq("spark", "window", "scan")
 
+  /** The BM25 top-`k` of `tf` (doc_id, term, tf, df), for a corpus of
+    * `n` documents of mean length `avgdl`, whose lengths `dl` join
+    * by doc_id: the one scoring of [[bm25]] and the served
+    * [[queryBm25Index]]. */
+  private def bm25Rank(tf: DataFrame, dl: DataFrame, n: Long,
+      avgdl: Double, k: Int): DataFrame = {
+    import tf.sparkSession.implicits._
+    tf
+      .join(dl, "doc_id")
+      .withColumn("idf",
+        log(lit(1.0) + (lit(n.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
+      .withColumn("part", $"idf" * ($"tf" * lit(Bm25K1 + 1.0)) /
+        ($"tf" + lit(Bm25K1) * (lit(1.0 - Bm25B) +
+          lit(Bm25B) * $"dl" / lit(avgdl))))
+      .groupBy($"doc_id")
+      .agg(sum($"part").as("raw"), count(lit(1)).as("n_terms_hit"))
+      .select($"doc_id", round($"raw", 4).as("score"), $"n_terms_hit")
+      .orderBy(round($"raw", 4).desc, $"doc_id")
+      .limit(k)
+  }
+
   /** F15 BM25 ranked retrieval (Robertson & Spärck Jones probabilistic
     * weighting in the Lucene practical form) — the retrieval twin of
     * F6's TF-IDF, and the scoring a training-data pipeline uses for
@@ -255,18 +276,7 @@ object TextAnalysis {
       .select($"doc_id", $"term", $"c".as("tf"))
     // tcounts is already distinct per (doc, term): df = row count
     val df = tf.groupBy($"term").agg(count(lit(1)).as("df"))
-    tf.join(df, "term")
-      .join(dl, "doc_id")
-      .withColumn("idf",
-        log(lit(1.0) + (lit(n.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-      .withColumn("part", $"idf" * ($"tf" * lit(Bm25K1 + 1.0)) /
-        ($"tf" + lit(Bm25K1) * (lit(1.0 - Bm25B) +
-          lit(Bm25B) * $"dl" / lit(avgdl))))
-      .groupBy($"doc_id")
-      .agg(sum($"part").as("raw"), count(lit(1)).as("n_terms_hit"))
-      .select($"doc_id", round($"raw", 4).as("score"), $"n_terms_hit")
-      .orderBy(round($"raw", 4).desc, $"doc_id")
-      .limit(k)
+    bm25Rank(tf.join(df, "term"), dl, n, avgdl, k)
   }
 
   // ---------------------------------------------------------------
@@ -286,7 +296,7 @@ object TextAnalysis {
   // its commit if its metas already carry the tag) — so a crash
   // between the three commits replays cleanly: committed tables
   // skip, the missing ones complete, exactly once end to end.
-  // Served scores replay the bm25() arithmetic verbatim, so
+  // Served scores go through bm25()'s own [[bm25Rank]], so
   // base+deltas == the one-shot batch ranking (spec-pinned).
   // ---------------------------------------------------------------
 
@@ -377,7 +387,7 @@ object TextAnalysis {
     * corpus scale: |terms|/64 of the posting files opened, the rest
     * never touched), df comes from the pruned postings, N/avgdl from
     * the one-row meta — the corpus text is NEVER read or tokenized
-    * at query time. Arithmetic is bm25()'s, verbatim. */
+    * at query time. Scored by [[bm25Rank]], as [[bm25]] is. */
   def queryBm25Index(spark: SparkSession, dir: String,
       queryTerms: Seq[String] = Bm25Query, k: Int = 10): DataFrame = {
     import spark.implicits._
@@ -393,18 +403,7 @@ object TextAnalysis {
     val df = posts.groupBy($"term").agg(count(lit(1)).as("df"))
     val dl = Lake.Manifest.readPublished(spark, s"$dir/docs")
       .select($"doc_id", $"dl")
-    posts.join(df, "term")
-      .join(dl, "doc_id")
-      .withColumn("idf",
-        log(lit(1.0) + (lit(n.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
-      .withColumn("part", $"idf" * ($"tf" * lit(Bm25K1 + 1.0)) /
-        ($"tf" + lit(Bm25K1) * (lit(1.0 - Bm25B) +
-          lit(Bm25B) * $"dl" / lit(avgdl))))
-      .groupBy($"doc_id")
-      .agg(sum($"part").as("raw"), count(lit(1)).as("n_terms_hit"))
-      .select($"doc_id", round($"raw", 4).as("score"), $"n_terms_hit")
-      .orderBy(round($"raw", 4).desc, $"doc_id")
-      .limit(k)
+    bm25Rank(posts.join(df, "term"), dl, n, avgdl, k)
   }
 
   /** The serve state behind the `text_bm25_serve` entry: the BM25
@@ -742,6 +741,39 @@ object TextAnalysis {
       .orderBy($"doc_id")
   }
 
+  /** Per document, the count `c` of each bigram (t1, t2) of its
+    * tokens (checkpointed: one tokenization pass feeds every bigram
+    * table of F19 and F47). */
+  private def docBigrams(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select($"doc_id", tokens($"text").as("w"))
+      .filter(size($"w") >= 2)
+      .select($"doc_id", explode(expr(
+        "transform(slice(w, 1, size(w) - 1), (t, i) -> struct(t as t1, w[i + 1] as t2))"))
+        .as("b"))
+      .select($"doc_id", $"b.t1".as("t1"), $"b.t2".as("t2"))
+      .groupBy($"doc_id", $"t1", $"t2").agg(count(lit(1)).as("c"))
+      .localCheckpoint()
+  }
+
+  /** Per document, its bigram count `n_bigrams` and, as `name`, the
+    * mean of the per-bigram log-probability terms `contrib` of
+    * `scored` (doc_id, t1, t2, c, contrib), folded in sorted (t1, t2)
+    * order. */
+  private def meanBigramLogProb(scored: DataFrame, name: String): DataFrame = {
+    import scored.sparkSession.implicits._
+    scored
+      .groupBy($"doc_id")
+      .agg(sort_array(collect_list(struct($"t1", $"t2", $"contrib")))
+          .as("parts"),
+        sum($"c").as("n_bigrams"))
+      .withColumn("lp",
+        expr("aggregate(transform(parts, x -> x.contrib), 0D, (acc, x) -> acc + x)"))
+      .select($"doc_id", $"n_bigrams",
+        round($"lp" / $"n_bigrams", 4).as(name))
+      .orderBy($"doc_id")
+  }
+
   /** F19 bigram language-model scoring — the next LM rung above F16's
     * unigram: train add-one-smoothed bigram probabilities ON the
     * corpus (p(t₂|t₁) = (c(t₁t₂)+1)/(c(t₁·)+V), V = unigram vocab),
@@ -757,30 +789,15 @@ object TextAnalysis {
     * bigram and are absent, matching the twin. */
   def bigramLm(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val bi = docs.select($"doc_id", tokens($"text").as("w"))
-      .filter(size($"w") >= 2)
-      .select($"doc_id", explode(expr(
-        "transform(slice(w, 1, size(w) - 1), (t, i) -> struct(t as t1, w[i + 1] as t2))"))
-        .as("b"))
-      .select($"doc_id", $"b.t1".as("t1"), $"b.t2".as("t2"))
-      .groupBy($"doc_id", $"t1", $"t2").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val bi = docBigrams(docs)
     val cb = bi.groupBy($"t1", $"t2").agg(sum($"c").as("cb"))
     val cf = cb.groupBy($"t1").agg(sum($"cb").as("cf"))
     val vocab = docs.select(explode(tokens($"text")).as("t"))
       .agg(countDistinct($"t")).collect()(0).getLong(0)
-    bi.join(cb, Seq("t1", "t2")).join(cf, Seq("t1"))
+    val scored = bi.join(cb, Seq("t1", "t2")).join(cf, Seq("t1"))
       .withColumn("contrib",
         $"c" * log(($"cb" + lit(1.0)) / ($"cf" + lit(vocab.toDouble))))
-      .groupBy($"doc_id")
-      .agg(sort_array(collect_list(struct($"t1", $"t2", $"contrib")))
-          .as("parts"),
-        sum($"c").as("n_bigrams"))
-      .withColumn("lp",
-        expr("aggregate(transform(parts, x -> x.contrib), 0D, (acc, x) -> acc + x)"))
-      .select($"doc_id", $"n_bigrams",
-        round($"lp" / $"n_bigrams", 4).as("bigram_lm"))
-      .orderBy($"doc_id")
+    meanBigramLogProb(scored, "bigram_lm")
   }
 
   /** F47 interpolated KNESER-NEY bigram scoring (Kneser & Ney 1995;
@@ -805,33 +822,19 @@ object TextAnalysis {
     * per-doc fold is map-side combinable. */
   def knLm(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val bi = docs.select($"doc_id", tokens($"text").as("w"))
-      .filter(size($"w") >= 2)
-      .select($"doc_id", explode(expr(
-        "transform(slice(w, 1, size(w) - 1), (t, i) -> struct(t as t1, w[i + 1] as t2))"))
-        .as("b"))
-      .select($"doc_id", $"b.t1".as("t1"), $"b.t2".as("t2"))
-      .groupBy($"doc_id", $"t1", $"t2").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+    val bi = docBigrams(docs)
     val cb = bi.groupBy($"t1", $"t2").agg(sum($"c").as("cb"))
       .localCheckpoint()
     val cf = cb.groupBy($"t1")
       .agg(sum($"cb").as("cf"), count(lit(1)).as("n1f"))
     val bw = cb.groupBy($"t2").agg(count(lit(1)).as("n1b"))
     val nbb = cb.count()
-    bi.join(cb, Seq("t1", "t2")).join(cf, Seq("t1")).join(bw, Seq("t2"))
+    val scored = bi.join(cb, Seq("t1", "t2")).join(cf, Seq("t1"))
+      .join(bw, Seq("t2"))
       .withColumn("contrib", $"c" * log(
         greatest($"cb" - lit(0.75), lit(0.0)) / $"cf" +
           lit(0.75) * $"n1f" / $"cf" * ($"n1b" / lit(nbb.toDouble))))
-      .groupBy($"doc_id")
-      .agg(sort_array(collect_list(struct($"t1", $"t2", $"contrib")))
-          .as("parts"),
-        sum($"c").as("n_bigrams"))
-      .withColumn("lp",
-        expr("aggregate(transform(parts, x -> x.contrib), 0D, (acc, x) -> acc + x)"))
-      .select($"doc_id", $"n_bigrams",
-        round($"lp" / $"n_bigrams", 4).as("kn_lm"))
-      .orderBy($"doc_id")
+    meanBigramLogProb(scored, "kn_lm")
   }
 
   private val CoocWindow = 4
@@ -1561,6 +1564,31 @@ object TextAnalysis {
     } else bpeTrain(docs, rounds)
   }
 
+  /** Per source, the count `wc` of each lower-cased alphanumeric word
+    * `w` (checkpointed): the one tokenization scan of F35 and its fast
+    * path. */
+  private def sourceWords(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs
+      .select($"source", explode(expr(
+        "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
+      .groupBy($"source", $"w").agg(count(lit(1)).as("wc"))
+      .localCheckpoint()
+  }
+
+  /** Per source, words, tokens and fertility ppm of the
+    * [[sourceWords]] counts `bySource` segmented by `seg` (w, n_tok). */
+  private def fertility(bySource: DataFrame, seg: DataFrame): DataFrame = {
+    import bySource.sparkSession.implicits._
+    bySource.join(seg, "w")
+      .groupBy($"source")
+      .agg(sum($"wc").as("n_words"),
+        sum($"wc" * $"n_tok").as("n_tokens"))
+      .select($"source", $"n_words", $"n_tokens",
+        expr("n_tokens * 1000000 div n_words").as("fertility_ppm"))
+      .orderBy($"source")
+  }
+
   /** F35 fast path: merges learned driver-side, the vocab-sized
     * final segmentation parallelized back for the per-source join —
     * corpus cost stays the one tokenization scan. */
@@ -1568,11 +1596,7 @@ object TextAnalysis {
       localVocabCap: Long = 2000000L): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val bySource = docs
-      .select($"source", explode(expr(
-        "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-      .groupBy($"source", $"w").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
+    val bySource = sourceWords(docs)
     val global = bySource.groupBy($"w").agg(sum($"wc").as("wc"))
       .localCheckpoint()
     if (global.count() <= localVocabCap) {
@@ -1580,13 +1604,7 @@ object TextAnalysis {
       val (_, finalVocab) = bpeLearnLocal(local.toSeq, rounds)
       val seg = finalVocab.map { case (w, _, n) => (w, n) }
         .toDF("w", "n_tok")
-      bySource.join(seg, "w")
-        .groupBy($"source")
-        .agg(sum($"wc").as("n_words"),
-          sum($"wc" * $"n_tok").as("n_tokens"))
-        .select($"source", $"n_words", $"n_tokens",
-          expr("n_tokens * 1000000 div n_words").as("fertility_ppm"))
-        .orderBy($"source")
+      fertility(bySource, seg)
     } else bpeFertility(docs, rounds)
   }
 
@@ -1605,23 +1623,13 @@ object TextAnalysis {
     * as integer floor-div ppm of exact BIGINT token/word counts. */
   def bpeFertility(docs: DataFrame, rounds: Int = 4): DataFrame = {
     import docs.sparkSession.implicits._
-    val bySource = docs
-      .select($"source", explode(expr(
-        "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("w"))
-      .groupBy($"source", $"w").agg(count(lit(1)).as("wc"))
-      .localCheckpoint()
+    val bySource = sourceWords(docs)
     val global = bySource.groupBy($"w").agg(sum($"wc").as("wc"))
       .withColumn("syms", expr("filter(split(w, ''), x -> x <> '')"))
     val (_, finalVocab) = bpeLearn(global, rounds)
     val seg = finalVocab
       .select($"w", size($"syms").cast("long").as("n_tok"))
-    bySource.join(seg, "w")
-      .groupBy($"source")
-      .agg(sum($"wc").as("n_words"),
-        sum($"wc" * $"n_tok").as("n_tokens"))
-      .select($"source", $"n_words", $"n_tokens",
-        expr("n_tokens * 1000000 div n_words").as("fertility_ppm"))
-      .orderBy($"source")
+    fertility(bySource, seg)
   }
 
   /** F32 COMPRESSION-RATIO quality signal (the Gopher/FineWeb

@@ -62,8 +62,12 @@ object Lake {
     }
     // bare read: the previous merge just rewrote the target, so a
     // schema keyed by its version would miss every time and add a listing
+    // a null or empty value is written to (and read back from) the
+    // default partition as null, which no `IN` matches
+    val (dflt, named) = touched.partition { case (_, s) => s == null || s.isEmpty }
+    val inNamed = col(partCol).isin(named.map(_._1).toIndexedSeq: _*)
     val target = spark.read.parquet(targetDir)
-      .filter(col(partCol).isin(touched.map(_._1).toIndexedSeq: _*))
+      .filter(if (dflt.isEmpty) inNamed else inNamed || col(partCol).isNull)
     val kept = target.join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
     val upserts = delta.filter(col(opCol) =!= "d")
       .select(target.columns.map(col).toIndexedSeq: _*)

@@ -503,6 +503,24 @@ class SourcesSpec extends AnyFunSuite {
     assert(merged("dup", dup) == once)
   }
 
+  test("H13: a merge into the null partition keeps that partition's other rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_cow_null").toString + "/t"
+    // ids 1 and 2 sit in the null partition (__HIVE_DEFAULT_PARTITION__)
+    Seq((1L, "a", None), (2L, "b", None), (3L, "c", Some(1)))
+      .toDF("id", "payload", "part").write.partitionBy("part").parquet(dir)
+    def rows() = spark.read.parquet(dir).as[(Long, String, Option[Int])]
+      .collect().toSeq.sortBy(_._1)
+    def merge(d: Seq[(Long, String, Option[Int], String)]): Unit =
+      graft.sources.Lake.mergeIntoPartitioned(spark, dir, "part", "id",
+        d.toDF("id", "payload", "part", "op"))
+    merge(Seq((1L, "a2", None, "u")))
+    assert(rows() == Seq((1L, "a2", None), (2L, "b", None), (3L, "c", Some(1))))
+    // a lone delete there must not empty the partition
+    merge(Seq((1L, null, None, "d")))
+    assert(rows() == Seq((2L, "b", None), (3L, "c", Some(1))))
+  }
+
   test("H14: z-order layout prunes row groups on BOTH box dimensions") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_z").toString
