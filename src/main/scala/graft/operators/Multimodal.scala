@@ -360,7 +360,7 @@ object Multimodal {
     * ladders that ignore this misalign A/V sync. */
   private def mp4EditsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
+    val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
     payloads
       .select($"doc_id", explode(
         graft.functions.Mp4Demux.mp4EditsFor($"payload", "vide")).as("e"))
@@ -507,8 +507,8 @@ object Multimodal {
     * scale. Nearest-tie rule: (|drift|, a_idx) min — total order. */
   private def avSyncEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id =>
-      mp4MultiTrackBytes(id)).localCheckpoint()
+    val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
+      .localCheckpoint()
     def msOf(handler: String, idxName: String, msName: String) = {
       val ts = payloads.select($"doc_id",
           explode(graft.functions.Mp4Demux.mp4Tracks($"payload"))
@@ -583,7 +583,7 @@ object Multimodal {
     * agree with the closed form. */
   private def webpDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => webpBytes(id))
+    val payloads = synthPayloads(s, dir)(webpBytes)
     payloads
       .select($"doc_id",
         graft.functions.WebpDims.dimsCol($"payload").as("d"))
@@ -978,7 +978,7 @@ object Multimodal {
     * extraction agree with the closed form. */
   private def pngChunksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => pngChunkBytes(id))
+    val payloads = synthPayloads(s, dir)(pngChunkBytes)
     payloads
       .select($"doc_id",
         graft.functions.PngChunks.chunksCol($"payload").as("c"))
@@ -1128,7 +1128,8 @@ object Multimodal {
   private def gifFramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val payloads = synthPayloads(s, dir)(id =>
-      animGifBytes(id, (3 + id % 4).toInt, (5 + id % 3).toInt, (2 + id % 3).toInt))
+      animGifBytes(id, (3 + id % 4).toInt, (5 + id % 3).toInt,
+        (2 + id % 3).toInt))
     gifFramePixels(payloads)
       .groupBy($"doc_id", $"frame")
       .agg(count(lit(1)).as("n_px"), sum($"gray").as("sum_gray"),
@@ -1451,7 +1452,7 @@ object Multimodal {
     * every sample's absolute (offset, size, dts, pts, sync). */
   private def mp4FragmentsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4FragBytes(id))
+    val payloads = synthPayloads(s, dir)(mp4FragBytes)
     payloads
       .select($"doc_id", explode(graft.functions.Mp4Frag
         .mp4FragSamples($"payload")).as("sm"))
@@ -1560,7 +1561,7 @@ object Multimodal {
     * the oracle replays the closed-form header. */
   private def opusHeadEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => opusBytes(id))
+    val payloads = synthPayloads(s, dir)(opusBytes)
     val p0 = payloads
       .select($"doc_id", $"payload", explode(graft.functions.OggWalk
         .oggPages($"payload")).as("pg"))
@@ -1620,7 +1621,7 @@ object Multimodal {
     * new expression), gated on reserved==0 && type==1. */
   private def icoDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => icoBytes(id))
+    val payloads = synthPayloads(s, dir)(icoBytes)
     val h = upper(hex($"payload"))
     def leAt(byteOff: Column, nBytes: Int): Column =
       (0 until nBytes).map(i =>
@@ -1745,7 +1746,7 @@ object Multimodal {
     * offset against the encoder's closed form. */
   private def pdfXrefEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => pdfBytes(id))
+    val payloads = synthPayloads(s, dir)(pdfBytes)
     payloads
       .select($"doc_id", explode(graft.functions.PdfXref
         .pdfXref($"payload")).as("x"))
@@ -1761,7 +1762,7 @@ object Multimodal {
     * offsets; the oracle replays the closed-form page layout. */
   private def oggPagesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => oggBytes(id))
+    val payloads = synthPayloads(s, dir)(oggBytes)
     payloads
       .select($"doc_id", explode(graft.functions.OggWalk
         .oggPages($"payload")).as("pg"))
@@ -1833,7 +1834,7 @@ object Multimodal {
     * the oracle replays the closed-form fields. */
   private def mkvTracksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mkvBytes(id))
+    val payloads = synthPayloads(s, dir)(mkvBytes)
     payloads
       .select($"doc_id", explode(graft.functions.EbmlWalk
         .mkvTracks($"payload")).as("t"))
@@ -1952,7 +1953,7 @@ object Multimodal {
     * demuxed back; the oracle replays the closed-form fields. */
   private def mp4TracksEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
+    val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
     mp4TrackDirectory(payloads).orderBy($"doc_id", $"track_idx")
   }
 
@@ -1963,7 +1964,7 @@ object Multimodal {
     * offset = 2³³ + id·10⁵ + (i div 2)·65536 + (i mod 2)·u2. */
   private def mp4AudioPlanEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4MultiTrackBytes(id))
+    val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
     payloads
       .select($"doc_id", explode(graft.functions.Mp4Demux
         .mp4SamplesFor($"payload", "soun")).as("sm"))
@@ -2005,7 +2006,7 @@ object Multimodal {
     * closed-form. */
   private def mp4TimingEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp4Bytes)
     mp4TimingTable(payloads).orderBy($"doc_id", $"sample_idx")
   }
 
@@ -2017,7 +2018,7 @@ object Multimodal {
     * (chunk, offset, size). */
   private def mp4SamplesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp4Bytes)
     mp4SampleTable(payloads).orderBy($"doc_id", $"sample_idx")
   }
 
@@ -2031,7 +2032,7 @@ object Multimodal {
     * decode one keyframe, never touch the frames between. */
   private def mp4KeyframePlanEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp4Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp4Bytes)
     val z = payloads.select($"doc_id", explode(arrays_zip(
       graft.functions.Mp4Demux.mp4Timing($"payload"),
       graft.functions.Mp4Demux.mp4Samples($"payload"))).as("z"))
@@ -2166,7 +2167,7 @@ object Multimodal {
     * all agree with the closed-form layout. */
   private def aacFramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => aacBytes(id))
+    val payloads = synthPayloads(s, dir)(aacBytes)
     payloads
       .select($"doc_id",
         explode(graft.functions.AacAdts.aacFrames($"payload")).as("f"))
@@ -2186,7 +2187,7 @@ object Multimodal {
     * closed-form layout. */
   private def mp3FramesEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp3Bytes)
     mp3FrameTable(payloads).orderBy($"doc_id", $"frame_idx")
   }
 
@@ -2198,7 +2199,7 @@ object Multimodal {
     * case with crafted bytes). */
   private def id3TagsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp3Bytes)
     payloads
       .select($"doc_id",
         explode(graft.functions.MpegAudio.id3FramesCol($"payload"))
@@ -2216,7 +2217,7 @@ object Multimodal {
     * Layer III frame; integer floor-div on both sides). */
   private def mp3SummaryEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => mp3Bytes(id))
+    val payloads = synthPayloads(s, dir)(mp3Bytes)
     mp3FrameTable(payloads)
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_frames"),
@@ -2276,7 +2277,7 @@ object Multimodal {
     * the exact integer duration all agree with the closed form. */
   private def flacInfoEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => flacBytes(id))
+    val payloads = synthPayloads(s, dir)(flacBytes)
     payloads
       .select($"doc_id",
         graft.functions.FlacInfo.flacInfo($"payload").as("fi"))
@@ -2340,7 +2341,7 @@ object Multimodal {
 
   private def tarMemberTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => tarBytes(id))
+    val payloads = synthPayloads(s, dir)(tarBytes)
     payloads
       .select($"doc_id",
         explode(graft.functions.TarWalk.tarMembers($"payload")).as("m"))
@@ -2430,7 +2431,7 @@ object Multimodal {
     * closed-form layout. */
   private def zipDirEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => zipBytes(id))
+    val payloads = synthPayloads(s, dir)(zipBytes)
     payloads
       .select($"doc_id",
         explode(graft.functions.ZipWalk.zipDir($"payload")).as("m"))
@@ -2507,7 +2508,7 @@ object Multimodal {
     * agree with the closed form. */
   private def h264SpsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => spsBytes(id))
+    val payloads = synthPayloads(s, dir)(spsBytes)
     payloads
       .select($"doc_id",
         graft.functions.H264Sps.spsCol($"payload").as("sp"))
@@ -2575,7 +2576,7 @@ object Multimodal {
     * form. */
   private def h265SpsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => h265SpsBytes(id))
+    val payloads = synthPayloads(s, dir)(h265SpsBytes)
     payloads
       .select($"doc_id",
         graft.functions.H265Sps.spsCol($"payload").as("sp"))
@@ -2635,7 +2636,7 @@ object Multimodal {
     * form. */
   private def jpegSofEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => jpegSofBytes(id))
+    val payloads = synthPayloads(s, dir)(jpegSofBytes)
     payloads
       .select($"doc_id",
         graft.functions.JpegSof.sofCol($"payload").as("sp"))
@@ -2707,7 +2708,7 @@ object Multimodal {
     * closed form. */
   private def heifDimsEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => heifBytes(id))
+    val payloads = synthPayloads(s, dir)(heifBytes)
     payloads
       .select($"doc_id",
         graft.functions.HeifDims.dimsCol($"payload").as("d"))
@@ -2831,7 +2832,7 @@ object Multimodal {
     * form. */
   private def exifMetaEntry(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val payloads = synthPayloads(s, dir)(id => exifBytes(id))
+    val payloads = synthPayloads(s, dir)(exifBytes)
     payloads
       .select($"doc_id",
         graft.functions.TiffIfd.exifMetaCol($"payload").as("ex"))

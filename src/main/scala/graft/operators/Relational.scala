@@ -2998,7 +2998,8 @@ object Relational {
     * `n_xy`, checkpointed) joined to their row and column margins
     * `n_x`, `n_y`, and the total count: the frame of A61's mutual
     * information and A91's G-test. */
-  private def crossCells(df: DataFrame, x: Column, y: Column): (DataFrame, Long) = {
+  private def crossCells(df: DataFrame, x: Column,
+      y: Column): (DataFrame, Long) = {
     import df.sparkSession.implicits._
     val cells = df
       .groupBy(x.as("x"), y.as("y"))

@@ -1703,7 +1703,8 @@ object Resilience {
     import events.sparkSession.implicits._
     val maxLag = 7
     val aggCols = acfSums(events, maxLag) :+ max($"n").as("nd")
-    val agg = acfLeads(events, maxLag).groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
+    val agg = acfLeads(events, maxLag).groupBy($"event_type")
+      .agg(aggCols.head, aggCols.tail: _*)
     val acfCols = (1 to maxLag).map(k =>
       round(col(s"num$k").cast("double") / $"den", 6).as(s"acf_$k"))
     val qTerms = (1 to maxLag).map { k =>
@@ -2237,7 +2238,8 @@ object Resilience {
     import events.sparkSession.implicits._
     val maxLag = 7
     val aggCols = acfSums(events, maxLag)
-    val agg = acfLeads(events, maxLag).groupBy($"event_type").agg(aggCols.head, aggCols.tail: _*)
+    val agg = acfLeads(events, maxLag).groupBy($"event_type")
+      .agg(aggCols.head, aggCols.tail: _*)
     val rArr = array((1 to maxLag).map(k =>
       col(s"num$k").cast("double") / $"den"): _*)
     // Durbin-Levinson as a functional fold: acc = (φ row, pacf list)

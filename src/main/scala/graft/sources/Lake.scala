@@ -60,12 +60,13 @@ object Lake {
       val dir = new org.apache.hadoop.fs.Path(root, getPartitionPathString(partCol, s))
       dir -> (if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath).toSeq else Nil)
     }
-    // bare read: the previous merge just rewrote the target, so a
-    // schema keyed by its version would miss every time and add a listing
     // a null or empty value is written to (and read back from) the
     // default partition as null, which no `IN` matches
-    val (dflt, named) = touched.partition { case (_, s) => s == null || s.isEmpty }
+    val (dflt, named) =
+      touched.partition { case (_, s) => s == null || s.isEmpty }
     val inNamed = col(partCol).isin(named.map(_._1).toIndexedSeq: _*)
+    // bare read: the previous merge just rewrote the target, so a
+    // schema keyed by its version would miss every time and add a listing
     val target = spark.read.parquet(targetDir)
       .filter(if (dflt.isEmpty) inNamed else inNamed || col(partCol).isNull)
     val kept = target.join(delta.select(col(keyCol)), Seq(keyCol), "left_anti")
