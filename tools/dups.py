@@ -141,7 +141,8 @@ def main():
         for f in files:
             for i, n in after.get(f, (0, []))[1]:
                 first, last = lines[f][i], lines[f][i + n - 1]
-                print(f"  {f}:{first[0]}-{last[0]}  {n} lines  {first[1][:70]}")
+                print(f"  {f}:{first[0]}-{last[0]}  {n} lines  "
+                      f"{first[1][:70]}")
     return 0
 
 

@@ -7,7 +7,7 @@
 Exports both revisions with tools/ab_bench.py's `export`, builds each
 with sbt (offline) and runs `graft.Plans DIR [keys...]` in it (every
 `SparkEntry.queries` key when none is given; DIR defaults to
-/root/testdata/sf0.001). Both sides run with the same
+~/testdata/sf0.001). Both sides run with the same
 SPARK_GRAFT_CPUS (default 4). Each key's formatted plan is normalised
 before the comparison:
 
@@ -113,7 +113,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True)
     ap.add_argument("--change", required=True)
-    ap.add_argument("--sf", default="/root/testdata/sf0.001")
+    ap.add_argument("--sf",
+                    default=os.path.expanduser("~/testdata/sf0.001"))
     ap.add_argument("--save")
     ap.add_argument("keys", nargs="*")
     a = ap.parse_args()
