@@ -4,13 +4,16 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import graft.functions.{DotProduct, MinHashAgg}
+import graft.functions.{ByteParser, DotProduct, MinHashAgg, ParseBytes}
 
 /** SparkSessionExtensions hook: registers the engine's custom
   * expressions AND table functions for SQL users, so a pure-SQL
   * client (JDBC/thrift) can run the library without a line of Scala:
   *
   *  - scalar/agg expressions: `dot_product(a, b)`, `minhash_sig(s, n)`
+  *  - every byte parser in [[graft.functions.ByteParser.all]] under
+  *    its SQL name: `webp_dims(payload)`, `mp4_samples(payload[,
+  *    handler])`, … — one builder loop, one arity check
   *  - `graft_q('<query key>', '<table dir>')` — the WHOLE operator
   *    registry as one table-valued function: every key in
   *    [[SparkEntry.queries]] becomes
@@ -24,6 +27,12 @@ import graft.functions.{DotProduct, MinHashAgg}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
+  /** The analysis error every builder raises on a bad call. */
+  private def usageError(usage: String) =
+    new org.apache.spark.sql.AnalysisException(
+      errorClass = "USER_RAISED_EXCEPTION",
+      messageParameters = Map("errorMessage" -> usage))
+
   /** Foldable-string TVF argument or analysis error (a column here
     * would otherwise surface as a runtime ClassCastException; a
     * foldable typed null — CAST(NULL AS STRING) — folds to null and
@@ -32,14 +41,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       usage: String): String = {
     if (i >= args.length || !args(i).foldable ||
         args(i).dataType != org.apache.spark.sql.types.StringType)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" -> usage))
+      throw usageError(usage)
     val v = args(i).eval()
-    if (v == null)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" -> usage))
+    if (v == null) throw usageError(usage)
     v.toString
   }
 
@@ -50,9 +54,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def litNumber(args: Seq[Expression], i: Int,
       usage: String): Double = {
     import org.apache.spark.sql.types._
-    def fail() = throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "USER_RAISED_EXCEPTION",
-      messageParameters = Map("errorMessage" -> usage))
+    def fail() = throw usageError(usage)
     if (i >= args.length || !args(i).foldable ||
         !args(i).dataType.isInstanceOf[NumericType]) fail()
     args(i).eval() match {
@@ -76,12 +78,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     * a lazy plan here at zero runtime cost. */
   private def registryPlan(name: String, dir: String): LogicalPlan = {
     val fn = SparkEntry.queries.getOrElse(name,
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "USER_RAISED_EXCEPTION",
-        messageParameters = Map("errorMessage" ->
-          (s"unknown graft query '$name'; keys: " +
-            SparkEntry.queries.keys.toSeq.sorted.take(8).mkString(", ") +
-            s", ... (${SparkEntry.queries.size} total)"))))
+      throw usageError(s"unknown graft query '$name'; keys: " +
+        SparkEntry.queries.keys.toSeq.sorted.take(8).mkString(", ") +
+        s", ... (${SparkEntry.queries.size} total)"))
     fn(org.apache.spark.sql.SparkSession.active, dir)
       .queryExecution.logical
   }
@@ -125,134 +124,45 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val usage = "graft_shock(dir, pct, horizon) requires a " +
           "literal string dir, a literal shock fraction in (0, 1), " +
           "and a literal horizon in [1, 1000] years"
-        if (args.length != 3)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" -> usage))
+        if (args.length != 3) throw usageError(usage)
         val dir = litString(args, 0, usage)
         val pct = litNumber(args, 1, usage)
         val horizon = litNumber(args, 2, usage)
         if (!(pct > 0.0 && pct < 1.0))
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" ->
-              s"graft_shock pct must be a fraction in (0, 1), got $pct"))
+          throw usageError(
+            s"graft_shock pct must be a fraction in (0, 1), got $pct")
         if (horizon < 1.0 || horizon > 1000.0 || horizon != horizon.floor)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" ->
-              (s"graft_shock horizon must be an integer in [1, 1000], " +
-                s"got $horizon")))
+          throw usageError(
+            s"graft_shock horizon must be an integer in [1, 1000], " +
+              s"got $horizon")
         graft.operators.Resilience.shockSimParams(
           org.apache.spark.sql.SparkSession.active, dir, pct,
           horizon.toInt).queryExecution.logical
       }))
-    // the mp4 demux family for pure-SQL clients: a second optional
-    // literal-string argument routes by hdlr handler type
-    e.injectFunction((
-      new FunctionIdentifier("mp4_samples"),
-      new ExpressionInfo(classOf[graft.functions.Mp4SampleTable].getName,
-        "mp4_samples"),
-      (args: Seq[Expression]) =>
-        if (args.length <= 1) graft.functions.Mp4SampleTable(args.head)
-        else graft.functions.Mp4SampleTable(args.head, litString(args, 1,
-          "mp4_samples(payload[, handler]) requires a literal handler"))))
-    e.injectFunction((
-      new FunctionIdentifier("mp4_timing"),
-      new ExpressionInfo(classOf[graft.functions.Mp4TimingTable].getName,
-        "mp4_timing"),
-      (args: Seq[Expression]) =>
-        if (args.length <= 1) graft.functions.Mp4TimingTable(args.head)
-        else graft.functions.Mp4TimingTable(args.head, litString(args, 1,
-          "mp4_timing(payload[, handler]) requires a literal handler"))))
-    e.injectFunction((
-      new FunctionIdentifier("mp4_tracks"),
-      new ExpressionInfo(classOf[graft.functions.Mp4TrackDir].getName,
-        "mp4_tracks"),
-      (args: Seq[Expression]) => graft.functions.Mp4TrackDir(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("mp4_edits"),
-      new ExpressionInfo(classOf[graft.functions.Mp4EditList].getName,
-        "mp4_edits"),
-      (args: Seq[Expression]) =>
-        if (args.length <= 1) graft.functions.Mp4EditList(args.head)
-        else graft.functions.Mp4EditList(args.head, litString(args, 1,
-          "mp4_edits(payload[, handler]) requires a literal handler"))))
-    e.injectFunction((
-      new FunctionIdentifier("mp4_frag_samples"),
-      new ExpressionInfo(classOf[graft.functions.Mp4FragTable].getName,
-        "mp4_frag_samples"),
-      (args: Seq[Expression]) => graft.functions.Mp4FragTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("pdf_xref"),
-      new ExpressionInfo(classOf[graft.functions.PdfXrefTable].getName,
-        "pdf_xref"),
-      (args: Seq[Expression]) => graft.functions.PdfXrefTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("mkv_tracks"),
-      new ExpressionInfo(classOf[graft.functions.MkvTrackDir].getName,
-        "mkv_tracks"),
-      (args: Seq[Expression]) => graft.functions.MkvTrackDir(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("ogg_pages"),
-      new ExpressionInfo(classOf[graft.functions.OggPageTable].getName,
-        "ogg_pages"),
-      (args: Seq[Expression]) => graft.functions.OggPageTable(args.head)))
-    // the audio/image header-demux family (G22/G24/G25)
-    e.injectFunction((
-      new FunctionIdentifier("mp3_frames"),
-      new ExpressionInfo(classOf[graft.functions.Mp3FrameTable].getName,
-        "mp3_frames"),
-      (args: Seq[Expression]) => graft.functions.Mp3FrameTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("flac_info"),
-      new ExpressionInfo(classOf[graft.functions.FlacStreamInfo].getName,
-        "flac_info"),
-      (args: Seq[Expression]) => graft.functions.FlacStreamInfo(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("tar_members"),
-      new ExpressionInfo(classOf[graft.functions.TarMemberTable].getName,
-        "tar_members"),
-      (args: Seq[Expression]) => graft.functions.TarMemberTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("zip_dir"),
-      new ExpressionInfo(classOf[graft.functions.ZipDirTable].getName,
-        "zip_dir"),
-      (args: Seq[Expression]) => graft.functions.ZipDirTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("h264_sps"),
-      new ExpressionInfo(classOf[graft.functions.H264SpsInfo].getName,
-        "h264_sps"),
-      (args: Seq[Expression]) => graft.functions.H264SpsInfo(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("h265_sps"),
-      new ExpressionInfo(classOf[graft.functions.H265SpsInfo].getName,
-        "h265_sps"),
-      (args: Seq[Expression]) => graft.functions.H265SpsInfo(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("jpeg_sof"),
-      new ExpressionInfo(classOf[graft.functions.JpegSofInfo].getName,
-        "jpeg_sof"),
-      (args: Seq[Expression]) => graft.functions.JpegSofInfo(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("aac_frames"),
-      new ExpressionInfo(classOf[graft.functions.AacFrameTable].getName,
-        "aac_frames"),
-      (args: Seq[Expression]) => graft.functions.AacFrameTable(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("webp_dims"),
-      new ExpressionInfo(classOf[graft.functions.WebpDimsInfo].getName,
-        "webp_dims"),
-      (args: Seq[Expression]) => graft.functions.WebpDimsInfo(args.head)))
-    e.injectFunction((
-      new FunctionIdentifier("exif_meta"),
-      new ExpressionInfo(classOf[graft.functions.ExifMeta].getName,
-        "exif_meta"),
-      (args: Seq[Expression]) => graft.functions.ExifMeta(args.head)))
+    // every byte parser of the multimodal family, one builder each;
+    // the mp4 demux parsers take a second, optional literal handler
+    for (p <- ByteParser.all) {
+      val usage =
+        if (p.routed) s"${p.sqlName}(payload[, handler]) requires a " +
+          "binary payload and an optional literal handler"
+        else s"${p.sqlName}(payload) requires one binary payload"
+      e.injectFunction((
+        new FunctionIdentifier(p.sqlName),
+        new ExpressionInfo(classOf[ParseBytes].getName, p.sqlName),
+        (args: Seq[Expression]) => args match {
+          case Seq(payload) => ParseBytes(p, payload)
+          case Seq(payload, _) if p.routed =>
+            ParseBytes(p, payload, litString(args, 1, usage))
+          case _ => throw usageError(usage)
+        }))
+    }
     e.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
+      (args: Seq[Expression]) => args match {
+        case Seq(a, b) => DotProduct(a, b)
+        case _ => throw usageError("dot_product(a, b) requires two arrays")
+      }))
     e.injectFunction((
       new FunctionIdentifier("minhash_sig"),
       new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_sig"),
@@ -260,14 +170,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // the permutation count must be a compile-time constant — a
         // column here would otherwise surface as an obscure runtime
         // ClassCastException instead of an analysis error
-        if (args.length != 2 || !args(1).foldable) {
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "USER_RAISED_EXCEPTION",
-            messageParameters = Map("errorMessage" ->
-              "minhash_sig(col, numPerm) requires a literal numPerm"))
-        }
-        val n = args(1).eval().asInstanceOf[Number].intValue()
-        MinHashAgg(args.head, n).toAggregateExpression()
+        val usage = "minhash_sig(col, numPerm) requires a literal " +
+          "numPerm, an integer >= 1"
+        if (args.length != 2) throw usageError(usage)
+        val n = litNumber(args, 1, usage)
+        if (n < 1 || n != n.floor || n > Int.MaxValue)
+          throw usageError(usage)
+        MinHashAgg(args.head, n.toInt).toAggregateExpression()
       }))
   }
 }

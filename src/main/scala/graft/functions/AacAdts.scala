@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -84,22 +80,8 @@ object AacAdts {
     new GenericArrayData(out.toArray)
   }
 
-  /** `aac_frames(payload)` as a codegen-friendly Column. */
-  def aacFrames(c: Column): Column =
-    GraftSqlBridge.column(AacFrameTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<...>> (empty on
-  * malformation) inside whole-stage codegen (one static call, the
-  * Mp3FrameTable shape). */
-case class AacFrameTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"aac_frames needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `aac_frames(payload)`: the parser entry and its Column builder. */
+  val aacFrames: ByteParser = ByteParser("aac_frames", ArrayType(StructType(Seq(
     StructField("frame_idx", LongType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("frame_bytes", LongType, nullable = false),
@@ -108,14 +90,6 @@ case class AacFrameTable(child: Expression) extends UnaryExpression {
     StructField("channels", LongType, nullable = false),
     StructField("crc_present", LongType, nullable = false),
     StructField("n_blocks", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    AacAdts.frames(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.AacAdts.frames($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(frames)
 }

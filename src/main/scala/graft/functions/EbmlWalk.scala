@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -220,21 +216,8 @@ object EbmlWalk {
     new GenericArrayData(out.toArray)
   }
 
-  /** `mkv_tracks(payload)` as a codegen-friendly Column. */
-  def mkvTracks(c: Column): Column =
-    GraftSqlBridge.column(MkvTrackDir(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<...>> inside whole-stage
-  * codegen (one static call, the Mp4SampleTable shape). */
-case class MkvTrackDir(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mkv_tracks needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `mkv_tracks(payload)`: the parser entry and its Column builder. */
+  val mkvTracks: ByteParser = ByteParser("mkv_tracks", ArrayType(StructType(Seq(
     StructField("track_idx", LongType, nullable = false),
     StructField("track_number", LongType, nullable = false),
     StructField("track_type", LongType, nullable = false),
@@ -243,14 +226,6 @@ case class MkvTrackDir(child: Expression) extends UnaryExpression {
     StructField("timescale_ns", LongType, nullable = false),
     StructField("n_clusters", LongType, nullable = false),
     StructField("cluster0_ts", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    EbmlWalk.tracks(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.EbmlWalk.tracks($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(tracks)
 }

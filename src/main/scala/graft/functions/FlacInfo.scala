@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** FLAC STREAMINFO parse as row-local BIT math — the lossless-audio
@@ -75,23 +71,8 @@ object FlacInfo {
       ts * 1000L / sr)
   }
 
-  /** `flac_info(payload)` as a codegen-friendly Column. */
-  def flacInfo(c: Column): Column =
-    GraftSqlBridge.column(FlacStreamInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<min_blocksize, max_blocksize,
-  * min_framesize, max_framesize, sample_rate, channels,
-  * bits_per_sample, total_samples, n_blocks, duration_ms>, NULL on
-  * malformation, inside whole-stage codegen. */
-case class FlacStreamInfo(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"flac_info needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `flac_info(payload)`: the parser entry and its Column builder. */
+  val flacInfo: ByteParser = ByteParser("flac_info", StructType(Seq(
     StructField("min_blocksize", LongType, nullable = false),
     StructField("max_blocksize", LongType, nullable = false),
     StructField("min_framesize", LongType, nullable = false),
@@ -101,22 +82,6 @@ case class FlacStreamInfo(child: Expression) extends UnaryExpression {
     StructField("bits_per_sample", LongType, nullable = false),
     StructField("total_samples", LongType, nullable = false),
     StructField("n_blocks", LongType, nullable = false),
-    StructField("duration_ms", LongType, nullable = false)))
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    FlacInfo.info(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("flacInfo")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.FlacInfo.info($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("duration_ms", LongType, nullable = false))),
+    nullOnMalformed = true)(info)
 }

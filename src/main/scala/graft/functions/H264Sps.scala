@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** H.264/AVC Sequence Parameter Set parse — the CODEC leg of the
@@ -42,60 +38,6 @@ object H264Sps {
     * Everything not on this list quarantines. */
   private val BaselineLayoutProfiles: Set[Long] = Set(66L, 77L, 88L)
 
-  /** Strip the NAL header byte and emulation-prevention bytes. */
-  private def rbsp(b: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](b.length - 1)
-    var n = 0
-    var i = 1
-    var zeros = 0
-    while (i < b.length) {
-      val v = b(i)
-      if (zeros >= 2 && v == 3) {
-        zeros = 0 // skip the emulation-prevention byte
-      } else {
-        out(n) = v; n += 1
-        zeros = if (v == 0) zeros + 1 else 0
-      }
-      i += 1
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
-
-  private final class BitReader(val b: Array[Byte]) {
-    var pos = 0 // bit position
-    def u(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val byteIdx = pos >> 3
-        if (byteIdx >= b.length) { pos = Int.MaxValue; return -1L }
-        v = (v << 1) | ((b(byteIdx) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def ue(): Long = {
-      var zeros = 0
-      while (zeros <= 31) {
-        val byteIdx = pos >> 3
-        if (byteIdx >= b.length) { pos = Int.MaxValue; return -1L }
-        val bit = (b(byteIdx) >> (7 - (pos & 7))) & 1
-        pos += 1
-        if (bit == 1) {
-          if (zeros == 0) return 0L
-          val rest = u(zeros)
-          if (rest < 0) return -1L
-          return (1L << zeros) - 1L + rest
-        }
-        zeros += 1
-      }
-      pos = Int.MaxValue
-      -1L
-    }
-    def ok: Boolean = pos <= b.length * 8
-  }
-
   /** SPS row (profile_idc, level_idc, sps_id, log2_max_frame_num,
     * poc_type, max_ref_frames, frame_mbs_only, width, height), or
     * null on any malformation / out-of-scope layout. */
@@ -103,7 +45,7 @@ object H264Sps {
     if (bytes == null || bytes.length < 5) return null
     if ((bytes(0) & 0x80) != 0) return null // forbidden_zero_bit
     if ((bytes(0) & 0x1f) != 7) return null // nal_unit_type SPS
-    val r = new BitReader(rbsp(bytes))
+    val r = NalBitReader(bytes, 1)
     val profile = r.u(8)
     r.u(8) // constraint flags + reserved
     val level = r.u(8)
@@ -145,24 +87,8 @@ object H264Sps {
       frameMbsOnly, width, height)
   }
 
-  /** `h264_sps(payload)` as a codegen-friendly Column. */
-  def spsCol(c: Column): Column =
-    GraftSqlBridge.column(H264SpsInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<profile_idc, level_idc, sps_id,
-  * log2_max_frame_num, poc_type, max_ref_frames, frame_mbs_only,
-  * width, height> (null on malformation) inside codegen. */
-case class H264SpsInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"h264_sps needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `h264_sps(payload)`: the parser entry and its Column builder. */
+  val spsCol: ByteParser = ByteParser("h264_sps", StructType(Seq(
     StructField("profile_idc", LongType, nullable = false),
     StructField("level_idc", LongType, nullable = false),
     StructField("sps_id", LongType, nullable = false),
@@ -171,20 +97,6 @@ case class H264SpsInfo(child: Expression) extends UnaryExpression {
     StructField("max_ref_frames", LongType, nullable = false),
     StructField("frame_mbs_only", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    H264Sps.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("spsInfo")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.H264Sps.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("height", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

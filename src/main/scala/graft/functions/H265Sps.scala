@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** H.265/HEVC Sequence Parameter Set parse — the modern-codec leg of
@@ -32,68 +28,6 @@ object H265Sps {
 
   private val KnownProfiles: Set[Long] = Set(1L, 2L, 3L, 4L)
 
-  /** Strip the TWO NAL header bytes and emulation-prevention bytes. */
-  private def rbsp(b: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](b.length - 2)
-    var n = 0
-    var i = 2
-    var zeros = 0
-    while (i < b.length) {
-      val v = b(i)
-      if (zeros >= 2 && v == 3) {
-        zeros = 0 // skip the emulation-prevention byte
-      } else {
-        out(n) = v; n += 1
-        zeros = if (v == 0) zeros + 1 else 0
-      }
-      i += 1
-    }
-    java.util.Arrays.copyOf(out, n)
-  }
-
-  private final class BitReader(val b: Array[Byte]) {
-    var pos = 0 // bit position
-    def u(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val byteIdx = pos >> 3
-        if (byteIdx >= b.length) { pos = Int.MaxValue; return -1L }
-        v = (v << 1) | ((b(byteIdx) >> (7 - (pos & 7))) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    /** Advance n bits without decoding (sub-layer PTL blocks exceed
-      * 63 bits, so u() can't skip them). Returns false on overrun. */
-    def skip(n: Int): Boolean = {
-      // compare BEFORE advancing: a prior overrun parks pos at
-      // Int.MaxValue, and pos += n would wrap negative
-      if (pos > b.length * 8 - n) { pos = Int.MaxValue; false }
-      else { pos += n; true }
-    }
-    def ue(): Long = {
-      var zeros = 0
-      while (zeros <= 31) {
-        val byteIdx = pos >> 3
-        if (byteIdx >= b.length) { pos = Int.MaxValue; return -1L }
-        val bit = (b(byteIdx) >> (7 - (pos & 7))) & 1
-        pos += 1
-        if (bit == 1) {
-          if (zeros == 0) return 0L
-          val rest = u(zeros)
-          if (rest < 0) return -1L
-          return (1L << zeros) - 1L + rest
-        }
-        zeros += 1
-      }
-      pos = Int.MaxValue
-      -1L
-    }
-    def ok: Boolean = pos <= b.length * 8
-  }
-
   /** SPS row (profile_idc, tier_flag, level_idc, chroma_format,
     * bit_depth_luma, bit_depth_chroma, width, height), or null on
     * any malformation / out-of-scope layout. */
@@ -104,7 +38,7 @@ object H265Sps {
     val layerId = ((bytes(0) & 1) << 5) | ((bytes(1) >> 3) & 0x1f)
     if (layerId != 0) return null // base layer only — whitelist
     if ((bytes(1) & 7) == 0) return null // temporal_id_plus1 != 0
-    val r = new BitReader(rbsp(bytes))
+    val r = NalBitReader(bytes, 2)
     r.u(4) // sps_video_parameter_set_id
     val maxSubLayersMinus1 = r.u(3)
     if (maxSubLayersMinus1 > 6) return null // spec ceiling (§7.4.3.2.1)
@@ -167,24 +101,8 @@ object H265Sps {
       width, height)
   }
 
-  /** `h265_sps(payload)` as a codegen-friendly Column. */
-  def spsCol(c: Column): Column =
-    GraftSqlBridge.column(H265SpsInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<profile_idc, tier_flag, level_idc,
-  * chroma_format, bit_depth_luma, bit_depth_chroma, width, height>
-  * (null on malformation) inside codegen. */
-case class H265SpsInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"h265_sps needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `h265_sps(payload)`: the parser entry and its Column builder. */
+  val spsCol: ByteParser = ByteParser("h265_sps", StructType(Seq(
     StructField("profile_idc", LongType, nullable = false),
     StructField("tier_flag", LongType, nullable = false),
     StructField("level_idc", LongType, nullable = false),
@@ -192,20 +110,6 @@ case class H265SpsInfo(child: Expression) extends UnaryExpression {
     StructField("bit_depth_luma", LongType, nullable = false),
     StructField("bit_depth_chroma", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    H265Sps.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("spsInfo")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.H265Sps.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("height", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -112,42 +108,13 @@ object HeifDims {
       width, height, rot)
   }
 
-  /** `heif_dims(payload)` as a codegen-friendly Column. */
-  def dimsCol(c: Column): Column =
-    GraftSqlBridge.column(HeifDimsInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<brand, n_items, primary_id,
-  * width, height, rot_angle> (null on malformation) inside codegen. */
-case class HeifDimsInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"heif_dims needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `heif_dims(payload)`: the parser entry and its Column builder. */
+  val dimsCol: ByteParser = ByteParser("heif_dims", StructType(Seq(
     StructField("brand", StringType, nullable = false),
     StructField("n_items", LongType, nullable = false),
     StructField("primary_id", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
     StructField("height", LongType, nullable = false),
-    StructField("rot_angle", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    HeifDims.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("heifDims")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.HeifDims.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("rot_angle", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** JPEG START-OF-FRAME scan as row-local byte math — the dimensions
@@ -76,43 +72,13 @@ object JpegSof {
     null // ran out of bytes before any SOF
   }
 
-  /** `jpeg_sof(payload)` as a codegen-friendly Column. */
-  def sofCol(c: Column): Column =
-    GraftSqlBridge.column(JpegSofInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<progressive, precision, width,
-  * height, n_components, n_dqt> (null on malformation) inside
-  * codegen. */
-case class JpegSofInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"jpeg_sof needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `jpeg_sof(payload)`: the parser entry and its Column builder. */
+  val sofCol: ByteParser = ByteParser("jpeg_sof", StructType(Seq(
     StructField("progressive", LongType, nullable = false),
     StructField("precision", LongType, nullable = false),
     StructField("width", LongType, nullable = false),
     StructField("height", LongType, nullable = false),
     StructField("n_components", LongType, nullable = false),
-    StructField("n_dqt", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    JpegSof.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("sofInfo")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.JpegSof.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("n_dqt", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.LongType
 
 /** Codegen'd JPEG SOF marker-chain walk: returns the frame dimensions
   * `(width << 32) | height` from the first SOF0-15 frame header
@@ -18,64 +14,16 @@ import org.apache.spark.sql.types._
   * sniffer's other branches the projection fell out of whole-stage
   * codegen and evaluated the duplicated tree interpreted, making
   * `mm_sniff` the slowest query in the suite (3.7 s at sf0.1). This
-  * expression is the walk as the ~10-line loop it always was, on raw
+  * parser is the walk as the ~10-line loop it always was, on raw
   * payload bytes — no 8 KB hex detour, one tight codegen'd method.
   * Bounds short-circuit to null (a truncated chain can never throw);
   * a hop landing on a non-FF byte still advances by the declared
   * length, exactly like the column walk, so malformed chains drain
   * the hop budget rather than false-matching. */
-case class JpegSofDims(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"jpeg_sof_dims needs binary, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(b: Any): Any =
-    JpegSofDims.walk(b.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val buf = ctx.freshName("buf")
-      val lim = ctx.freshName("lim")
-      val out = ctx.freshName("out")
-      val p = ctx.freshName("p")
-      val hop = ctx.freshName("hop")
-      val m = ctx.freshName("m")
-      s"""
-         |byte[] $buf = $c;
-         |int $lim = Math.min($buf.length, 4096);
-         |long $out = -1L;
-         |int $p = 2;
-         |for (int $hop = 0; $hop < 8 && $out < 0 && $p + 3 < $lim; $hop++) {
-         |  int $m = $buf[$p + 1] & 0xFF;
-         |  if (($buf[$p] & 0xFF) == 0xFF && ($m & 0xF0) == 0xC0
-         |      && $m != 0xC4 && $m != 0xC8 && $m != 0xCC) {
-         |    if ($p + 8 < $lim) {
-         |      long ${out}w = (long)((($buf[$p + 7] & 0xFF) << 8) | ($buf[$p + 8] & 0xFF));
-         |      long ${out}h = (long)((($buf[$p + 5] & 0xFF) << 8) | ($buf[$p + 6] & 0xFF));
-         |      $out = (${out}w << 32) | ${out}h;
-         |    }
-         |    break;
-         |  }
-         |  $p += 2 + ((($buf[$p + 2] & 0xFF) << 8) | ($buf[$p + 3] & 0xFF));
-         |}
-         |if ($out < 0) { ${ev.isNull} = true; } else { ${ev.value} = $out; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object JpegSofDims {
 
-  /** Interpreted twin of the generated loop (kept in lock-step). */
-  private[functions] def walk(buf: Array[Byte]): Any = {
+  /** The marker-chain walk over the first 4 KB and 8 hops. */
+  private def walk(buf: Array[Byte]): Any = {
     val lim = math.min(buf.length, 4096)
     var p = 2
     var hop = 0
@@ -96,7 +44,8 @@ object JpegSofDims {
     null
   }
 
-  /** Packed `(width << 32) | height` of the first SOF, else null. */
-  def dims(payload: Column): Column =
-    GraftSqlBridge.column(JpegSofDims(GraftSqlBridge.expression(payload)))
+  /** `jpeg_sof_dims(payload)`: packed `(width << 32) | height` of the
+    * first SOF, else null. */
+  val dims: ByteParser =
+    ByteParser("jpeg_sof_dims", LongType, nullOnMalformed = true)(walk)
 }

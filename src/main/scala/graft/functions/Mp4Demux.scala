@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -441,166 +437,52 @@ object Mp4Demux {
     empty
   }
 
-  /** `mp4_edits(payload, handler)` as a codegen-friendly Column. */
-  def mp4EditsFor(c: Column, handler: String): Column =
-    GraftSqlBridge.column(Mp4EditList(GraftSqlBridge.expression(c), handler))
-
-  /** `mp4_samples(payload)` as a codegen-friendly Column. */
-  def mp4Samples(c: Column): Column =
-    GraftSqlBridge.column(Mp4SampleTable(GraftSqlBridge.expression(c)))
-
-  /** `mp4_timing(payload)` as a codegen-friendly Column. */
-  def mp4Timing(c: Column): Column =
-    GraftSqlBridge.column(Mp4TimingTable(GraftSqlBridge.expression(c)))
-
-  /** Handler-routed read plan (multi-track containers). */
-  def mp4SamplesFor(c: Column, handler: String): Column =
-    GraftSqlBridge.column(Mp4SampleTable(
-      GraftSqlBridge.expression(c), handler))
-
-  /** Handler-routed timing plan (multi-track containers). */
-  def mp4TimingFor(c: Column, handler: String): Column =
-    GraftSqlBridge.column(Mp4TimingTable(
-      GraftSqlBridge.expression(c), handler))
-
-  /** `mp4_tracks(payload)`: the per-trak directory. */
-  def mp4Tracks(c: Column): Column =
-    GraftSqlBridge.column(Mp4TrackDir(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<sample_idx, chunk_idx,
-  * file_offset, sample_size>> inside whole-stage codegen (one static
-  * call, the PolyHash pattern). An empty `handler` walks the first
-  * trak; otherwise the first trak with that hdlr handler type. */
-case class Mp4SampleTable(child: Expression, handler: String = "")
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp4_samples needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("sample_idx", LongType, nullable = false),
-    StructField("chunk_idx", LongType, nullable = false),
-    StructField("file_offset", LongType, nullable = false),
-    StructField("sample_size", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    if (handler.isEmpty) Mp4Demux.samples(input.asInstanceOf[Array[Byte]])
-    else Mp4Demux.samplesFor(input.asInstanceOf[Array[Byte]],
-      UTF8String.fromString(handler))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (handler.isEmpty)
-      defineCodeGen(ctx, ev, in => s"graft.functions.Mp4Demux.samples($in)")
-    else {
-      val h = ctx.addReferenceObj("handler", UTF8String.fromString(handler),
-        classOf[UTF8String].getName)
-      defineCodeGen(ctx, ev,
-        in => s"graft.functions.Mp4Demux.samplesFor($in, $h)")
-    }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Scalar wrapper: binary → array<struct<sample_idx, dts, pts,
-  * duration, is_sync>> inside whole-stage codegen. */
-case class Mp4TimingTable(child: Expression, handler: String = "")
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp4_timing needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("sample_idx", LongType, nullable = false),
-    StructField("dts", LongType, nullable = false),
-    StructField("pts", LongType, nullable = false),
-    StructField("duration", LongType, nullable = false),
-    StructField("is_sync", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    if (handler.isEmpty) Mp4Demux.timing(input.asInstanceOf[Array[Byte]])
-    else Mp4Demux.timingFor(input.asInstanceOf[Array[Byte]],
-      UTF8String.fromString(handler))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (handler.isEmpty)
-      defineCodeGen(ctx, ev, in => s"graft.functions.Mp4Demux.timing($in)")
-    else {
-      val h = ctx.addReferenceObj("handler", UTF8String.fromString(handler),
-        classOf[UTF8String].getName)
-      defineCodeGen(ctx, ev,
-        in => s"graft.functions.Mp4Demux.timingFor($in, $h)")
-    }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Scalar wrapper: binary → array<struct<track_idx, handler,
-  * timescale, duration, n_samples, n_chunks>> — the per-trak
-  * directory a routing policy consumes (G18). */
-case class Mp4TrackDir(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp4_tracks needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("track_idx", LongType, nullable = false),
-    StructField("handler", StringType, nullable = true),
-    StructField("timescale", LongType, nullable = true),
-    StructField("duration", LongType, nullable = true),
-    StructField("n_samples", LongType, nullable = true),
-    StructField("n_chunks", LongType, nullable = true))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Demux.tracks(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.Mp4Demux.tracks($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Scalar wrapper: binary → array<struct<edit_idx, segment_duration,
-  * media_time, rate_ppm>> inside whole-stage codegen. An empty
-  * `handler` reads the first trak's edit list. */
-case class Mp4EditList(child: Expression, handler: String = "")
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp4_edits needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("edit_idx", LongType, nullable = false),
-    StructField("segment_duration", LongType, nullable = false),
-    StructField("media_time", LongType, nullable = false),
-    StructField("rate_ppm", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Demux.editsFor(input.asInstanceOf[Array[Byte]],
-      UTF8String.fromString(handler))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val h = ctx.addReferenceObj("handler", UTF8String.fromString(handler),
-      classOf[UTF8String].getName)
-    defineCodeGen(ctx, ev,
-      in => s"graft.functions.Mp4Demux.editsFor($in, $h)")
+  /** `mp4_samples(payload[, handler])`: the per-sample read plan. */
+  val mp4Samples: ByteParser = ByteParser.routed("mp4_samples",
+    ArrayType(StructType(Seq(
+      StructField("sample_idx", LongType, nullable = false),
+      StructField("chunk_idx", LongType, nullable = false),
+      StructField("file_offset", LongType, nullable = false),
+      StructField("sample_size", LongType, nullable = false))),
+      containsNull = false)) { h =>
+    if (h.isEmpty) samples
+    else { val u = UTF8String.fromString(h); samplesFor(_, u) }
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** `mp4_timing(payload[, handler])`: the per-sample timing plan. */
+  val mp4Timing: ByteParser = ByteParser.routed("mp4_timing",
+    ArrayType(StructType(Seq(
+      StructField("sample_idx", LongType, nullable = false),
+      StructField("dts", LongType, nullable = false),
+      StructField("pts", LongType, nullable = false),
+      StructField("duration", LongType, nullable = false),
+      StructField("is_sync", LongType, nullable = false))),
+      containsNull = false)) { h =>
+    if (h.isEmpty) timing
+    else { val u = UTF8String.fromString(h); timingFor(_, u) }
+  }
+
+  /** `mp4_edits(payload[, handler])`: the edit list ("" = first trak). */
+  val mp4Edits: ByteParser = ByteParser.routed("mp4_edits",
+    ArrayType(StructType(Seq(
+      StructField("edit_idx", LongType, nullable = false),
+      StructField("segment_duration", LongType, nullable = false),
+      StructField("media_time", LongType, nullable = false),
+      StructField("rate_ppm", LongType, nullable = false))),
+      containsNull = false)) { h =>
+    val u = UTF8String.fromString(h); editsFor(_, u)
+  }
+
+  /** `mp4_tracks(payload)`: the per-trak directory a routing policy
+    * consumes (G18). */
+  val mp4Tracks: ByteParser = ByteParser("mp4_tracks",
+    ArrayType(StructType(Seq(
+      StructField("track_idx", LongType, nullable = false),
+      StructField("handler", StringType, nullable = true),
+      StructField("timescale", LongType, nullable = true),
+      StructField("duration", LongType, nullable = true),
+      StructField("n_samples", LongType, nullable = true),
+      StructField("n_chunks", LongType, nullable = true))),
+      containsNull = false),
+    nullOnMalformed = false)(tracks)
 }

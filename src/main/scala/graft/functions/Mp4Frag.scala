@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -244,22 +240,9 @@ object Mp4Frag {
     true
   }
 
-  /** `mp4_frag_samples(payload)` as a codegen-friendly Column. */
-  def mp4FragSamples(c: Column): Column =
-    GraftSqlBridge.column(Mp4FragTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<seq, track_id, sample_idx,
-  * file_offset, sample_size, dts, pts, duration, is_sync>> inside
-  * whole-stage codegen (one static call, the Mp4SampleTable shape). */
-case class Mp4FragTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp4_frag_samples needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `mp4_frag_samples(payload)`: the parser entry and its Column builder. */
+  val mp4FragSamples: ByteParser = ByteParser("mp4_frag_samples",
+    ArrayType(StructType(Seq(
     StructField("seq", LongType, nullable = false),
     StructField("track_id", LongType, nullable = false),
     StructField("sample_idx", LongType, nullable = false),
@@ -269,14 +252,6 @@ case class Mp4FragTable(child: Expression) extends UnaryExpression {
     StructField("pts", LongType, nullable = false),
     StructField("duration", LongType, nullable = false),
     StructField("is_sync", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    Mp4Frag.fragSamples(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.Mp4Frag.fragSamples($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(fragSamples)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -100,9 +96,16 @@ object MpegAudio {
     new GenericArrayData(out.toArray)
   }
 
-  /** `mp3_frames(payload)` as a codegen-friendly Column. */
-  def mp3Frames(c: Column): Column =
-    GraftSqlBridge.column(Mp3FrameTable(GraftSqlBridge.expression(c)))
+  /** `mp3_frames(payload)`: the parser entry and its Column builder. */
+  val mp3Frames: ByteParser = ByteParser("mp3_frames", ArrayType(StructType(Seq(
+    StructField("frame_idx", LongType, nullable = false),
+    StructField("offset", LongType, nullable = false),
+    StructField("frame_bytes", LongType, nullable = false),
+    StructField("bitrate_kbps", LongType, nullable = false),
+    StructField("sample_rate", LongType, nullable = false),
+    StructField("padding", LongType, nullable = false))),
+    containsNull = false),
+    nullOnMalformed = false)(frames)
 
   /** ID3v2 TEXT-FRAME walk (G30; the id3v2.3/2.4 informal
     * standards): the ID3 tag the G22 frame walk SKIPS is itself the
@@ -172,60 +175,11 @@ object MpegAudio {
     new GenericArrayData(out.toArray)
   }
 
-  /** `id3_frames(payload)` as a codegen-friendly Column. */
-  def id3FramesCol(c: Column): Column =
-    GraftSqlBridge.column(Id3TextFrames(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<frame_id, content>> inside
-  * whole-stage codegen. */
-case class Id3TextFrames(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"id3_frames needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `id3_frames(payload)`: the parser entry and its Column builder. */
+  val id3FramesCol: ByteParser = ByteParser("id3_frames",
+    ArrayType(StructType(Seq(
     StructField("frame_id", StringType, nullable = false),
     StructField("content", StringType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MpegAudio.id3Frames(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.MpegAudio.id3Frames($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Scalar wrapper: binary → array<struct<frame_idx, offset,
-  * frame_bytes, bitrate_kbps, sample_rate, padding>> inside
-  * whole-stage codegen (one static call, the Mp4SampleTable shape). */
-case class Mp3FrameTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"mp3_frames needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("frame_idx", LongType, nullable = false),
-    StructField("offset", LongType, nullable = false),
-    StructField("frame_bytes", LongType, nullable = false),
-    StructField("bitrate_kbps", LongType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("padding", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    MpegAudio.frames(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.MpegAudio.frames($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(id3Frames)
 }

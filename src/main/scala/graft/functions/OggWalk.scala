@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -118,21 +114,8 @@ object OggWalk {
     * fully-assembled page buffer, to be written at offset 22. */
   def crcOf(page: Array[Byte]): Int = pageCrc(page, 0, page.length)
 
-  /** `ogg_pages(payload)` as a codegen-friendly Column. */
-  def oggPages(c: Column): Column =
-    GraftSqlBridge.column(OggPageTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<...>> inside whole-stage
-  * codegen (one static call, the Mp4SampleTable shape). */
-case class OggPageTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ogg_pages needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `ogg_pages(payload)`: the parser entry and its Column builder. */
+  val oggPages: ByteParser = ByteParser("ogg_pages", ArrayType(StructType(Seq(
     StructField("page_idx", LongType, nullable = false),
     StructField("serial", LongType, nullable = false),
     StructField("page_seq", LongType, nullable = false),
@@ -144,14 +127,6 @@ case class OggPageTable(child: Expression) extends UnaryExpression {
     StructField("n_packets", LongType, nullable = false),
     StructField("data_offset", LongType, nullable = false),
     StructField("payload_size", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    OggWalk.pages(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.OggWalk.pages($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(pages)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -120,33 +116,12 @@ object PdfXref {
     new GenericArrayData(out.toArray)
   }
 
-  /** `pdf_xref(payload)` as a codegen-friendly Column. */
-  def pdfXref(c: Column): Column =
-    GraftSqlBridge.column(PdfXrefTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<obj_num, offset, generation,
-  * in_use>> inside whole-stage codegen. */
-case class PdfXrefTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pdf_xref needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `pdf_xref(payload)`: the parser entry and its Column builder. */
+  val pdfXref: ByteParser = ByteParser("pdf_xref", ArrayType(StructType(Seq(
     StructField("obj_num", LongType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("generation", LongType, nullable = false),
     StructField("in_use", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    PdfXref.entries(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.PdfXref.entries($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(entries)
 }

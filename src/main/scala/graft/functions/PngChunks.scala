@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** PNG CHUNK WALK with CRC validation — the decode-free integrity
@@ -96,24 +92,8 @@ object PngChunks {
       nText, idatBytes, ppmX)
   }
 
-  /** `png_chunks(payload)` as a codegen-friendly Column. */
-  def chunksCol(c: Column): Column =
-    GraftSqlBridge.column(PngChunksInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<width, height, bit_depth,
-  * color_type, interlace, n_chunks, n_text, idat_bytes, ppm_x>
-  * (null on malformation) inside codegen. */
-case class PngChunksInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"png_chunks needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `png_chunks(payload)`: the parser entry and its Column builder. */
+  val chunksCol: ByteParser = ByteParser("png_chunks", StructType(Seq(
     StructField("width", LongType, nullable = false),
     StructField("height", LongType, nullable = false),
     StructField("bit_depth", LongType, nullable = false),
@@ -122,20 +102,6 @@ case class PngChunksInfo(child: Expression) extends UnaryExpression {
     StructField("n_chunks", LongType, nullable = false),
     StructField("n_text", LongType, nullable = false),
     StructField("idat_bytes", LongType, nullable = false),
-    StructField("ppm_x", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    PngChunks.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("pngChunks")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.PngChunks.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("ppm_x", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

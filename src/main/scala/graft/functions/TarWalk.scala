@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -170,35 +166,14 @@ object TarWalk {
     new GenericArrayData(out.toArray)
   }
 
-  /** `tar_members(payload)` as a codegen-friendly Column. */
-  def tarMembers(c: Column): Column =
-    GraftSqlBridge.column(TarMemberTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<entry_idx, name, offset,
-  * size, typeflag>> inside whole-stage codegen (one static call, the
-  * Mp4SampleTable shape). */
-case class TarMemberTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tar_members needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `tar_members(payload)`: the parser entry and its Column builder. */
+  val tarMembers: ByteParser = ByteParser("tar_members",
+    ArrayType(StructType(Seq(
     StructField("entry_idx", LongType, nullable = false),
     StructField("name", StringType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("size", LongType, nullable = false),
     StructField("typeflag", StringType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    TarWalk.members(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.TarWalk.members($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(members)
 }

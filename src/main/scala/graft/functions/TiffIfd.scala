@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -125,44 +121,14 @@ object TiffIfd {
       n.toLong, width, orient, make, xn, xd)
   }
 
-  /** `exif_meta(payload)` as a codegen-friendly Column. */
-  def exifMetaCol(c: Column): Column =
-    GraftSqlBridge.column(ExifMeta(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<endian, n_entries, image_width,
-  * orientation, make, xres_num, xres_den>, NULL when no well-formed
-  * Exif APP1 exists, inside whole-stage codegen. */
-case class ExifMeta(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"exif_meta needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `exif_meta(payload)`: the parser entry and its Column builder. */
+  val exifMetaCol: ByteParser = ByteParser("exif_meta", StructType(Seq(
     StructField("endian", StringType, nullable = false),
     StructField("n_entries", LongType, nullable = false),
     StructField("image_width", LongType, nullable = true),
     StructField("orientation", LongType, nullable = true),
     StructField("make", StringType, nullable = true),
     StructField("xres_num", LongType, nullable = true),
-    StructField("xres_den", LongType, nullable = true)))
-
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    TiffIfd.exifMeta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("exifMeta")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.TiffIfd.exifMeta($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("xres_den", LongType, nullable = true))),
+    nullOnMalformed = true)(exifMeta)
 }

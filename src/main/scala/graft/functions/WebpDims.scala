@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -79,39 +75,10 @@ object WebpDims {
     if (w <= 0 || h <= 0) null
     else InternalRow(UTF8String.fromString(v), w.toLong, h.toLong)
 
-  /** `webp_dims(payload)` as a codegen-friendly Column. */
-  def dimsCol(c: Column): Column =
-    GraftSqlBridge.column(WebpDimsInfo(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → struct<variant, width, height> (null on
-  * malformation) inside codegen. */
-case class WebpDimsInfo(child: Expression) extends UnaryExpression {
-
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"webp_dims needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = StructType(Seq(
+  /** `webp_dims(payload)`: the parser entry and its Column builder. */
+  val dimsCol: ByteParser = ByteParser("webp_dims", StructType(Seq(
     StructField("variant", StringType, nullable = false),
     StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-
-  override def nullSafeEval(input: Any): Any =
-    WebpDims.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.freshName("webpDims")
-    nullSafeCodeGen(ctx, ev, in => s"""
-      |org.apache.spark.sql.catalyst.InternalRow $r =
-      |  graft.functions.WebpDims.parse($in);
-      |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-      |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    StructField("height", LongType, nullable = false))),
+    nullOnMalformed = true)(parse)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -105,35 +101,14 @@ object ZipWalk {
     new GenericArrayData(out.toArray)
   }
 
-  /** `zip_dir(payload)` as a codegen-friendly Column. */
-  def zipDir(c: Column): Column =
-    GraftSqlBridge.column(ZipDirTable(GraftSqlBridge.expression(c)))
-}
-
-/** Scalar wrapper: binary → array<struct<entry_idx, name, method,
-  * csize, usize, data_offset>> inside whole-stage codegen. */
-case class ZipDirTable(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"zip_dir needs a binary input, got ${child.dataType.catalogString}")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** `zip_dir(payload)`: the parser entry and its Column builder. */
+  val zipDir: ByteParser = ByteParser("zip_dir", ArrayType(StructType(Seq(
     StructField("entry_idx", LongType, nullable = false),
     StructField("name", StringType, nullable = false),
     StructField("method", LongType, nullable = false),
     StructField("csize", LongType, nullable = false),
     StructField("usize", LongType, nullable = false),
     StructField("data_offset", LongType, nullable = false))),
-    containsNull = false)
-
-  override def nullSafeEval(input: Any): Any =
-    ZipWalk.centralDir(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, in => s"graft.functions.ZipWalk.centralDir($in)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    containsNull = false),
+    nullOnMalformed = false)(centralDir)
 }

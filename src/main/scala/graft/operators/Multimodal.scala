@@ -363,7 +363,7 @@ object Multimodal {
     val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
     payloads
       .select($"doc_id", explode(
-        graft.functions.Mp4Demux.mp4EditsFor($"payload", "vide")).as("e"))
+        graft.functions.Mp4Demux.mp4Edits($"payload", "vide")).as("e"))
       .select($"doc_id", $"e.edit_idx".as("edit_idx"),
         $"e.segment_duration".as("segment_duration"),
         $"e.media_time".as("media_time"), $"e.rate_ppm".as("rate_ppm"))
@@ -437,7 +437,7 @@ object Multimodal {
       .as[Long].map(id => (id, mp4MultiTrackBytes(id), srtText(id)))
       .toDF("doc_id", "payload", "srt")
     val frames = payloads.select($"doc_id",
-        explode(graft.functions.Mp4Demux.mp4TimingFor($"payload", "vide"))
+        explode(graft.functions.Mp4Demux.mp4Timing($"payload", "vide"))
           .as("t"),
         graft.functions.Mp4Demux.mp4Tracks($"payload").getItem(0)
           .getField("timescale").as("ts"))
@@ -516,7 +516,7 @@ object Multimodal {
         .filter($"tk.handler" === handler)
         .select($"doc_id", $"tk.timescale".as("ts"))
       payloads.select($"doc_id",
-          explode(graft.functions.Mp4Demux.mp4TimingFor($"payload",
+          explode(graft.functions.Mp4Demux.mp4Timing($"payload",
             handler)).as("t"))
         .select($"doc_id", $"t.sample_idx".as(idxName),
           $"t.pts".as("pts"))
@@ -1967,7 +1967,7 @@ object Multimodal {
     val payloads = synthPayloads(s, dir)(mp4MultiTrackBytes)
     payloads
       .select($"doc_id", explode(graft.functions.Mp4Demux
-        .mp4SamplesFor($"payload", "soun")).as("sm"))
+        .mp4Samples($"payload", "soun")).as("sm"))
       .select($"doc_id", $"sm.sample_idx".as("sample_idx"),
         $"sm.chunk_idx".as("chunk_idx"),
         $"sm.file_offset".as("file_offset"),

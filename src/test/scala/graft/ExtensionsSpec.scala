@@ -44,6 +44,82 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("literal numPerm"))
   }
 
+  test("minhash_sig rejects a null, string, fractional or sub-1 numPerm") {
+    Tables.documents(spark, GraftTestSession.sf).limit(5)
+      .createOrReplaceTempView("docs5")
+    for (n <- Seq("NULL", "'16'", "0", "-1", "2.5")) {
+      val ex = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT minhash_sig(text, $n) FROM docs5").collect()
+      }
+      assert(ex.getMessage.contains("literal numPerm"), s"$n: ${ex.getMessage}")
+    }
+  }
+
+  test("SQL builders reject a wrong argument count, naming the function") {
+    import spark.implicits._
+    Seq((graft.operators.Multimodal.webpBytes(7L),
+      graft.operators.Multimodal.mp4MultiTrackBytes(7L)))
+      .toDF("webp", "mp4").createOrReplaceTempView("arity_assets")
+    for ((call, name) <- Seq(
+        "webp_dims(webp, 1)" -> "webp_dims",
+        "webp_dims()" -> "webp_dims",
+        "mp4_samples(mp4, 'vide', 'x')" -> "mp4_samples",
+        "dot_product(array(1.0d))" -> "dot_product",
+        "dot_product(array(1.0d), array(2.0d), array(3.0d))" ->
+          "dot_product")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $call FROM arity_assets").collect()
+      }
+      assert(e.getMessage.contains(name), s"$call: ${e.getMessage}")
+    }
+  }
+
+  test("every byte parser is callable from SQL and matches its builder") {
+    import spark.implicits._
+    import graft.functions.ByteParser
+    import graft.operators.Multimodal._
+    val payloads = Map(
+      "aac_frames" -> aacBytes(7L), "exif_meta" -> exifBytes(7L),
+      "flac_info" -> flacBytes(7L), "h264_sps" -> spsBytes(7L),
+      "h265_sps" -> h265SpsBytes(7L), "heif_dims" -> heifBytes(7L),
+      "id3_frames" -> mp3Bytes(7L), "jpeg_sof" -> jpegSofBytes(7L),
+      "jpeg_sof_dims" -> jpegSofBytes(7L), "mkv_tracks" -> mkvBytes(7L),
+      "mp3_frames" -> mp3Bytes(7L), "mp4_edits" -> mp4MultiTrackBytes(7L),
+      "mp4_frag_samples" -> mp4FragBytes(7L), "mp4_samples" -> mp4Bytes(7L),
+      "mp4_timing" -> mp4Bytes(7L), "mp4_tracks" -> mp4Bytes(7L),
+      "ogg_pages" -> oggBytes(7L), "pdf_xref" -> pdfBytes(7L),
+      "png_chunks" -> pngChunkBytes(7L), "tar_members" -> tarBytes(7L),
+      "webp_dims" -> webpBytes(7L), "zip_dir" -> zipBytes(7L))
+    assert(ByteParser.all.map(_.sqlName).sorted == payloads.keys.toSeq.sorted)
+    for (p <- ByteParser.all) {
+      val df = Seq(payloads(p.sqlName)).toDF("payload")
+      df.createOrReplaceTempView("parser_in")
+      val viaSql = spark.sql(s"SELECT ${p.sqlName}(payload) FROM parser_in")
+      val viaCol = df.select(p($"payload"))
+      assert(viaSql.columns.toSeq == Seq(s"${p.sqlName}(payload)"))
+      def fields(d: org.apache.spark.sql.DataFrame) =
+        d.schema.map(f => (f.name, f.dataType, f.nullable))
+      assert(fields(viaSql) == fields(viaCol), p.sqlName)
+      val rows = viaSql.collect().toSeq
+      assert(rows == viaCol.collect().toSeq, p.sqlName)
+      assert(rows.head.get(0) match {
+        case null => false
+        case s: Seq[_] => s.nonEmpty
+        case _ => true
+      }, s"${p.sqlName} parsed nothing from its format's payload")
+      // two calls on one payload are one expression to CSE
+      val twice = df.select(p($"payload"), p($"payload"))
+        .queryExecution.analyzed.expressions.map(_.children.head)
+      assert(twice.head.semanticEquals(twice(1)), p.sqlName)
+      for (bad <- Seq("", "payload, payload, payload")) {
+        val e = intercept[org.apache.spark.sql.AnalysisException] {
+          spark.sql(s"SELECT ${p.sqlName}($bad) FROM parser_in")
+        }
+        assert(e.getMessage.contains(p.sqlName), e.getMessage)
+      }
+    }
+  }
+
   test("bucketed tables join without a shuffle") {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS li_b")

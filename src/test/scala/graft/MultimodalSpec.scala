@@ -694,7 +694,7 @@ class MultimodalSpec extends AnyFunSuite {
     // uniform-27 samples per chunk
     val base = (1L << 33) + 700000L
     val audio = Seq((7L, mt)).toDF("doc_id", "payload")
-      .select(explode(Mp4Demux.mp4SamplesFor($"payload", "soun")).as("s"))
+      .select(explode(Mp4Demux.mp4Samples($"payload", "soun")).as("s"))
       .select($"s.sample_idx", $"s.chunk_idx", $"s.file_offset",
         $"s.sample_size")
       .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
@@ -708,7 +708,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"odd tail sample: ${audio.last}")
     // 'vide' routes to the first trak: per-sample sizes, 32-bit stco
     val video = Seq((7L, mt)).toDF("doc_id", "payload")
-      .select(explode(Mp4Demux.mp4SamplesFor($"payload", "vide")).as("s"))
+      .select(explode(Mp4Demux.mp4Samples($"payload", "vide")).as("s"))
       .select($"s.sample_idx", $"s.file_offset", $"s.sample_size")
       .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
     assert(video.length == 5)
@@ -725,7 +725,7 @@ class MultimodalSpec extends AnyFunSuite {
     // timing routes too: audio trak is one stts run of 9 @ 32 ticks,
     // no stss/ctts — all sync, pts = dts
     val at = Seq((7L, mt)).toDF("doc_id", "payload")
-      .select(explode(Mp4Demux.mp4TimingFor($"payload", "soun")).as("t"))
+      .select(explode(Mp4Demux.mp4Timing($"payload", "soun")).as("t"))
       .select($"t.dts", $"t.pts", $"t.duration", $"t.is_sync")
       .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
     assert(at.length == 9 && at.forall(r =>
@@ -733,7 +733,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"audio timing: $at")
     // an absent handler quarantines to zero rows (no wrong-trak read)
     val none = Seq((7L, mt)).toDF("doc_id", "payload")
-      .select(size(Mp4Demux.mp4SamplesFor($"payload", "text")).as("n"))
+      .select(size(Mp4Demux.mp4Samples($"payload", "text")).as("n"))
       .as[Int].collect().head
     assert(none == 0, s"absent handler yielded $none samples")
     // malformed largesize (declared past EOF) degrades to empty
@@ -893,7 +893,7 @@ class MultimodalSpec extends AnyFunSuite {
     val mt = box("moov", box("trak",
       box("edts", elstV1) ++ box("mdia", hdlr("vide"))))
     val got = Seq((1L, mt)).toDF("doc_id", "payload")
-      .select(explode(Mp4Demux.mp4EditsFor($"payload", "vide")).as("e"))
+      .select(explode(Mp4Demux.mp4Edits($"payload", "vide")).as("e"))
       .select($"e.edit_idx", $"e.segment_duration", $"e.media_time",
         $"e.rate_ppm")
       .as[(Long, Long, Long, Long)].collect().toSeq
@@ -902,7 +902,7 @@ class MultimodalSpec extends AnyFunSuite {
     val id = 5L
     val syn = Seq((id, graft.operators.Multimodal.mp4MultiTrackBytes(id)))
       .toDF("doc_id", "payload")
-      .select(explode(Mp4Demux.mp4EditsFor($"payload", "vide")).as("e"))
+      .select(explode(Mp4Demux.mp4Edits($"payload", "vide")).as("e"))
       .select($"e.edit_idx", $"e.segment_duration", $"e.media_time",
         $"e.rate_ppm")
       .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
@@ -913,7 +913,7 @@ class MultimodalSpec extends AnyFunSuite {
     // trak of the synthesis has no edit list
     val none = Seq((id, graft.operators.Multimodal.mp4MultiTrackBytes(id)))
       .toDF("doc_id", "payload")
-      .select(size(Mp4Demux.mp4EditsFor($"payload", "soun")).as("n"))
+      .select(size(Mp4Demux.mp4Edits($"payload", "soun")).as("n"))
       .as[Int].collect().head
     assert(none == 0, s"audio trak has no elst, got $none edits")
     // malformed: entry table overruns the box, unknown version
@@ -925,7 +925,7 @@ class MultimodalSpec extends AnyFunSuite {
         box("mdia", hdlr("vide"))))
     for (bad <- Seq(overrun, badVer)) {
       val n = Seq((1L, bad)).toDF("doc_id", "payload")
-        .select(size(Mp4Demux.mp4EditsFor($"payload", "vide")).as("n"))
+        .select(size(Mp4Demux.mp4Edits($"payload", "vide")).as("n"))
         .as[Int].collect().head
       assert(n == 0, s"malformed elst yielded $n edits")
     }
