@@ -5,9 +5,12 @@
 
 Every Scala file under src/main (optionally limited to `paths`) is cut
 into its code lines: blank lines, comment lines (a `//` line or a line
-of a `/* ... */` block that starts a line, as tools/loc.py counts them)
-and every line that a `\"\"\"` string opens, spans or closes are
-skipped, and each kept line has its whitespace collapsed. A window is 6
+of a `/* ... */` block that starts a line, as tools/loc.py counts them),
+`package` and `import` lines (with the continuation lines of an import
+whose `{` closes on a later line) and every line that a `\"\"\"` string
+opens, spans or closes are skipped, and each kept line has its
+whitespace collapsed. A file header is no copied code: two files with
+the same imports would otherwise count as duplicates. A window is 6
 consecutive code lines of one file joined by newlines; it counts when
 that text is at least 150 characters long. A code line is duplicated
 when it lies in a window whose text occurs twice or more among all the
@@ -43,7 +46,7 @@ def show(rev, path):
 def code_lines(text):
     """[(source line number, whitespace-collapsed code line)] of one
     file's text."""
-    out, in_block, in_str = [], False, False
+    out, in_block, in_str, in_import = [], False, False, False
     for no, line in enumerate(text.splitlines(), 1):
         s = line.strip()
         quotes = s.count('"""') % 2 == 1
@@ -53,10 +56,16 @@ def code_lines(text):
         if in_block:
             in_block = "*/" not in s
             continue
+        if in_import:
+            in_import = "}" not in s
+            continue
         if s.startswith("/*"):
             in_block = "*/" not in s[2:]
             continue
         if not s or s.startswith("//"):
+            continue
+        if s.startswith(("package ", "import ")):
+            in_import = s.count("{") > s.count("}")
             continue
         in_str = quotes
         if not in_str:
